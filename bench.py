@@ -141,7 +141,7 @@ def main():
         except ValueError:
             pass
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark.sparkContext.defaultParallelism
 
     # committed per-query history for the outlier re-measure pass; only
     # comparable at the SAME core count (the driver also runs an 8-core

@@ -43,32 +43,6 @@ def quantize_micro(vec_col: Column | str) -> Column:
         c, lambda x: F.round(x.cast("double") * MICRO).cast("bigint"))
 
 
-def _dist2(qcol: Column, centroid: list[int]) -> Column:
-    """Exact squared L2 distance (BIGINT) to a literal centroid."""
-    carr = F.array(*[F.lit(int(v)).cast("bigint") for v in centroid])
-    return F.aggregate(
-        F.zip_with(qcol, carr, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("bigint"), lambda acc, d: acc + d)
-
-
-def _dist_array(qcol: Column, centroids: list[list[int]]) -> Column:
-    """array of the k exact distances (each computed once — a when-chain
-    argmin would duplicate every distance expr k times and bloat the
-    task binary at O(k^2 * dim)).
-
-    The codebook is ONE nested literal array with a single
-    transform-over-cells fold, not k separate fold expressions: the
-    per-iteration plans stay narrow, so re-planning cost is flat in k
-    (the janino-recompilation lesson of PERF.md r8/r9).  Distances are
-    exact BIGINTs either way — values identical."""
-    cents_lit = F.array(*[
-        F.array(*[F.lit(int(v)).cast("bigint") for v in c])
-        for c in centroids])
-    return F.transform(cents_lit, lambda c: F.aggregate(
-        F.zip_with(qcol, c, lambda x, cv: (x - cv) * (x - cv)),
-        F.lit(0).cast("bigint"), lambda acc, d: acc + d))
-
-
 def _assign_struct(qcol: Column, centroids: list[list[int]]) -> Column:
     """(cluster, dist2) against the literal codebook as ONE Arrow-batched
     int64 numpy kernel — the "numpy-heavy similarity" exception

@@ -540,13 +540,13 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
     # of the scan, but not into the frequency branch — the two widened
     # source exchanges then canonicalize differently and AQE ran the
     # single-task source scan TWICE per execution (2 x ~1.5 s of
-    # serial critical-path time at sf0.1; stage profile in
-    # OPTIMIZATION_r14.md).  Output is provably unchanged: emitted
-    # pairs carry non-null ids by construction (inner equi-joins +
-    # id < id), and frequencies only steer CANDIDATE selection — the
-    # prefix-filter guarantee holds for any fixed total order, so the
-    # exact-verified pair set is order-independent.  count(id_col)
-    # keeps the same column set alive in both branches.
+    # serial critical-path time at sf0.1; commit f02fa9c).  Output is
+    # provably unchanged: emitted pairs carry non-null ids by
+    # construction (inner equi-joins + id < id), and frequencies only
+    # steer CANDIDATE selection — the prefix-filter guarantee holds for
+    # any fixed total order, so the exact-verified pair set is
+    # order-independent.  count(id_col) keeps the same column set alive
+    # in both branches.
     tok = (shingles.where(F.col(id_col).isNotNull())
            .select(id_col, F.explode("__shingles").alias("token")))
     freq = tok.groupBy("token").agg(F.count(id_col).alias("__f"))

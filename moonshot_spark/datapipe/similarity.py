@@ -47,43 +47,6 @@ def cosine_expr(a, b):
     return dot / (norm_a * norm_b)
 
 
-def vector_dim(df: DataFrame, vec_col: str = "embedding") -> int:
-    """Embedding dimensionality, peeked from one row (a single-row job
-    against the first file split — negligible even on a 100 TB table)."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None:
-        raise ValueError(f"cannot infer dim of {vec_col!r}: empty table")
-    return row["d"]
-
-
-def dot_unrolled_expr(a, b, dim: int):
-    """Left-associative dot product unrolled to a flat codegen-friendly
-    expression: bit-identical to the ``F.aggregate`` fold (same add order;
-    the fold's 0.0 seed is absorbed by ``0.0 + x == x``)."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    terms = [F.element_at(a, i).cast("double")
-             * F.element_at(b, i).cast("double") for i in range(1, dim + 1)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def norm_unrolled_expr(a, dim: int):
-    """L2 norm via the unrolled self-dot (same bit-exactness argument)."""
-    return F.sqrt(dot_unrolled_expr(a, a, dim))
-
-
-def cosine_unrolled_expr(a, b, dim: int):
-    """Codegen-friendly cosine for known-dimension vectors; bit-identical
-    to ``cosine_expr``."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return (dot_unrolled_expr(a, b, dim)
-            / (norm_unrolled_expr(a, dim) * norm_unrolled_expr(b, dim)))
-
-
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id") -> DataFrame:

@@ -203,21 +203,6 @@ def winnowing_fingerprint_expr(col: Column | str, k: int = 8,
     return F.transform(F.array(s_expr), with_s)[0]
 
 
-def token_frequency_table(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Corpus-wide unigram occurrence counts: (token, freq).
-
-    Built from the per-(doc, token) counts so the explode aggregates
-    map-side before the one shuffle on ``token``; the table is
-    vocabulary-sized (Zipf: far smaller than the token stream but NOT
-    broadcastable at corpus scale — consumers must equi-join it, never
-    ``F.broadcast`` it)."""
-    tok = docs.select(F.col(id_col),
-                      F.explode(tokens_expr(text_col)).alias("token"))
-    return (tok.groupBy("token")
-            .agg(F.count("*").alias("freq")))
-
-
 def token_surprisal_stats(docs: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id",
                           rare_threshold: int = 2) -> DataFrame:

@@ -250,7 +250,7 @@ def fit_ols_grouped_pandas(df: DataFrame, group_cols: list[str],
     beta_fields = ", ".join(f"b{i} double" for i in range(k + 1))
     schema = f"{group_fields}, n bigint, {beta_fields}"
 
-    def fit(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def fit(key, pdf):
         cols = list(feature_cols) + [label_col]
         clean = pdf.dropna(subset=cols)
         n = len(clean)

@@ -1,9 +1,16 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults target the test/bench harness (local[32], 128 GiB box);
-on a real cluster most of these are overridden by spark-submit conf.  The
-scale-relevant settings (AQE, adaptive coalescing, Arrow) are good defaults
-at any scale.
+The local session is sized from the host it runs on, and this module is
+the only code that knows that size:
+
+- cores: the CPUs this process may run on (``os.sched_getaffinity``);
+- driver heap: half of physical memory, capped by the cgroup memory limit
+  when one is set, in whole GiB and at least 1g.
+
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` override either.  On a
+real cluster most of these settings are overridden by spark-submit conf.
+The scale-relevant settings (AQE, adaptive coalescing, Arrow) are good
+defaults at any scale.
 """
 
 from __future__ import annotations
@@ -12,19 +19,48 @@ import os
 
 from pyspark.sql import SparkSession
 
+_GIB = 1 << 30
+
+
+def _host_memory_bytes() -> int:
+    """Physical memory, capped by a cgroup (v2 or v1) limit when set."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                total = min(total, int(f.read()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            pass
+    return total
+
+
+def spark_cores() -> str:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half of host memory in whole GiB
+    (at least 1g)."""
+    return (os.environ.get("SPARK_DRIVER_MEMORY")
+            or f"{max(_host_memory_bytes() // 2 // _GIB, 1)}g")
+
 
 def driver_java_options() -> str:
     """Driver JVM options: any user-supplied SPARK_GRAFT_DRIVER_JAVA_OPTS
     are PRESERVED (ADVICE r13: hard-setting extraJavaOptions clobbered
     env-supplied options), with the heap pin appended:
 
-    - ``-Xms`` pinned to the driver memory — with the default tiny
-      initial heap, G1 repeatedly uncommits after concurrent cycles and
-      recommits on the next allocation burst, and the kernel page
-      zeroing on each recommit shows up as multi-second SYS-time stalls
-      inside timed windows (the r12 in-run bench-drift root cause;
-      PERF.md r13).  Committing the full heap up front is virtual (no
-      RSS cost) and removes the churn.
+    - ``-Xms`` pinned to ``driver_memory()``, the value
+      ``spark.driver.memory`` gets, so the pin always fits — with the
+      default tiny initial heap, G1 repeatedly uncommits after
+      concurrent cycles and recommits on the next allocation burst, and
+      the kernel page zeroing on each recommit shows up as multi-second
+      SYS-time stalls inside timed windows (the r12 in-run bench-drift
+      root cause; PERF.md r13).  Committing the full heap up front is
+      virtual (no RSS cost) and removes the churn.
     - ``-XX:+AlwaysPreTouch`` when SPARK_GRAFT_PRETOUCH=1, so
       measurement harnesses zero the pages at startup instead of inside
       the first timed windows.
@@ -36,7 +72,7 @@ def driver_java_options() -> str:
     # (ADVICE r14).  Skip the pin when the user already set one.
     pinned = []
     if "-Xms" not in user:
-        pinned.append("-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        pinned.append("-Xms" + driver_memory())
     if (os.environ.get("SPARK_GRAFT_PRETOUCH") == "1"
             and "AlwaysPreTouch" not in user):
         pinned.append("-XX:+AlwaysPreTouch")
@@ -53,10 +89,11 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
     that without per-query tuning.  Arrow is on for the pandas_udf hot paths
     (ML scoring, minhash) and for createDataFrame from pandas in tests.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark_cores()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = (int(cpus) if cpus.isdigit()
+                              else len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -80,7 +117,7 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
                 "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         # default = Spark's own 1g; the 10x-replicated correctness sweep
         # raises it (pair-output queries legitimately return ~100x the
         # rows, and the dual-engine compare pulls the FULL result)

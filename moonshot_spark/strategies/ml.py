@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import pickle
 
+import pandas as pd  # module-level: pandas_udf resolves stringified hints
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
@@ -162,7 +163,7 @@ class MoonshotML(Moonshot):
         broadcast_model = spark.sparkContext.broadcast(self.model)
 
         @F.pandas_udf(DoubleType())
-        def predict_udf(*cols):
+        def predict_udf(*cols: pd.Series) -> pd.Series:
             import numpy as np
             model = broadcast_model.value
             X = np.column_stack([c.fillna(0).to_numpy(dtype="float64")
@@ -173,8 +174,7 @@ class MoonshotML(Moonshot):
                 preds = np.asarray(model.predict(X), dtype="float64")
                 if preds.ndim == 2 and preds.shape[1] == 1:
                     preds = preds[:, 0]
-            import pandas as _pd
-            return _pd.Series(preds)
+            return pd.Series(preds)
 
         return df.withColumn("prediction", predict_udf(*[F.col(c) for c in feature_cols]))
 

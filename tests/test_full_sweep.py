@@ -11,6 +11,7 @@ Opt-in (several minutes at sf0.01):
 import os
 import subprocess
 import sys
+import tempfile
 
 import pytest
 
@@ -32,27 +33,54 @@ def test_full_catalog_oracle_sweep():
         f"full sweep failed (exit {proc.returncode}):\n{tail}\n{proc.stderr[-2000:]}")
 
 
+def _code_tree() -> str:
+    """Git tree hash of ``moonshot_spark`` as it is on disk, committed or
+    not: the hash ``git rev-parse HEAD:moonshot_spark`` gives once those
+    files are committed (built in a scratch index, so the real index is
+    untouched)."""
+    with tempfile.TemporaryDirectory() as tmp:
+        env = dict(os.environ, GIT_INDEX_FILE=os.path.join(tmp, "index"))
+
+        def git(*args):
+            return subprocess.run(["git", *args], cwd=REPO, env=env,
+                                  check=True, capture_output=True,
+                                  text=True).stdout.strip()
+        git("add", "-A", "moonshot_spark")
+        return git("write-tree", "--prefix=moonshot_spark/")
+
+
+@pytest.mark.skipif(not os.path.exists(os.path.join(REPO, ".git")),
+                    reason="sweep artifacts are matched by git tree hash")
 def test_latest_sweep_artifact_covers_registry():
-    """The newest local sweep JSON must contain EVERY registered query —
-    the round-7 judge found two queries that landed after the final
-    sweep refresh and were absent from the round's own artifacts.  This
-    pin makes a lagging sweep a visible failure: re-run
-    tools/check_correctness.py --json after the last catalog commit."""
+    """The local sweep JSONs recorded on the current ``moonshot_spark``
+    tree must exist and contain EVERY registered query — the round-7
+    judge found two queries that landed after the final sweep refresh
+    and were absent from the round's own artifacts.  Artifacts are
+    matched by the tree hash ``tools/check_correctness.py --json``
+    records, not by file mtime, which a fresh clone scrambles; so any
+    library change without a sweep refresh is a visible failure."""
     import glob
     import json
 
     import __spark_entry__ as entry_mod
 
-    files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_local_*.json")),
-                   key=os.path.getmtime)
-    assert files, "no local sweep artifact found — run the sweep"
-    newest = files[-1]
-    with open(newest) as f:
-        sweep = json.load(f)
-    swept = set(sweep["queries"])
+    tree = _code_tree()
+    refresh = ("commit, then run `python tools/check_correctness.py "
+               "<sf_dir> --json CORRECTNESS_local_sf<N>.json` for sf0.01 "
+               "and sf0.1")
+    current = []
+    for path in sorted(glob.glob(os.path.join(REPO,
+                                              "CORRECTNESS_local_*.json"))):
+        with open(path) as f:
+            sweep = json.load(f)
+        if sweep.get("code_tree") == tree:
+            current.append((path, sweep))
+    assert current, (
+        f"no sweep artifact was recorded on moonshot_spark tree {tree}; "
+        f"{refresh}")
     registered = set(entry_mod.queries())
-    missing = sorted(registered - swept)
-    assert not missing, (
-        f"{newest} lags the registry by {len(missing)} queries "
-        f"(e.g. {missing[:5]}); refresh the sweep after the last "
-        "catalog commit")
+    for path, sweep in current:
+        missing = sorted(registered - set(sweep["queries"]))
+        assert not missing, (
+            f"{path} lags the registry by {len(missing)} queries "
+            f"(e.g. {missing[:5]}); {refresh}")

@@ -154,8 +154,7 @@ def test_session_pins_initial_heap(spark, monkeypatch):
     # carry the pin (extraJavaOptions is set at JVM launch; reading it
     # back from the running session proves the .config() call exists)
     opts = spark.conf.get("spark.driver.extraJavaOptions")
-    mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-    assert f"-Xms{mem}" in opts
+    assert f"-Xms{spark.conf.get('spark.driver.memory')}" in opts
 
     # user-supplied driver options are preserved, not clobbered
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseG1GC")
@@ -175,3 +174,26 @@ def test_session_pins_initial_heap(spark, monkeypatch):
     assert "-Xms2g" in combined
     assert "-Xms8g" not in combined
     assert "-XX:+AlwaysPreTouch" not in combined
+
+
+def test_session_sizing_follows_host(monkeypatch):
+    """Unset, the session takes every CPU this process may run on and
+    half of host memory in whole GiB (at least 1g), so the JVM starts on
+    any box; a set SPARK_GRAFT_CPUS / SPARK_DRIVER_MEMORY wins."""
+    from moonshot_spark.session import (driver_java_options, driver_memory,
+                                        spark_cores)
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", raising=False)
+    assert spark_cores() == str(len(os.sched_getaffinity(0)))
+    heap = driver_memory()
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert heap.endswith("g") and int(heap[:-1]) >= 1
+    assert int(heap[:-1]) << 30 <= host // 2
+    assert f"-Xms{heap}" in driver_java_options().split()
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
+    assert (spark_cores(), driver_memory()) == ("3", "5g")
+    assert "-Xms5g" in driver_java_options().split()

@@ -73,7 +73,7 @@ def main():
 
     def fresh_con():
         # explicit cap: DuckDB's default (80% of RAM) assumes it owns
-        # the box, but it shares this process with a 16g Spark JVM
+        # the box, but it shares this process with the Spark JVM
         c = duckdb.connect()
         c.execute("SET memory_limit='32GB'")
         for t in TABLES:

@@ -7,6 +7,12 @@ values (sorted by all columns, order-insensitive).  Run before committing
 new queries:
 
     python tools/check_correctness.py [sf_dir] [query ...]
+
+``--json <path>`` writes the sweep as an artifact that records the git
+tree of ``moonshot_spark`` it tested; it refuses to run on uncommitted
+library code, whose tree has no hash to record:
+
+    python tools/check_correctness.py <sf_dir> --json CORRECTNESS_local_sf<N>.json
 """
 
 from __future__ import annotations
@@ -14,9 +20,11 @@ from __future__ import annotations
 import json
 import math
 import os
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 import pandas as pd
@@ -86,6 +94,18 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> bool:
     return ok
 
 
+def code_tree() -> str:
+    """``git rev-parse HEAD:moonshot_spark``; exits when that directory
+    has uncommitted changes, since HEAD would not be the tested code."""
+    def git(*args):
+        return subprocess.run(["git", *args], cwd=REPO, check=True,
+                              capture_output=True, text=True).stdout.strip()
+    if git("status", "--porcelain", "moonshot_spark"):
+        sys.exit("moonshot_spark has uncommitted changes: commit them "
+                 "before writing a sweep artifact")
+    return git("rev-parse", "HEAD:moonshot_spark")
+
+
 def main():
     args = sys.argv[1:]
     json_out = None
@@ -93,6 +113,7 @@ def main():
         i = args.index("--json")
         json_out = args[i + 1]
         args = args[:i] + args[i + 2:]
+        tree = code_tree()
     sf_dir = args[0] if args and os.path.isdir(args[0]) \
         else "/root/testdata/sf0.01"
     only = [a for a in args if not os.path.isdir(a)]
@@ -170,6 +191,7 @@ def main():
         import time
         with open(json_out, "w") as f:
             json.dump({"sf_dir": sf_dir, "ts": time.time(),
+                       "code_tree": tree,
                        "passed": passed, "failed": failed,
                        "errored": errored, "rows_only": skipped,
                        "registry_complete": registry_complete,

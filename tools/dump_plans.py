@@ -2,7 +2,7 @@
 """Dump .explain('formatted') for the given queries to plans/<outdir>/.
 
 Usage: python tools/dump_plans.py <outdir-suffix> <query> [...]
-Writes plans/r14/<query>_<outdir-suffix>.txt
+Writes plans/$SPARK_GRAFT_PLANS_DIR (default r15)/<query>_<outdir-suffix>.txt
 """
 from __future__ import annotations
 

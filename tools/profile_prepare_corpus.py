@@ -105,7 +105,6 @@ def main():
                     help="hold the eval slice at copy 0 (base-sized) "
                          "while the corpus scales — the production shape")
     args = ap.parse_args()
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
     os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
 
     from moonshot_spark.session import get_spark

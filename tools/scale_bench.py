@@ -748,11 +748,6 @@ def main(argv=None) -> int:
         if not args.merge:
             ap.error("--skew-only needs --merge (no uniform payload to "
                      "write a standalone report from)")
-    # the sweep drives up to 100x replicas through ONE long-lived JVM;
-    # the harness default (16g) fills with in-flight shuffle + leftover
-    # checkpoint blocks at the deepest octave (r12: GCLocker exhaustion
-    # at 100x pagerank) — give the sweep session real headroom
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
     # pre-zero the pinned heap (session.py -Xms note): G1 commit/uncommit
     # churn otherwise lands multi-second kernel-time stalls inside the
     # per-octave timed windows (r13: the 100x benchmark_returns_intraday
