@@ -2,9 +2,11 @@
 """Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) and print ONE JSON line with per-query wall-clock seconds.
 
-Each query is executed once to warm the JVM/IO caches and twice timed
-(min of two runs); the timed run does a ``count()`` action so the full
-plan executes without driver materialization of results.
+Each query is timed by ``tools/measure.py``: built and ``count()``ed
+once untimed to warm the JVM/IO caches, then built fresh and counted
+twice (min of two runs), so the full plan executes without driver
+materialization of results.  After its timed runs every cached or
+persisted block is released, so no query reads another query's cache.
 
 Output contract: the FINAL stdout line is a single JSON object kept
 under ~1900 bytes (the harness captures only a 2000-char tail of
@@ -19,16 +21,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-# zero the pinned heap at JVM start (see session.py -Xms note): keeps
-# first-touch page zeroing out of the timed windows — the r12 in-run
-# drift was G1 heap commit/uncommit churn showing up as kernel-time
-# stalls inside query timings
-os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
+from tools.measure import measure, release, session  # noqa: E402
 
 # Keep the printed line comfortably inside the harness's 2000-char
 # stdout tail, with headroom for the fixed fields.
@@ -68,14 +65,6 @@ REMEASURE_CAP = 40
 # the late queries are just scheduled into a degraded tail.
 CANARY_SAMPLE_EVERY = 40
 
-# A/B hygiene knob for drift experiments (default: off — the driver's
-# contract run is unchanged): SPARK_GRAFT_BENCH_HYGIENE=
-#   clearcache  -> spark.catalog.clearCache() + clean leftover persisted
-#                  RDD blocks every CANARY_SAMPLE_EVERY queries
-#   recycle     -> stop and rebuild the SparkSession (fresh JVM-side
-#                  catalog/codegen state; same process) at each sample
-_HYGIENE = os.environ.get("SPARK_GRAFT_BENCH_HYGIENE", "").lower()
-
 
 def _canary_seconds(spark) -> float:
     """One fixed shuffle+agg over spark.range: data-independent work that
@@ -83,16 +72,19 @@ def _canary_seconds(spark) -> float:
     per-query floor is made of.  Min of two runs (like the queries)."""
     from pyspark.sql import functions as F
 
-    def run() -> float:
-        start = time.perf_counter()
-        (spark.range(0, 20_000_000, 1, 32)
-         .groupBy((F.col("id") % 1024).alias("k"))
-         .agg(F.sum("id").alias("s"))
-         .select(F.sum("s")).count())
-        return time.perf_counter() - start
+    return measure(lambda: (
+        spark.range(0, 20_000_000, 1, 32)
+        .groupBy((F.col("id") % 1024).alias("k"))
+        .agg(F.sum("id").alias("s"))
+        .select(F.sum("s")))).total
 
-    run()                                    # warm-up, untimed
-    return min(run(), run())
+
+def _measure_query(spark, fn, sf_dir) -> tuple[float, dict[str, float]]:
+    """(seconds, build/exec split) of one catalog query, then release
+    its cached blocks (every frame it built has been counted)."""
+    m = measure(lambda: fn(spark, sf_dir))
+    release(spark)
+    return m.total, {"build": round(m.build, 4), "exec": round(m.exec, 4)}
 
 
 def _compact_payload(total: float, n_queries: int, timings: dict, sf: float) -> dict:
@@ -129,9 +121,8 @@ def main():
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from moonshot_spark.queries import QUERIES
-    from moonshot_spark.session import get_spark
 
-    spark = get_spark("moonshot_spark_bench")
+    spark = session("moonshot_spark_bench")
 
     sf = 0.1
     base = os.path.basename(sf_dir.rstrip("/"))
@@ -157,60 +148,17 @@ def main():
 
     canary_first = round(_canary_seconds(spark), 4)
 
-    def _hygiene(spark):
-        """Apply the A/B hygiene arm between query groups (no-op by
-        default).  Returns the (possibly new) session."""
-        if _HYGIENE == "clearcache":
-            spark.catalog.clearCache()
-            try:
-                for jrdd in list(
-                        spark.sparkContext._jsc.getPersistentRDDs()
-                        .values()):
-                    jrdd.unpersist(False)
-            except Exception:
-                pass
-        elif _HYGIENE == "recycle":
-            spark.stop()
-            spark = get_spark("moonshot_spark_bench")
-        return spark
-
     timings: dict[str, float] = {}
     split: dict[str, dict[str, float]] = {}
     canary_samples: list[dict] = []
     total = 0.0
-    n_done = 0
-    for name, fn in QUERIES.items():
+    for n_done, (name, fn) in enumerate(QUERIES.items()):
         if n_done and n_done % CANARY_SAMPLE_EVERY == 0:
-            spark = _hygiene(spark)
             canary_samples.append(
                 {"after": n_done, "sec": round(_canary_seconds(spark), 4)})
-        fn(spark, sf_dir).count()  # warm-up: JIT, parquet footers, broadcasts
-        # min of two timed runs, each on a FRESHLY constructed DataFrame:
-        # re-count()ing the same DataFrame object lets Spark skip already-
-        # computed shuffle map stages (MapOutputTracker reuse), which
-        # under-measures shuffle-heavy queries by ~2x (PERF.md r9).  A
-        # fresh plan per run times the real end-to-end execution
-        # (planning included), matching how the DuckDB baseline is timed.
-        # build = DataFrame construction (driver-only Py4J/analysis work,
-        # plus any bounded validation actions a builder runs eagerly);
-        # exec = count() on the fresh plan.  The split diagnoses fixed
-        # driver overhead vs data-dependent execution (VERDICT r9 item 1).
-        elapsed = float("inf")
-        best_build = best_exec = float("inf")
-        for _ in range(2):
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            mid = time.perf_counter()
-            df.count()
-            end = time.perf_counter()
-            if end - start < elapsed:
-                elapsed = end - start
-                best_build, best_exec = mid - start, end - mid
+        elapsed, split[name] = _measure_query(spark, fn, sf_dir)
         timings[name] = round(elapsed, 4)
-        split[name] = {"build": round(best_build, 4),
-                       "exec": round(best_exec, 4)}
         total += elapsed
-        n_done += 1
 
     # Outlier re-measure pass (see REMEASURE_* above): identical
     # measurement, one more time, for queries a contention spike
@@ -225,19 +173,7 @@ def main():
             and timings[name] > hist[name] + REMEASURE_MIN_EXCESS]
         flagged.sort(key=lambda kv: -kv[1])
         for name, _excess in flagged[:REMEASURE_CAP]:
-            fn = QUERIES[name]
-            fn(spark, sf_dir).count()          # same warm-up discipline
-            second = float("inf")
-            b2 = e2 = float("inf")
-            for _ in range(2):
-                start = time.perf_counter()
-                df = fn(spark, sf_dir)
-                mid = time.perf_counter()
-                df.count()
-                end = time.perf_counter()
-                if end - start < second:
-                    second = end - start
-                    b2, e2 = mid - start, end - mid
+            second, split2 = _measure_query(spark, QUERIES[name], sf_dir)
             second = round(second, 4)
             remeasured[name] = {"first_pass": timings[name],
                                 "second_pass": second,
@@ -245,7 +181,7 @@ def main():
             if second < timings[name]:
                 total -= timings[name] - second
                 timings[name] = second
-                split[name] = {"build": round(b2, 4), "exec": round(e2, 4)}
+                split[name] = split2
 
     canary_last = round(_canary_seconds(spark), 4)
     # the LAST canary is expected to be a bit faster (deeper JIT after
@@ -261,7 +197,6 @@ def main():
         "envelope_sec": CANARY_ENVELOPE_SEC,
         "noisy_box": noisy,
         "samples": canary_samples,
-        "hygiene": _HYGIENE or "none",
     }
 
     with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as f:

@@ -2,58 +2,35 @@
 """Side-by-side Spark vs DuckDB-oracle timings for every catalog query.
 
 Evidence companion to bench.py: runs each oracle-checked query on both
-engines over the same parquet (warm + min-of-two timed) and prints a
-markdown table sorted by Spark time, plus totals.  Usage:
+engines over the same parquet (``tools/measure.py``: warm + min-of-two
+timed, on both engines) and prints a markdown table sorted by Spark
+time, plus totals.  The Spark column splits into build (frame
+construction: a fixed driver cost that does not grow with data) and
+exec (``count()``).  Usage:
 
     python tools/bench_compare.py [sf_dir]    # default /root/testdata/sf0.1
+    python tools/bench_compare.py [sf_dir] --queries a,b   # a subset
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# pre-zero the pinned heap (session.py -Xms note) so G1 commit churn
-# never lands kernel-time stalls inside a timed window
-os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
+import duckdb  # noqa: E402
 
-import duckdb
+from tools.measure import measure, release, session  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def timed(fn) -> float:
-    fn()
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def timed_split(mk_df) -> tuple[float, float, float]:
-    """(total, build, exec) for a Spark query: build = DataFrame
-    construction (driver Py4J/analysis + any bounded eager validation
-    the builder runs), exec = count() on the fresh plan.  Separating
-    the two makes overhead-class ratios self-explaining in the compare
-    table (VERDICT r9 item 7): build is a fixed driver cost that does
-    not grow with data."""
-    mk_df().count()
-    best = (float("inf"), float("inf"), float("inf"))
-    for _ in range(2):
-        t0 = time.perf_counter()
-        df = mk_df()
-        t1 = time.perf_counter()
-        df.count()
-        t2 = time.perf_counter()
-        if t2 - t0 < best[0]:
-            best = (t2 - t0, t1 - t0, t2 - t1)
-    return best
+def duckdb_seconds(con, sql: str) -> float:
+    """The same loop on DuckDB: build = ``execute``, force = ``fetchall``."""
+    return measure(lambda: con.execute(sql),
+                   force=lambda cur: cur.fetchall()).total
 
 
 def main():
@@ -67,15 +44,11 @@ def main():
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
 
     import __spark_entry__ as entry_mod
-    from moonshot_spark.session import get_spark
 
-    spark = get_spark("bench_compare")
+    spark = session("bench_compare")
 
     def fresh_con():
-        # explicit cap: DuckDB's default (80% of RAM) assumes it owns
-        # the box, but it shares this process with the Spark JVM
         c = duckdb.connect()
-        c.execute("SET memory_limit='32GB'")
         for t in TABLES:
             p = os.path.join(sf_dir, f"{t}.parquet")
             if not os.path.exists(p):
@@ -98,19 +71,17 @@ def main():
         sql = oracles.get(name)
         if sql is None:
             continue
-        # fresh DataFrame per timed run (PERF.md r9): re-count()ing one
-        # DataFrame object reuses shuffle map outputs, which would flatter
-        # Spark while DuckDB re-executes its whole query each run
-        s, sb, sx = timed_split(lambda: fn(spark, sf_dir))
+        m = measure(lambda: fn(spark, sf_dir))
+        release(spark)
         try:
-            d = timed(lambda: con.execute(sql).fetchall())
+            d = duckdb_seconds(con, sql)
         except duckdb.OutOfMemoryException:
             # DuckDB accumulates allocator state over ~180 oracles; a
             # fresh connection releases it — retry once, cold
             con.close()
             con = fresh_con()
-            d = timed(lambda: con.execute(sql).fetchall())
-        rows.append((name, s, sb, sx, d))
+            d = duckdb_seconds(con, sql)
+        rows.append((name, m.total, m.build, m.exec, d))
 
     rows.sort(key=lambda r: -r[1])
     print("| query | spark s | build s | exec s | duckdb s | ratio |")

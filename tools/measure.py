@@ -1,0 +1,80 @@
+"""The one timing loop: every harness in this repo times a query here.
+
+- ``measure(build)``: one untimed warm-up, then the min of ``runs``
+  timed runs, each on a FRESHLY built frame, split into build and exec.
+- ``release(spark)``: drop every cached/persisted block between queries.
+- ``session(app)``: the measurement SparkSession (heap pre-touched).
+"""
+
+from __future__ import annotations
+
+import os
+import time
+from typing import Any, Callable, NamedTuple
+
+
+class Measurement(NamedTuple):
+    total: float   # fastest timed run, build + exec
+    build: float   # that same run's build seconds
+    exec: float    # that same run's exec seconds
+    rows: Any      # what forcing the warm-up returned (count() -> rows)
+    frame: Any     # the warm-up frame (for plan shape; already forced)
+
+
+def _count(df) -> int:
+    return df.count()
+
+
+def measure(build: Callable[[], Any], runs: int = 2,
+            force: Callable[[Any], Any] = _count) -> Measurement:
+    """Warm up once, untimed (JIT, parquet footers, broadcasts), then
+    time ``runs`` runs of ``force(build())`` and keep the fastest.
+
+    Every timed run calls ``build()`` again: forcing the same DataFrame
+    twice reuses its shuffle map outputs (MapOutputTracker) and
+    under-measures shuffle-heavy queries by ~2x (PERF.md r9).  build =
+    frame construction (driver Py4J/analysis plus any bounded eager
+    action a builder runs); exec = ``force`` on that fresh frame.  Both
+    come from the same (fastest) run, so they add up to ``total``.
+    """
+    frame = build()
+    rows = force(frame)
+    best = (float("inf"), float("inf"), float("inf"))
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
+        force(df)
+        t2 = time.perf_counter()
+        if t2 - t0 < best[0]:
+            best = (t2 - t0, t1 - t0, t2 - t1)
+    return Measurement(*best, rows, frame)
+
+
+def release(spark) -> None:
+    """Drop every cached frame/table and leftover persisted RDD block.
+
+    Queries ``persist``/``cache``/``localCheckpoint`` subtrees; the
+    blocks outlive the discarded frames until the ContextCleaner
+    notices, so one session accumulates them across queries (a later
+    query can then read an earlier one's cache, or a 1x..100x sweep
+    exhausts the heap; r12).
+
+    INVARIANT (ADVICE r12): call only once every frame from the query is
+    fully consumed — it unpersists ALL session RDDs, which would strand
+    a still-referenced localCheckpointed frame (truncated lineage,
+    blocks gone).
+    """
+    spark.catalog.clearCache()
+    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        jrdd.unpersist(False)
+
+
+def session(app: str):
+    """``get_spark(app)`` with ``SPARK_GRAFT_PRETOUCH=1`` unless set: the
+    JVM zeroes its pinned heap at start (session.py ``-Xms`` note), so G1
+    commit/uncommit churn never lands kernel-time stalls inside a timed
+    window (r12 in-run drift; r13 100x "cliff")."""
+    os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
+    from moonshot_spark.session import get_spark
+    return get_spark(app)

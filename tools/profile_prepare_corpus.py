@@ -4,10 +4,11 @@
 linear curve — and SCALE.md could not say which stage grows
 superlinearly).
 
-Times cumulative plan prefixes (each ending in a count() action), so
-stage cost = delta between consecutive prefixes ON THE SAME scale; the
-50x->100x growth factor of each delta names the superlinear stage (a
-linear stage doubles, a superlinear one more than doubles):
+Times cumulative plan prefixes (each ending in a count() action, timed
+by ``tools/measure.py``), so stage cost = delta between consecutive
+prefixes ON THE SAME scale; the 50x->100x growth factor of each delta
+names the superlinear stage (a linear stage doubles, a superlinear one
+more than doubles):
 
   scan      documents scan (ensure_scan_parallelism)
   quality   + quality gate (tokenize + 3 column predicates)
@@ -34,21 +35,12 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-
-def timed(mk) -> float:
-    mk().count()
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        mk().count()
-        best = min(best, time.perf_counter() - t0)
-    return best
+from tools.measure import measure, session  # noqa: E402
 
 
 def stages(spark, sf_dir, eval_max_id=None):
@@ -105,28 +97,29 @@ def main():
                     help="hold the eval slice at copy 0 (base-sized) "
                          "while the corpus scales — the production shape")
     args = ap.parse_args()
-    os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
+    scales = [int(s) for s in args.scales.split(",")]
+    if len(scales) < 2:
+        ap.error("--scales needs at least two factors (the growth "
+                 "column compares the two deepest)")
 
-    from moonshot_spark.session import get_spark
     from tools.scale_bench import replicate_tables
 
-    spark = get_spark("profile_prepare_corpus")
+    spark = session("profile_prepare_corpus")
     eval_max_id = None
     if args.fixed_eval:
         base_docs = spark.read.parquet(f"{args.base}/documents.parquet")
         eval_max_id = int(base_docs.agg(F.max("doc_id")).first()[0]) + 1
         print(f"fixed-eval: doc_id < {eval_max_id} (copy 0 only)")
-    scales = [int(s) for s in args.scales.split(",")]
     table: dict[str, dict[int, float]] = {}
     counts: dict[str, dict[int, int]] = {}
     for n in scales:
         d = args.base if n == 1 else replicate_tables(spark, args.base, n)
         for name, mk in stages(spark, d, eval_max_id):
-            secs = timed(mk)
-            table.setdefault(name, {})[n] = secs
-            counts.setdefault(name, {})[n] = mk().count()
-            print(f"[{n:>3}x] {name:<10} {secs:7.3f}s "
-                  f"rows={counts[name][n]:,}", flush=True)
+            m = measure(mk)
+            table.setdefault(name, {})[n] = m.total
+            counts.setdefault(name, {})[n] = m.rows
+            print(f"[{n:>3}x] {name:<10} {m.total:7.3f}s "
+                  f"rows={m.rows:,}", flush=True)
 
     hdr = "| stage | " + " | ".join(
         f"{n}x s | {n}x rows" for n in scales) + " | growth |"

@@ -37,13 +37,14 @@ import json
 import os
 import re
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
+
+from tools.measure import measure, release, session  # noqa: E402
 
 # query -> (primary input table, output_bound?)
 # output_bound queries emit true similarity/cointegration PAIRS: their
@@ -346,9 +347,8 @@ def run_skew(base_dir: str, scales: list[int], query_names: list[str],
     from moonshot_spark.plans.audit import (
         executed_plan, plan_shape, shape_regressions)
     from moonshot_spark.queries import QUERIES
-    from moonshot_spark.session import get_spark
 
-    spark = get_spark("moonshot_scale_bench")
+    spark = session("moonshot_scale_bench")
     sc = spark.sparkContext
     results: dict[str, dict] = {q: {} for q in query_names}
 
@@ -363,19 +363,13 @@ def run_skew(base_dir: str, scales: list[int], query_names: list[str],
             timings = {}
             shapes = {}
             for tag, d in (("uniform", uni_dir), ("skew", skew_dir)):
-                df = QUERIES[q](spark, d)
-                out_rows = df.count()                      # warm
-                shapes[tag] = plan_shape(executed_plan(df))
                 group = f"skew_{q}_{n}_{tag}"
                 sc.setJobGroup(group, group)
-                elapsed = float("inf")
-                for _ in range(timed_runs):
-                    t0 = time.perf_counter()
-                    QUERIES[q](spark, d).count()
-                    elapsed = min(elapsed, time.perf_counter() - t0)
+                m = measure(lambda: QUERIES[q](spark, d), runs=timed_runs)
                 sc.setJobGroup("", "")
-                _release_session_state(spark)
-                timings[tag] = elapsed
+                shapes[tag] = plan_shape(executed_plan(m.frame))
+                release(spark)
+                elapsed = timings[tag] = m.total
                 if tag == "skew":
                     share = _max_task_share(spark, group)
                     results[q].setdefault(n, {})["max_task_share"] = (
@@ -384,7 +378,7 @@ def run_skew(base_dir: str, scales: list[int], query_names: list[str],
                               "stage": share[1]})
                 results[q].setdefault(n, {})[f"{tag}_sec"] = round(
                     elapsed, 4)
-                results[q][n][f"{tag}_rows_out"] = out_rows
+                results[q][n][f"{tag}_rows_out"] = m.rows
             slowdown = timings["skew"] / max(timings["uniform"], 1e-9)
             results[q][n]["slowdown"] = round(slowdown, 2)
             print(f"[skew {n:>3}x] {q:<28} uniform={timings['uniform']:6.3f}s"
@@ -439,30 +433,13 @@ def _skew_violations(results: dict) -> dict[str, list[str]]:
     return violations
 
 
-def _release_session_state(spark) -> None:
-    """Unpersist leftover blocks after a query's timed runs.
-
-    Iterative queries localCheckpoint their edge/degree frames; the
-    blocks outlive the (discarded) DataFrames until the ContextCleaner
-    notices, and a 1x..100x sweep through one JVM accumulates enough
-    residue to exhaust the heap at the deepest octave (r12).  Between
-    queries nothing references them, so drop them eagerly."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist(False)
-    except Exception:
-        pass   # cleanup is best-effort; the cleaner will get there
-
-
 def run(base_dir: str, scales: list[int], query_names: list[str],
         timed_runs: int = 2) -> dict:
     from moonshot_spark.plans.audit import (
         executed_plan, plan_shape, shape_regressions)
     from moonshot_spark.queries import QUERIES
-    from moonshot_spark.session import get_spark
 
-    spark = get_spark("moonshot_scale_bench")
+    spark = session("moonshot_scale_bench")
     results: dict[str, dict] = {q: {} for q in query_names}
     table_rows: dict[int, dict[str, int]] = {}
 
@@ -477,24 +454,10 @@ def run(base_dir: str, scales: list[int], query_names: list[str],
             if tbl not in table_rows[n]:
                 table_rows[n][tbl] = (
                     spark.read.parquet(f"{sf_dir}/{tbl}.parquet").count())
-            df = QUERIES[q](spark, sf_dir)
-            out_rows = df.count()          # warm: JIT, footers, broadcasts
-            shape = plan_shape(executed_plan(df))
-            # fresh DataFrame per timed run: re-count()ing one DataFrame
-            # reuses its shuffle map outputs and under-measures the scan/
-            # shuffle work that dominates at scale (PERF.md r9)
-            elapsed = float("inf")
-            for _ in range(timed_runs):
-                t0 = time.perf_counter()
-                QUERIES[q](spark, sf_dir).count()
-                elapsed = min(elapsed, time.perf_counter() - t0)
-            # INVARIANT (ADVICE r12): must run only after every frame
-            # from this query is fully consumed — it unpersists ALL
-            # session RDDs, which would strand a still-referenced
-            # localCheckpointed frame (truncated lineage, blocks gone).
-            # Here each run ends in a terminal .count() and the frames
-            # are discarded, so nothing live references the blocks.
-            _release_session_state(spark)
+            m = measure(lambda: QUERIES[q](spark, sf_dir), runs=timed_runs)
+            out_rows, elapsed = m.rows, m.total
+            shape = plan_shape(executed_plan(m.frame))
+            release(spark)
             rows_in = table_rows[n][tbl]
             results[q][n] = {
                 "rows_in": rows_in,
@@ -748,11 +711,6 @@ def main(argv=None) -> int:
         if not args.merge:
             ap.error("--skew-only needs --merge (no uniform payload to "
                      "write a standalone report from)")
-    # pre-zero the pinned heap (session.py -Xms note): G1 commit/uncommit
-    # churn otherwise lands multi-second kernel-time stalls inside the
-    # per-octave timed windows (r13: the 100x benchmark_returns_intraday
-    # "cliff" was exactly this, not a plan defect)
-    os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
     if args.skew:
         # UI on BEFORE the session exists: the skew mode reads per-stage
         # task metrics over the REST API
