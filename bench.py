@@ -25,7 +25,8 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-from tools.measure import measure, release, session  # noqa: E402
+from moonshot_spark.materialize import scope  # noqa: E402
+from tools.measure import measure, session  # noqa: E402
 
 # Keep the printed line comfortably inside the harness's 2000-char
 # stdout tail, with headroom for the fixed fields.
@@ -80,10 +81,10 @@ def _canary_seconds(spark) -> float:
 
 
 def _measure_query(spark, fn, sf_dir) -> tuple[float, dict[str, float]]:
-    """(seconds, build/exec split) of one catalog query, then release
-    its cached blocks (every frame it built has been counted)."""
-    m = measure(lambda: fn(spark, sf_dir))
-    release(spark)
+    """(seconds, build/exec split) of one catalog query; the blocks
+    its frames materialized are released when the scope exits."""
+    with scope():
+        m = measure(lambda: fn(spark, sf_dir))
     return m.total, {"build": round(m.build, 4), "exec": round(m.exec, 4)}
 
 

@@ -36,7 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from moonshot_spark import materialize
 
 __all__ = ["bpe_state", "bpe_train", "bpe_apply",
            "bpe_save_rules", "bpe_load_rules"]
@@ -92,27 +93,25 @@ def bpe_train(docs: DataFrame, n_merges: int,
     ``grain='char'`` trains classic subword BPE (see bpe_state)."""
     state = bpe_state(docs, text_col, grain)
     rules: list[tuple[int, str, str, int]] = []
-    live: list[DataFrame] = []     # persisted, not yet unpersisted
-    try:
+    prev = None
+    with materialize.scope():
         for rnd in range(1, n_merges + 1):
             # persist each round's state: round k's count otherwise
             # re-executes ALL k-1 prior replaces from the raw scan
             # (O(n_merges^2) corpus passes over a long training run).
             # The cached state is one string column — comparable to the
-            # input corpus size, MEMORY_AND_DISK spills if needed; the
-            # previous round's cache is dropped as soon as the new one
-            # is materialized by this round's aggregate.  Every persisted
-            # frame sits in ``live`` until explicitly dropped, so a
-            # mid-round failure (executor loss, cancel) can't leak the
-            # current round's partially materialized cache blocks.
-            state = state.persist(StorageLevel.MEMORY_AND_DISK)
-            live.append(state)
+            # input corpus size, spilled to disk if needed; the previous
+            # round's cache is dropped as soon as the new one is
+            # materialized by this round's aggregate, the last one (also
+            # after a failed round) when the scope exits.
+            state = materialize.persist(state)
             top = (_pairs(state)
                    .groupBy("l", "r").agg(F.count("*").alias("cnt"))
                    .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
                    .limit(1).collect())
-            while len(live) > 1:   # new round materialized → drop older
-                live.pop(0).unpersist()
+            if prev is not None:   # new round materialized → drop older
+                materialize.drop(prev)
+            prev = state
             if not top:
                 break
             l, r, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
@@ -121,9 +120,6 @@ def bpe_train(docs: DataFrame, n_merges: int,
                 F.col("__s"),
                 F.lit(f" {l}  {r} "),
                 F.lit(f" {l}{MERGE_MARK}{r} ")).alias("__s"))
-    finally:
-        for frame in live:
-            frame.unpersist()
     return rules
 
 

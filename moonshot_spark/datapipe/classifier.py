@@ -11,9 +11,9 @@ Why this shape at 100 TB:
   per-partition partial gradients, tree-reduced to the driver).  The
   driver holds only the k+1 coefficients between iterations.
 - the feature frame is persisted across iterations so the corpus is
-  scanned once, not once per iteration (MEMORY_AND_DISK: at 100 TB the
-  projected feature frame is ~3 doubles/row — orders of magnitude
-  smaller than the text it came from).
+  scanned once, not once per iteration (spilled to disk if needed: at
+  100 TB the projected feature frame is ~3 doubles/row — orders of
+  magnitude smaller than the text it came from).
 - no Python UDFs: features, the link function, and the gradient are all
   Catalyst column expressions inside whole-stage codegen.
 
@@ -42,7 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from moonshot_spark import materialize
 
 __all__ = ["fast_sigmoid", "train_gd_classifier", "GDFit"]
 
@@ -95,8 +96,8 @@ def train_gd_classifier(feats: DataFrame, feature_cols: list[str],
     frame is persisted so iterations re-scan the (narrow) feature
     projection, not the raw corpus.
     """
-    feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with materialize.scope():
+        feats = materialize.persist(feats)
         betas = [0.0] * (len(feature_cols) + 1)
         history = []
         n = None
@@ -126,5 +127,3 @@ def train_gd_classifier(feats: DataFrame, feature_cols: list[str],
         correct = feats.agg(
             F.sum(pred_ok.cast("int")).alias("c")).collect()[0]["c"]
         return GDFit(history, n, int(correct))
-    finally:
-        feats.unpersist()

@@ -29,6 +29,8 @@ import pandas as pd  # module-level: pandas_udf resolves stringified hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
+
 __all__ = ["quantize_micro", "kmeans_fit_predict"]
 
 MICRO = 1_000_000
@@ -140,12 +142,12 @@ def kmeans_fit_predict(df: DataFrame, k: int = 8, n_iter: int = 2,
             F.lit(f" (expected dim {dim})")))
     ).otherwise(quantize_micro(vec_col))
     q = df.select(F.col(id_col), guard.alias("__q"))
-    # localCheckpoint (eager): every iteration AND the returned final-
+    # local checkpoint (eager): every iteration AND the returned final-
     # assignment plan re-read this frame; checkpointed blocks serve all
-    # of them and are freed when the DataFrame is garbage-collected —
-    # unlike cache()+unpersist(), which would leave the RETURNED plan
-    # recomputing the quantization from source on every action.
-    q = q.localCheckpoint(eager=True)
+    # of them until the caller's scope exits (or GC, outside a scope) —
+    # a persist dropped here would leave the RETURNED plan recomputing
+    # the quantization from source on every action.
+    q = materialize.checkpoint(q)
     init_rows = q.orderBy(id_col).limit(k).collect()
     if len(init_rows) < k:
         raise ValueError(f"k={k} exceeds input rows ({len(init_rows)})")

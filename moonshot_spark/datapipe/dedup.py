@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
 
 # Shared with sources/parquet.py (single under-parallel-scan heuristic,
 # VERDICT/ADVICE r11 consolidation); re-exported here for back-compat.
@@ -115,14 +116,15 @@ def shingle_frame(docs: DataFrame, text_col: str = "text",
                   repartition: bool = True) -> DataFrame:
     """(id, __shingles) — the shared input of the MinHash/LSH/verify
     stages.  Computing this ONCE and passing it to each stage (see
-    ``dedup_corpus``) halves the dominant cost of the near-dup pipeline:
+    ``verified_pairs``) halves the dominant cost of the near-dup pipeline:
     without sharing, signature building and Jaccard verification each
     re-shingle the full corpus.
 
-    Persisting the returned frame is the caller's call: at bench scale
-    ``.persist()`` wins outright; at 100 TB the materialized shingle set
-    is ~10x the corpus, so prefer ``StorageLevel.DISK_ONLY`` or accept the
-    recompute — the lineage stays a map-only projection either way.
+    Persisting the returned frame is the caller's call
+    (``verified_pairs`` does): at bench scale that wins outright; at
+    100 TB the materialized shingle set is ~10x the corpus, so prefer a
+    disk-only level or accept the recompute — the lineage stays a
+    map-only projection either way.
 
     ``repartition``: widen under-parallel sources (single file / few
     row-groups) before the CPU-heavy hashing; skipped when the source is
@@ -243,7 +245,7 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     # tiny (k hashes/doc) so cache them for the join.  Persist AFTER the
     # bucket-count window so the guard's diagnostic job and the pair join
     # share one materialization of the window shuffle, not two.
-    banded = banded.persist()
+    banded = materialize.persist(banded)
 
     if max_bucket_size is not None:
         if on_oversized in ("warn", "error"):
@@ -316,6 +318,23 @@ def ngram_jaccard_pairs(docs: DataFrame, candidate_pairs: DataFrame,
                          (inter.cast("double") / union).alias("jaccard"))
 
 
+def verified_pairs(docs: DataFrame, threshold: float,
+                   text_col: str = "text", id_col: str = "doc_id",
+                   max_bucket_size: int | None = None) -> DataFrame:
+    """(doc_a, doc_b, jaccard): LSH candidate pairs whose EXACT n-gram
+    Jaccard is >= ``threshold``.  ONE persisted shingle pass feeds both
+    the signatures and the verification (see ``shingle_frame``);
+    ``max_bucket_size`` is ``lsh_candidate_pairs``' hot-bucket guard."""
+    sh = materialize.persist(shingle_frame(docs, text_col, id_col))
+    candidates = lsh_candidate_pairs(docs, text_col, id_col,
+                                     max_bucket_size=max_bucket_size,
+                                     shingles=sh,
+                                     include_est_jaccard=False)
+    return (ngram_jaccard_pairs(docs, candidates, text_col, id_col,
+                                shingles=sh)
+            .where(F.col("jaccard") >= threshold))
+
+
 def dedup_corpus(docs: DataFrame, method: str = "exact",
                  text_col: str = "text", id_col: str = "doc_id",
                  threshold: float = 0.8,
@@ -367,26 +386,16 @@ def dedup_corpus(docs: DataFrame, method: str = "exact",
             # persisted (r15): referenced by the reps anti-join AND the
             # final removable union — two separate md5-groupBy subtree
             # executions otherwise (guide §2.4); id-list-sized frame
-            exact_removable = (keyed.join(grp, "__raw_fp")
-                               .where(F.col(id_col) != F.col("__keep"))
-                               .select(F.col(id_col))
-                               .persist())
+            exact_removable = materialize.persist(
+                keyed.join(grp, "__raw_fp")
+                .where(F.col(id_col) != F.col("__keep"))
+                .select(F.col(id_col)))
             reps = docs.join(exact_removable, id_col, "left_anti")
-        # ONE shingle pass shared by signature building and verification
-        # (persisted: tiny vs the corpus at bench scale; at 100 TB switch
-        # to DISK_ONLY or drop the persist and eat the recompute — see
-        # shingle_frame).  Hot-bucket guard stays ON for the E2E path:
-        # after the collapse it guards NEAR-duplicate boilerplate
-        # buckets (distinct texts, shared bands), which the collapse
-        # can't touch.
-        sh = shingle_frame(reps, text_col, id_col).persist()
-        candidates = lsh_candidate_pairs(reps, text_col, id_col,
-                                         max_bucket_size=max_bucket_size,
-                                         shingles=sh,
-                                         include_est_jaccard=False)
-        verified = (ngram_jaccard_pairs(reps, candidates, text_col, id_col,
-                                        shingles=sh)
-                    .where(F.col("jaccard") >= threshold))
+        # Hot-bucket guard stays ON for the E2E path: after the collapse
+        # it guards NEAR-duplicate boilerplate buckets (distinct texts,
+        # shared bands), which the collapse can't touch.
+        verified = verified_pairs(reps, threshold, text_col, id_col,
+                                  max_bucket_size)
         removable = verified.select(F.col("doc_b").alias(id_col)).distinct()
         if exact_removable is not None:
             removable = removable.unionByName(exact_removable).distinct()
@@ -441,14 +450,8 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text",
         mapping.where(F.col(id_col) != F.col("__rep")).select(id_col),
         id_col, "left_anti")
 
-    sh = shingle_frame(reps, text_col, id_col).persist()
-    candidates = lsh_candidate_pairs(reps, text_col, id_col,
-                                     max_bucket_size=max_bucket_size,
-                                     shingles=sh,
-                                     include_est_jaccard=False)
-    verified = (ngram_jaccard_pairs(reps, candidates, text_col, id_col,
-                                    shingles=sh)
-                .where(F.col("jaccard") >= threshold)
+    verified = (verified_pairs(reps, threshold, text_col, id_col,
+                               max_bucket_size)
                 .select("doc_a", "doc_b"))
     comp = (duplicate_clusters(verified, id_out=id_col)
             .select(F.col(id_col).alias("__rep"), "cluster_id"))
@@ -574,13 +577,12 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
     # flat-to-equal, outputs identical.  (The r9 alternative, an eager
     # localCheckpoint, measured slower: serialize-to-blocks + severed
     # lineage; persist stays lazy and columnar.)
-    sorted_sets = (tok.join(freq, "token")
-                   .groupBy(id_col)
-                   .agg(F.transform(
-                       F.array_sort(F.collect_list(
-                           F.struct("__f", "token"))),
-                       lambda s: s["token"]).alias("__ts"))
-                   .persist())
+    sorted_sets = materialize.persist(
+        tok.join(freq, "token")
+        .groupBy(id_col)
+        .agg(F.transform(
+            F.array_sort(F.collect_list(F.struct("__f", "token"))),
+            lambda s: s["token"]).alias("__ts")))
     sz = F.size("__ts")
     prefix_len = sz - F.ceil(sz * F.lit(threshold)) + 1
     prefix = (sorted_sets

@@ -40,6 +40,8 @@ import warnings
 
 from pyspark.sql import DataFrame, functions as F
 
+from moonshot_spark import materialize
+
 
 def _hash_min(edges: DataFrame, src: str, dst: str,
               max_iter: int) -> tuple[DataFrame, bool]:
@@ -47,11 +49,11 @@ def _hash_min(edges: DataFrame, src: str, dst: str,
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = sym.union(
         sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    sym = sym.localCheckpoint(eager=True)
+    sym = materialize.checkpoint(sym)
 
-    labels = (sym.select(F.col("u").alias("node")).distinct()
-              .withColumn("comp", F.col("node"))
-              .localCheckpoint(eager=True))
+    labels = materialize.checkpoint(
+        sym.select(F.col("u").alias("node")).distinct()
+        .withColumn("comp", F.col("node")))
 
     converged = False
     for i in range(max_iter):
@@ -59,14 +61,13 @@ def _hash_min(edges: DataFrame, src: str, dst: str,
                             .withColumnRenamed("comp", "v_comp"), "v")
                    .groupBy("u")
                    .agg(F.min("v_comp").alias("nbr_comp")))
-        stepped = (labels.join(nbr_min,
-                               labels["node"] == nbr_min["u"], "left")
-                   .select(F.col("node"),
-                           F.col("comp").alias("old_comp"),
-                           F.least(F.col("comp"),
-                                   F.coalesce(F.col("nbr_comp"),
-                                              F.col("comp"))).alias("comp"))
-                   .localCheckpoint(eager=True))
+        stepped = materialize.checkpoint(
+            labels.join(nbr_min, labels["node"] == nbr_min["u"], "left")
+            .select(F.col("node"),
+                    F.col("comp").alias("old_comp"),
+                    F.least(F.col("comp"),
+                            F.coalesce(F.col("nbr_comp"),
+                                       F.col("comp"))).alias("comp")))
         labels = stepped.select("node", "comp")
         if i == 0 and max_iter > 1:
             # round 1 cannot converge on a nonempty edge set — for any
@@ -153,17 +154,17 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     where only adjacent pairs collide).  For the near-clique topology
     LSH actually emits, plain hash-min converges in fewer total shuffles.
     """
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .where(F.col("u") != F.col("v"))
-         .distinct()
-         .localCheckpoint(eager=True))
-    nodes = (e.select(F.col("u").alias("node"))
-             .union(e.select(F.col("v").alias("node")))
-             .distinct()
-             .localCheckpoint(eager=True))
+    e = materialize.checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct())
+    nodes = materialize.checkpoint(
+        e.select(F.col("u").alias("node"))
+        .union(e.select(F.col("v").alias("node")))
+        .distinct())
     converged = False
     for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e2 = materialize.checkpoint(_small_star(_large_star(e)))
         # converged when the edge set is stable (symmetric difference 0);
         # both directions probed in ONE action (r15: two .count() jobs
         # per round halved to one — each job carries the fixed
@@ -287,10 +288,10 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
         # (node, label) count UNIFORMLY — provably argmax-neutral (see
         # below) but it also doubles the checkpointed edge list and
         # every round's join/aggregate volume for nothing (r14).
-        edges = fwd.localCheckpoint(eager=True)
+        edges = materialize.checkpoint(fwd)
     else:
         rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-        edges = fwd.unionByName(rev).localCheckpoint(eager=True)
+        edges = materialize.checkpoint(fwd.unionByName(rev))
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     for _ in range(rounds):

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
+
 __all__ = ["exact_fingerprint_index", "merge_exact_index",
            "incremental_exact_dups", "incremental_minhash_pairs",
            "ppjoin_index", "merge_ppjoin_index",
@@ -190,12 +192,10 @@ def _frozen_sorted_sets(docs: DataFrame, frozen_freq: DataFrame,
     # joins the consumers plan into, so the aggregate still re-ran per
     # branch; persist computes it once (same evidence + A/B as
     # dedup.prefix_filter_jaccard_pairs, r15).
-    return (j.groupBy(id_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct(
-                    F.coalesce("__f", F.lit(0)).alias("__f"), "token"))),
-                lambda s: s["token"]).alias("__ts"))
-            .persist())
+    return materialize.persist(j.groupBy(id_col).agg(F.transform(
+        F.array_sort(F.collect_list(F.struct(
+            F.coalesce("__f", F.lit(0)).alias("__f"), "token"))),
+        lambda s: s["token"]).alias("__ts")))
 
 
 def ppjoin_index(docs: DataFrame, text_col: str = "text",

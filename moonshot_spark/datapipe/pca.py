@@ -48,7 +48,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from moonshot_spark import materialize
 
 
 def sql_double(x: float) -> str:
@@ -106,22 +107,6 @@ def power_iteration_top_component(emb: DataFrame, dim: int,
     sum of squares for the trace).  All corpus-scale sums are exact
     integers — see module docstring.
     """
-    # NARROW shape (r9 rework): the original fit laid the vector out as
-    # 64 x{j} columns and aggregated 64-192 wide floor-sum expressions —
-    # past the codegen width limit, so every iteration's plan fell back
-    # to interpreted mode and paid ~2 s of janino recompilation PER
-    # AGGREGATE (the markowitz.py pathology; PERF.md r8/r9).  The array
-    # formulation below keeps each per-row reduction ONE higher-order-
-    # function expression and turns the per-dimension sums into a
-    # posexplode + groupBy(dim) (64 bounded groups, map-side combined).
-    # Every floor'd integer TERM is unchanged and integer sums are
-    # order-free, so mu/w/trace/eigval/v stay bit-identical — the DuckDB
-    # oracle replay is untouched.
-    feats = (emb.select(F.transform(F.col(vec_col),
-                                    lambda x: x.cast("double"))
-                        .alias("__xs"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-
     # Iteration expressions are assembled as SQL strings and parsed in
     # the JVM (r14): building them through the Python Column API — two
     # 64-literal arrays plus nested transform/zip_with lambdas per
@@ -136,7 +121,21 @@ def power_iteration_top_component(emb: DataFrame, dim: int,
 
     QD = sql_double(QUANT)
 
-    try:
+    # NARROW shape (r9 rework): the original fit laid the vector out as
+    # 64 x{j} columns and aggregated 64-192 wide floor-sum expressions —
+    # past the codegen width limit, so every iteration's plan fell back
+    # to interpreted mode and paid ~2 s of janino recompilation PER
+    # AGGREGATE (the markowitz.py pathology; PERF.md r8/r9).  The array
+    # formulation below keeps each per-row reduction ONE higher-order-
+    # function expression and turns the per-dimension sums into a
+    # posexplode + groupBy(dim) (64 bounded groups, map-side combined).
+    # Every floor'd integer TERM is unchanged and integer sums are
+    # order-free, so mu/w/trace/eigval/v stay bit-identical — the DuckDB
+    # oracle replay is untouched.
+    with materialize.scope():
+        feats = materialize.persist(
+            emb.select(F.transform(F.col(vec_col), lambda x: x.cast("double"))
+                       .alias("__xs")))
         # pass 0: n + quantized per-dimension sums -> mean vector
         q0 = F.expr(f"transform(__xs, x -> CAST(floor(x * {QD}) "
                     "AS BIGINT))")
@@ -225,8 +224,6 @@ def power_iteration_top_component(emb: DataFrame, dim: int,
             v = [wj / norm for wj in w]
             history.append((it, list(v)))
         return PCAFit(v, mu, eigval, trace, n, history)
-    finally:
-        feats.unpersist()
 
 
 def project_component(emb: DataFrame, fit: PCAFit,

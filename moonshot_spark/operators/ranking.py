@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
+
 __all__ = ["exact_ntile", "exact_rank", "grouped_topk",
            "grouped_exact_rank"]
 
@@ -100,8 +102,8 @@ def grouped_exact_rank(df: DataFrame, group_cols: list[str],
     gcols = [F.col(c) for c in group_cols]
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     n_part = df.sparkSession.sparkContext.defaultParallelism
-    part = (df.repartitionByRange(n_part, *gcols, *ocols)
-            .localCheckpoint()
+    part = (materialize.checkpoint(
+                df.repartitionByRange(n_part, *gcols, *ocols))
             .withColumn("__gr_pid", F.spark_partition_id()))
     local = F.row_number().over(
         Window.partitionBy(F.col("__gr_pid"), *gcols).orderBy(*ocols))
@@ -131,8 +133,8 @@ def _two_phase_rank(df: DataFrame, order_cols: list[str | Column],
     exact-global-rank Column, total row count).  One range shuffle, one
     bounded per-partition-count job, partitioned windows only."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (df.repartitionByRange(n_partitions, *cols)
-            .localCheckpoint()
+    part = (materialize.checkpoint(
+                df.repartitionByRange(n_partitions, *cols))
             .withColumn("__pid", F.spark_partition_id()))
     counts = sorted((r["__pid"], r["cnt"]) for r in
                     part.groupBy("__pid").agg(F.count("*").alias("cnt"))

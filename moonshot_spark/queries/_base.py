@@ -31,25 +31,13 @@ from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
 )
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
+from moonshot_spark.session import ensure_session_confs
 from moonshot_spark.sources.parquet import events_to_panel, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-
-def ensure_session_confs(spark: SparkSession) -> None:
-    """Apply engine-required runtime confs to an externally-created session.
-
-    The driver (and any embedding application) builds its own SparkSession;
-    these SQLConf settings are runtime-settable and required for correct
-    semantics: ns-timestamp parquet reads and NULL-on-zero-divide (pandas/
-    DuckDB-parity, see session.py).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def register(name: str, oracle: str | None = None):

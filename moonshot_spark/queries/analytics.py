@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
 from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
@@ -948,17 +949,17 @@ def price_path_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # InMemoryTableScans); values are unchanged (persist is
     # materialization, not semantics; oracle green both SFs).  Solo
     # noop-sink A/B same-session: min 7.3 -> 4.8 s.
-    panel = events_to_panel(spark, sf_dir).persist()
+    panel = materialize.persist(events_to_panel(spark, sf_dir))
     ws = Window.partitionBy("sid")
     c_dec = F.col("close").cast("decimal(18,2)")
     s1 = F.sum(c_dec).over(ws).cast("double")
     s2 = F.sum(c_dec * c_dec).over(ws).cast("double")
     n = F.count("close").over(ws).cast("double")
-    z = panel.select(
+    z = materialize.persist(panel.select(
         "sid", "date",
         ((F.col("close") - s1 / n)
-         / F.sqrt((s2 - s1 * s1 / n) / (n - 1))).alias("zc")) \
-        .where(F.col("zc").isNotNull() & ~F.isnan("zc")).persist()
+         / F.sqrt((s2 - s1 * s1 / n) / (n - 1))).alias("zc"))
+        .where(F.col("zc").isNotNull() & ~F.isnan("zc")))
     # vectorize: one date-aligned z array per sid (null where the sid
     # has no observation), so each candidate pair costs ONE row and a
     # bounded in-array fold — the join-per-(pair, date) formulation
@@ -970,10 +971,11 @@ def price_path_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sids = z.select("sid").distinct()
     spine = sids.crossJoin(dates)
     zfull = spine.join(z, ["sid", "date"], "left")
-    vec = (zfull.groupBy("sid")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("date", "zc"))),
-               lambda s: s["zc"]).alias("arr")).persist())
+    vec = materialize.persist(
+        zfull.groupBy("sid")
+        .agg(F.transform(
+            F.array_sort(F.collect_list(F.struct("date", "zc"))),
+            lambda s: s["zc"]).alias("arr")))
     from moonshot_spark.datapipe.similarity import pairwise_ssd_topk
 
     return pairwise_ssd_topk(vec, id_col="sid", arr_col="arr", k=5)
@@ -2376,8 +2378,8 @@ def cointegration_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured effect at sf0.1 is within box noise (the pair join +
     # window dominate); the win is one fewer corpus-scale scan+agg at
     # any scale.
-    panel = (events_to_panel(spark, sf_dir)
-             .select("sid", "date", "close").persist())
+    panel = materialize.persist(
+        events_to_panel(spark, sf_dir).select("sid", "date", "close"))
     dec = lambda c: F.col(c).cast("decimal(18,2)")
 
     lvl = (panel.groupBy("sid")

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
 from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
@@ -2163,7 +2164,8 @@ def portfolio_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 54 Exchanges in the static plan) three times per execution;
     # persisting the one-row-per-date portfolio series computes the
     # backtest once.  Values unchanged.
-    port = rets.groupBy("date").agg(folded_sid.alias("pr")).persist()
+    port = materialize.persist(
+        rets.groupBy("date").agg(folded_sid.alias("pr")))
     var5 = port.agg(
         F.expr("percentile(pr, 0.05)").alias("var_5pct"))
     tail = (port.crossJoin(F.broadcast(var5))

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
 from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
@@ -717,15 +718,9 @@ def jaccard_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard on just those candidates, kept at >= 0.5.  The expensive exact
     set intersection runs only on the LSH-bounded candidate set — the
     scale shape of every production near-dup pipeline."""
-    from moonshot_spark.datapipe.dedup import (
-        lsh_candidate_pairs, ngram_jaccard_pairs, shingle_frame)
+    from moonshot_spark.datapipe.dedup import verified_pairs
 
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_frame(docs).persist()
-    candidates = lsh_candidate_pairs(docs, shingles=sh,
-                                     include_est_jaccard=False)
-    return (ngram_jaccard_pairs(docs, candidates, shingles=sh)
-            .where(F.col("jaccard") >= 0.5))
+    return verified_pairs(load_table(spark, sf_dir, "documents"), 0.5)
 
 
 @register("dedup_corpus_minhash", """
@@ -1224,8 +1219,8 @@ def ivf_topk_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell assignment depends only on (corpus, centroids), not nprobe —
     # compute the Arrow-batched coarse quantizer ONCE and share it
     # between the full and partial probes (within-plan persist)
-    assigned = emb.withColumn(
-        "__cell", ivf_assign_col("embedding", cents)).persist()
+    assigned = materialize.persist(emb.withColumn(
+        "__cell", ivf_assign_col("embedding", cents)))
     full = ivf_topk(emb, q, cents, nprobe=16, k=5, assigned_corpus=assigned)
     part = ivf_topk(emb, q, cents, nprobe=2, k=5, assigned_corpus=assigned)
 
@@ -2975,8 +2970,7 @@ def dedup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     election reuses the cluster partitioning (one window over
     cluster_id); the corpus-wide left join is an equi-join on doc_id.
     Downstream `WHERE is_canonical` is the dedup filter."""
-    from moonshot_spark.datapipe.dedup import (
-        lsh_candidate_pairs, ngram_jaccard_pairs, shingle_frame)
+    from moonshot_spark.datapipe.dedup import verified_pairs
     from moonshot_spark.datapipe.graph import duplicate_clusters
 
     docs = (load_table(spark, sf_dir, "documents")
@@ -2984,12 +2978,7 @@ def dedup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     clones = (docs.where(F.col("doc_id") < 25)
               .withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000)))
     corpus = docs.unionByName(clones)
-    sh = shingle_frame(corpus).persist()
-    cand = lsh_candidate_pairs(corpus, shingles=sh,
-                               include_est_jaccard=False)
-    verified = (ngram_jaccard_pairs(corpus, cand, shingles=sh)
-                .where(F.col("jaccard") >= 0.5)
-                .select("doc_a", "doc_b"))
+    verified = verified_pairs(corpus, 0.5).select("doc_a", "doc_b")
     cc = duplicate_clusters(verified).select("doc_id", "cluster_id")
     labeled = (corpus.select("doc_id", "n_chars")
                .join(cc, "doc_id", "left")
@@ -4551,8 +4540,7 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE verbatim: the incremental map must equal the from-scratch result
     exactly (same min-id cluster ids, same sizes), which is the
     contraction-algebra contract, value-checked."""
-    from moonshot_spark.datapipe.dedup import (
-        lsh_candidate_pairs, ngram_jaccard_pairs, shingle_frame)
+    from moonshot_spark.datapipe.dedup import verified_pairs
     from moonshot_spark.datapipe.graph import (
         connected_components_adaptive, incremental_components)
 
@@ -4560,13 +4548,8 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     clones = (docs.where(F.col("doc_id") < 25)
               .withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000)))
     corpus = docs.unionByName(clones)
-    sh = shingle_frame(corpus).persist()
-    cand = lsh_candidate_pairs(corpus, shingles=sh,
-                               include_est_jaccard=False)
-    verified = (ngram_jaccard_pairs(corpus, cand, shingles=sh)
-                .where(F.col("jaccard") >= 0.5)
-                .select("doc_a", "doc_b")
-                .persist())
+    verified = materialize.persist(
+        verified_pairs(corpus, 0.5).select("doc_a", "doc_b"))
     is_new_a = F.col("doc_a") % 5 == 0
     is_new_b = F.col("doc_b") % 5 == 0
     old_pairs = verified.where(~is_new_a & ~is_new_b)

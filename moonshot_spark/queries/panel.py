@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
 from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
@@ -677,7 +678,7 @@ def continuous_contract_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # execution (plans/r15/continuous_contract_stitch_*).  Persisting
     # the panel and the 1-row factor collapses that to one panel
     # computation; values unchanged.
-    panel = events_to_panel(spark, sf_dir).persist()
+    panel = materialize.persist(events_to_panel(spark, sf_dir))
     a = panel.where(F.col("sid") == "3").select(
         "date", F.col("close").alias("ca"))
     b = panel.where(F.col("sid") == "7").select(
@@ -688,10 +689,10 @@ def continuous_contract_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     roll = (overlap.crossJoin(F.broadcast(med))
             .where(F.col("date") >= F.col("m"))
             .agg(F.min("date").alias("roll_date")))
-    factor = (roll.join(a, roll.roll_date == a.date)
-              .join(b, roll.roll_date == b.date)
-              .select("roll_date", (F.col("ca") / F.col("cb")).alias("adj"))
-              .persist())
+    factor = materialize.persist(
+        roll.join(a, roll.roll_date == a.date)
+        .join(b, roll.roll_date == b.date)
+        .select("roll_date", (F.col("ca") / F.col("cb")).alias("adj")))
     front = (a.crossJoin(F.broadcast(factor))
              .where(F.col("date") < F.col("roll_date"))
              .select("date", F.col("ca").alias("raw_close"),

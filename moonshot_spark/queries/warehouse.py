@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
 from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
 from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
@@ -1428,11 +1429,11 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str,
              .unionByName(pairs.select(F.col("item_b").alias("src"),
                                        F.col("item_a").alias("dst"))))
     if checkpoint:
-        edges = edges.localCheckpoint(eager=True)
+        edges = materialize.checkpoint(edges)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("deg"))
     if checkpoint:
-        deg = deg.localCheckpoint(eager=True)
+        deg = materialize.checkpoint(deg)
     return edges, deg
 
 

@@ -108,14 +108,13 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
         # per row.  Measured both ways in PERF.md §overhead.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE re-plan partitioning on top of cached relations: without
-        # this (default false) a .cache() freezes the materialization's
-        # shuffle-partition count, so a tiny cached dim (the bench's
-        # shared panel rollup) is re-scanned as 32 near-empty tasks by
+        # this (default false) persisting a frame freezes the
+        # materialization's shuffle-partition count, so a tiny cached dim
+        # (a persisted panel rollup) is re-scanned as 32 near-empty tasks by
         # every consumer stage.  At scale the same conf lets AQE coalesce
         # or skew-split cached-plan consumers by actual bytes.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory())
         # default = Spark's own 1g; the 10x-replicated correctness sweep
@@ -133,17 +132,24 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
                 "true" if os.environ.get("SPARK_GRAFT_UI") == "1"
                 else "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # pandas/NaN-style semantics: divide-by-zero yields NULL (matches
-        # DuckDB and the reference's NaN-guard idiom, base.py:955) instead of
-        # ANSI errors
-        .config("spark.sql.ansi.enabled", "false")
-        # driver testdata stores TIMESTAMP(NANOS) which Spark's reader rejects;
-        # read as long (ns since epoch) and convert explicitly (sources/parquet.py)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure_session_confs(spark)
     return spark
+
+
+def ensure_session_confs(spark: SparkSession) -> None:
+    """The runtime confs query semantics depend on; ``queries.register``
+    applies them too, as the driver builds its own SparkSession."""
+    # driver testdata stores TIMESTAMP(NANOS) which Spark's reader rejects;
+    # read as long (ns since epoch) and convert explicitly (sources/parquet.py)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # pandas/NaN-style semantics: divide-by-zero yields NULL (matches
+    # DuckDB and the reference's NaN-guard idiom, base.py:955) instead of
+    # ANSI errors
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def shuffle_partitions(spark: SparkSession, default: int = 200) -> int:

@@ -310,7 +310,11 @@ class Cache:
             return json.load(f).get("extra", {})
 
     def clear(self, prefix: str | None = None) -> None:
+        """Delete cached entries (all, or one prefix's).  Lock files stay:
+        see ``_FlockLock`` for why one must never be unlinked."""
         for name in os.listdir(self.cache_dir):
+            if name.endswith(".lock"):
+                continue
             if prefix is None or name.startswith(prefix + "_"):
                 path = os.path.join(self.cache_dir, name)
                 shutil.rmtree(path, ignore_errors=True) if os.path.isdir(path) \

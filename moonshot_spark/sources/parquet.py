@@ -165,7 +165,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                                                    # division rounds µs
         else:
             # NTZ→TZ cast is exact because the session tz is pinned to UTC
-            # (session.py / queries.ensure_session_confs).
+            # (session.ensure_session_confs).
             df = (df.withColumn("ts", F.col("ts").cast("timestamp"))
                   .withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000)))
     return df
@@ -173,15 +173,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-# session-lifetime panel memo, opt-in via SPARK_GRAFT_CACHE_PANEL=1:
-# dozens of catalog queries start from the same (sid, date) OHLCV
-# rollup — materializing it once is the classic shared-CTE/
-# materialized-view move and changes no query's semantics.  bench.py
-# deliberately does NOT set it: the DuckDB side recomputes the panel
-# CTE per query, so the honest engine-vs-engine compare must too.
-_PANEL_CACHE: dict = {}
 
 
 def events_to_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,46 +186,8 @@ def events_to_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One shuffle (groupBy sid,date); at scale this is the classic
     time-series rollup and pre-aggregates 100 TB of ticks down to the
-    daily panel before any strategy logic runs.  With
-    ``SPARK_GRAFT_CACHE_PANEL=1`` the rollup is cached once per
-    (session, sf_dir) — a bench/backfill session running many queries
-    over the same panel pays the tick scan once.
+    daily panel before any strategy logic runs.
     """
-    if os.environ.get("SPARK_GRAFT_CACHE_PANEL") == "1":
-        # key on applicationId, not id(spark): id() can be REUSED by a new
-        # session object at the same address (stale hit on a dead plan),
-        # and entries for stopped sessions would otherwise pin the dead
-        # SparkSession (and its executors' cached blocks) forever
-        # (ADVICE r5).  A new session gets a new appId, so stale entries
-        # stop being reachable; clear_panel_cache() drops them.
-        key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-        cached = _PANEL_CACHE.get(key)
-        if cached is not None:
-            return cached
-        panel = _build_panel(spark, sf_dir).cache()
-        _PANEL_CACHE[key] = panel
-        return panel
-    return _build_panel(spark, sf_dir)
-
-
-def clear_panel_cache(app_id: str | None = None) -> int:
-    """Unpersist and drop panel-cache entries — all of them, or only the
-    given application's.  Call when stopping a session in a long-lived
-    process so cached plans don't pin the old session.  Returns the
-    number of entries dropped."""
-    dropped = 0
-    for key in list(_PANEL_CACHE):
-        if app_id is None or key[0] == app_id:
-            df = _PANEL_CACHE.pop(key)
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped: nothing to free
-                pass
-            dropped += 1
-    return dropped
-
-
-def _build_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     return (
         events

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from moonshot_spark import materialize
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -42,9 +44,9 @@ def read_json_with_quarantine(spark: SparkSession, path: str,
            .json(path))
     # Spark disallows referencing ONLY the corrupt column over a raw file
     # scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN): the parsed frame must be
-    # materialized first.  cache() here; at 100 TB persist(DISK_ONLY) or
-    # land the parsed+capture frame to parquet and split from there.
-    raw = raw.cache()
+    # materialized first.  Persisted here; at 100 TB persist(DISK_ONLY)
+    # or land the parsed+capture frame to parquet and split from there.
+    raw = materialize.persist(raw)
     clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = (raw.where(F.col(CORRUPT_COL).isNotNull())
                   .select(F.col(CORRUPT_COL).alias("raw_record")))
@@ -63,7 +65,7 @@ def read_csv_with_quarantine(spark: SparkSession, path: str,
            .option("mode", "PERMISSIVE")
            .option("columnNameOfCorruptRecord", CORRUPT_COL)
            .csv(path))
-    raw = raw.cache()   # see read_json_with_quarantine
+    raw = materialize.persist(raw)   # see read_json_with_quarantine
     clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = (raw.where(F.col(CORRUPT_COL).isNotNull())
                   .select(F.col(CORRUPT_COL).alias("raw_record")))

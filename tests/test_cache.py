@@ -54,6 +54,35 @@ def test_clear_by_prefix(spark, cache, df):
     assert cache.get(spark, "master", {"a": 1}) is not None
 
 
+def test_clear_keeps_a_held_lock_file(cache):
+    """clear() must not unlink a lock file: a second writer would then
+    lock a fresh inode while the first still holds the old one."""
+    import threading
+
+    from moonshot_spark.sources.cache import _FileLock, _fingerprint
+
+    data_path, _ = cache._paths(_fingerprint("prices", {"a": 1}))
+    held, done = threading.Event(), threading.Event()
+
+    def hold():
+        with _FileLock(data_path + ".lock"):
+            held.set()
+            done.wait(10)
+
+    holder = threading.Thread(target=hold)
+    holder.start()
+    try:
+        assert held.wait(10)
+        cache.clear()
+        cache.clear("prices")
+        with pytest.raises(TimeoutError):
+            with _FileLock(data_path + ".lock", timeout=0.2):
+                pass
+    finally:
+        done.set()
+        holder.join()
+
+
 def test_concurrent_writers_serialize(spark, tmp_path):
     """Two threads set()ing the same key concurrently must serialize via
     the lock file (reference _cache.py:147-151 FileLock): after both

@@ -6,7 +6,7 @@ import pytest
 
 import bench
 import tools.measure as measure_mod
-from tools.measure import measure, release
+from tools.measure import measure
 
 
 class _Clock:
@@ -68,22 +68,6 @@ def test_measure_forces_with_the_given_action():
                 force=lambda cur: cur.fetchall())
     assert m.rows == [(42,)]
     assert m.total >= m.exec > 0
-
-
-def test_release_drops_cached_persisted_and_checkpointed_blocks(spark):
-    persisted = spark.range(100).selectExpr("id * 2 AS x").persist()
-    cached = spark.range(50).selectExpr("id + 1 AS y").cache()
-    checkpointed = spark.range(30).selectExpr("id - 1 AS z").localCheckpoint()
-    assert persisted.count() + cached.count() + checkpointed.count() == 180
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    jsc = spark.sparkContext._jsc
-    assert not cache_manager.isEmpty()
-    assert len(jsc.getPersistentRDDs()) >= 3
-
-    release(spark)
-
-    assert cache_manager.isEmpty()
-    assert len(jsc.getPersistentRDDs()) == 0
 
 
 def test_compact_payload_fits_the_line_and_keeps_the_slowest():

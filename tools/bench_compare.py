@@ -21,7 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
-from tools.measure import measure, release, session  # noqa: E402
+from moonshot_spark.materialize import scope  # noqa: E402
+from tools.measure import measure, session  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -71,8 +72,8 @@ def main():
         sql = oracles.get(name)
         if sql is None:
             continue
-        m = measure(lambda: fn(spark, sf_dir))
-        release(spark)
+        with scope():
+            m = measure(lambda: fn(spark, sf_dir))
         try:
             d = duckdb_seconds(con, sql)
         except duckdb.OutOfMemoryException:

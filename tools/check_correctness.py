@@ -119,6 +119,7 @@ def main():
     only = [a for a in args if not os.path.isdir(a)]
 
     import __spark_entry__ as entry_mod
+    from moonshot_spark.materialize import scope
     from moonshot_spark.session import get_spark
 
     spark = get_spark("check_correctness")
@@ -147,7 +148,8 @@ def main():
         # keys that exceed 2^16.  Record the error and keep sweeping so
         # one loud guard doesn't hide every later query's verdict.
         try:
-            spark_pdf = fn(spark, sf_dir).toPandas()
+            with scope():
+                spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:
             msg = str(exc).splitlines()[0][:300]
             print(f"{name}: ERROR — {msg}")

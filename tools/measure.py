@@ -2,7 +2,6 @@
 
 - ``measure(build)``: one untimed warm-up, then the min of ``runs``
   timed runs, each on a FRESHLY built frame, split into build and exec.
-- ``release(spark)``: drop every cached/persisted block between queries.
 - ``session(app)``: the measurement SparkSession (heap pre-touched).
 """
 
@@ -49,25 +48,6 @@ def measure(build: Callable[[], Any], runs: int = 2,
         if t2 - t0 < best[0]:
             best = (t2 - t0, t1 - t0, t2 - t1)
     return Measurement(*best, rows, frame)
-
-
-def release(spark) -> None:
-    """Drop every cached frame/table and leftover persisted RDD block.
-
-    Queries ``persist``/``cache``/``localCheckpoint`` subtrees; the
-    blocks outlive the discarded frames until the ContextCleaner
-    notices, so one session accumulates them across queries (a later
-    query can then read an earlier one's cache, or a 1x..100x sweep
-    exhausts the heap; r12).
-
-    INVARIANT (ADVICE r12): call only once every frame from the query is
-    fully consumed — it unpersists ALL session RDDs, which would strand
-    a still-referenced localCheckpointed frame (truncated lineage,
-    blocks gone).
-    """
-    spark.catalog.clearCache()
-    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        jrdd.unpersist(False)
 
 
 def session(app: str):

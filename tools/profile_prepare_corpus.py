@@ -40,6 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from moonshot_spark.materialize import scope  # noqa: E402
 from tools.measure import measure, session  # noqa: E402
 
 
@@ -115,7 +116,8 @@ def main():
     for n in scales:
         d = args.base if n == 1 else replicate_tables(spark, args.base, n)
         for name, mk in stages(spark, d, eval_max_id):
-            m = measure(mk)
+            with scope():
+                m = measure(mk)
             table.setdefault(name, {})[n] = m.total
             counts.setdefault(name, {})[n] = m.rows
             print(f"[{n:>3}x] {name:<10} {m.total:7.3f}s "

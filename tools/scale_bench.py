@@ -44,7 +44,8 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
-from tools.measure import measure, release, session  # noqa: E402
+from moonshot_spark.materialize import scope  # noqa: E402
+from tools.measure import measure, session  # noqa: E402
 
 # query -> (primary input table, output_bound?)
 # output_bound queries emit true similarity/cointegration PAIRS: their
@@ -364,11 +365,11 @@ def run_skew(base_dir: str, scales: list[int], query_names: list[str],
             shapes = {}
             for tag, d in (("uniform", uni_dir), ("skew", skew_dir)):
                 group = f"skew_{q}_{n}_{tag}"
-                sc.setJobGroup(group, group)
-                m = measure(lambda: QUERIES[q](spark, d), runs=timed_runs)
-                sc.setJobGroup("", "")
-                shapes[tag] = plan_shape(executed_plan(m.frame))
-                release(spark)
+                with scope():
+                    sc.setJobGroup(group, group)
+                    m = measure(lambda: QUERIES[q](spark, d), runs=timed_runs)
+                    sc.setJobGroup("", "")
+                    shapes[tag] = plan_shape(executed_plan(m.frame))
                 elapsed = timings[tag] = m.total
                 if tag == "skew":
                     share = _max_task_share(spark, group)
@@ -454,10 +455,10 @@ def run(base_dir: str, scales: list[int], query_names: list[str],
             if tbl not in table_rows[n]:
                 table_rows[n][tbl] = (
                     spark.read.parquet(f"{sf_dir}/{tbl}.parquet").count())
-            m = measure(lambda: QUERIES[q](spark, sf_dir), runs=timed_runs)
+            with scope():
+                m = measure(lambda: QUERIES[q](spark, sf_dir), runs=timed_runs)
+                shape = plan_shape(executed_plan(m.frame))
             out_rows, elapsed = m.rows, m.total
-            shape = plan_shape(executed_plan(m.frame))
-            release(spark)
             rows_in = table_rows[n][tbl]
             results[q][n] = {
                 "rows_in": rows_in,
