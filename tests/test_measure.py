@@ -59,6 +59,7 @@ def test_measure_times_fresh_frames_and_keeps_fastest_run(clock):
     # per-column minima would be 0.5 + 1.0, a run that never happened)
     assert (m.total, m.build, m.exec) == (3.0, 2.0, 1.0)
     assert m.rows == 7 and m.frame is built[0]   # the warm-up's result
+    assert m.compiles is None                    # not a Spark frame
 
 
 def test_measure_forces_with_the_given_action():
@@ -67,7 +68,15 @@ def test_measure_forces_with_the_given_action():
     m = measure(lambda: con.execute("SELECT 42"),
                 force=lambda cur: cur.fetchall())
     assert m.rows == [(42,)]
+    assert m.compiles is None
     assert m.total >= m.exec > 0
+
+
+def test_measure_counts_the_compilations_of_a_spark_run(spark):
+    # a literal no earlier run used: the warm-up compiles its classes,
+    # the timed run finds them cached
+    m = measure(lambda: spark.range(64).selectExpr("id * 7919 AS x"), runs=1)
+    assert m.rows == 64 and m.compiles == 0
 
 
 def test_compact_payload_fits_the_line_and_keeps_the_slowest():

@@ -197,3 +197,42 @@ def test_session_sizing_follows_host(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
     assert (spark_cores(), driver_memory()) == ("3", "5g")
     assert "-Xms5g" in driver_java_options().split()
+
+
+def test_rerun_of_plan_shapes_compiles_nothing_new(spark):
+    """Spark's codegen cache holds 100 classes by default, fewer than
+    these three queries generate (~170), so every re-run recompiled
+    the evicted ones.  Sized to the registry, fresh builds of plans just
+    run hit the cache.  Two passes fill it: on a busy host AQE can
+    finish stages in another order on the first re-run and plan a
+    variant that compiles a couple of new classes."""
+    from moonshot_spark.materialize import scope
+    from moonshot_spark.queries import QUERIES
+    from tests.conftest import SF_DIR
+    from tools.measure import codegen_compiles
+
+    names = ("dedup_clusters", "customer_rfm_segments",
+             "dedup_clusters_incremental")
+    with scope():
+        for _ in range(2):
+            for name in names:
+                QUERIES[name](spark, SF_DIR).count()
+        before = codegen_compiles(spark)
+        for name in names:
+            QUERIES[name](spark, SF_DIR).count()
+        assert codegen_compiles(spark) - before <= 3
+
+
+def test_session_sizes_codegen_cache_and_skips_call_sites(spark):
+    """Both fixed settings are on the live session, and PySpark's
+    per-call call-site capture (three Py4J round trips per F.*/Column
+    call) is off."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from moonshot_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert (spark.conf.get("spark.sql.codegen.cache.maxEntries")
+            == str(CODEGEN_CACHE_ENTRIES))
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

@@ -1,7 +1,8 @@
 """The one timing loop: every harness in this repo times a query here.
 
 - ``measure(build)``: one untimed warm-up, then the min of ``runs``
-  timed runs, each on a FRESHLY built frame, split into build and exec.
+  timed runs, each on a FRESHLY built frame, split into build and exec,
+  with the codegen compilations of the fastest run.
 - ``session(app)``: the measurement SparkSession (heap pre-touched).
 """
 
@@ -18,10 +19,18 @@ class Measurement(NamedTuple):
     exec: float    # that same run's exec seconds
     rows: Any      # what forcing the warm-up returned (count() -> rows)
     frame: Any     # the warm-up frame (for plan shape; already forced)
+    compiles: int | None  # that run's codegen compilations (Spark only)
 
 
 def _count(df) -> int:
     return df.count()
+
+
+def codegen_compiles(spark) -> int:
+    """Spark's JVM-wide count of generated-class compilations, i.e. of
+    misses of its codegen cache (no UI needed)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def measure(build: Callable[[], Any], runs: int = 2,
@@ -34,20 +43,27 @@ def measure(build: Callable[[], Any], runs: int = 2,
     under-measures shuffle-heavy queries by ~2x (PERF.md r9).  build =
     frame construction (driver Py4J/analysis plus any bounded eager
     action a builder runs); exec = ``force`` on that fresh frame.  Both
-    come from the same (fastest) run, so they add up to ``total``.
+    come from the same (fastest) run, so they add up to ``total``, and
+    so does ``compiles`` (read outside the timed window).
     """
+    from pyspark.sql import DataFrame
+
     frame = build()
     rows = force(frame)
-    best = (float("inf"), float("inf"), float("inf"))
+    # None on a non-Spark frame (the DuckDB side of bench_compare.py)
+    spark = frame.sparkSession if isinstance(frame, DataFrame) else None
+    best = (float("inf"), float("inf"), float("inf"), None)
     for _ in range(runs):
+        c0 = codegen_compiles(spark) if spark else None
         t0 = time.perf_counter()
         df = build()
         t1 = time.perf_counter()
         force(df)
         t2 = time.perf_counter()
         if t2 - t0 < best[0]:
-            best = (t2 - t0, t1 - t0, t2 - t1)
-    return Measurement(*best, rows, frame)
+            best = (t2 - t0, t1 - t0, t2 - t1,
+                    codegen_compiles(spark) - c0 if spark else None)
+    return Measurement(*best[:3], rows, frame, best[3])
 
 
 def session(app: str):
