@@ -17,14 +17,14 @@ driver:
 
 - ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``:
   Spark's cache of compiled generated classes holds 100 by default, so
-  a warm pass of 5 catalog queries (~140 classes) recompiled ~130 of
-  them at ~7 ms each, and the whole registry (~3,450 classes) never
-  stayed warm.  The bound holds the registry; it is not unbounded, so a
-  long-lived session that keeps generating new code cannot grow without
-  limit.
+  a warm pass of the 5 ``catalog_mix`` queries (~140 classes)
+  recompiled 131-133 of them, and the whole registry (~3,460 classes)
+  never stayed warm.  The bound holds the registry; it is not
+  unbounded, so a long-lived session that keeps generating new code
+  cannot grow without limit.
 - ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark 4
   otherwise records the Python call site of every ``F.*``/Column call
-  with three extra Py4J round trips (active session, origin set and
+  with extra Py4J round trips (active-session lookup, origin set and
   clear), and the call site it records is usually a line of this
   library, not of the user.
 
@@ -42,8 +42,9 @@ from pyspark.sql import SparkSession
 _GIB = 1 << 30
 
 # A power of two above the registry's working set of generated classes:
-# 3,464 at sf0.1 and ~3,450 at sf0.001 (one sweep of every query with an
-# unbounded cache; PERF.md "Codegen cache sized to the registry").
+# 3,464 at sf0.1 and 3,459 at sf0.001 (classes compiled by one sweep of
+# every query into an empty cache that evicted nothing; PERF.md
+# "2026-10-18: codegen cache sized to the registry").
 CODEGEN_CACHE_ENTRIES = 4096
 
 
@@ -158,11 +159,11 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
                 else "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # keep the registry's compiled classes: at Spark's 100 a warm
-        # catalog pass recompiled ~130 classes, ~0.9 s of a ~4.4 s pass
+        # catalog_mix pass recompiled 131-133 of its ~140 classes
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
-        # no per-call call-site capture: about halves the Py4J round
-        # trips of a catalog pass (q1_pricing_summary 524 -> 144)
+        # no per-call call-site capture: it doubled the Py4J round
+        # trips of a catalog_mix pass (~2,400 -> ~5,000)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
