@@ -201,11 +201,11 @@ def test_session_sizing_follows_host(monkeypatch):
 
 def test_rerun_of_plan_shapes_compiles_nothing_new(spark):
     """Spark's codegen cache holds 100 classes by default, fewer than
-    these three queries generate (~170), so every re-run recompiled
-    the evicted ones.  Sized to the registry, fresh builds of plans just
-    run hit the cache.  Two passes fill it: on a busy host AQE can
-    finish stages in another order on the first re-run and plan a
-    variant that compiles a couple of new classes."""
+    these three queries generate, so every re-run recompiled the
+    evicted ones (213 classes at the default).  Sized to the registry,
+    fresh builds of plans just run hit the cache.  Two passes fill it:
+    on a busy host AQE can finish stages in another order on the first
+    re-run and plan a variant that compiles a couple of new classes."""
     from moonshot_spark.materialize import scope
     from moonshot_spark.queries import QUERIES
     from tests.conftest import SF_DIR
@@ -225,8 +225,8 @@ def test_rerun_of_plan_shapes_compiles_nothing_new(spark):
 
 def test_session_sizes_codegen_cache_and_skips_call_sites(spark):
     """Both fixed settings are on the live session, and PySpark's
-    per-call call-site capture (three Py4J round trips per F.*/Column
-    call) is off."""
+    per-call call-site capture (extra Py4J round trips on every
+    F.*/Column call) is off."""
     from pyspark.errors.utils import is_debugging_enabled
 
     from moonshot_spark.session import CODEGEN_CACHE_ENTRIES

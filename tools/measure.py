@@ -17,9 +17,9 @@ class Measurement(NamedTuple):
     total: float   # fastest timed run, build + exec
     build: float   # that same run's build seconds
     exec: float    # that same run's exec seconds
+    compiles: int | None  # that run's codegen compilations (Spark only)
     rows: Any      # what forcing the warm-up returned (count() -> rows)
     frame: Any     # the warm-up frame (for plan shape; already forced)
-    compiles: int | None  # that run's codegen compilations (Spark only)
 
 
 def _count(df) -> int:
@@ -43,8 +43,8 @@ def measure(build: Callable[[], Any], runs: int = 2,
     under-measures shuffle-heavy queries by ~2x (PERF.md r9).  build =
     frame construction (driver Py4J/analysis plus any bounded eager
     action a builder runs); exec = ``force`` on that fresh frame.  Both
-    come from the same (fastest) run, so they add up to ``total``, and
-    so does ``compiles`` (read outside the timed window).
+    come from the same (fastest) run, so they add up to ``total``;
+    ``compiles`` is that run's too, read outside the timed window.
     """
     from pyspark.sql import DataFrame
 
@@ -63,7 +63,7 @@ def measure(build: Callable[[], Any], runs: int = 2,
         if t2 - t0 < best[0]:
             best = (t2 - t0, t1 - t0, t2 - t1,
                     codegen_compiles(spark) - c0 if spark else None)
-    return Measurement(*best[:3], rows, frame, best[3])
+    return Measurement(*best, rows, frame)
 
 
 def session(app: str):
