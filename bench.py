@@ -7,8 +7,8 @@ once untimed to warm the JVM/IO caches, then built fresh and counted
 twice (min of two runs), so the full plan executes without driver
 materialization of results.  After its timed runs every cached or
 persisted block is released, so no query reads another query's cache.
-``BENCH_DETAIL.json`` also records the codegen compilations of each
-query's fastest run.
+``BENCH_DETAIL.json`` also records the codegen compilations and the
+Spark jobs, stages and tasks of each query's fastest run.
 
 Output contract: the FINAL stdout line is a single JSON object kept
 under ~1900 bytes (the harness captures only a 2000-char tail of
@@ -68,6 +68,10 @@ REMEASURE_CAP = 40
 # the late queries are just scheduled into a degraded tail.
 CANARY_SAMPLE_EVERY = 40
 
+# the per-query layer counts of tools/measure.Measurement that
+# BENCH_DETAIL.json records, one {query: count} map each
+LAYERS = ("compiles", "jobs", "stages", "tasks")
+
 
 def _canary_seconds(spark) -> float:
     """One fixed shuffle+agg over spark.range: data-independent work that
@@ -82,14 +86,15 @@ def _canary_seconds(spark) -> float:
         .select(F.sum("s")))).total
 
 
-def _measure_query(spark, fn, sf_dir) -> tuple[float, dict[str, float], int]:
-    """(seconds, build/exec split, codegen compiles) of one catalog
+def _measure_query(spark, fn, sf_dir
+                   ) -> tuple[float, dict[str, float], dict[str, int]]:
+    """(seconds, build/exec split, ``LAYERS`` counts) of one catalog
     query's fastest run; the blocks its frames materialized are released
     when the scope exits."""
     with scope():
         m = measure(lambda: fn(spark, sf_dir))
     return (m.total, {"build": round(m.build, 4), "exec": round(m.exec, 4)},
-            m.compiles)
+            {layer: getattr(m, layer) for layer in LAYERS})
 
 
 def _compact_payload(total: float, n_queries: int, timings: dict, sf: float) -> dict:
@@ -155,14 +160,14 @@ def main():
 
     timings: dict[str, float] = {}
     split: dict[str, dict[str, float]] = {}
-    compiles: dict[str, int] = {}
+    layers: dict[str, dict[str, int]] = {}
     canary_samples: list[dict] = []
     total = 0.0
     for n_done, (name, fn) in enumerate(QUERIES.items()):
         if n_done and n_done % CANARY_SAMPLE_EVERY == 0:
             canary_samples.append(
                 {"after": n_done, "sec": round(_canary_seconds(spark), 4)})
-        elapsed, split[name], compiles[name] = _measure_query(
+        elapsed, split[name], layers[name] = _measure_query(
             spark, fn, sf_dir)
         timings[name] = round(elapsed, 4)
         total += elapsed
@@ -180,7 +185,7 @@ def main():
             and timings[name] > hist[name] + REMEASURE_MIN_EXCESS]
         flagged.sort(key=lambda kv: -kv[1])
         for name, _excess in flagged[:REMEASURE_CAP]:
-            second, split2, compiles2 = _measure_query(
+            second, split2, layers2 = _measure_query(
                 spark, QUERIES[name], sf_dir)
             second = round(second, 4)
             remeasured[name] = {"first_pass": timings[name],
@@ -190,7 +195,7 @@ def main():
                 total -= timings[name] - second
                 timings[name] = second
                 split[name] = split2
-                compiles[name] = compiles2
+                layers[name] = layers2
 
     canary_last = round(_canary_seconds(spark), 4)
     # the LAST canary is expected to be a bit faster (deeper JIT after
@@ -216,7 +221,9 @@ def main():
                 "unit": "sec",
                 "queries": timings,
                 "build_exec_split": split,
-                "compiles": compiles,
+                **{layer: {name: counts[layer]
+                           for name, counts in layers.items()}
+                   for layer in LAYERS},
                 "canary": canary,
                 "remeasured": remeasured,
                 "cpus": cpus,

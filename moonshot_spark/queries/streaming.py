@@ -13,7 +13,8 @@ from moonshot_spark.functions.window import (
 from moonshot_spark.queries._base import (
     PANEL_SQL, ORACLES, QUERIES, register,
 )
-from moonshot_spark.sources.parquet import events_to_panel, load_table
+from moonshot_spark.sources.parquet import (events_to_panel, load_table,
+                                           parquet_schema)
 
 
 
@@ -113,7 +114,7 @@ def streaming_ohlcv_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema       # ts: long ns OR timestamp[us]
+    sch = parquet_schema(spark, path)       # ts: long ns OR timestamp[us]
     stage = _stage_stream_source(path)
     stream = spark.readStream.schema(sch).parquet(stage)
     if sch["ts"].dataType.simpleString() != "bigint":
@@ -196,7 +197,7 @@ def streaming_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     from moonshot_spark.streaming.stateful import stream_dollar_bars
 
     path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
+    sch = parquet_schema(spark, path)
     stage = _stage_stream_source(path)
     out_dir = tempfile.mkdtemp(prefix="stream_dbars_out_")
     ckpt = tempfile.mkdtemp(prefix="stream_dbars_ckpt_")

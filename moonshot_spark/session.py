@@ -28,6 +28,19 @@ driver:
   clear), and the call site it records is usually a line of this
   library, not of the user.
 
+One fixed setting keeps a small post-shuffle stage as wide as the
+cores:
+
+- ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` =
+  ``COALESCE_MIN_PARTITION_SIZE`` (256 KB; Spark's default is 1 MB).
+  AQE coalesces a shuffle to ``defaultParallelism`` partitions but never
+  below this size, so at 1 MB a ``backtest_wide`` backtest's five
+  stages ran 3, 2, 1, 1 and 2 tasks on a 4-core host: its window, cost
+  and melt work ran on one or two cores.  At 256 KB they run 3, 4, 4, 4
+  and 4.  KB-sized shuffles still coalesce to one task, and a
+  200-partition shuffle still merges down to ``defaultParallelism``
+  (PERF.md "2026-10-18: post-shuffle stages as wide as the cores").
+
 The codegen cache is JVM-global and sized when the JVM first generates
 code: a JVM whose first session was not built by ``get_spark`` keeps
 Spark's 100 entries for its whole life, whatever later sessions set.
@@ -46,6 +59,12 @@ _GIB = 1 << 30
 # every query into an empty cache that evicted nothing; PERF.md
 # "2026-10-18: codegen cache sized to the registry").
 CODEGEN_CACHE_ENTRIES = 4096
+
+# The smallest partition AQE's coalescing may leave (Spark's default is
+# 1m): a backtest's few-MB shuffles then run one task per core on a
+# 4-core host, where 1m merged them into 1-2 tasks; a shuffle of under
+# 256 KB still runs as one task.
+COALESCE_MIN_PARTITION_SIZE = "256k"
 
 
 def _host_memory_bytes() -> int:
@@ -126,12 +145,18 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst stays at the default TRUE: size-based
-        # coalescing (false) saved ~7% on trivially tiny shuffles but
-        # serialized CPU-heavy small-BYTE stages (item_cooccurrence's
-        # pair expansion 1.2 s -> 3.9 s, z-order rank 0.2 s -> 0.8 s)
-        # because post-shuffle bytes say nothing about downstream compute
-        # per row.  Measured both ways in PERF.md §overhead.
+        # Post-shuffle bytes say nothing about compute per row, so
+        # coalescing aims at parallelism, not at a byte size:
+        # parallelismFirst stays at the default TRUE (size-based
+        # coalescing saved ~7% on tiny shuffles but serialized
+        # CPU-heavy small-byte stages: item_cooccurrence's pair
+        # expansion 1.2 s -> 3.9 s, z-order rank 0.2 s -> 0.8 s; PERF.md
+        # §overhead), and the size floor drops from 1m to 256k, below
+        # which a stage of a few MB (a backtest's windows, costs and
+        # melt) was merged into 1-2 tasks.  A lower floor (1 byte)
+        # split KB-sized catalog stages too and lost.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                COALESCE_MIN_PARTITION_SIZE)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE re-plan partitioning on top of cached relations: without
         # this (default false) persisting a frame freezes the

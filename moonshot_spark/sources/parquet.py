@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -67,6 +68,18 @@ def _read_with_schema_memo(spark: SparkSession, path: str) -> DataFrame:
         _SCHEMA_CACHE[path] = (fp, df.schema)
         return df
     return spark.read.schema(hit[1]).parquet(path)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of the parquet dataset at ``path``, through the memo:
+    its footer is read once per fingerprint, not once per call."""
+    hit = _SCHEMA_CACHE.get(path)
+    try:
+        if hit is not None and hit[0] == _fingerprint(path):
+            return hit[1]
+    except OSError:
+        pass
+    return _read_with_schema_memo(spark, path).schema
 
 
 def clear_schema_cache() -> int:
