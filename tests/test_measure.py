@@ -59,7 +59,8 @@ def test_measure_times_fresh_frames_and_keeps_fastest_run(clock):
     # per-column minima would be 0.5 + 1.0, a run that never happened)
     assert (m.total, m.build, m.exec) == (3.0, 2.0, 1.0)
     assert m.rows == 7 and m.frame is built[0]   # the warm-up's result
-    assert m.compiles is None                    # not a Spark frame
+    # not a Spark frame: no layer counts
+    assert (m.compiles, m.jobs, m.stages, m.tasks) == (None,) * 4
 
 
 def test_measure_forces_with_the_given_action():
@@ -68,7 +69,7 @@ def test_measure_forces_with_the_given_action():
     m = measure(lambda: con.execute("SELECT 42"),
                 force=lambda cur: cur.fetchall())
     assert m.rows == [(42,)]
-    assert m.compiles is None
+    assert (m.compiles, m.jobs, m.stages, m.tasks) == (None,) * 4
     assert m.total >= m.exec > 0
 
 
@@ -77,6 +78,35 @@ def test_measure_counts_the_compilations_of_a_spark_run(spark):
     # the timed run finds them cached
     m = measure(lambda: spark.range(64).selectExpr("id * 7919 AS x"), runs=1)
     assert m.rows == 64 and m.compiles == 0
+
+
+def test_measure_counts_the_jobs_stages_and_tasks_of_a_spark_run(spark):
+    # one shuffle under AQE: a job runs its map stage, then a job runs
+    # the post-shuffle stage (listing the map stage again, skipped); the
+    # jobs counted are those of the caller's job group, left as it was
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+
+    def build():
+        return (spark.range(1000, numPartitions=cores)
+                .groupBy((F.col("id") % 7).alias("k")).count())
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    sc.setJobGroup("measure-layers", "measure-layers")
+    try:
+        m = measure(build, runs=1, force=noop)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "measure-layers"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # 7 keys of a few bytes coalesce to one post-shuffle task
+    assert (m.jobs, m.stages, m.tasks) == (2, 2, cores + 1)
+    again = measure(build, runs=1, force=noop)  # in no job group
+    assert (again.jobs, again.stages, again.tasks) == (2, 2, cores + 1)
 
 
 def test_compact_payload_fits_the_line_and_keeps_the_slowest():

@@ -236,3 +236,46 @@ def test_session_sizes_codegen_cache_and_skips_call_sites(spark):
     assert spark.conf.get(
         "spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert is_debugging_enabled() is False
+
+
+def test_session_sets_the_coalescing_floor(spark):
+    """The live session carries AQE's coalescing floor, the named
+    constant rather than Spark's 1 MB default."""
+    from moonshot_spark.session import COALESCE_MIN_PARTITION_SIZE
+
+    assert spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    ) == COALESCE_MIN_PARTITION_SIZE
+
+
+def test_few_mb_shuffle_runs_one_task_per_core(spark):
+    """AQE coalesces a shuffle to defaultParallelism partitions, but
+    never below the floor: at Spark's 1 MB a few-MB shuffle (~400 KB
+    per core here) ran in 2 tasks on 4 cores, as a backtest's window,
+    cost and melt stages did.  At the session's floor it keeps one task
+    per core, and a KB-sized shuffle still runs as one task."""
+    from pyspark.sql import functions as F
+
+    from tools.measure import measure
+
+    cores = spark.sparkContext.defaultParallelism
+
+    def post_shuffle_tasks(rows_per_core):
+        # one distinct 64-char key per row: the partial aggregate keeps
+        # every row, so the shuffle's bytes grow with the rows
+        m = measure(
+            lambda: (spark.range(rows_per_core * cores, numPartitions=cores)
+                     .groupBy(F.sha2(F.col("id").cast("string"), 256))
+                     .count()),
+            runs=1,
+            force=lambda df: df.write.format("noop").mode("overwrite").save())
+        assert m.stages == 2                # map stage, post-shuffle stage
+        return m.tasks - cores              # the map stage runs `cores`
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(cores))
+    try:
+        assert post_shuffle_tasks(10_000) == cores
+        assert post_shuffle_tasks(100) == 1
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)

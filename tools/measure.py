@@ -88,8 +88,7 @@ def measure(build: Callable[[], Any], runs: int = 2,
     # None on a non-Spark frame (the DuckDB side of bench_compare.py)
     spark = frame.sparkSession if isinstance(frame, DataFrame) else None
     sc = spark.sparkContext if spark else None
-    best = (float("inf"), float("inf"), float("inf"), None, None, None,
-            None)
+    best = (float("inf"),) * 3 + (None,) * 4
     for _ in range(runs):
         if sc:
             c0, jobs0 = codegen_compiles(spark), _job_ids(sc)
@@ -101,7 +100,7 @@ def measure(build: Callable[[], Any], runs: int = 2,
         if t2 - t0 < best[0]:
             layers = ((codegen_compiles(spark) - c0,
                        *_stage_width(sc, _job_ids(sc) - jobs0))
-                      if sc else (None, None, None, None))
+                      if sc else (None,) * 4)
             best = (t2 - t0, t1 - t0, t2 - t1, *layers)
     return Measurement(*best, rows, frame)
 
