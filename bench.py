@@ -87,7 +87,7 @@ def _canary_seconds(spark) -> float:
 
 
 def _measure_query(spark, fn, sf_dir
-                   ) -> tuple[float, dict[str, float], dict[str, int]]:
+                   ) -> tuple[float, dict[str, float], dict[str, int | None]]:
     """(seconds, build/exec split, ``LAYERS`` counts) of one catalog
     query's fastest run; the blocks its frames materialized are released
     when the scope exits."""
