@@ -26,14 +26,10 @@ bit-identical across engines, so both operators hash-match SQL oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def token_count_expr(text_col: Column | str) -> Column:
-    """Whitespace token count (the engine's token-budget currency)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.size(F.split(c, " "))
+from moonshot_spark.datapipe.text import token_count_expr
 
 
 def chunk_tokens(docs: DataFrame, text_col: str = "text",

@@ -28,6 +28,7 @@ def tokens_expr(col: Column | str, sep: str = " ") -> Column:
 
 
 def token_count_expr(col: Column | str) -> Column:
+    """Whitespace token count (the engine's token-budget currency)."""
     return F.size(tokens_expr(col))
 
 

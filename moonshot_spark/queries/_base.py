@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark.functions.window import (
@@ -68,3 +68,23 @@ PANEL_SQL = """
            CAST(count(*) AS DOUBLE) AS volume
     FROM events GROUP BY 1, 2
 """
+
+
+def six_hour_bar() -> Column:
+    """The intraday fixtures' bar label: the tick's hour floored to 6
+    hours, as "HH:00:00" (00, 06, 12 or 18)."""
+    hour = F.hour("ts")
+    return F.concat(F.lpad((hour - hour % 6).cast("string"), 2, "0"),
+                    F.lit(":00:00"))
+
+
+def intraday_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(sid, date, time, close) on 6-hour bars, close = the bar's last
+    tick: the catalog's intraday panel (INTRADAY_PANEL_SQL in
+    queries/backtest.py is its oracle)."""
+    return (load_table(spark, sf_dir, "events")
+            .withColumn("sid", F.col("user_id").cast("string"))
+            .withColumn("date", F.to_date("ts"))
+            .withColumn("time", six_hour_bar())
+            .groupBy("sid", "date", "time")
+            .agg(F.max_by("value", "ts_ns").alias("close")))

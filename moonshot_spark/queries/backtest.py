@@ -12,10 +12,11 @@ from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
 )
 from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, register,
+    PANEL_SQL, ORACLES, QUERIES, intraday_panel, register,
 )
 from moonshot_spark.sources.local import local_df
-from moonshot_spark.sources.parquet import events_to_panel, load_table
+from moonshot_spark.sources.parquet import events_to_panel
+from moonshot_spark.strategies.base import pivot_results
 
 
 
@@ -543,13 +544,8 @@ def backtest_per_share_commission(spark: SparkSession, sf_dir: str) -> DataFrame
 
     panel = events_to_panel(spark, sf_dir)
     results = DMAPerShare().backtest(panel)
-    pivoted = (results.groupBy("sid", "date")
-               .pivot("field", ["Return", "Commission"])
-               .agg(F.first("value")))
-    return pivoted.select(
-        "sid", "date",
-        F.col("Return").alias("net_return"),
-        F.col("Commission").alias("commission"))
+    return pivot_results(results, {
+        "Return": "net_return", "Commission": "commission"})
 
 
 _BACKTEST_POSLIMIT_SQL = f"""
@@ -727,13 +723,8 @@ def backtest_commission_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.when(F.col("sid").cast("bigint") % 2 == 0, 1.0)
                   .otherwise(50.0).alias("multiplier")))
     results = DMADispatch().backtest(panel, master=master)
-    pivoted = (results.groupBy("sid", "date")
-               .pivot("field", ["Return", "Commission"])
-               .agg(F.first("value")))
-    return pivoted.select(
-        "sid", "date",
-        F.col("Return").alias("net_return"),
-        F.col("Commission").alias("commission"))
+    return pivot_results(results, {
+        "Return": "net_return", "Commission": "commission"})
 
 
 _BACKTEST_BORROW_SQL = f"""
@@ -810,13 +801,8 @@ def backtest_borrow_fees(spark: SparkSession, sf_dir: str) -> DataFrame:
         "borrow_fee",
         (F.col("sid").cast("bigint") % 5).cast("double") + 1.0)
     results = LongShortBorrow().backtest(panel)
-    pivoted = (results.groupBy("sid", "date")
-               .pivot("field", ["Return", "Slippage"])
-               .agg(F.first("value")))
-    return pivoted.select(
-        "sid", "date",
-        F.col("Return").alias("net_return"),
-        F.col("Slippage").alias("borrow_fee_cost"))
+    return pivot_results(results, {
+        "Return": "net_return", "Slippage": "borrow_fee_cost"})
 
 
 _BACKTEST_FIXEDCAP_SQL = f"""
@@ -889,14 +875,9 @@ def backtest_dma_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     panel = events_to_panel(spark, sf_dir)
     results = DualMovingAverageWithCosts().backtest(panel)
-    pivoted = (results.groupBy("sid", "date")
-               .pivot("field", ["Return", "Commission", "Slippage"])
-               .agg(F.first("value")))
-    return pivoted.select(
-        "sid", "date",
-        F.col("Return").alias("net_return"),
-        F.col("Commission").alias("commission"),
-        F.col("Slippage").alias("slippage"))
+    return pivot_results(results, {
+        "Return": "net_return", "Commission": "commission",
+        "Slippage": "slippage"})
 
 
 # --------------------------------------------------------------------- #
@@ -1021,25 +1002,11 @@ def backtest_intraday(spark: SparkSession, sf_dir: str) -> DataFrame:
             return prices.withColumn(
                 "signal", F.when(F.col("close") <= 100, 1.0).otherwise(-1.0))
 
-    events = load_table(spark, sf_dir, "events")
-    hour_slot = (F.hour("ts") - F.hour("ts") % 6).cast("int")
-    panel = (events
-             .withColumn("sid", F.col("user_id").cast("string"))
-             .withColumn("date", F.to_date("ts"))
-             .withColumn("time", F.concat(
-                 F.lpad(hour_slot.cast("string"), 2, "0"), F.lit(":00:00")))
-             .groupBy("sid", "date", "time")
-             .agg(F.max_by("value", "ts_ns").alias("close")))
+    panel = intraday_panel(spark, sf_dir)
     results = LongShortIntraday().backtest(panel)
-    pivoted = (results.groupBy("sid", "date", "time")
-               .pivot("field", ["Signal", "Weight", "NetExposure", "Return",
-                                "Turnover"])
-               .agg(F.first("value")))
-    return pivoted.select(
-        "sid", "date", "time",
-        F.col("Signal").alias("signal"), F.col("Weight").alias("weight"),
-        F.col("NetExposure").alias("position"), F.col("Return").alias("ret"),
-        F.col("Turnover").alias("turnover"))
+    return pivot_results(results, {
+        "Signal": "signal", "Weight": "weight", "NetExposure": "position",
+        "Return": "ret", "Turnover": "turnover"})
 
 
 @register("benchmark_returns_intraday", f"""
@@ -1075,15 +1042,7 @@ def benchmark_returns_intraday(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-window form through the driver gate."""
     from moonshot_spark.functions.window import global_ffill_with_lag
 
-    events = load_table(spark, sf_dir, "events")
-    hour_slot = (F.hour("ts") - F.hour("ts") % 6).cast("int")
-    panel = (events
-             .withColumn("sid", F.col("user_id").cast("string"))
-             .withColumn("date", F.to_date("ts"))
-             .withColumn("time", F.concat(
-                 F.lpad(hour_slot.cast("string"), 2, "0"), F.lit(":00:00")))
-             .groupBy("sid", "date", "time")
-             .agg(F.max_by("value", "ts_ns").alias("close")))
+    panel = intraday_panel(spark, sf_dir)
     spine = panel.select("date", "time").distinct()
     bench = (panel.where(F.col("sid") == "7")
              .select("date", "time", "close"))
@@ -1157,25 +1116,11 @@ def backtest_once_a_day_intraday(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("exit_close") - F.col("entry_close"))
                 / F.col("entry_close") * F.col("position"))
 
-    events = load_table(spark, sf_dir, "events")
-    hour_slot = (F.hour("ts") - F.hour("ts") % 6).cast("int")
-    panel = (events
-             .withColumn("sid", F.col("user_id").cast("string"))
-             .withColumn("date", F.to_date("ts"))
-             .withColumn("time", F.concat(
-                 F.lpad(hour_slot.cast("string"), 2, "0"), F.lit(":00:00")))
-             .groupBy("sid", "date", "time")
-             .agg(F.max_by("value", "ts_ns").alias("close")))
+    panel = intraday_panel(spark, sf_dir)
     results = OnceADayIntraday().backtest(panel)
-    pivoted = (results.groupBy("sid", "date")
-               .pivot("field", ["Signal", "Weight", "NetExposure", "Return",
-                                "Turnover"])
-               .agg(F.first("value")))
-    return pivoted.select(
-        "sid", "date",
-        F.col("Signal").alias("signal"), F.col("Weight").alias("weight"),
-        F.col("NetExposure").alias("position"), F.col("Return").alias("ret"),
-        F.col("Turnover").alias("turnover"))
+    return pivot_results(results, {
+        "Signal": "signal", "Weight": "weight", "NetExposure": "position",
+        "Return": "ret", "Turnover": "turnover"})
 
 
 # --------------------------------------------------------------------- #
@@ -1382,14 +1327,9 @@ def backtest_xs_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     panel = events_to_panel(spark, sf_dir)
     results = XsMomentum().backtest(panel)
-    pivoted = (results.groupBy("sid", "date")
-               .pivot("field", ["Signal", "Weight", "NetExposure", "Return"])
-               .agg(F.first("value")))
-    return pivoted.select(
-        "sid", "date", F.col("Signal").alias("signal"),
-        F.col("Weight").alias("weight"),
-        F.col("NetExposure").alias("position"),
-        F.col("Return").alias("ret"))
+    return pivot_results(results, {
+        "Signal": "signal", "Weight": "weight", "NetExposure": "position",
+        "Return": "ret"})
 
 
 # --------------------------------------------------------------------- #
@@ -1603,12 +1543,8 @@ def backtest_commission_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.lit(None).cast("double").alias("price_magnifier"),
                       F.lit(None).cast("double").alias("multiplier")))
     results = Strategy().backtest(panel, master=master)
-    pivoted = (results.groupBy("sid", "date")
-               .pivot("field", ["Turnover", "Commission"])
-               .agg(F.first("value")))
-    return pivoted.select("sid", "date",
-                          F.col("Turnover").alias("turnover"),
-                          F.col("Commission").alias("commission"))
+    return pivot_results(results, {
+        "Turnover": "turnover", "Commission": "commission"})
 
 
 # --------------------------------------------------------------------- #

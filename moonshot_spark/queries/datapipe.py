@@ -1894,8 +1894,9 @@ def prepare_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach the scan, the dedup min-id survivor map and the eval n-gram
     set broadcast, and nothing materializes between stages."""
     from moonshot_spark.datapipe.decontam import decontaminate
-    from moonshot_spark.datapipe.packing import pack_bins, token_count_expr
-    from moonshot_spark.datapipe.text import fingerprint_expr, quality_exprs
+    from moonshot_spark.datapipe.packing import pack_bins
+    from moonshot_spark.datapipe.text import (fingerprint_expr, quality_exprs,
+                                              token_count_expr)
     from moonshot_spark.sources.parquet import ensure_scan_parallelism
 
     # row-level parallelism for the pre-shuffle tokenize/fingerprint

@@ -12,7 +12,7 @@ from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
 )
 from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, register,
+    PANEL_SQL, ORACLES, QUERIES, register, six_hour_bar,
 )
 from moonshot_spark.sources.parquet import events_to_panel, load_table
 
@@ -545,13 +545,10 @@ def intraday_volume_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINT/BIGINT division — the curve is a 4-row broadcastable
     profile whatever the input size."""
     ev = load_table(spark, sf_dir, "events")
-    hour = F.hour("ts")
-    tbucket = F.concat(
-        F.lpad((hour - hour % 6).cast("string"), 2, "0"), F.lit(":00:00"))
     buckets = (ev.groupBy(
         F.col("user_id").cast("string").alias("sid"),
         F.col("ts").cast("date").alias("date"),
-        tbucket.alias("time"))
+        six_hour_bar().alias("time"))
         .agg(F.count("*").alias("n_ticks")))
     tot = buckets.groupBy("time").agg(
         F.sum("n_ticks").alias("bucket_ticks"))

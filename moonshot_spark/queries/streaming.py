@@ -14,7 +14,7 @@ from moonshot_spark.queries._base import (
     PANEL_SQL, ORACLES, QUERIES, register,
 )
 from moonshot_spark.sources.parquet import (events_to_panel, load_table,
-                                           parquet_schema)
+                                           ohlcv_aggs, parquet_schema)
 
 
 
@@ -132,11 +132,7 @@ def streaming_ohlcv_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
              .withColumn("date", F.to_date(F.timestamp_micros(
                  F.expr("ts div 1000"))))
              .groupBy("sid", "date")
-             .agg(F.min_by("value", "ts").alias("open"),
-                  F.max_by("value", "ts").alias("close"),
-                  F.max("value").alias("high"),
-                  F.min("value").alias("low"),
-                  F.count("*").cast("double").alias("volume")))
+             .agg(*ohlcv_aggs("ts")))
     _STREAM_QUERY_SEQ[0] += 1
     name = f"__streaming_ohlcv_{_STREAM_QUERY_SEQ[0]}"
     q = (panel.writeStream.format("memory").queryName(name)

@@ -967,11 +967,7 @@ def rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     W1 family).  Medians are order statistics — no accumulation, so
     doubles match bit-for-bit across engines (the even-count case is
     one add + one halving, identical in both)."""
-    ev = load_table(spark, sf_dir, "events")
-    panel = (ev.withColumn("sid", F.col("user_id").cast("string"))
-             .withColumn("date", F.to_date("ts"))
-             .groupBy("sid", "date")
-             .agg(F.max_by("value", "ts_ns").alias("close")))
+    panel = events_to_panel(spark, sf_dir).select("sid", "date", "close")
     w = (Window.partitionBy("sid").orderBy("date")
          .rowsBetween(-4, Window.currentRow))
     # Spark bars median() from framed windows; for a 5-row frame the

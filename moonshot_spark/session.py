@@ -12,7 +12,7 @@ real cluster most of these settings are overridden by spark-submit conf.
 The scale-relevant settings (AQE, adaptive coalescing, Arrow) are good
 defaults at any scale.
 
-Two fixed settings keep a re-run of the same plan shape cheap on the
+Three fixed settings keep a re-run of the same plan shape cheap on the
 driver:
 
 - ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``:
@@ -22,6 +22,14 @@ driver:
   never stayed warm.  The bound holds the registry; it is not
   unbounded, so a long-lived session that keeps generating new code
   cannot grow without limit.
+- ``spark.sql.codegen.useIdInClassName=false``: the cache is keyed by
+  a class's source, which by default names the class after its
+  whole-stage codegen id.  AQE numbers those stages in the order it
+  creates them, which follows the order earlier stages finish, so a
+  re-run of an identical plan on a busy host could rename, and so
+  recompile, its classes (6 classes in one traced ``dedup_clusters``
+  re-run, same operator tree, codegen ids 5/6 read 4/5).  Without the
+  id, stages with the same code also share one class.
 - ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark 4
   otherwise records the Python call site of every ``F.*``/Column call
   with extra Py4J round trips (active-session lookup, origin set and
@@ -187,6 +195,8 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
         # catalog_mix pass recompiled 131-133 of its ~140 classes
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
+        # cache classes by their code, not by AQE's run-order stage ids
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # no per-call call-site capture: it doubled the Py4J round
         # trips of a catalog_mix pass (~2,400 -> ~5,000)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")

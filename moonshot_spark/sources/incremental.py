@@ -15,22 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from moonshot_spark.sources.parquet import rollup_ticks
+
 
 def aggregate_ticks(events: DataFrame) -> DataFrame:
     """Tick → mergeable daily OHLCV partial (sid, date, open, close, high,
     low, volume, first_ts, last_ts).  ``events`` needs (user_id, ts_ns,
     value) as produced by sources.parquet.load_table."""
-    return (events
-            .withColumn("sid", F.col("user_id").cast("string"))
-            .withColumn("date", F.to_date("ts"))
-            .groupBy("sid", "date")
-            .agg(F.min_by("value", "ts_ns").alias("open"),
-                 F.max_by("value", "ts_ns").alias("close"),
-                 F.max("value").alias("high"),
-                 F.min("value").alias("low"),
-                 F.count("*").cast("double").alias("volume"),
-                 F.min("ts_ns").alias("first_ts"),
-                 F.max("ts_ns").alias("last_ts")))
+    return rollup_ticks(events, F.min("ts_ns").alias("first_ts"),
+                        F.max("ts_ns").alias("last_ts"))
 
 
 def merge_panels(existing: DataFrame, delta: DataFrame) -> DataFrame:

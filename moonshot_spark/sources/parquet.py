@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -188,30 +188,37 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def events_to_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derive a daily OHLCV price panel from the events table.
+def ohlcv_aggs(order: str) -> list[Column]:
+    """The A2 bar aggregates over ``value`` ticks: open/close = first/last
+    value by ``order`` (reference base.py:853-854 first-of-day /
+    1457-1458 last-of-day), high/low = max/min, volume = tick count."""
+    return [F.min_by("value", order).alias("open"),
+            F.max_by("value", order).alias("close"),
+            F.max("value").alias("high"),
+            F.min("value").alias("low"),
+            F.count("*").cast("double").alias("volume")]
 
-    The driver's synthetic schema has no price panel; `events` (user_id,
-    ts, value) is the time-series analog.  Panel derivation: sid = user_id,
-    date = day, open/close = first/last value of the day (A2 semantics,
-    reference base.py:853-854 first-of-day / 1457-1458 last-of-day),
-    high/low = max/min, volume = row count.
+
+def rollup_ticks(events: DataFrame, *extra: Column) -> DataFrame:
+    """Ticks (user_id, ts, ts_ns, value, as ``load_table`` yields them)
+    → daily OHLCV bars keyed (sid, date), plus any ``extra`` aggregates.
 
     One shuffle (groupBy sid,date); at scale this is the classic
     time-series rollup and pre-aggregates 100 TB of ticks down to the
     daily panel before any strategy logic runs.
     """
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events
-        .withColumn("sid", F.col("user_id").cast("string"))
-        .withColumn("date", F.to_date("ts"))
-        .groupBy("sid", "date")
-        .agg(
-            F.min_by("value", "ts_ns").alias("open"),
-            F.max_by("value", "ts_ns").alias("close"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.count("*").cast("double").alias("volume"),
-        )
-    )
+    return (events
+            .withColumn("sid", F.col("user_id").cast("string"))
+            .withColumn("date", F.to_date("ts"))
+            .groupBy("sid", "date")
+            .agg(*ohlcv_aggs("ts_ns"), *extra))
+
+
+def events_to_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Derive a daily OHLCV price panel from the events table.
+
+    The driver's synthetic schema has no price panel; `events` (user_id,
+    ts, value) is the time-series analog: sid = user_id, date = day, bars
+    from ``rollup_ticks``.
+    """
+    return rollup_ticks(load_table(spark, sf_dir, "events"))

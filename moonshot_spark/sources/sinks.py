@@ -12,20 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_results(results: DataFrame, path: str,
-                  mode: str = "overwrite") -> None:
-    """Partition the long results panel by field (S9)."""
-    results.write.mode(mode).partitionBy("field").parquet(path)
-
-
-def read_results(spark: SparkSession, path: str,
-                 fields: list[str] | None = None) -> DataFrame:
-    df = spark.read.parquet(path)
-    if fields:
-        df = df.where(F.col("field").isin(fields))   # partition-pruned
-    return df
-
-
 def write_orders(orders: DataFrame, path: str, trade_date=None,
                  mode: str = "append") -> None:
     """Append orders partitioned by trade date (S10)."""
@@ -41,13 +27,12 @@ def write_orders(orders: DataFrame, path: str, trade_date=None,
 RESULT_FORMATS = ("parquet", "orc", "csv", "json")
 
 
-def write_results_as(results: DataFrame, path: str, fmt: str = "parquet",
-                     mode: str = "overwrite") -> None:
-    """Format-parameterized results sink: parquet (default) and orc are
-    the columnar scale formats (field-partitioned, codec'd, min/max
-    pruned); csv/json are interchange escapes for small extracts.  One
-    writer API so pipelines choose per destination, same partition
-    layout everywhere."""
+def write_results(results: DataFrame, path: str, fmt: str = "parquet",
+                  mode: str = "overwrite") -> None:
+    """Partition the long results panel by field (S9).  parquet (default)
+    and orc are the columnar scale formats (codec'd, min/max pruned);
+    csv/json are interchange escapes for small extracts; the partition
+    layout is the same in every format."""
     if fmt not in RESULT_FORMATS:
         raise ValueError(
             f"unknown results format {fmt!r}: choose from {RESULT_FORMATS}")
@@ -58,8 +43,8 @@ def write_results_as(results: DataFrame, path: str, fmt: str = "parquet",
         getattr(w, fmt)(path)
 
 
-def read_results_as(spark: SparkSession, path: str, fmt: str = "parquet",
-                    fields: list[str] | None = None) -> DataFrame:
+def read_results(spark: SparkSession, path: str, fmt: str = "parquet",
+                 fields: list[str] | None = None) -> DataFrame:
     """Counterpart reader; the field filter partition-prunes in every
     format (it's a directory key, not a data column)."""
     if fmt not in RESULT_FORMATS:

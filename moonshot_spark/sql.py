@@ -14,10 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from moonshot_spark.sources.parquet import events_to_panel, load_table
-
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+from moonshot_spark.sources.parquet import TABLES, events_to_panel, load_table
 
 
 def register_views(spark: SparkSession, sf_dir: str,

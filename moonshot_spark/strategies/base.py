@@ -36,7 +36,7 @@ return Spark DataFrames.  Pandas strategies can instead run unmodified via
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from moonshot_spark.functions.window import pct_change, shift
@@ -60,6 +60,30 @@ MASTER_COLUMNS = ["sid", "symbol", "sec_type", "currency", "exchange",
 RESULT_FIELDS = ["AbsExposure", "AbsWeight", "Commission", "NetExposure",
                  "Return", "Signal", "Slippage", "TotalHoldings", "Turnover",
                  "Weight"]
+
+
+def _size_quantities(df: DataFrame, name: str, value: Column, cv: Column,
+                     max_long: Column | None, max_short: Column | None
+                     ) -> tuple[DataFrame, Column]:
+    """Weights → integer quantities under position caps (reference
+    base.py:947-956 backtest, 1728-1758 trade).
+
+    Adds ``name`` = ``value`` (a weight times NLV) over the absolute
+    contract value ``cv``, rounded half-even like numpy (0 where ``cv``
+    is 0 or NULL), and returns the frame with the capped quantity: at
+    most ``|max_long|`` long and ``|max_short|`` short, a NULL cap being
+    no limit (the NaN sentinel, base.py:997-998)."""
+    qty = value / F.abs(F.when(cv != 0, cv))
+    df = df.withColumn(name, F.coalesce(F.bround(qty), F.lit(0.0))
+                       .cast("long"))
+    q = F.col(name)
+    if max_long is not None:
+        cap = F.abs(max_long)
+        q = F.when(cap.isNotNull() & (q > cap), cap.cast("long")).otherwise(q)
+    if max_short is not None:
+        cap = -F.abs(max_short)
+        q = F.when(cap.isNotNull() & (q < cap), cap.cast("long")).otherwise(q)
+    return df, q
 
 
 class Moonshot:
@@ -464,21 +488,11 @@ class Moonshot:
             df = df.join(max_shorts.withColumnRenamed("max_quantity", "__max_short"),
                          keys, "left")
 
-        # weights → integer quantities (reference base.py:947-956).  bround =
-        # half-even, matching numpy/pandas .round()
-        trade_value = F.col("weight") * F.col("nlv")
-        qty = trade_value / F.abs(F.when(F.col("__cv") != 0, F.col("__cv")))
-        qty = F.coalesce(F.bround(qty), F.lit(0.0)).cast("long")
-        df = df.withColumn("__qty", qty)
-
-        q = F.col("__qty")
-        if max_longs is not None:
-            cap = F.abs(F.col("__max_long"))
-            # NULL cap = no limit (NaN sentinel, base.py:997-998)
-            q = F.when(cap.isNotNull() & (q > cap), cap.cast("long")).otherwise(q)
-        if max_shorts is not None:
-            cap = -F.abs(F.col("__max_short"))
-            q = F.when(cap.isNotNull() & (q < cap), cap.cast("long")).otherwise(q)
+        # weights → integer quantities (reference base.py:947-956)
+        df, q = _size_quantities(
+            df, "__qty", F.col("weight") * F.col("nlv"), F.col("__cv"),
+            F.col("__max_long") if max_longs is not None else None,
+            F.col("__max_short") if max_shorts is not None else None)
 
         # quantities → weights (reference base.py:968-971)
         df = df.withColumn("weight", q * F.col("__cv") / F.col("nlv"))
@@ -986,15 +1000,6 @@ class Moonshot:
                        F.col("quote_currency")))
                    ).otherwise(rate))
 
-        # weights → integer target quantities (base.py:1728-1734); bround =
-        # half-even like numpy round
-        qty = (F.col("weight") * F.col("nlv") * F.col("rate")
-               / F.abs(F.when(F.col("contract_value") != 0,
-                              F.col("contract_value"))))
-        today = today.withColumn(
-            "target_quantity",
-            F.coalesce(F.bround(qty), F.lit(0.0)).cast("long"))
-
         # position-size caps at signal date (base.py:1738-1758); intraday
         # cap frames slice to the signal time like the reference's
         # .loc[self._signal_time] (batch fallback: the day's last time)
@@ -1010,19 +1015,21 @@ class Moonshot:
             return caps
 
         max_longs, max_shorts = self.limit_position_sizes(prices)
-        q = F.col("target_quantity")
         if max_longs is not None:
             ml = (caps_at_signal(max_longs)
-                  .select("sid", F.abs("max_quantity").alias("__max_long")))
+                  .select("sid", F.col("max_quantity").alias("__max_long")))
             today = today.join(F.broadcast(ml), "sid", "left")
-            cap = F.col("__max_long")
-            q = F.when(cap.isNotNull() & (q > cap), cap.cast("long")).otherwise(q)
         if max_shorts is not None:
             ms = (caps_at_signal(max_shorts)
-                  .select("sid", (-F.abs("max_quantity")).alias("__max_short")))
+                  .select("sid", F.col("max_quantity").alias("__max_short")))
             today = today.join(F.broadcast(ms), "sid", "left")
-            cap = F.col("__max_short")
-            q = F.when(cap.isNotNull() & (q < cap), cap.cast("long")).otherwise(q)
+        # weights → integer target quantities (base.py:1728-1734)
+        today, q = _size_quantities(
+            today, "target_quantity",
+            F.col("weight") * F.col("nlv") * F.col("rate"),
+            F.col("contract_value"),
+            F.col("__max_long") if max_longs is not None else None,
+            F.col("__max_short") if max_shorts is not None else None)
         today = today.withColumn("target_quantity", q) \
             .drop("__max_long", "__max_short")
 
@@ -1198,3 +1205,14 @@ class Moonshot:
             results = results.unionByName(bench_long,
                                           allowMissingColumns=True)
         return results.select("field", "sid", *date_cols, "value")
+
+
+def pivot_results(results: DataFrame, fields: dict[str, str]) -> DataFrame:
+    """Long results back to one column per field, the inverse of
+    ``Moonshot._melt_results``: keyed by (sid, date[, time]) as the
+    results are, ``fields`` maps each field to its output column, in
+    output order."""
+    keys = [c for c in ("sid", "date", "time") if c in results.columns]
+    return (results.groupBy(*keys).pivot("field", list(fields))
+            .agg(F.first("value"))
+            .select(*keys, *[F.col(f).alias(c) for f, c in fields.items()]))

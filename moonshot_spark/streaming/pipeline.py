@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
+from moonshot_spark.sources.parquet import ohlcv_aggs
+
 EVENT_SCHEMA = StructType([
     StructField("event_id", LongType()),
     StructField("ts", TimestampType()),
@@ -117,11 +119,7 @@ def stream_events_to_panel(events: DataFrame, watermark: str = "1 hour",
             .withWatermark("ts", watermark)
             .groupBy(F.col("user_id").cast("string").alias("sid"),
                      F.window("ts", bar).alias("bar"))
-            .agg(F.min_by("value", "ts").alias("open"),
-                 F.max_by("value", "ts").alias("close"),
-                 F.max("value").alias("high"),
-                 F.min("value").alias("low"),
-                 F.count("*").cast("double").alias("volume"))
+            .agg(*ohlcv_aggs("ts"))
             .select("sid", F.to_date(F.col("bar.start")).alias("date"),
                     "open", "close", "high", "low", "volume"))
 

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from moonshot_spark.sources.incremental import aggregate_ticks, merge_panels
-from moonshot_spark.sources.parquet import load_table
+from moonshot_spark.sources.parquet import events_to_panel, load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,6 +19,13 @@ def panel_dict(df):
     return {(r["sid"], r["date"]):
             (r["open"], r["close"], r["high"], r["low"], r["volume"])
             for r in df.collect()}
+
+
+def test_partial_rollup_equals_the_batch_panel(spark, events):
+    """The mergeable partial and the batch panel share one rollup: their
+    sid, date and OHLCV columns agree row for row."""
+    assert panel_dict(aggregate_ticks(events)) == \
+        panel_dict(events_to_panel(spark, SF))
 
 
 def test_merge_equals_full_recompute(events):

@@ -224,7 +224,7 @@ def test_rerun_of_plan_shapes_compiles_nothing_new(spark):
 
 
 def test_session_sizes_codegen_cache_and_skips_call_sites(spark):
-    """Both fixed settings are on the live session, and PySpark's
+    """The fixed codegen settings are on the live session, and PySpark's
     per-call call-site capture (extra Py4J round trips on every
     F.*/Column call) is off."""
     from pyspark.errors.utils import is_debugging_enabled
@@ -233,6 +233,7 @@ def test_session_sizes_codegen_cache_and_skips_call_sites(spark):
 
     assert (spark.conf.get("spark.sql.codegen.cache.maxEntries")
             == str(CODEGEN_CACHE_ENTRIES))
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
     assert spark.conf.get(
         "spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert is_debugging_enabled() is False

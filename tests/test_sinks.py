@@ -38,8 +38,7 @@ def test_orders_append_by_trade_date(spark, tmp_path):
 
 
 def test_results_roundtrip_all_formats(spark, tmp_path):
-    from moonshot_spark.sources.sinks import (
-        RESULT_FORMATS, read_results_as, write_results_as)
+    from moonshot_spark.sources.sinks import RESULT_FORMATS
 
     df = spark.createDataFrame(
         [("Return", "A", 0.01), ("Return", "B", -0.02),
@@ -47,8 +46,8 @@ def test_results_roundtrip_all_formats(spark, tmp_path):
         "field string, sid string, value double")
     for fmt in RESULT_FORMATS:
         p = str(tmp_path / fmt)
-        write_results_as(df, p, fmt=fmt)
-        back = read_results_as(spark, p, fmt=fmt, fields=["Return"])
+        write_results(df, p, fmt=fmt)
+        back = read_results(spark, p, fmt=fmt, fields=["Return"])
         rows = {(r["sid"], round(r["value"], 6)) for r in back.collect()}
         assert rows == {("A", 0.01), ("B", -0.02)}, fmt
 

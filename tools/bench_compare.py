@@ -22,10 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 from moonshot_spark.materialize import scope  # noqa: E402
+from moonshot_spark.sources.parquet import TABLES  # noqa: E402
 from tools.measure import measure, session  # noqa: E402
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 def duckdb_seconds(con, sql: str) -> float:

@@ -29,9 +29,6 @@ sys.path.insert(0, REPO)
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
@@ -121,6 +118,7 @@ def main():
     import __spark_entry__ as entry_mod
     from moonshot_spark.materialize import scope
     from moonshot_spark.session import get_spark
+    from moonshot_spark.sources.parquet import TABLES
 
     spark = get_spark("check_correctness")
     con = duckdb.connect()

@@ -1,36 +1,63 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for the given queries to plans/<outdir>/.
+"""Dump the normalized executed plans of registered queries, one file each.
 
-Usage: python tools/dump_plans.py <outdir-suffix> <query> [...]
-Writes plans/$SPARK_GRAFT_PLANS_DIR (default r15)/<query>_<outdir-suffix>.txt
+Usage: python tools/dump_plans.py OUT_DIR QUERY [QUERY ...]
+
+Writes ``OUT_DIR/<query>.txt``: the executed (pre-run, AQE-initial)
+physical plan of the frame the query returns, from
+``plans.audit.executed_plan``, followed by the plan of every frame the
+builder ``collect()``s while it builds (``trade()``'s order stubs, say).
+Expression ids (``#123``) and ``plan_id=123`` are normalized, so two
+dumps of the same code ``diff`` clean; dump the parent and the change of
+a refactor into two directories and ``diff -r`` them.  The tables are
+read from ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``).
 """
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 
+def normalize(plan: str) -> str:
+    """Strip the per-session counters from a plan string."""
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
+
+
 def main(argv):
-    suffix = argv[0]
-    names = argv[1:]
+    if len(argv) < 2:
+        sys.exit(__doc__)
+    out_dir, names = argv[0], argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from moonshot_spark.plans.audit import executed_plan
     from moonshot_spark.queries import QUERIES
     from moonshot_spark.session import get_spark
 
     spark = get_spark("dump_plans")
-    out_dir = os.path.join(HERE, "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r15"))
     os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(txt)
-        print("wrote", path, flush=True)
+    collected = []
+    collect = DataFrame.collect
+
+    def recording_collect(df):
+        collected.append(executed_plan(df))
+        return collect(df)
+
+    DataFrame.collect = recording_collect
+    try:
+        for name in names:
+            collected.clear()
+            plans = [executed_plan(QUERIES[name](spark, sf_dir)), *collected]
+            path = os.path.join(out_dir, f"{name}.txt")
+            with open(path, "w") as f:
+                f.write("\n\n".join(normalize(p) for p in plans) + "\n")
+            print("wrote", path, flush=True)
+    finally:
+        DataFrame.collect = collect
 
 
 if __name__ == "__main__":
