@@ -27,8 +27,8 @@ def write_orders(orders: DataFrame, path: str, trade_date=None,
 RESULT_FORMATS = ("parquet", "orc", "csv", "json")
 
 
-def write_results(results: DataFrame, path: str, fmt: str = "parquet",
-                  mode: str = "overwrite") -> None:
+def write_results(results: DataFrame, path: str, mode: str = "overwrite",
+                  fmt: str = "parquet") -> None:
     """Partition the long results panel by field (S9).  parquet (default)
     and orc are the columnar scale formats (codec'd, min/max pruned);
     csv/json are interchange escapes for small extracts; the partition
@@ -43,8 +43,9 @@ def write_results(results: DataFrame, path: str, fmt: str = "parquet",
         getattr(w, fmt)(path)
 
 
-def read_results(spark: SparkSession, path: str, fmt: str = "parquet",
-                 fields: list[str] | None = None) -> DataFrame:
+def read_results(spark: SparkSession, path: str,
+                 fields: list[str] | None = None,
+                 fmt: str = "parquet") -> DataFrame:
     """Counterpart reader; the field filter partition-prunes in every
     format (it's a directory key, not a data column)."""
     if fmt not in RESULT_FORMATS:
