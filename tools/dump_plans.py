@@ -10,7 +10,8 @@ builder ``collect()``s while it builds (``trade()``'s order stubs, say).
 Expression ids (``#123``) and ``plan_id=123`` are normalized, so two
 dumps of the same code ``diff`` clean; dump the parent and the change of
 a refactor into two directories and ``diff -r`` them.  The tables are
-read from ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``).
+read from ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 tables, as for
+``bench.py``).
 """
 from __future__ import annotations
 
