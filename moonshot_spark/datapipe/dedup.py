@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
-
-# Shared with sources/parquet.py (single under-parallel-scan heuristic,
-# VERDICT/ADVICE r11 consolidation); re-exported here for back-compat.
-from moonshot_spark.sources.parquet import (      # noqa: E402
-    _parse_byte_conf, scan_partition_estimate)
+from moonshot_spark.sources.parquet import scan_partition_estimate
 
 
 def widen_underparallel(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -42,6 +42,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from moonshot_spark import materialize
 
+#: hash-min rounds connected_components_adaptive runs before it contracts
+#: the graph and hands it to the star algorithm: near-clique dedup
+#: clusters converge in 2-4
+HASHMIN_ROUNDS = 4
+
 
 def _hash_min(edges: DataFrame, src: str, dst: str,
               max_iter: int) -> tuple[DataFrame, bool]:
@@ -192,14 +197,13 @@ def connected_components_star(edges: DataFrame, src: str = "src",
 
 def connected_components_adaptive(edges: DataFrame, src: str = "src",
                                   dst: str = "dst",
-                                  hashmin_rounds: int = 4,
                                   max_iter: int = 25) -> DataFrame:
     """Topology-adaptive connected components: hash-min for the near-
     clique graphs LSH dedup actually emits (converges in 2–4 cheap
     rounds), automatic fall-back to large/small-star for long-chain
     graphs — without the caller having to know the diameter up front.
 
-    Mechanics: run ``hashmin_rounds`` of hash-min.  If that reaches the
+    Mechanics: run ``HASHMIN_ROUNDS`` of hash-min.  If that reaches the
     fixpoint (the common case), done.  Otherwise the partial labels are a
     valid partition coarsening, so CONTRACT the graph — map every edge to
     (comp(u), comp(v)), drop loops, dedupe — and finish on the (much
@@ -207,7 +211,7 @@ def connected_components_adaptive(edges: DataFrame, src: str = "src",
     compose the two label maps.  Worst case pays 4 cheap rounds of rent;
     the near-clique fast path never touches the star machinery.
     """
-    labels, converged = _hash_min(edges, src, dst, hashmin_rounds)
+    labels, converged = _hash_min(edges, src, dst, HASHMIN_ROUNDS)
     if converged:
         return labels
     lu = labels.select(F.col("node").alias("__u"), F.col("comp").alias("cu"))

@@ -10,13 +10,14 @@
   shrink the candidate set from |corpus| to the query's bucket, turning the
   cross product into an equi-join on bucket signature.
 
-Dot products run as left-to-right ``F.aggregate`` folds over doubles —
+Exact scoring (``cosine_expr`` and the pair paths built on it) runs dot
+products and norms as left-to-right ``F.aggregate`` folds over doubles —
 deterministic and engine-portable.  Array higher-order functions are
-CodegenFallback (interpreted row-at-a-time) in Spark, so for the hot pair
-paths the same left-associative sum is *unrolled* into a flat
-``a[1]*b[1] + a[2]*b[2] + ...`` projection when the dimension is known —
-bit-identical result (``0.0 + x == x`` exactly), but whole-stage codegen
-instead of interpretation (~2-3x on million-pair joins).
+CodegenFallback (interpreted row-at-a-time) in Spark; an unrolled
+``a[1]*b[1] + a[2]*b[2] + ...`` projection would codegen, but it measured
+slower end to end at this module's pair counts (see the note in
+``mine_hard_negatives`` on why the folds stay).  IVF cell assignment and
+the in-cell pairwise path score Arrow batches with numpy instead.
 """
 
 from __future__ import annotations

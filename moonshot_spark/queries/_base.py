@@ -8,6 +8,17 @@ Each entry maps a name to (spark_fn, oracle_sql):
   orders lineitem events documents embeddings``), or None for ops that
   aren't SQL-expressible (driver then records a rows-only check).
 
+This module holds the registry and the oracle fragments that more than
+one catalog module splices in: ``PANEL_SQL`` (the daily OHLCV panel),
+``BUY_BELOW_100_SQL`` (the ``sig`` CTE of the BuyBelow100 demo),
+``EQUAL_WEIGHTS_SQL`` (the ``wts`` CTE of equal weights),
+``CLOSE_RETURNS_SQL`` (close-to-close returns) and
+``COPURCHASE_GRAPH_SQL`` (the co-purchase graph CTEs).  A fragment one
+module uses stays in that module.  Fragments are constants cut at CTE
+boundaries, so an oracle sends DuckDB the same text it would spelled
+out.  Two Spark-side helpers shared by modules live here too:
+``six_hour_bar`` and ``intraday_panel``.
+
 Cross-engine float discipline: two-operand double arithmetic (+,-,*,/) and
 min/max/lag/count are bit-deterministic across engines, so most queries
 hash-match exactly.  Multi-row accumulations (sum/avg over many rows) are
@@ -24,15 +35,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
-)
-from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
 from moonshot_spark.session import ensure_session_confs
-from moonshot_spark.sources.parquet import events_to_panel, load_table
+from moonshot_spark.sources.parquet import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -67,6 +74,65 @@ PANEL_SQL = """
            max(value) AS high, min(value) AS low,
            CAST(count(*) AS DOUBLE) AS volume
     FROM events GROUP BY 1, 2
+"""
+
+# signals: the BuyBelow100 demo (strategies/demo.py), long every sid whose
+# close is under 100
+BUY_BELOW_100_SQL = """sig AS (
+    SELECT sid, date, close,
+           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
+    FROM panel
+)"""
+
+# target weights: allocate_equal_weights (operators/weights.py), each
+# signal over its date's gross signal (over 1 on a date with none)
+EQUAL_WEIGHTS_SQL = """wts AS (
+    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
+                             THEN sum(abs(signal)) OVER (PARTITION BY date)
+                             ELSE 1 END) AS weight
+    FROM sig
+)"""
+
+# per-sid close-to-close returns of ``panel``, and the non-NULL ones
+CLOSE_RETURNS_SQL = """rets AS (
+    SELECT sid, date,
+           (close / lag(close) OVER w - 1) AS r
+    FROM panel WINDOW w AS (PARTITION BY sid ORDER BY date)
+), rr AS (
+    SELECT sid, date, r FROM rets WHERE r IS NOT NULL
+)"""
+
+# the co-purchase graph (warehouse.py::_copurchase_edges): the support-2
+# co-purchase pair list (same guards as item_cooccurrence) symmetrized
+# into an edge list with per-node degree
+COPURCHASE_GRAPH_SQL = """
+items AS (
+    SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
+),
+sized AS (
+    SELECT basket FROM items GROUP BY basket HAVING count(*) <= 50
+),
+freq AS (
+    SELECT item FROM items GROUP BY item HAVING count(*) >= 2
+),
+fi AS (
+    SELECT i.basket, i.item FROM items i
+    JOIN sized USING (basket) JOIN freq USING (item)
+),
+pairs AS (
+    SELECT a.item AS item_a, b.item AS item_b
+    FROM fi a JOIN fi b ON a.basket = b.basket AND a.item < b.item
+    GROUP BY 1, 2 HAVING count(*) >= 2
+),
+edges AS (
+    SELECT item_a AS src, item_b AS dst FROM pairs
+    UNION ALL
+    SELECT item_b AS src, item_a AS dst FROM pairs
+),
+deg AS (
+    SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+    FROM edges GROUP BY src
+)
 """
 
 

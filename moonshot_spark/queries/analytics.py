@@ -1,23 +1,23 @@
 """Statistical / time-series analytics: hypothesis tests, regressions, risk statistics.
 
-Split from the original single-module catalog; bodies unchanged."""
+Oracles start from PANEL_SQL or the raw tables; two share
+``_base.CLOSE_RETURNS_SQL`` with the backtest module.  The mean-variance
+weight oracles are generated by ``_mvw_k5_oracle`` and
+``_mvw_by_book_oracle``; ``embedding_pc1_outliers`` replays datapipe's
+``_pca_cte_chain``."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
-from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
-from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
-)
+from moonshot_spark.functions.window import pct_change
 from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, register,
+    CLOSE_RETURNS_SQL, PANEL_SQL, register,
 )
 from moonshot_spark.sources.parquet import events_to_panel, load_table
 from moonshot_spark.queries.datapipe import _pca_cte_chain
 from moonshot_spark.session import shuffle_partitions
-
 
 
 # --------------------------------------------------------------------- #
@@ -1667,13 +1667,7 @@ def ta_macd_stoch_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("market_model_rolling_beta", f"""
 WITH panel AS ({PANEL_SQL}),
-rets AS (
-    SELECT sid, date,
-           (close / lag(close) OVER w - 1) AS r
-    FROM panel WINDOW w AS (PARTITION BY sid ORDER BY date)
-), rr AS (
-    SELECT sid, date, r FROM rets WHERE r IS NOT NULL
-), mkt AS (
+{CLOSE_RETURNS_SQL}, mkt AS (
     SELECT date,
            list_reduce(list(r ORDER BY sid), (a, b) -> a + b)
            / CAST(count(*) AS DOUBLE) AS mkt_r
@@ -1988,13 +1982,7 @@ def newey_west_tstat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("bootstrap_sharpe_ci", f"""
 WITH panel AS ({PANEL_SQL}),
-rets AS (
-    SELECT sid, date,
-           (close / lag(close) OVER w - 1) AS r
-    FROM panel WINDOW w AS (PARTITION BY sid ORDER BY date)
-), rr AS (
-    SELECT sid, date, r FROM rets WHERE r IS NOT NULL
-), mkt AS (
+{CLOSE_RETURNS_SQL}, mkt AS (
     SELECT date,
            list_reduce(list(r ORDER BY sid), (a, b) -> a + b)
            / CAST(count(*) AS DOUBLE) AS mkt_r

@@ -1,33 +1,36 @@
 """Backtest/trade pipeline queries: strategies, weights, commissions, slippage, portfolio analytics.
 
-Split from the original single-module catalog; bodies unchanged."""
+The oracle CTEs of the backtest DAG are written once at the top of the
+module: DMA signals, positions, gross and daily returns, the results melt,
+trade()'s signal-date sizing inputs and the per-sid return moments.  Each
+is spliced into every oracle that runs that step unchanged.  The
+buy-below-100 signal, equal weights and close-to-close returns come from
+``_base``.  The Spark side builds on ``strategies/demo.py``
+(DualMovingAverage, BuyBelow100) and ``Moonshot``."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
-from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
-from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
-)
+from moonshot_spark.functions.window import pct_change
 from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, intraday_panel, register,
+    BUY_BELOW_100_SQL, CLOSE_RETURNS_SQL, EQUAL_WEIGHTS_SQL, PANEL_SQL,
+    intraday_panel, register,
 )
 from moonshot_spark.sources.local import local_df
 from moonshot_spark.sources.parquet import events_to_panel
 from moonshot_spark.strategies.base import pivot_results
 
 
-
-
 # --------------------------------------------------------------------- #
-# the flagship: full backtest pipeline (D18) vs SQL oracle              #
+# oracle CTEs of the backtest DAG (reference base.py:1335-1349), each   #
+# spliced into every oracle that runs that step unchanged               #
 # --------------------------------------------------------------------- #
 
-_BACKTEST_DMA_SQL = f"""
-WITH panel AS ({PANEL_SQL}),
-sig AS (
+# signals: the DualMovingAverage crossover (strategies/demo.py), 1.0 when
+# the full 5-row mean is above the full 10-row mean
+_DMA_SIGNALS_SQL = """sig AS (
     SELECT sid, date, close,
            CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
                       THEN avg(close) OVER w5 END)
@@ -39,24 +42,32 @@ sig AS (
                   ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
            w10 AS (PARTITION BY sid ORDER BY date
                    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
+)"""
+
+# positions: yesterday's weight
+_POSITIONS_SQL = """pos AS (
     SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-gross AS (
+)"""
+
+# gross returns and turnover of the positions
+_GROSS_RETURNS_SQL = """gross AS (
     SELECT *,
            (close / lag(close) OVER w - 1)
                * lag(position) OVER w AS gross_return,
            abs(coalesce(position, 0) - lag(coalesce(position, 0)) OVER w) AS turnover
     FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-),
-fin AS (
+)"""
+
+# per-sid daily returns of the positions, NULL (first day) as 0
+_DAILY_RETURNS_SQL = """rets AS (
+    SELECT sid, date,
+           coalesce((close / lag(close) OVER w - 1)
+               * lag(position) OVER w, 0) AS r
+    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
+)"""
+
+# the cost-free backtest's results, melted to (field, sid, date, value)
+_RESULTS_MELT_SQL = """fin AS (
     SELECT *, coalesce(gross_return, 0) AS ret,
            CASE WHEN coalesce(position, 0) <> 0 THEN 1.0 ELSE 0.0 END AS total_holdings
     FROM gross
@@ -72,7 +83,57 @@ SELECT field, sid, date, value FROM (
     UNION ALL SELECT 'TotalHoldings', sid, date, total_holdings FROM fin
     UNION ALL SELECT 'Turnover', sid, date, turnover FROM fin
     UNION ALL SELECT 'Weight', sid, date, weight FROM fin
-)
+)"""
+
+# trade(): the signal date, each sid's forward-filled contract value, and
+# the signal date's weights with their contract values
+_TODAY_SQL = """sd AS (SELECT max(date) AS signal_date FROM panel),
+cvf AS (
+    SELECT sid, date,
+           last_value(close IGNORE NULLS) OVER (
+               PARTITION BY sid ORDER BY date
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS contract_value
+    FROM panel
+),
+today AS (
+    SELECT w.sid, w.weight, c.contract_value
+    FROM wts w JOIN sd ON w.date = sd.signal_date
+    JOIN cvf c ON c.sid = w.sid AND c.date = w.date
+)"""
+
+
+# per-sid close-to-close returns (first day 0) as one date-ordered list,
+# and their count, sum and sum of squares as left-to-right folds
+_RETURN_MOMENTS_SQL = """panel AS (
+    SELECT CAST(user_id AS VARCHAR) AS sid, CAST(ts AS DATE) AS date,
+           arg_max(value, ts) AS close
+    FROM events GROUP BY 1, 2
+), rets AS (
+    SELECT sid, date,
+           coalesce((close / lag(close) OVER w - 1), 0) AS r
+    FROM panel WINDOW w AS (PARTITION BY sid ORDER BY date)
+), series AS (
+    SELECT sid, list(r ORDER BY date) AS rs FROM rets GROUP BY sid
+), moments AS (
+    SELECT sid, len(rs) AS n,
+           list_reduce(rs, (a, b) -> a + b) AS s1,
+           list_reduce(list_transform(rs, x -> x * x),
+                       (a, b) -> a + b) AS s2
+    FROM series
+)"""
+
+
+# --------------------------------------------------------------------- #
+# the flagship: full backtest pipeline (D18) vs SQL oracle              #
+# --------------------------------------------------------------------- #
+
+_BACKTEST_DMA_SQL = f"""
+WITH panel AS ({PANEL_SQL}),
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_GROSS_RETURNS_SQL},
+{_RESULTS_MELT_SQL}
 """
 
 
@@ -91,30 +152,9 @@ def backtest_dma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("trade_orders", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-sd AS (SELECT max(date) AS signal_date FROM panel),
-cvf AS (
-    SELECT sid, date,
-           last_value(close IGNORE NULLS) OVER (
-               PARTITION BY sid ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS contract_value
-    FROM panel
-),
-today AS (
-    SELECT w.sid, w.weight, c.contract_value
-    FROM wts w JOIN sd ON w.date = sd.signal_date
-    JOIN cvf c ON c.sid = w.sid AND c.date = w.date
-),
+{BUY_BELOW_100_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_TODAY_SQL},
 alloc AS (SELECT * FROM (VALUES ('U100', 0.6), ('U200', 0.4)) t(account, allocation)),
 bal AS (SELECT * FROM (VALUES ('U100', 1000000.0), ('U200', 500000.0)) t(account, nlv)),
 qty AS (
@@ -133,14 +173,7 @@ FROM qty WHERE q <> 0 AND q IS NOT NULL
 def trade_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full trade pipeline (D19–D22): today's weights × account allocations
     → NLV/contract-value quantities → order stubs."""
-    from moonshot_spark.strategies.base import Moonshot
-
-    class BuyBelow100(Moonshot):
-        CODE = "buy-below-100"
-
-        def prices_to_signals(self, prices):
-            return prices.withColumn(
-                "signal", (F.col("close") < 100).cast("int"))
+    from moonshot_spark.strategies.demo import BuyBelow100
 
     panel = events_to_panel(spark, sf_dir)
     balances = local_df(
@@ -153,30 +186,9 @@ def trade_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("trade_orders_children", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-sd AS (SELECT max(date) AS signal_date FROM panel),
-cvf AS (
-    SELECT sid, date,
-           last_value(close IGNORE NULLS) OVER (
-               PARTITION BY sid ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS contract_value
-    FROM panel
-),
-today AS (
-    SELECT w.sid, w.weight, c.contract_value
-    FROM wts w JOIN sd ON w.date = sd.signal_date
-    JOIN cvf c ON c.sid = w.sid AND c.date = w.date
-),
+{BUY_BELOW_100_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_TODAY_SQL},
 qty AS (
     SELECT t.sid, 'U100' AS account,
            CAST(round_even(t.weight * 1.0 * 1000000.0
@@ -204,14 +216,7 @@ def trade_orders_children(spark: SparkSession, sf_dir: str) -> DataFrame:
     reversed, linked by parent_id — the full parent+child order book
     exercised through the driver oracle (ids are the deterministic sid,
     not monotonically_increasing_id, so the oracle can reproduce them)."""
-    from moonshot_spark.strategies.base import Moonshot
-
-    class BuyBelow100(Moonshot):
-        CODE = "buy-below-100"
-
-        def prices_to_signals(self, prices):
-            return prices.withColumn(
-                "signal", (F.col("close") < 100).cast("int"))
+    from moonshot_spark.strategies.demo import BuyBelow100
 
     panel = events_to_panel(spark, sf_dir)
     balances = local_df(
@@ -232,30 +237,9 @@ def trade_orders_children(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("trade_orders_no_rebalance", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-sd AS (SELECT max(date) AS signal_date FROM panel),
-cvf AS (
-    SELECT sid, date,
-           last_value(close IGNORE NULLS) OVER (
-               PARTITION BY sid ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS contract_value
-    FROM panel
-),
-today AS (
-    SELECT w.sid, w.weight, c.contract_value
-    FROM wts w JOIN sd ON w.date = sd.signal_date
-    JOIN cvf c ON c.sid = w.sid AND c.date = w.date
-),
+{BUY_BELOW_100_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_TODAY_SQL},
 qty AS (
     SELECT t.sid, 'U100' AS account,
            CAST(round_even(t.weight * 1.0 * 1000000.0
@@ -280,15 +264,11 @@ def trade_orders_no_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions and ALLOW_REBALANCE=False, same-side size adjustments are
     suppressed — only position closes and reversals generate orders.
     Positions input: every sid long 10 shares."""
-    from moonshot_spark.strategies.base import Moonshot
+    from moonshot_spark.strategies.demo import BuyBelow100
 
-    class BuyBelow100NoReb(Moonshot):
+    class BuyBelow100NoReb(BuyBelow100):
         CODE = "buy-below-100-noreb"
         ALLOW_REBALANCE = False
-
-        def prices_to_signals(self, prices):
-            return prices.withColumn(
-                "signal", (F.col("close") < 100).cast("int"))
 
     panel = events_to_panel(spark, sf_dir)
     balances = local_df(
@@ -304,30 +284,9 @@ def trade_orders_no_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("trade_orders_fx", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-sd AS (SELECT max(date) AS signal_date FROM panel),
-cvf AS (
-    SELECT sid, date,
-           last_value(close IGNORE NULLS) OVER (
-               PARTITION BY sid ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS contract_value
-    FROM panel
-),
-today AS (
-    SELECT w.sid, w.weight, c.contract_value
-    FROM wts w JOIN sd ON w.date = sd.signal_date
-    JOIN cvf c ON c.sid = w.sid AND c.date = w.date
-),
+{BUY_BELOW_100_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_TODAY_SQL},
 qty AS (
     -- EUR account trading USD securities: NLV converts at the EUR->USD
     -- rate before sizing (reference base.py FX join; rate = 1.10)
@@ -349,14 +308,10 @@ def trade_orders_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
     (base_currency, quote_currency) exchange-rate dim before quantity
     sizing — the FX 2-key broadcast join exercised through the driver
     oracle."""
-    from moonshot_spark.strategies.base import Moonshot
+    from moonshot_spark.strategies.demo import BuyBelow100
 
-    class BuyBelow100FX(Moonshot):
+    class BuyBelow100FX(BuyBelow100):
         CODE = "buy-below-100-fx"
-
-        def prices_to_signals(self, prices):
-            return prices.withColumn(
-                "signal", (F.col("close") < 100).cast("int"))
 
     panel = events_to_panel(spark, sf_dir)
     master = (panel.select("sid").distinct()
@@ -432,35 +387,10 @@ def weights_neutralized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BACKTEST_COSTS_SQL = f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-gross AS (
-    SELECT *,
-           (close / lag(close) OVER w - 1)
-               * lag(position) OVER w AS gross_return,
-           abs(coalesce(position, 0) - lag(coalesce(position, 0)) OVER w) AS turnover
-    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-),
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_GROSS_RETURNS_SQL},
 costed AS (
     SELECT *,
            turnover * 0.0005 + turnover * 0.00002 AS commission,
@@ -476,35 +406,10 @@ FROM costed
 
 _BACKTEST_PERSHARE_SQL = f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-gross AS (
-    SELECT *,
-           (close / lag(close) OVER w - 1)
-               * lag(position) OVER w AS gross_return,
-           abs(coalesce(position, 0) - lag(coalesce(position, 0)) OVER w) AS turnover
-    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-),
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_GROSS_RETURNS_SQL},
 costed AS (
     -- per-share commission as % of trade value: broker 0.005/sh +
     -- exchange 0.001/sh over |price|, + 0.01 bps value fee, + 10% of the
@@ -550,17 +455,8 @@ def backtest_per_share_commission(spark: SparkSession, sf_dir: str) -> DataFrame
 
 _BACKTEST_POSLIMIT_SQL = f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
+{BUY_BELOW_100_SQL},
+{EQUAL_WEIGHTS_SQL},
 cvf AS (
     SELECT *, last_value(close IGNORE NULLS) OVER (
         PARTITION BY sid ORDER BY date
@@ -597,15 +493,11 @@ def backtest_position_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     convert back to (smaller) weights — the weight→quantity→weight
     round-trip with half-even rounding exercised through the driver
     oracle."""
-    from moonshot_spark.strategies.base import Moonshot
+    from moonshot_spark.strategies.demo import BuyBelow100
 
-    class Limited(Moonshot):
+    class Limited(BuyBelow100):
         CODE = "limited-100"
         NLV = {"USD": 100000.0}
-
-        def prices_to_signals(self, prices):
-            return prices.withColumn(
-                "signal", (F.col("close") < 100).cast("int"))
 
         def limit_position_sizes(self, prices):
             max_longs = prices.select(
@@ -649,22 +541,9 @@ sig AS (
            w10 AS (PARTITION BY sid ORDER BY date
                    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
 ),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-gross AS (
-    SELECT *,
-           (close / lag(close) OVER w - 1)
-               * lag(position) OVER w AS gross_return,
-           abs(coalesce(position, 0) - lag(coalesce(position, 0)) OVER w) AS turnover
-    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-),
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_GROSS_RETURNS_SQL},
 costed AS (
     -- per-sec-group dispatch: STK pays percentage commission, FUT pays
     -- per-contract fees over contract value (close x multiplier)
@@ -746,15 +625,8 @@ sig AS (
            w10 AS (PARTITION BY sid ORDER BY date
                    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
 ),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
 gross AS (
     SELECT *,
            (close / lag(close) OVER w - 1)
@@ -807,19 +679,7 @@ def backtest_borrow_fees(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BACKTEST_FIXEDCAP_SQL = f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
+{_DMA_SIGNALS_SQL},
 wts AS (
     SELECT *,
            CASE WHEN sum(abs(signal * 0.3)) OVER wd > 1.0
@@ -828,9 +688,7 @@ wts AS (
                 ELSE signal * 0.3 END AS weight
     FROM sig WINDOW wd AS (PARTITION BY date)
 ),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-)
+{_POSITIONS_SQL}
 SELECT sid, date, weight,
        (close / lag(close) OVER w - 1)
            * lag(position) OVER w AS gross_return
@@ -1066,12 +924,7 @@ sig AS (
     SELECT *, CASE WHEN entry_close <= 100 THEN 1.0 ELSE -1.0 END AS signal
     FROM daily
 ),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-)
+{EQUAL_WEIGHTS_SQL}
 SELECT sid, date, signal, weight, weight AS position,
        -- the engine fillna(0)s returns like the reference; a zero entry
        -- price (div-by-zero -> NULL in both engines) must coalesce here
@@ -1129,34 +982,10 @@ def backtest_once_a_day_intraday(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("performance_metrics", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-rets AS (
-    SELECT sid, date,
-           coalesce((close / lag(close) OVER w - 1)
-               * lag(position) OVER w, 0) AS r
-    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-),
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_DAILY_RETURNS_SQL},
 series AS (
     SELECT sid, list(r ORDER BY date) AS rs FROM rets GROUP BY sid
 ),
@@ -1207,24 +1036,8 @@ def performance_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         mdd.alias("max_drawdown"))
 
 
-@register("sharpe_per_sid", """
-WITH panel AS (
-    SELECT CAST(user_id AS VARCHAR) AS sid, CAST(ts AS DATE) AS date,
-           arg_max(value, ts) AS close
-    FROM events GROUP BY 1, 2
-), rets AS (
-    SELECT sid, date,
-           coalesce((close / lag(close) OVER w - 1), 0) AS r
-    FROM panel WINDOW w AS (PARTITION BY sid ORDER BY date)
-), series AS (
-    SELECT sid, list(r ORDER BY date) AS rs FROM rets GROUP BY sid
-), moments AS (
-    SELECT sid, len(rs) AS n,
-           list_reduce(rs, (a, b) -> a + b) AS s1,
-           list_reduce(list_transform(rs, x -> x * x),
-                       (a, b) -> a + b) AS s2
-    FROM series
-)
+@register("sharpe_per_sid", f"""
+WITH {_RETURN_MOMENTS_SQL}
 SELECT sid, CAST(n AS BIGINT) AS n_periods,
        CASE WHEN s2 / n - (s1 / n) * (s1 / n) > 0
             THEN ((s1 / n) / sqrt(s2 / n - (s1 / n) * (s1 / n)))
@@ -1286,12 +1099,7 @@ sig AS (
            CASE WHEN mom_rank <= 3 THEN 1.0 ELSE 0.0 END AS signal
     FROM ranked
 ),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
+{EQUAL_WEIGHTS_SQL},
 pos AS (
     SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position
     FROM wts
@@ -1338,34 +1146,10 @@ def backtest_xs_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("portfolio_returns", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-rets AS (
-    SELECT sid, date,
-           coalesce((close / lag(close) OVER w - 1)
-               * lag(position) OVER w, 0) AS r
-    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-)
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_DAILY_RETURNS_SQL}
 SELECT date,
        list_reduce(list(r ORDER BY sid), (a, b) -> a + b) AS portfolio_return,
        CAST(count(*) AS BIGINT) AS n_sids
@@ -1392,28 +1176,9 @@ def portfolio_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("backtest_param_sweep", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
 rets AS (
     SELECT sid, date,
            coalesce((close / lag(close) OVER w - 1)
@@ -1479,20 +1244,9 @@ def backtest_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("backtest_commission_floor", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
+{BUY_BELOW_100_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
 turn AS (
     SELECT *, abs(coalesce(position, 0)
                   - lag(coalesce(position, 0)) OVER (PARTITION BY sid ORDER BY date))
@@ -1516,19 +1270,15 @@ def backtest_commission_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: NLV joined from the master's currency (S2), floor = MIN/NLV
     where 0 < commission < floor."""
     from moonshot_spark.commission.base import PercentageCommission
-    from moonshot_spark.strategies.base import Moonshot
+    from moonshot_spark.strategies.demo import BuyBelow100
 
     class FloorCommission(PercentageCommission):
         BROKER_COMMISSION_RATE = 0.0001
         MIN_COMMISSION = 50.0
 
-    class Strategy(Moonshot):
+    class Strategy(BuyBelow100):
         COMMISSION_CLASS = FloorCommission
         NLV = {"USD": 1000000.0}
-
-        def prices_to_signals(self, prices):
-            return prices.withColumn(
-                "signal", (F.col("close") < 100).cast("int"))
 
     panel = events_to_panel(spark, sf_dir)
     # derive the synthetic master DataFrame-side (no driver collect — the
@@ -1553,28 +1303,9 @@ def backtest_commission_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("holding_period_returns", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
 rets AS (
     SELECT sid, date, coalesce(position, 0) AS p,
            coalesce((close / lag(close) OVER w - 1)
@@ -2014,34 +1745,10 @@ def donchian_breakouts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("portfolio_var_es", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN (CASE WHEN count(close) OVER w5 >= 5
-                      THEN avg(close) OVER w5 END)
-                   > (CASE WHEN count(close) OVER w10 >= 10
-                      THEN avg(close) OVER w10 END)
-                THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-    WINDOW w5 AS (PARTITION BY sid ORDER BY date
-                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-           w10 AS (PARTITION BY sid ORDER BY date
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-rets AS (
-    SELECT sid, date,
-           coalesce((close / lag(close) OVER w - 1)
-               * lag(position) OVER w, 0) AS r
-    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-),
+{_DMA_SIGNALS_SQL},
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_DAILY_RETURNS_SQL},
 port AS (
     SELECT date,
            list_reduce(list(r ORDER BY sid), (a, b) -> a + b) AS pr
@@ -2136,39 +1843,10 @@ sig AS (
     WINDOW w20 AS (PARTITION BY sid ORDER BY date
                    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
 ),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
-pos AS (
-    SELECT *, lag(weight) OVER (PARTITION BY sid ORDER BY date) AS position FROM wts
-),
-gross AS (
-    SELECT *,
-           (close / lag(close) OVER w - 1)
-               * lag(position) OVER w AS gross_return,
-           abs(coalesce(position, 0) - lag(coalesce(position, 0)) OVER w) AS turnover
-    FROM pos WINDOW w AS (PARTITION BY sid ORDER BY date)
-),
-fin AS (
-    SELECT *, coalesce(gross_return, 0) AS ret,
-           CASE WHEN coalesce(position, 0) <> 0 THEN 1.0 ELSE 0.0 END AS total_holdings
-    FROM gross
-)
-SELECT field, sid, date, value FROM (
-    SELECT 'AbsExposure' AS field, sid, date, abs(position) AS value FROM fin
-    UNION ALL SELECT 'AbsWeight', sid, date, abs(weight) FROM fin
-    UNION ALL SELECT 'Commission', sid, date, 0.0 FROM fin
-    UNION ALL SELECT 'NetExposure', sid, date, position FROM fin
-    UNION ALL SELECT 'Return', sid, date, ret FROM fin
-    UNION ALL SELECT 'Signal', sid, date, signal FROM fin
-    UNION ALL SELECT 'Slippage', sid, date, 0.0 FROM fin
-    UNION ALL SELECT 'TotalHoldings', sid, date, total_holdings FROM fin
-    UNION ALL SELECT 'Turnover', sid, date, turnover FROM fin
-    UNION ALL SELECT 'Weight', sid, date, weight FROM fin
-)
+{EQUAL_WEIGHTS_SQL},
+{_POSITIONS_SQL},
+{_GROSS_RETURNS_SQL},
+{_RESULTS_MELT_SQL}
 """)
 def backtest_bollinger_meanrev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full backtest of the Bollinger mean-reversion strategy
@@ -2193,13 +1871,7 @@ def backtest_bollinger_meanrev(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("var_exceedance_backtest", f"""
 WITH panel AS ({PANEL_SQL}),
-rets AS (
-    SELECT sid, date,
-           (close / lag(close) OVER w - 1) AS r
-    FROM panel WINDOW w AS (PARTITION BY sid ORDER BY date)
-), rr AS (
-    SELECT sid, date, r FROM rets WHERE r IS NOT NULL
-), framed AS (
+{CLOSE_RETURNS_SQL}, framed AS (
     SELECT sid, date, r,
            list(r) OVER (PARTITION BY sid ORDER BY date
                          ROWS BETWEEN 60 PRECEDING AND 1 PRECEDING) AS hist
@@ -2258,24 +1930,8 @@ def var_exceedance_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kelly-criterion sizing with capped fractions and gross normalization  #
 # --------------------------------------------------------------------- #
 
-@register("kelly_sizing_weights", """
-WITH panel AS (
-    SELECT CAST(user_id AS VARCHAR) AS sid, CAST(ts AS DATE) AS date,
-           arg_max(value, ts) AS close
-    FROM events GROUP BY 1, 2
-), rets AS (
-    SELECT sid, date,
-           coalesce((close / lag(close) OVER w - 1), 0) AS r
-    FROM panel WINDOW w AS (PARTITION BY sid ORDER BY date)
-), series AS (
-    SELECT sid, list(r ORDER BY date) AS rs FROM rets GROUP BY sid
-), moments AS (
-    SELECT sid, len(rs) AS n,
-           list_reduce(rs, (a, b) -> a + b) AS s1,
-           list_reduce(list_transform(rs, x -> x * x),
-                       (a, b) -> a + b) AS s2
-    FROM series
-), kelly AS (
+@register("kelly_sizing_weights", f"""
+WITH {_RETURN_MOMENTS_SQL}, kelly AS (
     SELECT sid, CAST(n AS BIGINT) AS n_periods,
            s1 / n AS mean_r,
            s2 / n - (s1 / n) * (s1 / n) AS var_r,

@@ -1,23 +1,23 @@
 """LLM training-data pipeline queries: text quality, dedup, similarity, corpus mixing, embeddings.
 
-Split from the original single-module catalog; bodies unchanged."""
+The deduplication section writes the near-dup oracle chain once: shingles,
+MinHash signatures, LSH bands, candidate pairs and connected components.
+Each piece is spliced into every oracle that runs it unchanged, as are the
+similarity section's exact-cosine CTEs.  The MinHash-LSH and PPJoin pair
+oracles are also reused whole by their incremental twins, which add a
+batch filter.  The iterative trainers' oracles are unrolled by generators
+(``_logreg_cte_chain``, ``_bpe_cte_chain``, ``_pca_cte_chain``, ...)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
-from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
-from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
-)
 from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, register,
+    COPURCHASE_GRAPH_SQL, ORACLES, register,
 )
-from moonshot_spark.sources.parquet import events_to_panel, load_table
-from moonshot_spark.queries.warehouse import COPURCHASE_GRAPH_SQL, _copurchase_edges
-
-
+from moonshot_spark.sources.parquet import load_table
+from moonshot_spark.queries.warehouse import _copurchase_edges
 
 
 # --------------------------------------------------------------------- #
@@ -487,6 +487,70 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # datapipe: deduplication                                               #
 # --------------------------------------------------------------------- #
 
+# oracle CTEs of the near-dup chain (dedup.verified_pairs and
+# near_dup_clusters), each spliced into every oracle that runs that step
+# unchanged.  MinHash signatures (dedup.minhash_signatures): 16 hashes,
+# each a shingle set's min of one 8-hex-digit slice of md5(salt || s);
+# the shingles ride along for exact Jaccard.
+_SHINGLE_SIGS_SQL = """sl AS (
+    SELECT doc_id, shingles, list_transform(shingles,
+        s -> flatten(list_transform(
+        [md5(s), md5('a|' || s), md5('b|' || s), md5('c|' || s)],
+        h -> [substr(h, 1, 8), substr(h, 9, 8), substr(h, 17, 8),
+              substr(h, 25, 8)]))) AS slices
+    FROM sh
+), sigs AS (
+    SELECT doc_id, shingles, list_transform(range(1, 17),
+        i -> list_min(list_transform(slices, a -> a[i]))) AS sig
+    FROM sl
+)"""
+
+# verified_pairs' LSH side: 3-gram shingles of ``toks`` (none under 3
+# tokens), their signatures, and 4 bands of 4 hashes
+_VERIFIED_BANDS_SQL = f"""sh AS (
+    SELECT doc_id, CASE WHEN len(t) >= 3 THEN
+        list_distinct(list_transform(range(0, len(t) - 2),
+            i -> array_to_string(list_slice(t, i + 1, i + 3), ' ')))
+        ELSE [] END AS shingles
+    FROM toks
+), {_SHINGLE_SIGS_SQL}, bands AS (
+    SELECT doc_id, shingles, b.band_id,
+           md5(array_to_string(list_slice(sig, b.band_id * 4 + 1,
+                                          b.band_id * 4 + 4), '|')) AS band_hash
+    FROM sigs, (SELECT unnest(range(0, 4)) AS band_id) b
+)"""
+
+# candidate pairs: two docs that share a band, with both shingle sets
+_CANDIDATE_PAIRS_SQL = """pairs AS (
+    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
+           l.shingles AS sh_a, r.shingles AS sh_b
+    FROM bands l JOIN bands r
+      ON l.band_id = r.band_id AND l.band_hash = r.band_hash
+     AND l.doc_id < r.doc_id
+)"""
+
+# near_dup_clusters at 0.5: candidates verified by exact Jaccard, then
+# connected components, cluster_id = the smallest reachable doc_id
+_COMPONENTS_SQL = """vpairs AS (
+    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
+    FROM bands l JOIN bands r
+      ON l.band_id = r.band_id AND l.band_hash = r.band_hash
+     AND l.doc_id < r.doc_id
+    WHERE CAST(len(list_intersect(l.shingles, r.shingles)) AS DOUBLE)
+              / len(list_distinct(l.shingles || r.shingles)) >= 0.5
+), edges AS (
+    SELECT doc_a AS s, doc_b AS d FROM vpairs
+    UNION
+    SELECT doc_b, doc_a FROM vpairs
+), walk(node, comp) AS (
+    SELECT s, s FROM edges
+    UNION
+    SELECT e.d, w.comp FROM walk w JOIN edges e ON e.s = w.node
+), cc AS (
+    SELECT node AS doc_id, min(comp) AS cluster_id FROM walk GROUP BY node
+)"""
+
+
 @register("dedup_exact", """
 WITH all_docs AS (
     SELECT doc_id, text FROM documents
@@ -515,7 +579,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                             .unionByName(clones.select("doc_id", "text")))
 
 
-@register("minhash_lsh_pairs", """
+_MINHASH_LSH_PAIRS_SQL = """
 WITH toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), sh AS (
@@ -548,7 +612,10 @@ SELECT doc_a, doc_b,
        CAST(len(list_filter(range(1, 17), i -> sig_a[i] = sig_b[i])) AS DOUBLE)
            / 16 AS est_jaccard
 FROM pairs
-""")
+"""
+
+
+@register("minhash_lsh_pairs", _MINHASH_LSH_PAIRS_SQL)
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from moonshot_spark.datapipe.dedup import lsh_candidate_pairs
 
@@ -556,7 +623,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidate_pairs(docs, num_hashes=16, bands=4, shingle_n=3)
 
 
-@register("ppjoin_incremental_pairs", """
+_PPJOIN_PAIRS_SQL = """
 WITH t0 AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), toks AS (
@@ -595,8 +662,11 @@ SELECT doc_a, doc_b, CAST(inter AS BIGINT) AS n_shared,
 FROM pairs
 WHERE CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) >= 0.8
   AND least(sa, sb) >= 0.8 * greatest(sa, sb)
-  AND (doc_a % 5 = 0 OR doc_b % 5 = 0)
-""")
+"""
+
+
+@register("ppjoin_incremental_pairs", _PPJOIN_PAIRS_SQL
+          + "  AND (doc_a % 5 = 0 OR doc_b % 5 = 0)\n")
 def ppjoin_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental EXACT-Jaccard dedup gate (datapipe/incremental_dedup
     .py::incremental_ppjoin_pairs): every fifth doc arrives as a NEW
@@ -620,46 +690,7 @@ def ppjoin_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_ppjoin_pairs(new, sets, freq, threshold=0.8)
 
 
-@register("ppjoin_jaccard_pairs", """
-WITH t0 AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), toks AS (
-    SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        list_distinct(list_transform(range(0, len(t) - 2),
-            i -> array_to_string(list_slice(t, i + 1, i + 3), ' ')))
-        ELSE [] END AS ts
-    FROM t0
-), tok AS (
-    SELECT doc_id, unnest(ts) AS token FROM toks
-), freq AS (
-    SELECT token, count(*) AS f FROM tok GROUP BY token
-), ranked AS (
-    SELECT t.doc_id, t.token,
-           row_number() OVER (PARTITION BY t.doc_id
-                              ORDER BY f.f, t.token) AS rn,
-           count(*) OVER (PARTITION BY t.doc_id) AS sz
-    FROM tok t JOIN freq f USING (token)
-), prefix AS (
-    SELECT doc_id, token FROM ranked
-    WHERE rn <= sz - ceil(0.8 * sz) + 1
-), cands AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM prefix a JOIN prefix b
-      ON a.token = b.token AND a.doc_id < b.doc_id
-), pairs AS (
-    SELECT doc_a, doc_b,
-           len(list_intersect(x.ts, y.ts)) AS inter,
-           len(x.ts) AS sa, len(y.ts) AS sb
-    FROM cands
-    JOIN toks x ON x.doc_id = doc_a
-    JOIN toks y ON y.doc_id = doc_b
-)
-SELECT doc_a, doc_b, CAST(inter AS BIGINT) AS n_shared,
-       CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) AS jaccard
-FROM pairs
-WHERE CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) >= 0.8
-  AND least(sa, sb) >= 0.8 * greatest(sa, sb)
-""")
+@register("ppjoin_jaccard_pairs", _PPJOIN_PAIRS_SQL)
 def ppjoin_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT all-pairs Jaccard >= 0.8 via PPJoin-style prefix filtering
     (Xiao et al., WWW'08) — the zero-false-negative dedup path.  The
@@ -673,38 +704,10 @@ def ppjoin_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_filter_jaccard_pairs(docs, threshold=0.8)
 
 
-@register("jaccard_verified_pairs", """
+@register("jaccard_verified_pairs", f"""
 WITH toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-    SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        list_distinct(list_transform(range(0, len(t) - 2),
-            i -> array_to_string(list_slice(t, i + 1, i + 3), ' ')))
-        ELSE [] END AS shingles
-    FROM toks
-), sl AS (
-    SELECT doc_id, shingles, list_transform(shingles,
-        s -> flatten(list_transform(
-        [md5(s), md5('a|' || s), md5('b|' || s), md5('c|' || s)],
-        h -> [substr(h, 1, 8), substr(h, 9, 8), substr(h, 17, 8),
-              substr(h, 25, 8)]))) AS slices
-    FROM sh
-), sigs AS (
-    SELECT doc_id, shingles, list_transform(range(1, 17),
-        i -> list_min(list_transform(slices, a -> a[i]))) AS sig
-    FROM sl
-), bands AS (
-    SELECT doc_id, shingles, b.band_id,
-           md5(array_to_string(list_slice(sig, b.band_id * 4 + 1,
-                                          b.band_id * 4 + 4), '|')) AS band_hash
-    FROM sigs, (SELECT unnest(range(0, 4)) AS band_id) b
-), pairs AS (
-    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-           l.shingles AS sh_a, r.shingles AS sh_b
-    FROM bands l JOIN bands r
-      ON l.band_id = r.band_id AND l.band_hash = r.band_hash
-     AND l.doc_id < r.doc_id
-)
+), {_VERIFIED_BANDS_SQL}, {_CANDIDATE_PAIRS_SQL}
 SELECT doc_a, doc_b,
        CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
            / len(list_distinct(sh_a || sh_b)) AS jaccard
@@ -723,38 +726,10 @@ def jaccard_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified_pairs(load_table(spark, sf_dir, "documents"), 0.5)
 
 
-@register("dedup_corpus_minhash", """
+@register("dedup_corpus_minhash", f"""
 WITH toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-    SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        list_distinct(list_transform(range(0, len(t) - 2),
-            i -> array_to_string(list_slice(t, i + 1, i + 3), ' ')))
-        ELSE [] END AS shingles
-    FROM toks
-), sl AS (
-    SELECT doc_id, shingles, list_transform(shingles,
-        s -> flatten(list_transform(
-        [md5(s), md5('a|' || s), md5('b|' || s), md5('c|' || s)],
-        h -> [substr(h, 1, 8), substr(h, 9, 8), substr(h, 17, 8),
-              substr(h, 25, 8)]))) AS slices
-    FROM sh
-), sigs AS (
-    SELECT doc_id, shingles, list_transform(range(1, 17),
-        i -> list_min(list_transform(slices, a -> a[i]))) AS sig
-    FROM sl
-), bands AS (
-    SELECT doc_id, shingles, b.band_id,
-           md5(array_to_string(list_slice(sig, b.band_id * 4 + 1,
-                                          b.band_id * 4 + 4), '|')) AS band_hash
-    FROM sigs, (SELECT unnest(range(0, 4)) AS band_id) b
-), pairs AS (
-    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-           l.shingles AS sh_a, r.shingles AS sh_b
-    FROM bands l JOIN bands r
-      ON l.band_id = r.band_id AND l.band_hash = r.band_hash
-     AND l.doc_id < r.doc_id
-), removable AS (
+), {_VERIFIED_BANDS_SQL}, {_CANDIDATE_PAIRS_SQL}, removable AS (
     SELECT DISTINCT doc_b AS doc_id FROM pairs
     WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
               / len(list_distinct(sh_a || sh_b)) >= 0.8
@@ -776,53 +751,14 @@ def dedup_corpus_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.col("n_chars").cast("bigint"))
 
 
-@register("dedup_clusters", """
+@register("dedup_clusters", f"""
 WITH RECURSIVE all_docs AS (
     SELECT doc_id, text FROM documents
     UNION ALL
     SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 25
 ), toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM all_docs
-), sh AS (
-    SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        list_distinct(list_transform(range(0, len(t) - 2),
-            i -> array_to_string(list_slice(t, i + 1, i + 3), ' ')))
-        ELSE [] END AS shingles
-    FROM toks
-), sl AS (
-    SELECT doc_id, shingles, list_transform(shingles,
-        s -> flatten(list_transform(
-        [md5(s), md5('a|' || s), md5('b|' || s), md5('c|' || s)],
-        h -> [substr(h, 1, 8), substr(h, 9, 8), substr(h, 17, 8),
-              substr(h, 25, 8)]))) AS slices
-    FROM sh
-), sigs AS (
-    SELECT doc_id, shingles, list_transform(range(1, 17),
-        i -> list_min(list_transform(slices, a -> a[i]))) AS sig
-    FROM sl
-), bands AS (
-    SELECT doc_id, shingles, b.band_id,
-           md5(array_to_string(list_slice(sig, b.band_id * 4 + 1,
-                                          b.band_id * 4 + 4), '|')) AS band_hash
-    FROM sigs, (SELECT unnest(range(0, 4)) AS band_id) b
-), vpairs AS (
-    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-    FROM bands l JOIN bands r
-      ON l.band_id = r.band_id AND l.band_hash = r.band_hash
-     AND l.doc_id < r.doc_id
-    WHERE CAST(len(list_intersect(l.shingles, r.shingles)) AS DOUBLE)
-              / len(list_distinct(l.shingles || r.shingles)) >= 0.5
-), edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM vpairs
-    UNION
-    SELECT doc_b, doc_a FROM vpairs
-), walk(node, comp) AS (
-    SELECT s, s FROM edges
-    UNION
-    SELECT e.d, w.comp FROM walk w JOIN edges e ON e.s = w.node
-), cc AS (
-    SELECT node AS doc_id, min(comp) AS cluster_id FROM walk GROUP BY node
-)
+), {_VERIFIED_BANDS_SQL}, {_COMPONENTS_SQL}
 SELECT cc.doc_id, cc.cluster_id,
        CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
 FROM cc
@@ -873,8 +809,9 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # datapipe: similarity search                                           #
 # --------------------------------------------------------------------- #
 
-@register("ann_cosine_topk", """
-WITH corpus AS (
+# exact cosine of every embedding against the queries vec_id < 8, as
+# left-to-right folds (datapipe/similarity.py::cosine_expr)
+_EXACT_COSINE_SQL = """corpus AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
     FROM embeddings
 ), queries AS (
@@ -888,7 +825,10 @@ WITH corpus AS (
               * sqrt(list_reduce(list_transform(range(1, len(q.q) + 1),
                   i -> q.q[i] * q.q[i]), (x, y) -> x + y))) AS cosine
     FROM corpus c CROSS JOIN queries q
-)
+)"""
+
+@register("ann_cosine_topk", f"""
+WITH {_EXACT_COSINE_SQL}
 SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank FROM (
     SELECT *, row_number() OVER (PARTITION BY query_id
                                  ORDER BY cosine DESC, vec_id) AS rank
@@ -1165,22 +1105,8 @@ def embedding_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF approximate nearest neighbors (KMeans codebook + cell probing)    #
 # --------------------------------------------------------------------- #
 
-@register("ivf_topk_contract", """
-WITH corpus AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-), queries AS (
-    SELECT vec_id AS query_id, v AS q FROM corpus WHERE vec_id < 8
-), sims AS (
-    SELECT q.query_id, c.vec_id,
-           list_reduce(list_transform(range(1, len(c.v) + 1),
-               i -> c.v[i] * q.q[i]), (x, y) -> x + y)
-           / (sqrt(list_reduce(list_transform(range(1, len(c.v) + 1),
-                  i -> c.v[i] * c.v[i]), (x, y) -> x + y))
-              * sqrt(list_reduce(list_transform(range(1, len(q.q) + 1),
-                  i -> q.q[i] * q.q[i]), (x, y) -> x + y))) AS cosine
-    FROM corpus c CROSS JOIN queries q
-), topk AS (
+@register("ivf_topk_contract", f"""
+WITH {_EXACT_COSINE_SQL}, topk AS (
     SELECT query_id, vec_id FROM (
         SELECT *, row_number() OVER (PARTITION BY query_id
                                      ORDER BY cosine DESC, vec_id) AS rank
@@ -2822,25 +2748,14 @@ def matryoshka_truncation_quality(spark: SparkSession, sf_dir: str) \
 # MinHash estimate vs exact Jaccard — sketch-accuracy report            #
 # --------------------------------------------------------------------- #
 
-@register("minhash_estimate_accuracy", """
+@register("minhash_estimate_accuracy", f"""
 WITH toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), sh AS (
     SELECT doc_id, list_distinct(list_transform(range(0, len(t) - 2),
         i -> array_to_string(list_slice(t, i + 1, i + 3), ' '))) AS shingles
     FROM toks
-), sl AS (
-    SELECT doc_id, shingles, list_transform(shingles,
-        s -> flatten(list_transform(
-        [md5(s), md5('a|' || s), md5('b|' || s), md5('c|' || s)],
-        h -> [substr(h, 1, 8), substr(h, 9, 8), substr(h, 17, 8),
-              substr(h, 25, 8)]))) AS slices
-    FROM sh
-), sigs AS (
-    SELECT doc_id, shingles, list_transform(range(1, 17),
-        i -> list_min(list_transform(slices, a -> a[i]))) AS sig
-    FROM sl
-), bands AS (
+), {_SHINGLE_SIGS_SQL}, bands AS (
     SELECT doc_id, sig, shingles, b.band_id,
            md5(array_to_string(list_slice(sig, b.band_id * 4 + 1,
                                           b.band_id * 4 + 4), '|')) AS band_hash
@@ -2895,7 +2810,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup canonical selection: keep-longest survivor per dup cluster      #
 # --------------------------------------------------------------------- #
 
-@register("dedup_canonical_selection", """
+@register("dedup_canonical_selection", f"""
 WITH RECURSIVE all_docs AS (
     SELECT doc_id, text, n_chars FROM documents
     UNION ALL
@@ -2903,46 +2818,7 @@ WITH RECURSIVE all_docs AS (
     FROM documents WHERE doc_id < 25
 ), toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM all_docs
-), sh AS (
-    SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        list_distinct(list_transform(range(0, len(t) - 2),
-            i -> array_to_string(list_slice(t, i + 1, i + 3), ' ')))
-        ELSE [] END AS shingles
-    FROM toks
-), sl AS (
-    SELECT doc_id, shingles, list_transform(shingles,
-        s -> flatten(list_transform(
-        [md5(s), md5('a|' || s), md5('b|' || s), md5('c|' || s)],
-        h -> [substr(h, 1, 8), substr(h, 9, 8), substr(h, 17, 8),
-              substr(h, 25, 8)]))) AS slices
-    FROM sh
-), sigs AS (
-    SELECT doc_id, shingles, list_transform(range(1, 17),
-        i -> list_min(list_transform(slices, a -> a[i]))) AS sig
-    FROM sl
-), bands AS (
-    SELECT doc_id, shingles, b.band_id,
-           md5(array_to_string(list_slice(sig, b.band_id * 4 + 1,
-                                          b.band_id * 4 + 4), '|')) AS band_hash
-    FROM sigs, (SELECT unnest(range(0, 4)) AS band_id) b
-), vpairs AS (
-    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-    FROM bands l JOIN bands r
-      ON l.band_id = r.band_id AND l.band_hash = r.band_hash
-     AND l.doc_id < r.doc_id
-    WHERE CAST(len(list_intersect(l.shingles, r.shingles)) AS DOUBLE)
-              / len(list_distinct(l.shingles || r.shingles)) >= 0.5
-), edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM vpairs
-    UNION
-    SELECT doc_b, doc_a FROM vpairs
-), walk(node, comp) AS (
-    SELECT s, s FROM edges
-    UNION
-    SELECT e.d, w.comp FROM walk w JOIN edges e ON e.s = w.node
-), cc AS (
-    SELECT node AS doc_id, min(comp) AS cluster_id FROM walk GROUP BY node
-), labeled AS (
+), {_VERIFIED_BANDS_SQL}, {_COMPONENTS_SQL}, labeled AS (
     SELECT ad.doc_id, coalesce(cc.cluster_id, ad.doc_id) AS cluster_id,
            ad.n_chars
     FROM all_docs ad LEFT JOIN cc USING (doc_id)
@@ -4406,41 +4282,8 @@ def dedup_exact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_exact_dups(new, exact_fingerprint_index(existing))
 
 
-@register("minhash_incremental_pairs", """
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-    SELECT doc_id, list_distinct(list_transform(range(0, len(t) - 2),
-        i -> array_to_string(list_slice(t, i + 1, i + 3), ' '))) AS shingles
-    FROM toks
-), sl AS (
-    SELECT doc_id, list_transform(shingles, s -> flatten(list_transform(
-        [md5(s), md5('a|' || s), md5('b|' || s), md5('c|' || s)],
-        h -> [substr(h, 1, 8), substr(h, 9, 8), substr(h, 17, 8),
-              substr(h, 25, 8)]))) AS slices
-    FROM sh
-), sigs AS (
-    SELECT doc_id, list_transform(range(1, 17),
-        i -> list_min(list_transform(slices, a -> a[i]))) AS sig
-    FROM sl
-), bands AS (
-    SELECT doc_id, sig, b.band_id,
-           md5(array_to_string(list_slice(sig, b.band_id * 4 + 1,
-                                          b.band_id * 4 + 4), '|')) AS band_hash
-    FROM sigs, (SELECT unnest(range(0, 4)) AS band_id) b
-), pairs AS (
-    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-           l.sig AS sig_a, r.sig AS sig_b
-    FROM bands l JOIN bands r
-      ON l.band_id = r.band_id AND l.band_hash = r.band_hash
-     AND l.doc_id < r.doc_id
-)
-SELECT doc_a, doc_b,
-       CAST(len(list_filter(range(1, 17), i -> sig_a[i] = sig_b[i])) AS DOUBLE)
-           / 16 AS est_jaccard
-FROM pairs
-WHERE doc_a % 5 = 0 OR doc_b % 5 = 0
-""")
+@register("minhash_incremental_pairs", _MINHASH_LSH_PAIRS_SQL
+          + "WHERE doc_a % 5 = 0 OR doc_b % 5 = 0\n")
 def minhash_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL MinHash-LSH: the doc_id % 5 == 0 batch probes a
     persisted signature index of the rest of the corpus

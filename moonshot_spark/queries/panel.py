@@ -1,22 +1,22 @@
 """Panel derivation, per-sid window primitives, spines, resampling, intraday/microstructure bars.
 
-Split from the original single-module catalog; bodies unchanged."""
+Oracles build on PANEL_SQL.  ``rebalance_weekly_weights`` shares the
+buy-below-100 signal and equal-weights CTEs of ``_base`` with the
+backtest module."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
-from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
+from moonshot_spark.functions.crosssec import xs_rank
 from moonshot_spark.functions.window import (
     days_since_prev, diff, ffill, pct_change, shift,
 )
 from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, register, six_hour_bar,
+    BUY_BELOW_100_SQL, EQUAL_WEIGHTS_SQL, PANEL_SQL, register, six_hour_bar,
 )
 from moonshot_spark.sources.parquet import events_to_panel, load_table
-
-
 
 
 # --------------------------------------------------------------------- #
@@ -230,17 +230,8 @@ def range_frame_weekly_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("rebalance_weekly_weights", f"""
 WITH panel AS ({PANEL_SQL}),
-sig AS (
-    SELECT sid, date, close,
-           CASE WHEN close < 100 THEN 1.0 ELSE 0.0 END AS signal
-    FROM panel
-),
-wts AS (
-    SELECT *, signal / (CASE WHEN coalesce(sum(abs(signal)) OVER (PARTITION BY date), 0) <> 0
-                             THEN sum(abs(signal)) OVER (PARTITION BY date)
-                             ELSE 1 END) AS weight
-    FROM sig
-),
+{BUY_BELOW_100_SQL},
+{EQUAL_WEIGHTS_SQL},
 flagged AS (
     SELECT *, row_number() OVER (
         PARTITION BY sid, date_trunc('week', date) ORDER BY date) AS rn

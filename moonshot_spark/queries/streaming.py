@@ -1,22 +1,15 @@
 """Structured Streaming queries reconciled to batch oracles.
 
-Split from the original single-module catalog; bodies unchanged."""
+Each query drains a fresh availableNow stream to completion; its final
+state must equal the batch oracle (PANEL_SQL's OHLCV panel, dollar
+bars)."""
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
-from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
-)
-from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, register,
-)
-from moonshot_spark.sources.parquet import (events_to_panel, load_table,
-                                           ohlcv_aggs, parquet_schema)
-
-
+from moonshot_spark.queries._base import PANEL_SQL, register
+from moonshot_spark.sources.parquet import ohlcv_aggs, parquet_schema
 
 
 # --------------------------------------------------------------------- #

@@ -1,22 +1,21 @@
 """Warehouse-style relational queries: TPC-H shapes, joins, rollups, set ops, audits, sessionization.
 
-Split from the original single-module catalog; bodies unchanged."""
+Oracles run on the raw TPC-H-shaped tables.  The session queries share
+``_SESSIONS_SQL``; the co-purchase graph queries share
+``_base.COPURCHASE_GRAPH_SQL`` and ``_copurchase_edges``; PageRank and
+Z-order oracles are generated by ``_pagerank_sql_iter`` and
+``_zorder_oracle_sql``."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
-from moonshot_spark.functions.crosssec import xs_rank, xs_sum, xs_zscore
-from moonshot_spark.functions.window import (
-    days_since_prev, diff, ffill, pct_change, shift,
-)
 from moonshot_spark.queries._base import (
-    PANEL_SQL, ORACLES, QUERIES, register,
+    COPURCHASE_GRAPH_SQL, PANEL_SQL, register,
 )
 from moonshot_spark.sources.parquet import events_to_panel, load_table
 from moonshot_spark.session import shuffle_partitions
-
 
 
 # --------------------------------------------------------------------- #
@@ -1336,40 +1335,6 @@ def item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph analytics over the co-purchase graph: PageRank + triangles      #
 # --------------------------------------------------------------------- #
 
-# shared oracle fragment: the support-2 co-purchase pair list (same
-# guards as item_cooccurrence) symmetrized into an edge list with
-# per-node degree
-COPURCHASE_GRAPH_SQL = """
-items AS (
-    SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
-),
-sized AS (
-    SELECT basket FROM items GROUP BY basket HAVING count(*) <= 50
-),
-freq AS (
-    SELECT item FROM items GROUP BY item HAVING count(*) >= 2
-),
-fi AS (
-    SELECT i.basket, i.item FROM items i
-    JOIN sized USING (basket) JOIN freq USING (item)
-),
-pairs AS (
-    SELECT a.item AS item_a, b.item AS item_b
-    FROM fi a JOIN fi b ON a.basket = b.basket AND a.item < b.item
-    GROUP BY 1, 2 HAVING count(*) >= 2
-),
-edges AS (
-    SELECT item_a AS src, item_b AS dst FROM pairs
-    UNION ALL
-    SELECT item_b AS src, item_a AS dst FROM pairs
-),
-deg AS (
-    SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-    FROM edges GROUP BY src
-)
-"""
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str,
                       checkpoint: bool = False):
     """Symmetric support-2 co-purchase edge list + per-node degree
@@ -2062,8 +2027,8 @@ def primary_key_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # top session paths: 3-event sequences within 30-minute sessions        #
 # --------------------------------------------------------------------- #
 
-@register("session_path_trigrams", """
-WITH seq AS (
+# each user's events cut into sessions at gaps over 30 minutes
+_SESSIONS_SQL = """seq AS (
     SELECT user_id, ts, event_id, event_type,
            CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
                   OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_sess
@@ -2075,7 +2040,10 @@ sess AS (
                                ROWS BETWEEN UNBOUNDED PRECEDING
                                    AND CURRENT ROW) AS session_id
     FROM seq
-),
+)"""
+
+@register("session_path_trigrams", f"""
+WITH {_SESSIONS_SQL},
 tri AS (
     SELECT event_type || '>' || lead(event_type, 1) OVER ws
                || '>' || lead(event_type, 2) OVER ws AS path
@@ -2207,20 +2175,8 @@ def pivot_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sequence pattern matching over sessions (MATCH_RECOGNIZE analog)      #
 # --------------------------------------------------------------------- #
 
-@register("session_pattern_match", """
-WITH seq AS (
-    SELECT user_id, ts, event_id, event_type,
-           CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                  OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_sess
-    FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-    SELECT user_id, ts, event_id, event_type,
-           sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS session_id
-    FROM seq
-),
+@register("session_pattern_match", f"""
+WITH {_SESSIONS_SQL},
 strs AS (
     SELECT user_id, session_id,
            string_agg(left(event_type, 1), '' ORDER BY ts, event_id) AS s

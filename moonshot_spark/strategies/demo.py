@@ -32,6 +32,18 @@ class DualMovingAverage(Moonshot):
             "signal", F.when(short_mavg > long_mavg, 1).otherwise(0))
 
 
+class BuyBelow100(Moonshot):
+    """Long every sid whose close is under 100, equally weighted: the
+    catalog's trade and position-sizing demo (BUY_BELOW_100_SQL in
+    queries/_base.py is its oracle signal)."""
+
+    CODE = "buy-below-100"
+
+    def prices_to_signals(self, prices: DataFrame) -> DataFrame:
+        return prices.withColumn(
+            "signal", (F.col("close") < 100).cast("int"))
+
+
 class DualMovingAverageWithCosts(DualMovingAverage):
     """Same signal, with percentage commissions and fixed slippage."""
 

@@ -568,7 +568,7 @@ def test_cc_adaptive_matches_unionfind(spark, seed):
 
 
 def test_cc_adaptive_long_chain_falls_back_to_star(spark):
-    # diameter 39 >> hashmin_rounds=2: the hash-min prefix cannot finish,
+    # diameter 39 >> HASHMIN_ROUNDS: the hash-min prefix cannot finish,
     # so the contracted graph must be handed to the star path and the
     # composed labels must still be exact
     from moonshot_spark.datapipe.graph import connected_components_adaptive
@@ -576,8 +576,7 @@ def test_cc_adaptive_long_chain_falls_back_to_star(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(39)], "src long, dst long")
     got = {(r["node"], r["comp"])
-           for r in connected_components_adaptive(
-               edges, hashmin_rounds=2).collect()}
+           for r in connected_components_adaptive(edges).collect()}
     assert got == {(i, 0) for i in range(40)}
 
 
@@ -1239,7 +1238,7 @@ def test_label_propagation_symmetrizes_asymmetric_edges(spark):
 def test_parse_byte_conf_units():
     """'64m'/'1g'-style configs must parse, not fall back to 128MB
     (ADVICE r7)."""
-    from moonshot_spark.datapipe.dedup import _parse_byte_conf
+    from moonshot_spark.sources.parquet import _parse_byte_conf
 
     assert _parse_byte_conf("134217728") == 134217728
     assert _parse_byte_conf("64m") == 64 * 1024 * 1024

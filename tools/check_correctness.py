@@ -18,7 +18,6 @@ library code, whose tree has no hash to record:
 from __future__ import annotations
 
 import json
-import math
 import os
 import subprocess
 import sys
