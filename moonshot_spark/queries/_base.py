@@ -15,8 +15,8 @@ one catalog module splices in: ``PANEL_SQL`` (the daily OHLCV panel),
 ``CLOSE_RETURNS_SQL`` (close-to-close returns) and
 ``COPURCHASE_GRAPH_SQL`` (the co-purchase graph CTEs).  A fragment one
 module uses stays in that module.  Fragments are constants cut at CTE
-boundaries, so an oracle sends DuckDB the same text it would spelled
-out.  Two Spark-side helpers shared by modules live here too:
+boundaries, so an oracle sends DuckDB the same text as if it spelled
+them out.  Two Spark-side helpers shared by modules live here too:
 ``six_hour_bar`` and ``intraday_panel``.
 
 Cross-engine float discipline: two-operand double arithmetic (+,-,*,/) and

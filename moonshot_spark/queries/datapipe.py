@@ -490,8 +490,9 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle CTEs of the near-dup chain (dedup.verified_pairs and
 # near_dup_clusters), each spliced into every oracle that runs that step
 # unchanged.  MinHash signatures (dedup.minhash_signatures): 16 hashes,
-# each a shingle set's min of one 8-hex-digit slice of md5(salt || s);
-# the shingles ride along for exact Jaccard.
+# each the min over a doc's shingles of one 8-hex-digit slice of md5(s)
+# or of md5 with an 'a|', 'b|' or 'c|' salt; the shingles ride along
+# for exact Jaccard.
 _SHINGLE_SIGS_SQL = """sl AS (
     SELECT doc_id, shingles, list_transform(shingles,
         s -> flatten(list_transform(
@@ -826,6 +827,7 @@ _EXACT_COSINE_SQL = """corpus AS (
                   i -> q.q[i] * q.q[i]), (x, y) -> x + y))) AS cosine
     FROM corpus c CROSS JOIN queries q
 )"""
+
 
 @register("ann_cosine_topk", f"""
 WITH {_EXACT_COSINE_SQL}

@@ -2042,6 +2042,7 @@ sess AS (
     FROM seq
 )"""
 
+
 @register("session_path_trigrams", f"""
 WITH {_SESSIONS_SQL},
 tri AS (
