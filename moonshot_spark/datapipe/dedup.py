@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
+from moonshot_spark.functions.folds import ordered_values
 from moonshot_spark.sources.parquet import scan_partition_estimate
 
 
@@ -576,9 +577,7 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
     sorted_sets = materialize.persist(
         tok.join(freq, "token")
         .groupBy(id_col)
-        .agg(F.transform(
-            F.array_sort(F.collect_list(F.struct("__f", "token"))),
-            lambda s: s["token"]).alias("__ts")))
+        .agg(ordered_values("__f", "token").alias("__ts")))
     sz = F.size("__ts")
     prefix_len = sz - F.ceil(sz * F.lit(threshold)) + 1
     prefix = (sorted_sets

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
+from moonshot_spark.functions.folds import ordered_values
 
 __all__ = ["exact_fingerprint_index", "merge_exact_index",
            "incremental_exact_dups", "incremental_minhash_pairs",
@@ -192,10 +193,8 @@ def _frozen_sorted_sets(docs: DataFrame, frozen_freq: DataFrame,
     # joins the consumers plan into, so the aggregate still re-ran per
     # branch; persist computes it once (same evidence + A/B as
     # dedup.prefix_filter_jaccard_pairs, r15).
-    return materialize.persist(j.groupBy(id_col).agg(F.transform(
-        F.array_sort(F.collect_list(F.struct(
-            F.coalesce("__f", F.lit(0)).alias("__f"), "token"))),
-        lambda s: s["token"]).alias("__ts")))
+    return materialize.persist(j.groupBy(id_col).agg(ordered_values(
+        F.coalesce("__f", F.lit(0)), "token").alias("__ts")))
 
 
 def ppjoin_index(docs: DataFrame, text_col: str = "text",

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark.functions.folds import fold_sum, ordered_values
 from moonshot_spark.operators.ranking import grouped_topk
 
 
@@ -39,12 +40,9 @@ def cosine_expr(a, b):
     engine-portable order of operations)."""
     a = _as_double(a if not isinstance(a, str) else F.col(a))
     b = _as_double(b if not isinstance(b, str) else F.col(b))
-    prods = F.zip_with(a, b, lambda x, y: x * y)
-    dot = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-    norm_a = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0),
-                                lambda acc, x: acc + x))
-    norm_b = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0),
-                                lambda acc, x: acc + x))
+    dot = fold_sum(F.zip_with(a, b, lambda x, y: x * y))
+    norm_a = F.sqrt(fold_sum(F.transform(a, lambda x: x * x)))
+    norm_b = F.sqrt(fold_sum(F.transform(b, lambda x: x * x)))
     return dot / (norm_a * norm_b)
 
 
@@ -82,8 +80,7 @@ def brute_force_l2_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     joined = corpus.crossJoin(F.broadcast(q))
     a = _as_double(F.col(vec_col))
     b = _as_double(F.col("__qvec"))
-    diffs = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    ssd = F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+    ssd = fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
     scored = joined.select(query_id_col, id_col, ssd.alias("ssd"))
     return (grouped_topk(scored, [query_id_col],
                          [F.asc("ssd"), F.asc(id_col)], k)
@@ -100,8 +97,7 @@ def hyperplane_signature_expr(vec_col, planes: list[list[float]]):
     bits = []
     for plane in planes:
         lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(F.zip_with(v, lit_plane, lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, x: acc + x)
+        dot = fold_sum(F.zip_with(v, lit_plane, lambda x, y: x * y))
         bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
 
@@ -349,9 +345,7 @@ def centroid_outliers(emb: DataFrame, vec_col: str = "embedding",
             .withColumn("__m", F.floor(F.col("__s").cast("double")
                                        / F.col("__n")).cast("bigint")))
     carr = (cent.groupBy(group_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("__dim", "__m"))),
-                lambda st: st["__m"]).alias("__c")))
+            .agg(ordered_values("__dim", "__m").alias("__c")))
     j = q.join(F.broadcast(carr), group_col)
     zero = F.lit(0).cast("bigint")
     dot = F.aggregate(F.zip_with("__q", "__c", lambda a, b: a * b),
@@ -536,9 +530,7 @@ def mine_hard_negatives(emb: DataFrame, anchors: DataFrame, n_neg: int = 3,
     # Folds stay; unroll only when the pair count is large enough to
     # amortize planning.
     def _norm(c):
-        return F.sqrt(F.aggregate(
-            F.transform(_as_double(c), lambda x: x * x),
-            F.lit(0.0), lambda acc, x: acc + x))
+        return F.sqrt(fold_sum(F.transform(_as_double(c), lambda x: x * x)))
 
     a = anchors.select(F.col("anchor_id"),
                        F.col(vec_col).alias("__avec"),
@@ -565,8 +557,7 @@ def mine_hard_negatives(emb: DataFrame, anchors: DataFrame, n_neg: int = 3,
                   F.lit("positive")).otherwise(F.lit("negative"))
     dvec = _as_double(F.col(vec_col))
     davec = _as_double(F.col("__avec"))
-    dot = F.aggregate(F.zip_with(dvec, davec, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
+    dot = fold_sum(F.zip_with(dvec, davec, lambda x, y: x * y))
     sim = dot / (F.col("__vn") * F.col("__an"))
     scored = joined.select("anchor_id", role.alias("role"), F.col(id_col),
                            sim.alias("cosine"))

@@ -24,7 +24,11 @@ min/max/lag/count are bit-deterministic across engines, so most queries
 hash-match exactly.  Multi-row accumulations (sum/avg over many rows) are
 association-order-dependent, so aggregates sum via DECIMAL(18,2) (inputs
 are 2-decimal money; decimal sums are exact in both engines, cast back to
-double).  Avoid ``round()`` on doubles in query outputs: Spark rounds the
+double).  Arbitrary doubles (returns, moments) cannot go through DECIMAL,
+so they sum as a left-to-right fold from 0.0 over a key-ordered list:
+DuckDB's ``list_reduce(list(v ORDER BY key), (a, b) -> a + b)``, whose one
+Spark home is ``functions/folds.py`` (``ordered_values``, ``fold_sum``,
+``fold_sum_exact``).  Avoid ``round()`` on doubles in query outputs: Spark rounds the
 shortest decimal repr (HALF_UP) while DuckDB rounds the binary value, so
 even bit-identical inputs can round differently at .xx5 boundaries —
 ``floor``/``round_even`` (= Spark ``bround`` on halves away from repr

@@ -11,6 +11,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
+from moonshot_spark.functions.folds import (
+    fold_sum, fold_sum_exact, ordered_values,
+)
 from moonshot_spark.functions.window import pct_change
 from moonshot_spark.queries._base import (
     CLOSE_RETURNS_SQL, PANEL_SQL, register,
@@ -89,19 +92,13 @@ def return_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
                          pct_change("close", 1, w).alias("r"))
             .where(F.col("r").isNotNull()))
 
-    def fold(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("date"),
-                                                 expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
     r = F.col("r")
     series = (rets.groupBy("sid")
               .agg(F.count("*").alias("n"),
-                   fold(r).alias("s1"), fold(r * r).alias("s2"),
-                   fold(r * r * r).alias("s3"),
-                   fold(r * r * r * r).alias("s4"))
+                   fold_sum_exact("date", r).alias("s1"),
+                   fold_sum_exact("date", r * r).alias("s2"),
+                   fold_sum_exact("date", r * r * r).alias("s3"),
+                   fold_sum_exact("date", r * r * r * r).alias("s4"))
               .where(F.col("n") >= 4))
     n = F.col("n")
     s1, s2, s3, s4 = (F.col(c) for c in ("s1", "s2", "s3", "s4"))
@@ -159,18 +156,14 @@ def correlation_to_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = (rets.where(F.col("r").isNotNull() & (F.col("sid") != "7"))
               .join(bench, "date"))
 
-    def fold(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("date"), expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
+    r, rb = F.col("r"), F.col("rb")
     series = joined.groupBy("sid").agg(
         F.count("*").alias("n"),
-        fold(F.col("r")).alias("sx"), fold(F.col("rb")).alias("sy"),
-        fold(F.col("r") * F.col("rb")).alias("sxy"),
-        fold(F.col("r") * F.col("r")).alias("sxx"),
-        fold(F.col("rb") * F.col("rb")).alias("syy"))
+        fold_sum_exact("date", r).alias("sx"),
+        fold_sum_exact("date", rb).alias("sy"),
+        fold_sum_exact("date", r * rb).alias("sxy"),
+        fold_sum_exact("date", r * r).alias("sxx"),
+        fold_sum_exact("date", rb * rb).alias("syy"))
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     corr = (n * sxy - sx * sy) / (F.sqrt(n * sxx - sx * sx)
@@ -383,11 +376,7 @@ def source_lang_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("source", "lang",
                      ((F.col("o").cast("double") - e)
                       * (F.col("o").cast("double") - e) / e).alias("cell")))
-    folded = F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("source", "lang", "cell"))),
-            lambda s: s["cell"]),
-        F.lit(0.0), lambda a, b: a + b)
+    folded = fold_sum_exact(["source", "lang"], "cell")
     dims = docs.agg(
         ((F.countDistinct("source") - F.lit(1))
          * (F.countDistinct("lang") - F.lit(1))).alias("dof"))
@@ -622,23 +611,16 @@ def walkforward_ar1_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("tag", tag)
             .where(F.col("tag").isNotNull()))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="walkforward_ar1_cv")
-
     partials = kept.groupBy("fold", "tag", "sid").agg(
         F.count("*").alias("cnt"),
-        fold_by("date", F.col("x") * F.col("y")).alias("pxy"),
-        fold_by("date", F.col("x") * F.col("x")).alias("pxx"),
-        fold_by("date", F.col("y") * F.col("y")).alias("pyy"))
+        fold_sum_exact("date", F.col("x") * F.col("y")).alias("pxy"),
+        fold_sum_exact("date", F.col("x") * F.col("x")).alias("pxx"),
+        fold_sum_exact("date", F.col("y") * F.col("y")).alias("pyy"))
     sums = partials.groupBy("fold", "tag").agg(
         F.sum("cnt").alias("n"),
-        fold_by("sid", F.col("pxy")).alias("sxy"),
-        fold_by("sid", F.col("pxx")).alias("sxx"),
-        fold_by("sid", F.col("pyy")).alias("syy"))
+        fold_sum_exact("sid", F.col("pxy")).alias("sxy"),
+        fold_sum_exact("sid", F.col("pxx")).alias("sxx"),
+        fold_sum_exact("sid", F.col("pyy")).alias("syy"))
     pick = lambda t, c: F.max(F.when(F.col("tag") == t, F.col(c)))
     wide = sums.groupBy("fold").agg(
         pick("train", "n").alias("n_train"),
@@ -713,24 +695,19 @@ def event_study_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
           .withColumn("event", F.when(F.col("gap") > 0.02, "gap_up")
                       .otherwise("gap_down")))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="event_study_gaps")
-
     partials = ev.groupBy("event", "sid").agg(
         F.count("fwd1").alias("n1"),
         F.count("fwd2").alias("n2"),
-        fold_by("date", F.coalesce(F.col("fwd1"), F.lit(0))).alias("p1"),
-        fold_by("date", F.coalesce(F.col("fwd2"), F.lit(0))).alias("p2"))
+        fold_sum_exact("date", F.coalesce(F.col("fwd1"), F.lit(0)))
+        .alias("p1"),
+        fold_sum_exact("date", F.coalesce(F.col("fwd2"), F.lit(0)))
+        .alias("p2"))
     return partials.groupBy("event").agg(
         F.sum("n1").alias("n_fwd1"),
-        (fold_by("sid", F.col("p1"))
+        (fold_sum_exact("sid", F.col("p1"))
          / F.sum("n1").cast("double")).alias("mean_fwd1"),
         F.sum("n2").alias("n_fwd2"),
-        (fold_by("sid", F.col("p2"))
+        (fold_sum_exact("sid", F.col("p2"))
          / F.sum("n2").cast("double")).alias("mean_fwd2"))
 
 
@@ -791,18 +768,12 @@ def ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("r", 2).over(w).alias("r2"),
         F.lag("r", 3).over(w).alias("r3"))
 
-    def fold_by(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
+    r = F.col("r")
     sums = lagged.groupBy("sid").agg(
         F.count("r").alias("n"),
-        fold_by(F.col("r") * F.col("r")).alias("s0"),
-        fold_by(F.coalesce(F.col("r") * F.col("r1"), F.lit(0))).alias("s1"),
-        fold_by(F.coalesce(F.col("r") * F.col("r2"), F.lit(0))).alias("s2"),
-        fold_by(F.coalesce(F.col("r") * F.col("r3"), F.lit(0))).alias("s3"))
+        fold_sum_exact("date", r * r).alias("s0"),
+        *(fold_sum_exact("date", F.coalesce(r * F.col(f"r{k}"), F.lit(0)))
+          .alias(f"s{k}") for k in (1, 2, 3)))
     rho = lambda s, k: F.col(s) / F.col("s0")
     n = F.col("n")
     q = (n * (n + 2)
@@ -853,13 +824,9 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("sid", "date",
                      (F.abs(F.col("r"))
                       / (F.col("close") * F.col("volume"))).alias("illiq")))
-    folded = F.aggregate(
-        F.transform(F.array_sort(F.collect_list(F.struct("date", "illiq"))),
-                    lambda s: s["illiq"]),
-        F.lit(0.0), lambda a, b: a + b)
     return (daily.groupBy("sid")
             .agg(F.count("*").alias("n_days"),
-                 (F.lit(1000000.0) * folded
+                 (F.lit(1000000.0) * fold_sum_exact("date", "illiq")
                   / F.count("*").cast("double")).alias("amihud_x1m")))
 
 
@@ -973,9 +940,7 @@ def price_path_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     zfull = spine.join(z, ["sid", "date"], "left")
     vec = materialize.persist(
         zfull.groupBy("sid")
-        .agg(F.transform(
-            F.array_sort(F.collect_list(F.struct("date", "zc"))),
-            lambda s: s["zc"]).alias("arr")))
+        .agg(ordered_values("date", "zc").alias("arr")))
     from moonshot_spark.datapipe.similarity import pairwise_ssd_topk
 
     return pairwise_ssd_topk(vec, id_col="sid", arr_col="arr", k=5)
@@ -1027,19 +992,17 @@ def variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     r5 = F.col("close") / F.lag("close", 5).over(w) - 1
     rets = panel.select("sid", "date", r1.alias("r1"), r5.alias("r5"))
 
-    def fold_by(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
     sums = rets.groupBy("sid").agg(
         F.count("r1").alias("n1"), F.count("r5").alias("n5"),
-        fold_by(F.coalesce(F.col("r1"), F.lit(0))).alias("s1"),
-        fold_by(F.coalesce(F.col("r1") * F.col("r1"), F.lit(0)))
+        fold_sum_exact("date", F.coalesce(F.col("r1"), F.lit(0)))
+        .alias("s1"),
+        fold_sum_exact("date",
+                       F.coalesce(F.col("r1") * F.col("r1"), F.lit(0)))
         .alias("s11"),
-        fold_by(F.coalesce(F.col("r5"), F.lit(0))).alias("s5"),
-        fold_by(F.coalesce(F.col("r5") * F.col("r5"), F.lit(0)))
+        fold_sum_exact("date", F.coalesce(F.col("r5"), F.lit(0)))
+        .alias("s5"),
+        fold_sum_exact("date",
+                       F.coalesce(F.col("r5") * F.col("r5"), F.lit(0)))
         .alias("s55"))
     var1 = ((F.col("s11") - F.col("s1") * F.col("s1") / F.col("n1"))
             / (F.col("n1") - 1))
@@ -1174,21 +1137,14 @@ def gap_fade_tstat(spark: SparkSession, sf_dir: str) -> DataFrame:
           .withColumn("grp", F.when(F.col("gap") > 0.02, "up")
                       .otherwise("down")))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="gap_fade_tstat")
-
     partials = ev.groupBy("grp", "sid").agg(
         F.count("*").alias("cnt"),
-        fold_by("date", F.col("fwd1")).alias("px"),
-        fold_by("date", F.col("fwd1") * F.col("fwd1")).alias("pxx"))
+        fold_sum_exact("date", F.col("fwd1")).alias("px"),
+        fold_sum_exact("date", F.col("fwd1") * F.col("fwd1")).alias("pxx"))
     sums = partials.groupBy("grp").agg(
         F.sum("cnt").alias("n"),
-        fold_by("sid", F.col("px")).alias("sx"),
-        fold_by("sid", F.col("pxx")).alias("sxx"))
+        fold_sum_exact("sid", F.col("px")).alias("sx"),
+        fold_sum_exact("sid", F.col("pxx")).alias("sxx"))
     pick = lambda g, c: F.max(F.when(F.col("grp") == g, F.col(c)))
     wide = sums.agg(
         pick("up", "n").alias("n1"), pick("up", "sx").alias("sx1"),
@@ -1264,17 +1220,10 @@ def james_stein_means(spark: SparkSession, sf_dir: str) -> DataFrame:
                          pct_change("close", 1, w).alias("r"))
             .where(F.col("r").isNotNull()))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="james_stein_means")
-
     per_sid = rets.groupBy("sid").agg(
         F.count("r").alias("n"),
-        fold_by("date", F.col("r")).alias("sx"),
-        fold_by("date", F.col("r") * F.col("r")).alias("sxx"))
+        fold_sum_exact("date", F.col("r")).alias("sx"),
+        fold_sum_exact("date", F.col("r") * F.col("r")).alias("sxx"))
     m = (per_sid.where(F.col("n") > 1)
          .select("sid", "n",
                  (F.col("sx") / F.col("n")).alias("mean_r"),
@@ -1282,12 +1231,12 @@ def james_stein_means(spark: SparkSession, sf_dir: str) -> DataFrame:
                    / (F.col("n") - 1)) / F.col("n")).alias("se2")))
     g = m.agg(
         F.count("*").alias("k"),
-        (fold_by("sid", F.col("mean_r"))
+        (fold_sum_exact("sid", F.col("mean_r"))
          / F.count("*").cast("double")).alias("grand"),
-        (fold_by("sid", F.col("se2"))
+        (fold_sum_exact("sid", F.col("se2"))
          / F.count("*").cast("double")).alias("se2_bar"))
     mg = m.crossJoin(F.broadcast(g))
-    ss = mg.agg(fold_by(
+    ss = mg.agg(fold_sum_exact(
         "sid", (F.col("mean_r") - F.col("grand"))
         * (F.col("mean_r") - F.col("grand"))).alias("ss"))
     c = F.greatest(
@@ -1387,15 +1336,9 @@ def information_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1.0) - F.lit(6.0) * F.col("ssd").cast("double")
          / (nd * (nd * nd - F.lit(1.0)))).alias("ic"))
 
-    def fold_by(expr):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
     cnt = F.count("*").cast("double")
-    s1 = fold_by(F.col("ic"))
-    s2 = fold_by(F.col("ic") * F.col("ic"))
+    s1 = fold_sum_exact("date", F.col("ic"))
+    s2 = fold_sum_exact("date", F.col("ic") * F.col("ic"))
     mean = s1 / cnt
     tstat = mean / F.sqrt(((s2 - s1 * s1 / cnt) / (cnt - F.lit(1.0))) / cnt)
     return ics.agg(F.count("*").alias("n_days"),
@@ -1472,31 +1415,22 @@ def ta_bollinger_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws = Window.partitionBy("sid").orderBy("date")
     w20 = ws.rowsBetween(-19, 0)
     w14 = ws.rowsBetween(-13, 0)
-    c20 = F.transform(
-        F.array_sort(F.collect_list(F.struct("date", "close")).over(w20)),
-        lambda s: s["close"])
+    c20 = ordered_values("date", "close", over=w20)
     chg = F.col("close") - F.lag("close").over(ws)
     framed = panel.select("sid", "date", "close", c20.alias("c20"),
                           chg.alias("chg"))
-    g14 = F.transform(
-        F.array_sort(F.collect_list(F.struct("date", "chg")).over(w14)),
-        lambda s: s["chg"])
-    # collect_list drops NULL rows, so the first row's NULL chg would
-    # shrink the frame vs DuckDB's list(); the struct wrapper keeps it.
+    # the first row's NULL chg keeps its place in the frame, as in
+    # DuckDB's list()
+    g14 = ordered_values("date", "chg", over=w14)
     chg_framed = framed.select("sid", "date", "close", "c20",
                                g14.alias("g14"))
-    add = lambda a, b: a + b
     m = F.size("c20").cast("double")
-    s1 = F.aggregate("c20", F.lit(0.0), add)
-    s2 = F.aggregate(F.transform("c20", lambda x: x * x), F.lit(0.0), add)
-    gs = F.aggregate(
-        F.transform("g14",
-                    lambda x: F.when(x > 0, x).otherwise(F.lit(0.0))),
-        F.lit(0.0), add)
-    ls = F.aggregate(
-        F.transform("g14",
-                    lambda x: F.when(x < 0, -x).otherwise(F.lit(0.0))),
-        F.lit(0.0), add)
+    s1 = fold_sum("c20")
+    s2 = fold_sum(F.transform("c20", lambda x: x * x))
+    gs = fold_sum(F.transform(
+        "g14", lambda x: F.when(x > 0, x).otherwise(F.lit(0.0))))
+    ls = fold_sum(F.transform(
+        "g14", lambda x: F.when(x < 0, -x).otherwise(F.lit(0.0))))
     moments = chg_framed.select(
         "sid", "date", "close", m.alias("m"), s1.alias("s1"),
         s2.alias("s2"), gs.alias("gs"), ls.alias("ls"))
@@ -1610,11 +1544,6 @@ def ta_macd_stoch_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     w12 = ws.rowsBetween(-11, 0)
     w26 = ws.rowsBetween(-25, 0)
 
-    def frame(col: str, w) -> Column:
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("date", col)).over(w)),
-            lambda s: s[col])
-
     signed = (F.when(F.col("close") - F.col("prev_c") > 0, F.col("volume"))
               .when(F.col("close") - F.col("prev_c") < 0, -F.col("volume"))
               .otherwise(F.lit(0.0))).cast("decimal(18,1)")
@@ -1623,19 +1552,15 @@ def ta_macd_stoch_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
         tr_col.alias("true_range"),
         F.max("high").over(w14).alias("hh"),
         F.min("low").over(w14).alias("ll"),
-        frame("close", w12).alias("c12"),
-        frame("close", w26).alias("c26"),
+        ordered_values("date", "close", over=w12).alias("c12"),
+        ordered_values("date", "close", over=w26).alias("c26"),
         F.sum(signed).over(ws.rowsBetween(Window.unboundedPreceding, 0))
          .cast("double").alias("obv"))
-    add = lambda a, b: a + b
-
-    def fold_mean(col: str) -> Column:
-        return (F.aggregate(col, F.lit(0.0), add)
-                / F.size(col).cast("double"))
-
     line = tr.select(
         "sid", "date", "close", "obv",
-        (fold_mean("c12") - fold_mean("c26")).alias("macd_line"),
+        (fold_sum("c12") / F.size("c12").cast("double")
+         - fold_sum("c26") / F.size("c26").cast("double"))
+        .alias("macd_line"),
         (F.lit(100.0) * (F.col("close") - F.col("ll"))
          / (F.col("hh") - F.col("ll"))).alias("stoch_k"),
         "true_range")
@@ -1643,21 +1568,21 @@ def ta_macd_stoch_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     w3 = ws.rowsBetween(-2, 0)
     framed = line.select(
         "sid", "date", "close", "obv", "macd_line", "stoch_k",
-        frame("macd_line", w9).alias("l9"),
-        frame("stoch_k", w3).alias("k3"),
-        frame("true_range", w14).alias("t14"))
-    k_sum = F.aggregate(
-        F.transform("k3", lambda x: F.when(x.isNotNull(), x)
-                    .otherwise(F.lit(0.0))), F.lit(0.0), add)
-    k_cnt = F.aggregate(
-        F.transform("k3", lambda x: F.when(x.isNotNull(), F.lit(1.0))
-                    .otherwise(F.lit(0.0))), F.lit(0.0), add)
+        ordered_values("date", "macd_line", over=w9).alias("l9"),
+        ordered_values("date", "stoch_k", over=w3).alias("k3"),
+        ordered_values("date", "true_range", over=w14).alias("t14"))
+    k_sum = fold_sum(F.transform(
+        "k3", lambda x: F.when(x.isNotNull(), x).otherwise(F.lit(0.0))))
+    k_cnt = fold_sum(F.transform(
+        "k3", lambda x: F.when(x.isNotNull(), F.lit(1.0))
+        .otherwise(F.lit(0.0))))
     return framed.select(
         "sid", "date", "close", "macd_line",
-        fold_mean("l9").alias("macd_signal"),
+        (fold_sum("l9") / F.size("l9").cast("double"))
+        .alias("macd_signal"),
         "stoch_k",
         (k_sum / F.nullif(k_cnt, F.lit(0.0))).alias("stoch_d"),
-        fold_mean("t14").alias("atr"),
+        (fold_sum("t14") / F.size("t14").cast("double")).alias("atr"),
         "obv")
 
 
@@ -1724,29 +1649,20 @@ def market_model_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sid", "date",
             (F.col("close") / prev - 1).alias("r"))
           .where(F.col("r").isNotNull()))
-    rs = F.transform(F.array_sort(F.collect_list(F.struct("sid", "r"))),
-                     lambda x: x["r"])
-    mkt = (rr.groupBy("date").agg(rs.alias("rs"))
-           .select("date", (F.aggregate("rs", F.lit(0.0),
-                                        lambda a, b: a + b)
+    mkt = (rr.groupBy("date").agg(ordered_values("sid", "r").alias("rs"))
+           .select("date", (fold_sum("rs")
                             / F.size("rs").cast("double")).alias("mkt_r")))
     j = rr.join(mkt, "date").select("sid", "date", "r", "mkt_r")
     w20 = ws.rowsBetween(-19, 0)
 
-    def frame(col: str) -> Column:
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("date", col)).over(w20)),
-            lambda s: s[col])
-
     framed = j.select("sid", "date", "r", "mkt_r",
-                      frame("r").alias("lr"), frame("mkt_r").alias("lm"))
-    add = lambda a, b: a + b
+                      ordered_values("date", "r", over=w20).alias("lr"),
+                      ordered_values("date", "mkt_r", over=w20).alias("lm"))
     n = F.size("lm").cast("double")
-    s_x = F.aggregate("lm", F.lit(0.0), add)
-    s_y = F.aggregate("lr", F.lit(0.0), add)
-    s_xx = F.aggregate(F.transform("lm", lambda x: x * x), F.lit(0.0), add)
-    s_xy = F.aggregate(F.zip_with("lm", "lr", lambda a, b: a * b),
-                       F.lit(0.0), add)
+    s_x = fold_sum("lm")
+    s_y = fold_sum("lr")
+    s_xx = fold_sum(F.transform("lm", lambda x: x * x))
+    s_xy = fold_sum(F.zip_with("lm", "lr", lambda a, b: a * b))
     m = framed.select("sid", "date", "r", "mkt_r", n.alias("n"),
                       s_x.alias("s_x"), s_y.alias("s_y"),
                       s_xx.alias("s_xx"), s_xy.alias("s_xy"))
@@ -1824,19 +1740,16 @@ def fama_macbeth_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok = feats.where(F.col("mom").isNotNull()
                      & F.col("fwd_r").isNotNull())
     per_date = (ok.groupBy("date")
-                .agg(F.array_sort(
-                    F.collect_list(F.struct("sid", "mom", "fwd_r")))
-                    .alias("rows")))
+                .agg(ordered_values("sid", F.struct("mom", "fwd_r"))
+                     .alias("rows")))
     fs = F.transform("rows", lambda s: s["mom"])
     ys = F.transform("rows", lambda s: s["fwd_r"])
-    add = lambda a, b: a + b
     per_date = per_date.select("date", fs.alias("fs"), ys.alias("ys"))
     n = F.size("fs").cast("double")
-    sf_ = F.aggregate("fs", F.lit(0.0), add)
-    sy = F.aggregate("ys", F.lit(0.0), add)
-    sff = F.aggregate(F.transform("fs", lambda x: x * x), F.lit(0.0), add)
-    sfy = F.aggregate(F.zip_with("fs", "ys", lambda a, b: a * b),
-                      F.lit(0.0), add)
+    sf_ = fold_sum("fs")
+    sy = fold_sum("ys")
+    sff = fold_sum(F.transform("fs", lambda x: x * x))
+    sfy = fold_sum(F.zip_with("fs", "ys", lambda a, b: a * b))
     slopes = per_date.select("date", n.alias("n"), sf_.alias("sf"),
                              sy.alias("sy"), sff.alias("sff"),
                              sfy.alias("sfy"))
@@ -1846,12 +1759,10 @@ def fama_macbeth_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("date",
                    ((F.col("n") * F.col("sfy")
                      - F.col("sf") * F.col("sy")) / den).alias("slope")))
-    agg = lam.agg(F.transform(
-        F.array_sort(F.collect_list(F.struct("date", "slope"))),
-        lambda s: s["slope"]).alias("ls"))
+    agg = lam.agg(ordered_values("date", "slope").alias("ls"))
     t = F.size("ls").cast("double")
-    s1 = F.aggregate("ls", F.lit(0.0), add)
-    s2 = F.aggregate(F.transform("ls", lambda x: x * x), F.lit(0.0), add)
+    s1 = fold_sum("ls")
+    s2 = fold_sum(F.transform("ls", lambda x: x * x))
     m = agg.select(t.alias("t"), s1.alias("s1"), s2.alias("s2"))
     var = (F.col("s2") - F.col("s1") * F.col("s1") / F.col("t")) \
         / (F.col("t") - 1)
@@ -1938,13 +1849,9 @@ def newey_west_tstat(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = (panel.select("sid", "date",
                          (F.col("close") / prev - 1).alias("r"))
             .where(F.col("r").isNotNull()))
-    series = (rets.groupBy("sid")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("date", "r"))),
-                  lambda s: s["r"]).alias("rs")))
-    add = lambda a, b: a + b
+    series = rets.groupBy("sid").agg(ordered_values("date", "r").alias("rs"))
     n = F.size("rs").cast("double")
-    m = F.aggregate("rs", F.lit(0.0), add) / n
+    m = fold_sum("rs") / n
     moments = series.select("sid", "rs", n.alias("n"), m.alias("m"))
 
     def gamma(l: int):
@@ -1952,7 +1859,7 @@ def newey_west_tstat(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(1), F.size("rs") - l),
             lambda i: (F.element_at("rs", i + l) - F.col("m"))
             * (F.element_at("rs", i) - F.col("m")))
-        gl = F.aggregate(prod, F.lit(0.0), add) / F.col("n")
+        gl = fold_sum(prod) / F.col("n")
         if l == 0:
             return gl
         return F.when(F.col("n") > l, gl).otherwise(F.lit(0.0))
@@ -2036,15 +1943,10 @@ def bootstrap_sharpe_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     rr = (panel.select("sid", "date",
                        (F.col("close") / prev - 1).alias("r"))
           .where(F.col("r").isNotNull()))
-    rs_date = F.transform(F.array_sort(F.collect_list(
-        F.struct("sid", "r"))), lambda s: s["r"])
-    add = lambda a, b: a + b
-    mkt = (rr.groupBy("date").agg(rs_date.alias("rs"))
-           .select("date", (F.aggregate("rs", F.lit(0.0), add)
+    mkt = (rr.groupBy("date").agg(ordered_values("sid", "r").alias("rs"))
+           .select("date", (fold_sum("rs")
                             / F.size("rs").cast("double")).alias("mkt_r")))
-    series = mkt.agg(F.transform(
-        F.array_sort(F.collect_list(F.struct("date", "mkt_r"))),
-        lambda s: s["mkt_r"]).alias("rs"))
+    series = mkt.agg(ordered_values("date", "mkt_r").alias("rs"))
     b = F.explode(F.sequence(F.lit(1), F.lit(200))).alias("b")
     boots = series.select("rs", b)
     nlen = F.size("rs")
@@ -2060,8 +1962,8 @@ def bootstrap_sharpe_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     bs = F.transform(F.sequence(F.lit(1), nlen), pick)
     boots = boots.select("b", nlen.cast("double").alias("n"),
                          bs.alias("bs"))
-    s1 = F.aggregate("bs", F.lit(0.0), add)
-    s2 = F.aggregate(F.transform("bs", lambda x: x * x), F.lit(0.0), add)
+    s1 = fold_sum("bs")
+    s2 = fold_sum(F.transform("bs", lambda x: x * x))
     stats = boots.select("b", "n", s1.alias("s1"), s2.alias("s2"))
     mean = F.col("s1") / F.col("n")
     var = F.col("s2") / F.col("n") - mean * mean
@@ -2069,9 +1971,8 @@ def bootstrap_sharpe_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", F.when(var > 0, (mean / F.sqrt(var))
                     * F.sqrt(F.lit(252.0))).alias("sharpe_b"))
     sorted_ = (sharpes.where(F.col("sharpe_b").isNotNull())
-               .agg(F.array_sort(F.transform(
-                   F.array_sort(F.collect_list(F.struct("b", "sharpe_b"))),
-                   lambda s: s["sharpe_b"])).alias("ss"),
+               .agg(F.array_sort(ordered_values("b", "sharpe_b"))
+                    .alias("ss"),
                    F.count("sharpe_b").alias("n_boot")))
     return sorted_.select(
         "n_boot",
@@ -2164,15 +2065,9 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("n_risk"))
     evt = risk.where(F.col("d_ev") > 0)
     packed = evt.agg(
-        F.transform(F.array_sort(F.collect_list(
-            F.struct("dur", "d_ev", "n_risk"))),
-            lambda s: s["dur"]).alias("ds"),
-        F.transform(F.array_sort(F.collect_list(
-            F.struct("dur", "d_ev"))),
-            lambda s: s["d_ev"].cast("double")).alias("es"),
-        F.transform(F.array_sort(F.collect_list(
-            F.struct("dur", "n_risk"))),
-            lambda s: s["n_risk"].cast("double")).alias("ns"))
+        ordered_values("dur", "dur").alias("ds"),
+        ordered_values("dur", F.col("d_ev").cast("double")).alias("es"),
+        ordered_values("dur", F.col("n_risk").cast("double")).alias("ns"))
     idx = (packed.where(F.size("ds") >= 1)
            .select("ds", "es", "ns",
                    F.explode(F.sequence(F.lit(1), F.size("ds")))

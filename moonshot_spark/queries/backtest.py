@@ -13,6 +13,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
+from moonshot_spark.functions.folds import (
+    fold_sum, fold_sum_exact, ordered_values,
+)
 from moonshot_spark.functions.window import pct_change
 from moonshot_spark.queries._base import (
     BUY_BELOW_100_SQL, CLOSE_RETURNS_SQL, EQUAL_WEIGHTS_SQL, PANEL_SQL,
@@ -121,6 +124,22 @@ _RETURN_MOMENTS_SQL = """panel AS (
                        (a, b) -> a + b) AS s2
     FROM series
 )"""
+
+
+def _return_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark twin of ``_RETURN_MOMENTS_SQL``: per sid, the count
+    ``n`` and the folds ``s1`` (sum) and ``s2`` (sum of squares) of the
+    date-ordered close-to-close returns, first day 0."""
+    panel = events_to_panel(spark, sf_dir)
+    w = Window.partitionBy("sid").orderBy("date")
+    prev = F.lag("close").over(w)
+    rets = panel.select(
+        "sid", "date",
+        F.coalesce(F.col("close") / prev - 1, F.lit(0.0)).alias("r"))
+    series = rets.groupBy("sid").agg(ordered_values("date", "r").alias("rs"))
+    return series.select(
+        "sid", F.size("rs").alias("n"), fold_sum("rs").alias("s1"),
+        fold_sum(F.transform("rs", lambda x: x * x)).alias("s2"))
 
 
 # --------------------------------------------------------------------- #
@@ -1016,15 +1035,11 @@ def performance_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     results = DualMovingAverage().backtest(panel)
     rets = (results.where(F.col("field") == "Return")
             .select("sid", "date", F.col("value").alias("return")))
-    series = (rets.groupBy("sid")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("date", "return"))),
-                  lambda s: F.coalesce(s["return"], F.lit(0.0))).alias("rs")))
+    series = rets.groupBy("sid").agg(ordered_values(
+        "date", F.coalesce(F.col("return"), F.lit(0.0))).alias("rs"))
     n = F.size("rs")
-    cums = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.aggregate(F.slice("rs", 1, i), F.lit(0.0),
-                              lambda a, b: a + b))
+    cums = F.transform(F.sequence(F.lit(1), n),
+                       lambda i: fold_sum(F.slice("rs", 1, i)))
     curves = series.select("sid", n.alias("n"), cums.alias("cums"))
     mdd = F.array_min(F.transform(
         F.sequence(F.lit(1), F.col("n")),
@@ -1054,22 +1069,7 @@ def sharpe_per_sid(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB.  This is the portability recipe for any moment-based metric
     (PERF.md float rule 5); CAGR stays pytest-only because pow/exp are
     libm-dependent."""
-    panel = events_to_panel(spark, sf_dir)
-    w = Window.partitionBy("sid").orderBy("date")
-    prev = F.lag("close").over(w)
-    rets = panel.select(
-        "sid", "date",
-        F.coalesce(F.col("close") / prev - 1, F.lit(0.0)).alias("r"))
-    series = (rets.groupBy("sid")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("date", "r"))),
-                  lambda s: s["r"]).alias("rs")))
-    n = F.size("rs")
-    s1 = F.aggregate("rs", F.lit(0.0), lambda a, b: a + b)
-    s2 = F.aggregate(F.transform("rs", lambda x: x * x), F.lit(0.0),
-                     lambda a, b: a + b)
-    moments = series.select("sid", n.alias("n"), s1.alias("s1"),
-                            s2.alias("s2"))
+    moments = _return_moments(spark, sf_dir)
     mean = F.col("s1") / F.col("n")
     var = F.col("s2") / F.col("n") - mean * mean
     sharpe = F.when(var > 0, (mean / F.sqrt(var)) * F.sqrt(F.lit(252.0)))
@@ -1165,10 +1165,7 @@ def portfolio_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     results = DualMovingAverage().backtest(panel)
     rets = (results.where(F.col("field") == "Return")
             .select("sid", "date", F.col("value").alias("r")))
-    folded = F.aggregate(
-        F.transform(F.array_sort(F.collect_list(F.struct("sid", "r"))),
-                    lambda s: F.coalesce(s["r"], F.lit(0.0))),
-        F.lit(0.0), lambda a, b: a + b)
+    folded = fold_sum_exact("sid", F.coalesce(F.col("r"), F.lit(0.0)))
     return (rets.groupBy("date")
             .agg(folded.alias("portfolio_return"),
                  F.count("*").alias("n_sids")))
@@ -1229,10 +1226,8 @@ def backtest_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
            .withColumn("net_r",
                        F.col("r") - F.coalesce(F.col("tv"), F.lit(0.0))
                        * F.col("cost_bps") / 10000))
-    folded = F.aggregate(
-        F.transform(F.array_sort(F.collect_list(F.struct("sid", "net_r"))),
-                    lambda s: F.coalesce(s["net_r"], F.lit(0.0))),
-        F.lit(0.0), lambda a, b: a + b)
+    folded = fold_sum_exact("sid",
+                            F.coalesce(F.col("net_r"), F.lit(0.0)))
     return (net.groupBy("cost_bps", "date")
             .agg(folded.alias("portfolio_return"),
                  F.count("*").alias("n_sids")))
@@ -1355,15 +1350,11 @@ def holding_period_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     nz = (base.withColumn("rn", F.row_number().over(w))
           .where(F.col("p") != 0)
           .withColumn("grp", F.col("rn") - F.row_number().over(w)))
-    folded = F.aggregate(
-        F.transform(F.array_sort(F.collect_list(F.struct("date", "r"))),
-                    lambda s: s["r"]),
-        F.lit(0.0), lambda a, b: a + b)
     return (nz.groupBy("sid", "grp")
             .agg(F.min("date").alias("entry_date"),
                  F.max("date").alias("exit_date"),
                  F.count("*").alias("n_days"),
-                 folded.alias("total_return"))
+                 fold_sum_exact("date", "r").alias("total_return"))
             .drop("grp"))
 
 
@@ -1428,27 +1419,16 @@ def vol_target_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = panel.select("sid", "date", pct_change("close", 1, w).alias("r"))
     w10 = w.rowsBetween(-9, 0)
 
-    def fold_window(expr, win):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("date", expr.alias("v")))
-                         .over(win)),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, b: a + b)
-
     n = F.count("r").over(w10).cast("double")
     enough = F.count("r").over(w10) >= 10
-    sx = F.when(enough, fold_window(F.col("r"), w10))
-    sxx = F.when(enough, fold_window(F.col("r") * F.col("r"), w10))
+    sx = F.when(enough, fold_sum(ordered_values("date", "r", over=w10)))
+    sxx = F.when(enough, fold_sum(ordered_values(
+        "date", F.col("r") * F.col("r"), over=w10)))
     vol = F.sqrt((sxx - sx * sx / n) / (n - F.lit(1)))
     mom = rets.select("sid", "date",
                     F.when(vol > 0, F.lit(1.0) / vol).alias("ivol"))
-    wd = Window.partitionBy("date")
-    znorm_arr = F.transform(
-        F.array_sort(F.collect_list(F.struct("sid", "ivol")).over(wd)),
-        lambda s: s["ivol"])
-    znorm = F.when(
-        F.col("ivol").isNotNull(),
-        F.aggregate(znorm_arr, F.lit(0.0), lambda a, b: a + b))
+    znorm = F.when(F.col("ivol").isNotNull(), fold_sum(ordered_values(
+        "sid", "ivol", over=Window.partitionBy("date"))))
     return mom.select("sid", "date", "ivol",
                       (F.col("ivol") / znorm).alias("weight"))
 
@@ -1675,20 +1655,14 @@ def momentum_decile_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("week").orderBy("wk_ret", "sid"))
     ranked = defined.withColumn("decile", decile)
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="momentum_decile_sort")
-
     partials = ranked.groupBy("week", "decile").agg(
         F.count("fwd_ret").alias("n"),
-        fold_by("sid", F.coalesce(F.col("fwd_ret"), F.lit(0))).alias("p"))
+        fold_sum_exact("sid", F.coalesce(F.col("fwd_ret"), F.lit(0)))
+        .alias("p"))
     return (partials.where(F.col("n") > 0)
             .groupBy("decile")
             .agg(F.sum("n").alias("n_obs"),
-                 (fold_by("week", F.col("p"))
+                 (fold_sum_exact("week", "p")
                   / F.sum("n").cast("double")).alias("mean_fwd_ret")))
 
 
@@ -1795,13 +1769,7 @@ def portfolio_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     results = DualMovingAverage().backtest(panel)
     rets = (results.where(F.col("field") == "Return")
             .select("sid", "date", F.col("value").alias("r")))
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    # width-guarded order-pinned folds (functions/folds.py): per-date
-    # arrays grow with the cross-section — the guard fails fast instead
-    # of OOMing if pointed at an unbounded universe
-    folded_sid = fold_sum_exact(
-        "sid", F.coalesce(F.col("r"), F.lit(0.0)), label="portfolio_var_es")
+    folded_sid = fold_sum_exact("sid", F.coalesce(F.col("r"), F.lit(0.0)))
     # r15 (guide §2.4): var5/tail/n_days each referenced `port` as a
     # separate subtree, re-running the whole DMA backtest (40 Windows,
     # 54 Exchanges in the static plan) three times per execution;
@@ -1813,10 +1781,9 @@ def portfolio_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(pr, 0.05)").alias("var_5pct"))
     tail = (port.crossJoin(F.broadcast(var5))
             .where(F.col("pr") <= F.col("var_5pct")))
-    folded_date = fold_sum_exact(
-        "date", F.col("pr"), label="portfolio_var_es")
     stats = tail.agg(
-        (folded_date / F.count("*").cast("double")).alias("es_5pct"),
+        (fold_sum_exact("date", "pr")
+         / F.count("*").cast("double")).alias("es_5pct"),
         F.count("*").alias("n_tail"))
     n_days = port.agg(F.count("*").alias("n_days"))
     return (var5.crossJoin(stats).crossJoin(n_days)
@@ -1959,22 +1926,7 @@ def kelly_sizing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     a sid-ordered fold over the (universe-sized, bounded) fraction
     list, broadcast back as a 1-row cross join.  clip before normalize,
     so one explosive low-variance sid cannot crowd out the book."""
-    panel = events_to_panel(spark, sf_dir)
-    ws = Window.partitionBy("sid").orderBy("date")
-    prev = F.lag("close").over(ws)
-    rets = panel.select(
-        "sid", "date",
-        F.coalesce(F.col("close") / prev - 1, F.lit(0.0)).alias("r"))
-    series = (rets.groupBy("sid")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("date", "r"))),
-                  lambda s: s["r"]).alias("rs")))
-    add = lambda a, b: a + b
-    n = F.size("rs")
-    s1 = F.aggregate("rs", F.lit(0.0), add)
-    s2 = F.aggregate(F.transform("rs", lambda x: x * x), F.lit(0.0), add)
-    moments = series.select("sid", n.alias("n"), s1.alias("s1"),
-                            s2.alias("s2"))
+    moments = _return_moments(spark, sf_dir)
     mean = F.col("s1") / F.col("n")
     var = F.col("s2") / F.col("n") - mean * mean
     f_capped = F.when(var > 0,
@@ -1985,11 +1937,7 @@ def kelly_sizing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         mean.alias("mean_r"), var.alias("var_r"),
         f_capped.alias("f_capped"))
     gross = kelly.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sid", "f_capped"))),
-                lambda s: F.abs(s["f_capped"])),
-            F.lit(0.0), add).alias("g"))
+        fold_sum_exact("sid", F.abs(F.col("f_capped"))).alias("g"))
     return (kelly.crossJoin(F.broadcast(gross))
             .select("sid", "n_periods", "mean_r", "var_r", "f_capped",
                     F.when(F.col("g") != 0,

@@ -13,6 +13,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
+from moonshot_spark.functions.folds import (
+    fold_sum, fold_sum_exact, ordered_values,
+)
 from moonshot_spark.queries._base import (
     COPURCHASE_GRAPH_SQL, ORACLES, register,
 )
@@ -934,9 +937,8 @@ def ivf_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     exploded = emb.select(
         "label", F.posexplode("embedding").alias("dim", "v"))
-    sorted_sum = F.aggregate(
-        F.array_sort(F.collect_list(F.col("v").cast("double"))),
-        F.lit(0.0), lambda acc, x: acc + x)
+    sorted_sum = fold_sum(
+        F.array_sort(F.collect_list(F.col("v").cast("double"))))
     return (exploded.groupBy("label", F.col("dim").cast("int").alias("dim"))
             .agg((sorted_sum / F.count("v")).alias("centroid"),
                  F.count("v").alias("n"))
@@ -1267,17 +1269,14 @@ def ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                                lambda x: x.cast("double")).alias("v"))
     dims = v.select("label", F.posexplode("v").alias("dim", "x"))
     cd = dims.groupBy("label", "dim").agg(
-        (F.aggregate(F.array_sort(F.collect_list("x")), F.lit(0.0),
-                     lambda a, b: a + b) / F.count("x")).alias("m"))
+        (fold_sum(F.array_sort(F.collect_list("x")))
+         / F.count("x")).alias("m"))
     cents = (cd.groupBy("label")
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                 lambda s: s["m"]).alias("c"))
+             .agg(ordered_values("dim", "m").alias("c"))
              .withColumnRenamed("label", "cell"))
 
     def dot(a, b):
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, x: acc + x)
+        return fold_sum(F.zip_with(a, b, lambda x, y: x * y))
 
     def cos(a, b):
         return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
@@ -1986,11 +1985,7 @@ def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.size(F.split(F.col("text"), " ")))
                  .cast("bigint").alias("n_tokens")))
     scaled = toks.withColumn("s", F.sqrt(F.col("n_tokens").cast("double")))
-    norm = scaled.agg(
-        F.aggregate(
-            F.transform(F.array_sort(F.collect_list(F.struct("source", "s"))),
-                        lambda r: r["s"]),
-            F.lit(0.0), lambda a, b: a + b).cast("double").alias("z"))
+    norm = scaled.agg(fold_sum_exact("source", "s").alias("z"))
     return (scaled.crossJoin(F.broadcast(norm))
             .select("source", "n_tokens",
                     (F.col("s") / F.col("z")).alias("mix_weight"),
@@ -2165,15 +2160,9 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                    (F.col("tf").cast("double")
                     / F.col("df").cast("double")).alias("w")))
 
-    from moonshot_spark.functions.folds import fold_sum_exact
-
-    def fold_by(key_col, expr):
-        # width-guarded order-pinned fold (functions/folds.py): errors
-        # inside the job if a group outgrows the in-array bound
-        return fold_sum_exact(key_col, expr, label="tfidf_cosine_pairs")
-
     norms = wts.groupBy("doc_id").agg(
-        F.sqrt(fold_by("term", F.col("w") * F.col("w"))).alias("nrm"))
+        F.sqrt(fold_sum_exact("term", F.col("w") * F.col("w")))
+        .alias("nrm"))
     a = wts.select(F.col("doc_id").alias("doc_a"), "term",
                    F.col("w").alias("wa"))
     b = wts.select(F.col("doc_id").alias("doc_b"), "term",
@@ -2181,7 +2170,8 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dots = (a.join(b, "term")
             .where(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
-            .agg(fold_by("term", F.col("wa") * F.col("wb")).alias("dot"),
+            .agg(fold_sum_exact("term", F.col("wa") * F.col("wb"))
+                 .alias("dot"),
                  F.count("*").alias("n_shared_terms")))
     cos = (F.col("dot") / (F.col("nrm_a") * F.col("nrm_b")))
     return (dots
@@ -2299,13 +2289,10 @@ def embedding_dimension_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode("embedding").alias("dim", "val0")) \
         .select("vec_id", F.col("dim").cast("int").alias("dim"),
                 F.col("val0").cast("double").alias("val"))
-    folded = F.aggregate(
-        F.transform(F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                    lambda s: s["val"]),
-        F.lit(0.0), lambda a, b: a + b)
     return (flat.groupBy("dim")
             .agg(F.count("*").alias("n"),
-                 (folded / F.count("*").cast("double")).alias("mean_val"),
+                 (fold_sum_exact("vec_id", "val")
+                  / F.count("*").cast("double")).alias("mean_val"),
                  F.min("val").alias("min_val"),
                  F.max("val").alias("max_val")))
 
@@ -2575,14 +2562,9 @@ def split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("lang", "split",
                      ((F.col("o").cast("double") - e)
                       * (F.col("o").cast("double") - e) / e).alias("cell")))
-    folded = F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("lang", "split", "cell"))),
-            lambda s_: s_["cell"]),
-        F.lit(0.0), lambda a, b: a + b)
     dof = docs.agg((F.countDistinct("lang") - F.lit(1)).cast("bigint")
                    .alias("dof"))
-    return (cells.agg(folded.cast("double").alias("chi2"),
+    return (cells.agg(fold_sum_exact(["lang", "split"], "cell").alias("chi2"),
                       F.count("*").alias("n_cells"))
             .crossJoin(F.broadcast(dof))
             .select("chi2", "dof", "n_cells"))
@@ -2730,13 +2712,9 @@ def matryoshka_truncation_quality(spark: SparkSession, sf_dir: str) \
                     .alias("k"))
            .select("vec_id", "k",
                    F.sqrt(
-                       F.aggregate(
-                           F.transform(F.expr("slice(e, 1, k)"),
-                                       lambda x: x * x),
-                           F.lit(0.0), lambda a, b: a + b)
-                       / F.aggregate(
-                           F.transform("e", lambda x: x * x),
-                           F.lit(0.0), lambda a, b: a + b))
+                       fold_sum(F.transform(F.expr("slice(e, 1, k)"),
+                                            lambda x: x * x))
+                       / fold_sum(F.transform("e", lambda x: x * x)))
                    .alias("cos_trunc")))
     return (per.groupBy(F.col("k").cast("int").alias("k"))
             .agg(F.count("*").alias("n_vecs"),
@@ -2920,19 +2898,16 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Σ cell² not n²) — exactly the SemDeDup paper's cost model; oversize
     cells would be re-split by the IVF path before this stage."""
     emb = load_table(spark, sf_dir, "embeddings")
-    add = lambda a, b: a + b
     e = F.transform("embedding", lambda x: x.cast("double"))
     v = emb.select("vec_id", "label", e.alias("e"))
-    norm = F.sqrt(F.aggregate(
-        F.transform("e", lambda y: y * y), F.lit(0.0), add))
+    norm = F.sqrt(fold_sum(F.transform("e", lambda y: y * y)))
     n = v.select("vec_id", "label",
                  F.transform("e", lambda x: x / norm).alias("u"))
     a = n.select(F.col("vec_id").alias("id_a"),
                  F.col("label").alias("lbl"), F.col("u").alias("u_a"))
     b = n.select(F.col("vec_id").alias("id_b"),
                  F.col("label").alias("lbl"), F.col("u").alias("u_b"))
-    cos = F.aggregate(F.zip_with("u_a", "u_b", lambda x, y: x * y),
-                      F.lit(0.0), add)
+    cos = fold_sum(F.zip_with("u_a", "u_b", lambda x, y: x * y))
     p = (a.join(b, "lbl")
          .where(F.col("id_a") < F.col("id_b"))
          .select("id_b", cos.alias("cos"))
@@ -3125,8 +3100,6 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope from rank-pinned exact folds over 500 rows.  The regression
     sums use fold_sum_exact so Spark and DuckDB produce bit-identical
     doubles."""
-    from moonshot_spark.functions.folds import fold_sum_exact
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split("text", " ")).alias("tok")) \
         .where(F.col("tok") != "")
@@ -3143,12 +3116,10 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.log(F.col("cnt").cast("double")), 9).alias("ly"))
     sums = logs.agg(
         F.count("*").cast("bigint").alias("n"),
-        fold_sum_exact("rnk", F.col("lx"), label="zipf_slope").alias("sx"),
-        fold_sum_exact("rnk", F.col("ly"), label="zipf_slope").alias("sy"),
-        fold_sum_exact("rnk", F.col("lx") * F.col("lx"),
-                       label="zipf_slope").alias("sxx"),
-        fold_sum_exact("rnk", F.col("lx") * F.col("ly"),
-                       label="zipf_slope").alias("sxy"))
+        fold_sum_exact("rnk", "lx").alias("sx"),
+        fold_sum_exact("rnk", "ly").alias("sy"),
+        fold_sum_exact("rnk", F.col("lx") * F.col("lx")).alias("sxx"),
+        fold_sum_exact("rnk", F.col("lx") * F.col("ly")).alias("sxy"))
     n = F.col("n")
     slope = ((F.col("sxy") - F.col("sx") * F.col("sy") / n)
              / (F.col("sxx") - F.col("sx") * F.col("sx") / n))

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
+from moonshot_spark.functions.folds import ordered_values
 from moonshot_spark.queries._base import (
     COPURCHASE_GRAPH_SQL, PANEL_SQL, register,
 )
@@ -2216,11 +2217,7 @@ def session_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = F.substring("event_type", 1, 1)
     strs = (sess.groupBy("user_id", "session_id")
             .agg(F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(F.collect_list(
-                        F.struct("ts", "event_id", sym.alias("c")))),
-                    lambda s: s["c"])).alias("s")))
+                "", ordered_values(["ts", "event_id"], sym)).alias("s")))
     return strs.agg(
         F.count("*").alias("n_sessions"),
         F.count(F.when(F.col("s").rlike("s[vc]*p"), 1))

@@ -2,29 +2,20 @@
 plans each oracle against the sf0.001 tables without running it, so a
 broken oracle string (a bad fragment splice, say) fails here instead of
 only in the opt-in sweep of ``tools/check_correctness.py``."""
-import os
-
 import pytest
 
 from moonshot_spark.queries import ORACLES
-from moonshot_spark.sources.parquet import TABLES
 from tests.conftest import SF_DIR
 
 duckdb = pytest.importorskip("duckdb")
+from tools.check_correctness import duckdb_views  # noqa: E402
 
 
 @pytest.fixture(scope="module")
 def con():
-    """DuckDB with one view per table, as ``tools/check_correctness.py``
-    creates them (a Spark-written table is a directory of part files)."""
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.isdir(path):
-            path = os.path.join(path, "*.parquet")
-        elif not os.path.exists(path):
-            continue
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    """DuckDB with one view per table, as the correctness sweep makes
+    them."""
+    con = duckdb_views(SF_DIR)
     yield con
     con.close()
 

@@ -259,3 +259,93 @@ def test_fold_sum_exact_width_guard(spark):
     out = df.agg(
         fold_sum_exact("k", F.col("v"), max_width=100).alias("s")).first()
     assert out["s"] == sum(i * 0.5 for i in range(100))
+
+
+def _left_fold(values):
+    """Python's left-to-right double sum from 0.0 (NULL in -> NULL out)."""
+    acc = 0.0
+    for v in values:
+        if v is None:
+            return None
+        acc = acc + v
+    return acc
+
+
+def test_ordered_values_over_bounded_frame_matches_python_fold(spark):
+    """The ``over=`` form folds each row's bounded frame in key order."""
+    from pyspark.sql import Window
+
+    from moonshot_spark.functions.folds import fold_sum, ordered_values
+
+    rows = [(g, k, [0.1, 1e-17, -0.1, 0.3, 7e15][(k * 7 + g) % 5] / (k + 1))
+            for g in range(3) for k in range(25)]
+    df = spark.createDataFrame(rows, "g int, k int, v double")
+    w = Window.partitionBy("g").orderBy("k").rowsBetween(-3, 0)
+    got = {(r["g"], r["k"]): r["s"] for r in df.select(
+        "g", "k", fold_sum(ordered_values("k", "v", over=w)).alias("s"))
+        .collect()}
+    for g, k, _ in rows:
+        frame = [v for g2, k2, v in sorted(rows)
+                 if g2 == g and k - 3 <= k2 <= k]
+        assert got[(g, k)] == _left_fold(frame)   # bit-equal
+
+
+def test_fold_sum_exact_multi_key_order(spark):
+    """A list of keys orders the fold by the first key, then the next
+    (as source_lang_chisq's (source, lang) cell sum does)."""
+    from moonshot_spark.functions.folds import fold_sum_exact
+
+    rows = [(a, b, [1e16, 1.0, -1e16, 0.1, 3.3][(a * 3 + b) % 5] * (b + 1))
+            for a in (2, 0, 1) for b in (3, 1, 0, 2)]
+    df = spark.createDataFrame(rows, "a int, b int, v double")
+    got = df.agg(fold_sum_exact(["a", "b"], "v").alias("s")).first()["s"]
+    assert got == _left_fold(v for _, _, v in sorted(rows))
+
+
+def test_ordered_values_keeps_null_values(spark):
+    """A NULL value keeps its place in the list (the struct form; a bare
+    collect_list would drop it), so the fold over it is NULL, as
+    DuckDB's list()/list_reduce give."""
+    from moonshot_spark.functions.folds import fold_sum, ordered_values
+
+    rows = [(3, 0.25), (1, None), (2, 1.5), (0, 0.1)]
+    df = spark.createDataFrame(rows, "k int, v double")
+    out = df.agg(ordered_values("k", "v").alias("l")).first()["l"]
+    assert out == [v for _, v in sorted(rows)]
+    s = df.agg(fold_sum(ordered_values("k", "v")).alias("s")).first()["s"]
+    assert s is None and _left_fold(out) is None
+    kept = df.where(F.col("v").isNotNull()).agg(
+        fold_sum(ordered_values("k", "v")).alias("s")).first()["s"]
+    assert kept == _left_fold([0.1, 1.5, 0.25])
+
+
+@pytest.mark.parametrize("form", ["grouped", "windowed"])
+def test_ordered_values_width_guard(spark, form):
+    """The guard fires wherever the ordered list is built — as a group
+    aggregate and over a window — and the windowed form still plans a
+    single collect_list window function."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+    from pyspark.sql import Window
+
+    from moonshot_spark.functions.folds import fold_sum, ordered_values
+
+    df = spark.range(0, 100).select(
+        F.col("id").cast("int").alias("k"),
+        (F.col("id") * 0.5).alias("v"))
+    over = (Window.partitionBy(F.lit(1)).orderBy("k").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)
+        if form == "windowed" else None)
+
+    def run(max_width):
+        s = fold_sum(ordered_values("k", "v", over=over,
+                                    max_width=max_width)).alias("s")
+        return df.select(s) if over is not None else df.agg(s)
+
+    with pytest.raises((SparkRuntimeException, Py4JJavaError),
+                       match="max_width"):
+        run(10).collect()
+    ok = run(100)
+    assert {r["s"] for r in ok.collect()} == {sum(i * 0.5 for i in range(100))}
+    plan = ok._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("collect_list(") == 1

@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 from moonshot_spark.materialize import scope  # noqa: E402
-from moonshot_spark.sources.parquet import TABLES  # noqa: E402
+from tools.check_correctness import duckdb_views  # noqa: E402
 from tools.measure import measure, session  # noqa: E402
 
 
@@ -45,21 +45,7 @@ def main():
     import __spark_entry__ as entry_mod
 
     spark = session("bench_compare")
-
-    def fresh_con():
-        c = duckdb.connect()
-        for t in TABLES:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            if not os.path.exists(p):
-                continue
-            # Spark-written replicas (tools/scale_bench.py) are
-            # DIRECTORIES of part files; the driver testdata is flat files
-            pat = f"{p}/*.parquet" if os.path.isdir(p) else p
-            c.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
-        return c
-
-    con = fresh_con()
+    con = duckdb_views(sf_dir)
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -78,7 +64,7 @@ def main():
             # DuckDB accumulates allocator state over ~180 oracles; a
             # fresh connection releases it — retry once, cold
             con.close()
-            con = fresh_con()
+            con = duckdb_views(sf_dir)
             d = duckdb_seconds(con, sql)
         rows.append((name, m.total, m.build, m.exec, d))
 

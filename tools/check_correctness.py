@@ -102,6 +102,24 @@ def code_tree() -> str:
     return git("rev-parse", "HEAD:moonshot_spark")
 
 
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one ``read_parquet`` view per catalog
+    table found in ``sf_dir``.  A Spark-written table (a directory of part
+    files + ``_SUCCESS``) is read through a glob of its parts; Spark
+    reads the directory natively."""
+    from moonshot_spark.sources.parquet import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.exists(path):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
 def main():
     args = sys.argv[1:]
     json_out = None
@@ -117,19 +135,9 @@ def main():
     import __spark_entry__ as entry_mod
     from moonshot_spark.materialize import scope
     from moonshot_spark.session import get_spark
-    from moonshot_spark.sources.parquet import TABLES
 
     spark = get_spark("check_correctness")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(path):
-            # Spark-written table (directory of part files + _SUCCESS):
-            # glob the parts for DuckDB; Spark reads the dir natively.
-            pattern = os.path.join(path, "*.parquet")
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')")
-        elif os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    con = duckdb_views(sf_dir)
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
