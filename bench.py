@@ -40,7 +40,7 @@ MAX_LINE_BYTES = 1900
 # environmental artifact (like r10's 251.9 s vs 139.97 s committed run,
 # same code) self-diagnosing instead of looking like a code regression.
 # Envelope: ~2.5x the clean-box min-of-2 measurement of 0.15-0.19 s
-# (see PERF.md r11).
+# on a quiet 32-core host.
 CANARY_RATIO_LIMIT = 1.5
 CANARY_ENVELOPE_SEC = 0.45
 

@@ -560,17 +560,14 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
     # NO exchange, so the whole shingle+freq-join+collect+sort stage
     # re-executed once PER CONSUMER (r14 stage profile: 4 identical
     # 32-task stages, ~42 s of executor time for ~12 s of unique work).
-    # r14 tried a trailing repartition(id) as an AQE-reusable shuffle
-    # boundary — but the r15 runtime (AQE final) plans show
-    # EnsureRequirements ELIDES a user repartition under the broadcast
-    # joins these consumers actually plan into at sf0.1 AND x10
-    # (plans/r15/ppjoin_jaccard_pairs_runtime_*: partial_collect_list
-    # appears once per branch, no ReusedExchange over the aggregate),
-    # so the claimed reuse never materialized; the real r14 win was the
-    # scan dedup (the widened source exchange IS reused 3x, op 4 in
-    # those plans).  A within-plan persist computes the aggregate ONCE
-    # and serves every consumer (incl. broadcast builds) from cached
-    # blocks — guide §2.4/§5; x10 A/B: 12.05 -> 8.92 s min-of-3, sf0.1
+    # A trailing repartition(id) as an AQE-reusable shuffle boundary does
+    # not help: EnsureRequirements ELIDES a user repartition under the
+    # broadcast joins these consumers plan into at sf0.1 AND x10 (in
+    # the executed AQE-final plans partial_collect_list appears once per
+    # branch; no ReusedExchange over the aggregate) — only the widened
+    # source exchange is reused, 3x.  A within-plan persist computes the
+    # aggregate ONCE and serves every consumer (incl. broadcast builds)
+    # from cached blocks; x10 A/B: 12.05 -> 8.92 s min-of-3, sf0.1
     # flat-to-equal, outputs identical.  (The r9 alternative, an eager
     # localCheckpoint, measured slower: serialize-to-blocks + severed
     # lineage; persist stays lazy and columnar.)

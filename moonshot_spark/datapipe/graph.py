@@ -7,11 +7,14 @@ A~C was never emitted as a pair.  The reference has no counterpart (it is
 a single-node pandas engine with no graph ops); this is a beyond-reference
 training-data-pipeline operator per the project mandate.
 
-Algorithm: iterative hash-min label propagation — every node starts as its
-own component (label = node id) and repeatedly takes the min label over
-itself and its neighbors until a fixpoint.  Per iteration: one join
-(edge ⋈ label) + one groupBy(node) min — two shuffles over the EDGE list,
-never over the corpus.
+Algorithm: ``connected_components_adaptive`` is the one entry point.
+It runs a few rounds of hash-min label propagation — every node starts
+as its own component (label = node id) and repeatedly takes the min
+label over itself and its neighbors; per round one join (edge ⋈ label)
++ one groupBy(node) min, two shuffles over the EDGE list, never over
+the corpus.  A graph that has not reached the fixpoint by then is
+contracted onto its partial labels and finished by the O(log n)-round
+large-star/small-star algorithm (``connected_components_star``).
 
 Scale notes (100 TB corpus, edges from LSH):
 
@@ -19,13 +22,12 @@ Scale notes (100 TB corpus, edges from LSH):
   by construction (LSH band collision + Jaccard verify).  Both shuffles
   are on the pair set, so the cost per round is proportional to the
   number of duplicate *relationships*, not documents.
-- Convergence is O(graph diameter) rounds.  Near-dup clusters are almost
-  cliques (every member collides with most others in some LSH band), so
-  2–4 rounds suffice in practice.  For adversarial long-chain graphs the
-  O(log n)-round alternating large-star/small-star variant (Kiveris et
-  al., "Connected Components in MapReduce and Beyond", SoCC'14) drops in
-  here without changing callers; hash-min is the right default for the
-  near-clique topology dedup actually produces.
+- Hash-min converges in O(graph diameter) rounds.  Near-dup clusters are
+  almost cliques (every member collides with most others in some LSH
+  band), so 2–4 rounds suffice in practice.  Adversarial long-chain
+  graphs fall to the alternating large-star/small-star rounds (Kiveris
+  et al., "Connected Components in MapReduce and Beyond", SoCC'14)
+  without the caller knowing the diameter.
 - ``localCheckpoint(eager=True)`` after every round truncates lineage —
   without it the plan doubles per iteration and Catalyst analysis time
   blows up long before the data does.
@@ -90,29 +92,6 @@ def _hash_min(edges: DataFrame, src: str, dst: str,
     return labels, converged
 
 
-def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 25) -> DataFrame:
-    """(node, comp) for every node appearing in ``edges``; ``comp`` is the
-    minimum node id reachable from the node (the canonical cluster id).
-
-    Isolated nodes (no edges) are not emitted — callers that want
-    singleton clusters can union them in with comp = id.
-
-    Non-convergence (graph diameter > ``max_iter``) is NEVER silent: the
-    returned labels would under-merge clusters, so it warns loudly —
-    prefer ``connected_components_adaptive`` which falls back to the
-    O(log n) star variant instead.
-    """
-    labels, converged = _hash_min(edges, src, dst, max_iter)
-    if not converged:
-        warnings.warn(
-            f"connected_components did not reach a fixpoint in {max_iter} "
-            "rounds (graph diameter exceeds max_iter); returned components "
-            "are SPLIT. Raise max_iter or use connected_components_adaptive.",
-            RuntimeWarning, stacklevel=2)
-    return labels
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: every node connects its strictly-larger
     neighbors to its minimum neighbor (min over N(u) ∪ {u}).  Expressed
@@ -152,12 +131,13 @@ def connected_components_star(edges: DataFrame, src: str = "src",
                               max_iter: int = 25) -> DataFrame:
     """(node, comp) via alternating large-star/small-star (Kiveris et
     al., SoCC'14) — O(log n) rounds on ANY graph topology, vs
-    O(diameter) for ``connected_components``.  Same output contract.
+    O(diameter) for hash-min.  Same output contract.
 
     Use this variant when the duplicate graph may contain long chains
     (e.g. transitive near-dup edges at a loose threshold: A~B~C~...~Z
-    where only adjacent pairs collide).  For the near-clique topology
-    LSH actually emits, plain hash-min converges in fewer total shuffles.
+    where only adjacent pairs collide).  ``connected_components_adaptive``
+    calls it on the contracted graph once its hash-min prefix stops
+    short of the fixpoint.
     """
     e = materialize.checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))

@@ -125,10 +125,11 @@ def power_iteration_top_component(emb: DataFrame, dim: int,
     # 64 x{j} columns and aggregated 64-192 wide floor-sum expressions —
     # past the codegen width limit, so every iteration's plan fell back
     # to interpreted mode and paid ~2 s of janino recompilation PER
-    # AGGREGATE (the markowitz.py pathology; PERF.md r8/r9).  The array
-    # formulation below keeps each per-row reduction ONE higher-order-
-    # function expression and turns the per-dimension sums into a
-    # posexplode + groupBy(dim) (64 bounded groups, map-side combined).
+    # AGGREGATE (the markowitz.py pathology; PERF.md "Deep scalar
+    # chains").  The array formulation below keeps each per-row
+    # reduction ONE higher-order-function expression and turns the
+    # per-dimension sums into a posexplode + groupBy(dim) (64 bounded
+    # groups, map-side combined).
     # Every floor'd integer TERM is unchanged and integer sums are
     # order-free, so mu/w/trace/eigval/v stay bit-identical — the DuckDB
     # oracle replay is untouched.

@@ -51,7 +51,7 @@ def quality_exprs(col: Column | str) -> dict[str, Column]:
         # doubled/leading separators contribute 0 to both sides), so the
         # interpreted per-element aggregate HOF is replaced by codegen'd
         # integer arithmetic — bit-identical, measured ~25% cheaper per
-        # corpus pass (PERF.md r11)
+        # corpus pass (PERF.md "Single-row-group scans")
         "mean_token_len": ((n_chars - n_tokens + F.lit(1)).cast("double")
                            / n_tokens),
         "stopword_ratio": n_stop.cast("double") / n_tokens,
@@ -262,7 +262,8 @@ def bm25_top_terms(docs: DataFrame, text_col: str = "text",
     The idf factor here is the RATIONAL Robertson idf
     ``(N − df + 0.5)/(df + 0.5)`` without the usual ``ln(1 + ·)`` wrap:
     the catalog's oracle comparison is bit-exact, and ln() is the one op
-    whose last ulp differs between libm builds (PERF.md float rule 5).
+    whose last ulp differs between libm builds (PERF.md "Cross-engine
+    float rules", rule 5).
     The log is monotone in the rational idf, so for a FIXED term the
     saturation ranking is unchanged; across terms the variant is the
     documented ``bm25_lite`` score, not drop-in Okapi.  All remaining

@@ -28,14 +28,9 @@ even when nothing is oversized):
   construction, without any signal — for callers that have already
   bounded their intervals (e.g. sessionization with an inactivity
   timeout) and want the cap purely as an abundance-of-caution ceiling.
-- ``on_oversized="warn"``: the legacy eager pre-count with a Python
-  warning.  This RUNS THE INTERVAL LINEAGE TWICE — cache or checkpoint
-  ``intervals`` first; debugging mode only.
 """
 
 from __future__ import annotations
-
-import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,18 +62,9 @@ def interval_join(points: DataFrame, intervals: DataFrame,
                 f"widen bucket_width, raise max_buckets_per_interval, or "
                 f"pass on_oversized='truncate'"))
         ).otherwise(capped_end)
-    elif on_oversized == "warn":
-        n_over = (intervals
-                  .where(b_end - b_start + 1 > max_buckets_per_interval)
-                  .count())
-        if n_over:
-            warnings.warn(
-                f"interval_join: {n_over} interval(s) span more than "
-                f"{max_buckets_per_interval} buckets of {bucket_width}; "
-                f"matches beyond the cap are dropped")
     elif on_oversized != "truncate":
         raise ValueError(
-            f"on_oversized must be 'error', 'truncate', or 'warn', "
+            f"on_oversized must be 'error' or 'truncate', "
             f"got {on_oversized!r}")
 
     iv = intervals.withColumn(

@@ -189,10 +189,10 @@ def markowitz_weights(piv: DataFrame, k: int,
     all-Catalyst variant expressed the ~100 chained scalar steps as
     column projections; Spark spent ~2.5 s PER RUN regenerating and
     janino-compiling 17 hundred-column interpreted projections for what
-    is microseconds of arithmetic (PERF.md r8) — the same reasoning as
-    the ivf_probe_col "numpy-heavy" exception, from the opposite
-    direction: a deep SCALAR chain on tiny cardinality belongs in one
-    compiled kernel, not in the plan.  Weights stay bit-identical to
+    is microseconds of arithmetic (PERF.md "Deep scalar chains") — the
+    same reasoning as the ivf_probe_col "numpy-heavy" exception, from the
+    opposite direction: a deep SCALAR chain on tiny cardinality belongs
+    in one compiled kernel, not in the plan.  Weights stay bit-identical to
     the oracle's CTE replay (see _compile_steps_numpy).
     """
     import pandas as pd

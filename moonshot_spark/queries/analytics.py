@@ -1397,12 +1397,12 @@ FROM bands
 def ta_bollinger_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger bands (20, 2σ) + Cutler's RSI (14) per sid/date — the
     mean-reversion signal pair of ``functions/ta.py``, here in the
-    fold-exact form (PERF.md float rule 5): rolling mean/variance come
-    from left-to-right folds of the bounded date-ordered frame array
-    (s1/s2 moments, association order pinned) and the RSI is
-    100·Σgains/(Σgains+Σlosses) — the avg-gain denominators cancel, so
-    the oscillator needs no null-skipping avg and no recursive Wilder
-    state.  Remaining ops (+ − * / sqrt, CASE) are IEEE-correctly-
+    fold-exact form (PERF.md "Cross-engine float rules", rule 5):
+    rolling mean/variance come from left-to-right folds of the bounded
+    date-ordered frame array (s1/s2 moments, association order pinned)
+    and the RSI is 100·Σgains/(Σgains+Σlosses) — the avg-gain
+    denominators cancel, so the oscillator needs no null-skipping avg and
+    no recursive Wilder state.  Remaining ops (+ − * / sqrt, CASE) are IEEE-correctly-
     rounded and identical cross-engine; degenerate frames resolve the
     same way on both sides (σ: 0 when the catastrophic-cancellation
     guard trips, NULL on 1-row frames; RSI/%B: NULL on flat frames via

@@ -1067,8 +1067,8 @@ def sharpe_per_sid(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum/stddev would diverge at the last ulp), and every remaining op
     (+ * / sqrt) is IEEE-correctly-rounded and identical in Spark and
     DuckDB.  This is the portability recipe for any moment-based metric
-    (PERF.md float rule 5); CAGR stays pytest-only because pow/exp are
-    libm-dependent."""
+    (PERF.md "Cross-engine float rules", rule 5); CAGR stays pytest-only
+    because pow/exp are libm-dependent."""
     moments = _return_moments(spark, sf_dir)
     mean = F.col("s1") / F.col("n")
     var = F.col("s2") / F.col("n") - mean * mean
@@ -1419,14 +1419,20 @@ def vol_target_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = panel.select("sid", "date", pct_change("close", 1, w).alias("r"))
     w10 = w.rowsBetween(-9, 0)
 
-    n = F.count("r").over(w10).cast("double")
+    # the moment sums are columns before vol reads them: each reference
+    # to an un-selected window expression plans its own collect_list
     enough = F.count("r").over(w10) >= 10
-    sx = F.when(enough, fold_sum(ordered_values("date", "r", over=w10)))
-    sxx = F.when(enough, fold_sum(ordered_values(
-        "date", F.col("r") * F.col("r"), over=w10)))
+    moments = rets.select(
+        "sid", "date",
+        F.count("r").over(w10).cast("double").alias("n"),
+        F.when(enough, fold_sum(ordered_values(
+            "date", "r", over=w10))).alias("sx"),
+        F.when(enough, fold_sum(ordered_values(
+            "date", F.col("r") * F.col("r"), over=w10))).alias("sxx"))
+    n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     vol = F.sqrt((sxx - sx * sx / n) / (n - F.lit(1)))
-    mom = rets.select("sid", "date",
-                    F.when(vol > 0, F.lit(1.0) / vol).alias("ivol"))
+    mom = moments.select("sid", "date",
+                         F.when(vol > 0, F.lit(1.0) / vol).alias("ivol"))
     znorm = F.when(F.col("ivol").isNotNull(), fold_sum(ordered_values(
         "sid", "ivol", over=Window.partitionBy("date"))))
     return mom.select("sid", "date", "ivol",

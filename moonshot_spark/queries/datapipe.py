@@ -3025,7 +3025,8 @@ def speculative_ngram_acceptance(spark: SparkSession, sf_dir: str) \
     from moonshot_spark.sources.parquet import ensure_scan_parallelism
 
     # the bigram explode is pre-shuffle per-row work: parallelize the
-    # single-row-group scan (no-op on real layouts; PERF.md r11)
+    # single-row-group scan (no-op on real layouts; PERF.md
+    # "Single-row-group scans")
     docs = ensure_scan_parallelism(load_table(spark, sf_dir, "documents"))
     tok = docs.select("lang", F.split("text", " ").alias("t"))
     prs = F.transform(
@@ -4477,7 +4478,8 @@ def _lsh_recall_frame(spark: SparkSession, sf_dir: str,
     # scheduler computes its stages once per job — no persist() needed
     # (an explicit persist here leaked cached copies across repeated
     # constructions and OOMed the 50x scale bench; same lesson as the
-    # PPJoin checkpoint removal, PERF.md r9)
+    # PPJoin checkpoint removal, PERF.md "Persisting what recompute
+    # serves cheaper")
     sh = shingle_frame(docs)
     cand = (lsh_candidate_pairs(docs, include_est_jaccard=False,
                                 shingles=sh)

@@ -660,12 +660,11 @@ def continuous_contract_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     two date-range scans of the same panel lineage — no window over the
     combined series, so the operator is one shuffle regardless of how
     many rolls a real chain has."""
-    # r15 (guide §2.4): the leg frames feed overlap/median/roll/factor/
-    # front/back as separate subtree references, compounding to 28
-    # parquet scans + 60 Exchanges of the same tick rollup per
-    # execution (plans/r15/continuous_contract_stitch_*).  Persisting
-    # the panel and the 1-row factor collapses that to one panel
-    # computation; values unchanged.
+    # The leg frames feed overlap/median/roll/factor/front/back as
+    # separate subtree references, which without a persist compound to
+    # 28 parquet scans + 60 Exchanges of the same tick rollup per
+    # execution.  Persisting the panel and the 1-row factor collapses
+    # that to one panel computation; values unchanged.
     panel = materialize.persist(events_to_panel(spark, sf_dir))
     a = panel.where(F.col("sid") == "3").select(
         "date", F.col("close").alias("ca"))

@@ -1004,8 +1004,9 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation is int64 (price in cents × span in µs — prices are
     2-decimal money, spans integer) so sums are EXACT in any engine and
     partitioning; int64→double conversion is IEEE-defined (unlike
-    decimal→double, which drifted 1e-14 between engines — see PERF.md),
-    and the one division happens once at the end."""
+    decimal→double, which drifted 1e-14 between engines — PERF.md
+    "Cross-engine float rules"), and the one division happens once at
+    the end."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("sid", "date").orderBy("t_us")
     ticks = (ev.select(F.col("user_id").cast("string").alias("sid"),
@@ -1367,8 +1368,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str,
     # results proven equal at sf0.1 and x10).  Plan: Exchange(basket)
     # -> dedup -> Window(bs) -> self-join: ONE full exchange and ONE
     # window sort before the pair aggregate, vs item-Exchange + 2
-    # windows + basket-Exchange through r14 (edge-build plans in
-    # plans/r15/copurchase_edge_build_{before,after}.txt; x10 A/B
+    # windows + basket-Exchange in the earlier form (x10 A/B
     # 3.76 -> 3.23 s min-of-4, new faster in all 4 rounds).
     items = (li.select(F.col("l_orderkey").alias("basket"),
                        F.col("l_partkey").alias("item"))

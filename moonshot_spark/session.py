@@ -111,8 +111,8 @@ def driver_java_options() -> str:
       default tiny initial heap, G1 repeatedly uncommits after
       concurrent cycles and recommits on the next allocation burst, and
       the kernel page zeroing on each recommit shows up as multi-second
-      SYS-time stalls inside timed windows (the r12 in-run bench-drift
-      root cause; PERF.md r13).  Committing the full heap up front is
+      SYS-time stalls inside timed windows (PERF.md "A small -Xms lets
+      G1 stall timed windows").  Committing the full heap up front is
       virtual (no RSS cost) and removes the churn.
     - ``-XX:+AlwaysPreTouch`` when SPARK_GRAFT_PRETOUCH=1, so
       measurement harnesses zero the pages at startup instead of inside
@@ -159,9 +159,9 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
         # coalescing saved ~7% on tiny shuffles but serialized
         # CPU-heavy small-byte stages: item_cooccurrence's pair
         # expansion 1.2 s -> 3.9 s, z-order rank 0.2 s -> 0.8 s; PERF.md
-        # §overhead), and the size floor drops from 1m to 256k, below
-        # which a stage of a few MB (a backtest's windows, costs and
-        # melt) was merged into 1-2 tasks.  A lower floor (1 byte)
+        # "Size-based AQE coalescing"), and the size floor drops from 1m
+        # to 256k, below which a stage of a few MB (a backtest's
+        # windows, costs and melt) was merged into 1-2 tasks.  A lower floor (1 byte)
         # split KB-sized catalog stages too and lost.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 COALESCE_MIN_PARTITION_SIZE)

@@ -437,23 +437,23 @@ def test_hash_split_salt_independence(spark):
 def test_connected_components_chain(spark):
     # a 10-node path graph: worst-case diameter, forces true multi-hop
     # label propagation (a single join round can NOT solve this)
-    from moonshot_spark.datapipe.graph import connected_components
+    from moonshot_spark.datapipe.graph import connected_components_adaptive
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "src long, dst long")
     got = {(r["node"], r["comp"])
-           for r in connected_components(edges).collect()}
+           for r in connected_components_adaptive(edges).collect()}
     assert got == {(i, 0) for i in range(10)}
 
 
 def test_connected_components_disjoint(spark):
-    from moonshot_spark.datapipe.graph import connected_components
+    from moonshot_spark.datapipe.graph import connected_components_adaptive
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
         "src long, dst long")
     comp = {r["node"]: r["comp"]
-            for r in connected_components(edges).collect()}
+            for r in connected_components_adaptive(edges).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                     20: 20, 21: 20, 22: 20}
 
@@ -538,7 +538,7 @@ def _uf_components(edges):
 def test_cc_star_matches_hashmin_and_unionfind(spark, seed):
     import random
     from moonshot_spark.datapipe.graph import (
-        connected_components, connected_components_star)
+        connected_components_adaptive, connected_components_star)
 
     rng = random.Random(seed)
     edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(25)]
@@ -546,7 +546,7 @@ def test_cc_star_matches_hashmin_and_unionfind(spark, seed):
     df = spark.createDataFrame(edges, "src long, dst long")
     expect = _uf_components(edges)
     got_hm = {r["node"]: r["comp"]
-              for r in connected_components(df).collect()}
+              for r in connected_components_adaptive(df).collect()}
     got_st = {r["node"]: r["comp"]
               for r in connected_components_star(df).collect()}
     assert got_hm == expect
@@ -578,18 +578,6 @@ def test_cc_adaptive_long_chain_falls_back_to_star(spark):
     got = {(r["node"], r["comp"])
            for r in connected_components_adaptive(edges).collect()}
     assert got == {(i, 0) for i in range(40)}
-
-
-def test_cc_warns_on_nonconvergence(spark):
-    import warnings as _w
-    from moonshot_spark.datapipe.graph import connected_components
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(19)], "src long, dst long")
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        connected_components(edges, max_iter=2)
-    assert any("fixpoint" in str(c.message) for c in caught)
 
 
 def test_duplicate_clusters_long_chain_exact(spark):
@@ -666,13 +654,11 @@ def test_interval_join_oversized_guard(spark):
                        max_buckets_per_interval=100,
                        on_oversized="truncate")
     assert ok.count() == 1  # point at ts=5 is in bucket 0, within cap
-    # legacy eager 'warn' mode still counts up front
-    import warnings as _w
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
+    # the two modes above are the only ones: the eager pre-count 'warn'
+    # mode (it ran the interval lineage twice) is gone
+    with _pytest.raises(ValueError, match="'error' or 'truncate'"):
         interval_join(pts, ivs, on=["k"], bucket_width=10,
                       max_buckets_per_interval=100, on_oversized="warn")
-    assert any("span more than" in str(c.message) for c in caught)
 
 
 def test_chunk_tokens_properties(spark):

@@ -51,7 +51,8 @@ def test_scan_prunes_columns():
 
 
 def test_backtest_exchange_budget():
-    """The backtest DAG must stay at ≤4 exchanges and 1 scan (PERF.md)."""
+    """The backtest DAG must stay at ≤4 exchanges and 1 scan (PERF.md
+    "Plan shape of the flagship")."""
     plan = plan_of("backtest_dma")
     assert plan.count("Exchange") <= 4, plan
     assert plan.count("Scan parquet") == 1, plan
@@ -78,7 +79,8 @@ def test_winnowing_is_pure_projection():
 
 def test_embedding_near_dups_broadcasts_cell_guard():
     """The hot-cell guard must be a broadcast semi-filter, not a window
-    shuffle of the fact table (PERF.md round-3 note 1)."""
+    shuffle of the fact table: IVF-cell cardinality is bounded, and a
+    window would shuffle the fact table once per join leg."""
     plan = plan_of("embedding_near_dups")
     assert "BroadcastHashJoin" in plan, plan
     assert "Window" not in plan, plan

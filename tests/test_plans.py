@@ -143,9 +143,9 @@ def test_compact_parquet_rewrites_to_fewer_files(spark, tmp_path):
 def test_session_pins_initial_heap(spark, monkeypatch):
     """r13: G1 heap commit/uncommit churn (tiny default -Xms vs burst
     usage) produced multi-second kernel-time stalls inside timed windows
-    — the r12 bench-drift root cause (PERF.md r13).  The session factory
-    must pin -Xms to the configured driver memory so the heap never
-    shrinks/regrows.  Asserts on BEHAVIOR (the computed option string
+    (PERF.md "A small -Xms lets G1 stall timed windows").  The session
+    factory must pin -Xms to the configured driver memory so the heap
+    never shrinks/regrows.  Asserts on BEHAVIOR (the computed option string
     and the live session's conf), not on source text (ADVICE r13: the
     old getsource assert could pass on a comment alone)."""
     from moonshot_spark.session import driver_java_options

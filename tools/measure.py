@@ -72,12 +72,12 @@ def measure(build: Callable[[], Any], runs: int = 2,
 
     Every timed run calls ``build()`` again: forcing the same DataFrame
     twice reuses its shuffle map outputs (MapOutputTracker) and
-    under-measures shuffle-heavy queries by ~2x (PERF.md r9).  build =
-    frame construction (driver Py4J/analysis plus any bounded eager
-    action a builder runs); exec = ``force`` on that fresh frame.  Both
-    come from the same (fastest) run, so they add up to ``total``;
-    ``compiles`` and the job/stage/task counts are that run's too,
-    read outside the timed window.  The jobs are those of the caller's
+    under-measures shuffle-heavy queries by ~2x (PERF.md "Re-forcing one
+    DataFrame").  build = frame construction (driver Py4J/analysis plus
+    any bounded eager action a builder runs); exec = ``force`` on that
+    fresh frame.  Both come from the same (fastest) run, so they add up
+    to ``total``; ``compiles`` and the job/stage/task counts are that
+    run's too, read outside the timed window.  The jobs are those of the caller's
     job group, which ``measure`` leaves as it is (a stream's
     micro-batches run in their own group and are not counted).
     """
