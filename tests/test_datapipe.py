@@ -654,8 +654,7 @@ def test_interval_join_oversized_guard(spark):
                        max_buckets_per_interval=100,
                        on_oversized="truncate")
     assert ok.count() == 1  # point at ts=5 is in bucket 0, within cap
-    # the two modes above are the only ones: the eager pre-count 'warn'
-    # mode (it ran the interval lineage twice) is gone
+    # the two modes above are the only ones
     with _pytest.raises(ValueError, match="'error' or 'truncate'"):
         interval_join(pts, ivs, on=["k"], bucket_width=10,
                       max_buckets_per_interval=100, on_oversized="warn")

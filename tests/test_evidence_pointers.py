@@ -78,6 +78,10 @@ def dangling_paths():
     return out
 
 
+# what follows a citation: an optional comma, then the quoted heading
+_QUOTED = re.compile(r',?\s*"([^"]+)"')
+
+
 def _perf_headings():
     return [re.sub(r"\s+", " ", line.lstrip("#").strip())
             for line in (REPO / "PERF.md").read_text().splitlines()
@@ -96,7 +100,7 @@ def unresolved_perf_citations():
         # join wrapped comment and docstring lines into one run of text
         text = re.sub(r"\s*\n\s*(?:#\s*)?", " ", src.read_text())
         for m in re.finditer(r"PERF\.md", text):
-            quoted = re.match(r',?\s*"([^"]+)"', text[m.end():])
+            quoted = _QUOTED.match(text, m.end())
             if not (quoted and any(h.startswith(quoted.group(1))
                                    for h in headings)):
                 out.append(f"{src.relative_to(REPO)}: "
