@@ -441,27 +441,15 @@ def _write_meta(spark: SparkSession, path: str,
 
 
 def _read_meta(spark: SparkSession, path: str) -> dict[int, dict]:
-    fs, root = _fs(spark, path)
-    meta_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
-        root, _META)
-    if not fs.exists(meta_path):
-        return {}
-    # JVM-side copy to a byte buffer: a Python bytearray handed to Java
-    # readFully is passed BY VALUE (py4j), never mutated back, and
-    # spark.read ignores underscore-prefixed files entirely (the same
-    # listing rule that keeps the meta out of parquet discovery)
-    jvm = spark.sparkContext._jvm
-    stream = fs.open(meta_path)
-    baos = jvm.java.io.ByteArrayOutputStream()
-    try:
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, False)
-    finally:
-        stream.close()
-    content = baos.toString("UTF-8")
-    return _norm_subs(json.loads(content))
+    return _norm_subs(_read_json(spark, path, _META))
 
 
 def _read_json(spark: SparkSession, path: str, name: str):
+    """The JSON object in ``path/name``, or None if there is none.  The
+    bytes are copied JVM-side: a Python bytearray handed to Java
+    ``readFully`` is passed BY VALUE (py4j) and never filled.  Underscore
+    names such as ``_META`` stay out of parquet discovery, which skips
+    them."""
     fs, root = _fs(spark, path)
     jvm = spark.sparkContext._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(root, name)

@@ -382,7 +382,8 @@ def dedup_corpus(docs: DataFrame, method: str = "exact",
                    .where(F.col("__n") > 1))
             # persisted (r15): referenced by the reps anti-join AND the
             # final removable union — two separate md5-groupBy subtree
-            # executions otherwise (guide §2.4); id-list-sized frame
+            # executions otherwise (don't recompute shared subtrees);
+            # id-list-sized frame
             exact_removable = materialize.persist(
                 keyed.join(grp, "__raw_fp")
                 .where(F.col(id_col) != F.col("__keep"))
@@ -575,28 +576,45 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
         tok.join(freq, "token")
         .groupBy(id_col)
         .agg(ordered_values("__f", "token").alias("__ts")))
-    sz = F.size("__ts")
-    prefix_len = sz - F.ceil(sz * F.lit(threshold)) + 1
-    prefix = (sorted_sets
-              .select(F.col(id_col), sz.alias("__sz"),
-                      F.explode(F.slice("__ts", 1, prefix_len))
-                      .alias("token")))
-    # PPJoin length filter: Jaccard >= theta forces
-    # min(|A|,|B|) >= theta * max(|A|,|B|) — prunes candidates before the
-    # expensive set-intersection verification
-    len_ok = (F.least(F.col("a.__sz"), F.col("b.__sz"))
-              >= F.lit(threshold)
-              * F.greatest(F.col("a.__sz"), F.col("b.__sz")))
+    prefix = _ppjoin_prefixes(sorted_sets, threshold, id_col)
     cands = (prefix.alias("a")
              .join(prefix.alias("b"), "token")
-             .where((F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & len_ok)
+             .where((F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+                    & _ppjoin_length_ok(threshold))
              .select(F.col(f"a.{id_col}").alias("doc_a"),
                      F.col(f"b.{id_col}").alias("doc_b"))
              .distinct())
-    a_sets = sorted_sets.select(F.col(id_col).alias("doc_a"),
-                                F.col("__ts").alias("__ta"))
-    b_sets = sorted_sets.select(F.col(id_col).alias("doc_b"),
-                                F.col("__ts").alias("__tb"))
+    return _ppjoin_verify(cands, sorted_sets, threshold, id_col)
+
+
+def _ppjoin_prefixes(sets: DataFrame, threshold: float,
+                     id_col: str) -> DataFrame:
+    """(id, __sz, token): the first ``|T| - ceil(theta*|T|) + 1``
+    tokens of each (id, __ts) set, the only ones a candidate join needs
+    to key on (see prefix_filter_jaccard_pairs)."""
+    sz = F.size("__ts")
+    prefix_len = sz - F.ceil(sz * F.lit(threshold)) + 1
+    return sets.select(F.col(id_col), sz.alias("__sz"),
+                       F.explode(F.slice("__ts", 1, prefix_len))
+                       .alias("token"))
+
+
+def _ppjoin_length_ok(threshold: float):
+    """Length filter on a join of prefix frames ``a``/``b``: Jaccard >=
+    theta forces min(|A|,|B|) >= theta * max(|A|,|B|)."""
+    return (F.least(F.col("a.__sz"), F.col("b.__sz"))
+            >= F.lit(threshold)
+            * F.greatest(F.col("a.__sz"), F.col("b.__sz")))
+
+
+def _ppjoin_verify(cands: DataFrame, sets: DataFrame, threshold: float,
+                   id_col: str) -> DataFrame:
+    """(doc_a, doc_b, n_shared, jaccard) of the candidate pairs whose
+    full sets in ``sets`` have Jaccard >= threshold."""
+    a_sets = sets.select(F.col(id_col).alias("doc_a"),
+                         F.col("__ts").alias("__ta"))
+    b_sets = sets.select(F.col(id_col).alias("doc_b"),
+                         F.col("__ts").alias("__tb"))
     inter = F.size(F.array_intersect("__ta", "__tb"))
     union = F.size("__ta") + F.size("__tb") - inter
     return (cands.join(a_sets, "doc_a").join(b_sets, "doc_b")

@@ -153,7 +153,7 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         # converged when the edge set is stable (symmetric difference 0);
         # both directions probed in ONE action (r15: two .count() jobs
         # per round halved to one — each job carries the fixed
-        # scheduling floor, guide §1.2)
+        # scheduling floor)
         diff = (e2.exceptAll(e).limit(1)
                 .unionAll(e.exceptAll(e2).limit(1)).count())
         e = e2

@@ -272,38 +272,21 @@ def incremental_ppjoin_pairs(new_docs: DataFrame, sorted_sets: DataFrame,
     verification.  The historical corpus is touched only through the
     index.
     """
+    from moonshot_spark.datapipe.dedup import (
+        _ppjoin_length_ok, _ppjoin_prefixes, _ppjoin_verify)
+
     batch_sets = _frozen_sorted_sets(new_docs, frozen_freq, text_col,
                                      id_col, shingle_n)
     build_sets = sorted_sets.unionByName(batch_sets)
 
-    def prefixes(sets: DataFrame) -> DataFrame:
-        sz = F.size("__ts")
-        plen = sz - F.ceil(sz * F.lit(threshold)) + 1
-        return sets.select(F.col(id_col), sz.alias("__sz"),
-                           F.explode(F.slice("__ts", 1, plen))
-                           .alias("token"))
-
-    probe = prefixes(batch_sets)
-    build = prefixes(build_sets)
-    len_ok = (F.least(F.col("a.__sz"), F.col("b.__sz"))
-              >= F.lit(threshold)
-              * F.greatest(F.col("a.__sz"), F.col("b.__sz")))
+    probe = _ppjoin_prefixes(batch_sets, threshold, id_col)
+    build = _ppjoin_prefixes(build_sets, threshold, id_col)
     cands = (probe.alias("a").join(build.alias("b"), "token")
-             .where((F.col(f"a.{id_col}") != F.col(f"b.{id_col}")) & len_ok)
+             .where((F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
+                    & _ppjoin_length_ok(threshold))
              .select(F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}"))
                      .alias("doc_a"),
                      F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}"))
                      .alias("doc_b"))
              .distinct())
-    a_sets = build_sets.select(F.col(id_col).alias("doc_a"),
-                               F.col("__ts").alias("__ta"))
-    b_sets = build_sets.select(F.col(id_col).alias("doc_b"),
-                               F.col("__ts").alias("__tb"))
-    inter = F.size(F.array_intersect("__ta", "__tb"))
-    union = F.size("__ta") + F.size("__tb") - inter
-    return (cands.join(a_sets, "doc_a").join(b_sets, "doc_b")
-            .select("doc_a", "doc_b",
-                    inter.cast("bigint").alias("n_shared"),
-                    (inter.cast("double") / union.cast("double"))
-                    .alias("jaccard"))
-            .where(F.col("jaccard") >= threshold))
+    return _ppjoin_verify(cands, build_sets, threshold, id_col)

@@ -111,7 +111,8 @@ def power_iteration_top_component(emb: DataFrame, dim: int,
     # the JVM (r14): building them through the Python Column API — two
     # 64-literal arrays plus nested transform/zip_with lambdas per
     # iteration, each node a Py4J round trip — cost ~0.4 s of driver
-    # chatter per iteration per construction (guide §7.3).  The parsed
+    # chatter per iteration per construction (building a plan is driver
+    # time too: one parse beats hundreds of round trips).  The parsed
     # trees are the identical Catalyst expressions (same element_at /
     # floor / CAST structure, double literals via exact repr
     # round-trip), so every quantized term — and therefore mu, w,

@@ -601,7 +601,7 @@ def pq_encode(emb: DataFrame, codebooks: list[list[list[float]]],
     # (n_sub * k nested zip_with/aggregate/struct/least nodes, each
     # F.lit/operator a Py4J round trip) measured ~1.6 s of pure driver
     # chatter per construction at (8 sub x 4 codewords x 8 dims), vs
-    # milliseconds for the parser (guide §7.3 plan-construction cost;
+    # milliseconds for the parser (building a plan is driver time too;
     # r14).  The parsed tree is the identical Catalyst expression —
     # zip_with/aggregate/named_struct/least with double literals via
     # exact repr round-trip — so every ssd/code bit is unchanged.

@@ -83,7 +83,8 @@ def zorder_bucket_stats(df: DataFrame, col_a: str, col_b: str,
        ``repartitionByRange + localCheckpoint`` — the checkpoint existed
        only to pin the range partitioner's per-RDD-instance sample, and
        its materialization plus the hidden sampling pass were ~60% of
-       the operator's cost; guide §2.4/§5.  The bin count exceeds the
+       the operator's cost: a pure function of the row needs no
+       materialized copy to agree with itself.  The bin count exceeds the
        bucket count so moderate z-skew still spreads; a pathological
        single-z-value distribution degrades parallelism, not
        correctness — the same row mass would land in one ntile sort

@@ -16,8 +16,9 @@ one catalog module splices in: ``PANEL_SQL`` (the daily OHLCV panel),
 ``COPURCHASE_GRAPH_SQL`` (the co-purchase graph CTEs).  A fragment one
 module uses stays in that module.  Fragments are constants cut at CTE
 boundaries, so an oracle sends DuckDB the same text as if it spelled
-them out.  Two Spark-side helpers shared by modules live here too:
-``six_hour_bar`` and ``intraday_panel``.
+them out.  The Spark-side helpers shared by modules live here too:
+``six_hour_bar``, ``intraday_panel`` and the chi-square test
+``chi_square`` with its oracle builder ``chi_square_sql``.
 
 Cross-engine float discipline: two-operand double arithmetic (+,-,*,/) and
 min/max/lag/count are bit-deterministic across engines, so most queries
@@ -39,9 +40,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from moonshot_spark.functions.folds import fold_sum_exact
 from moonshot_spark.session import ensure_session_confs
 from moonshot_spark.sources.parquet import load_table
 
@@ -138,6 +140,57 @@ deg AS (
     FROM edges GROUP BY src
 )
 """
+
+
+def chi_square_sql(source: str, row: str, col: str, dof: str) -> str:
+    """Oracle twin of ``chi_square``: the ``obs``, ``tot`` and ``cells``
+    CTEs over ``source`` and the one-row (chi2, dof, n_cells) select,
+    ``dof`` being the caller's SQL expression."""
+    return f"""obs AS (
+    SELECT {row}, {col}, CAST(count(*) AS BIGINT) AS o
+    FROM {source} GROUP BY {row}, {col}
+),
+tot AS (
+    SELECT {row}, {col}, o,
+           CAST(sum(o) OVER (PARTITION BY {row}) AS DOUBLE) AS row_tot,
+           CAST(sum(o) OVER (PARTITION BY {col}) AS DOUBLE) AS col_tot,
+           CAST(sum(o) OVER () AS DOUBLE) AS n
+    FROM obs
+),
+cells AS (
+    SELECT {row}, {col},
+           (CAST(o AS DOUBLE) - row_tot * col_tot / n)
+           * (CAST(o AS DOUBLE) - row_tot * col_tot / n)
+           / (row_tot * col_tot / n) AS cell
+    FROM tot
+)
+SELECT CAST(list_reduce(list(cell ORDER BY {row}, {col}),
+            (a, b) -> a + b) AS DOUBLE) AS chi2,
+       {dof} AS dof,
+       CAST(count(*) AS BIGINT) AS n_cells
+FROM cells
+"""
+
+
+def chi_square(frame: DataFrame, row: str, col: str) -> DataFrame:
+    """One-row (chi2, n_cells): the Pearson chi-square independence
+    statistic of the ``row`` × ``col`` contingency table of ``frame``.
+    The table is one map-side-combined count; the marginals are windows
+    over that tiny table and the grand total a broadcast 1-row aggregate
+    (an unpartitioned window would warn and run one task).  The cells
+    fold in (row, col) order, so the statistic is bit-exact against
+    ``chi_square_sql``."""
+    obs = frame.groupBy(row, col).agg(F.count("*").alias("o"))
+    row_tot = F.sum("o").over(Window.partitionBy(row)).cast("double")
+    col_tot = F.sum("o").over(Window.partitionBy(col)).cast("double")
+    grand = obs.agg(F.sum("o").cast("double").alias("n"))
+    e = row_tot * col_tot / F.col("n")
+    cells = (obs.crossJoin(F.broadcast(grand))
+             .select(row, col,
+                     ((F.col("o").cast("double") - e)
+                      * (F.col("o").cast("double") - e) / e).alias("cell")))
+    return cells.agg(fold_sum_exact([row, col], "cell").alias("chi2"),
+                     F.count("*").alias("n_cells"))
 
 
 def six_hour_bar() -> Column:

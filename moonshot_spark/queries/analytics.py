@@ -1,11 +1,14 @@
 """Statistical / time-series analytics: hypothesis tests, regressions, risk statistics.
 
 Oracles start from PANEL_SQL or the raw tables; two share
-``_base.CLOSE_RETURNS_SQL`` with the backtest module.  The mean-variance
-weight oracles are generated by ``_mvw_k5_oracle`` and
-``_mvw_by_book_oracle``; ``embedding_pc1_outliers`` replays datapipe's
-``_pca_cte_chain``."""
+``_base.CLOSE_RETURNS_SQL`` with the backtest module.  The three
+mean-variance sleeves build their return frame with ``_sleeve_returns``
+and their oracles start from its twin ``_sleeve_returns_sql``;
+``embedding_pc1_outliers`` replays datapipe's ``_pca_cte_chain``."""
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -15,8 +18,11 @@ from moonshot_spark.functions.folds import (
     fold_sum, fold_sum_exact, ordered_values,
 )
 from moonshot_spark.functions.window import pct_change
+from moonshot_spark.operators.markowitz import (
+    markowitz_cte_sql, markowitz_weights,
+)
 from moonshot_spark.queries._base import (
-    CLOSE_RETURNS_SQL, PANEL_SQL, register,
+    CLOSE_RETURNS_SQL, PANEL_SQL, chi_square, chi_square_sql, register,
 )
 from moonshot_spark.sources.parquet import events_to_panel, load_table
 from moonshot_spark.queries.datapipe import _pca_cte_chain
@@ -328,60 +334,23 @@ def anomaly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chi-square independence test on the source × lang contingency table   #
 # --------------------------------------------------------------------- #
 
-@register("source_lang_chisq", """
-WITH obs AS (
-    SELECT source, lang, CAST(count(*) AS BIGINT) AS o
-    FROM documents GROUP BY source, lang
-),
-tot AS (
-    SELECT source, lang, o,
-           CAST(sum(o) OVER (PARTITION BY source) AS DOUBLE) AS row_tot,
-           CAST(sum(o) OVER (PARTITION BY lang) AS DOUBLE) AS col_tot,
-           CAST(sum(o) OVER () AS DOUBLE) AS n
-    FROM obs
-),
-cells AS (
-    SELECT source, lang,
-           (CAST(o AS DOUBLE) - row_tot * col_tot / n)
-           * (CAST(o AS DOUBLE) - row_tot * col_tot / n)
-           / (row_tot * col_tot / n) AS cell
-    FROM tot
-)
-SELECT CAST(list_reduce(list(cell ORDER BY source, lang),
-            (a, b) -> a + b) AS DOUBLE) AS chi2,
-       CAST((SELECT (count(DISTINCT source) - 1)
+@register("source_lang_chisq", "WITH " + chi_square_sql(
+    "documents", "source", "lang",
+    """CAST((SELECT (count(DISTINCT source) - 1)
                     * (count(DISTINCT lang) - 1) FROM documents)
-            AS BIGINT) AS dof,
-       CAST(count(*) AS BIGINT) AS n_cells
-FROM cells
-""")
+            AS BIGINT)"""))
 def source_lang_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square independence statistic for the corpus's
-    source × lang contingency table — the drift/balance check a data
-    pipeline runs when a new crawl snapshot lands (KL divergence needs
-    logs; chi-square ranks the same shifts with pure rational
-    arithmetic).  The contingency table is one map-side-combined
-    aggregate; marginals are windows over that tiny table; the cell sum
-    folds in (source, lang) order so the statistic is bit-deterministic.
-    Nothing heavier than the grouped counts ever shuffles."""
+    source × lang contingency table (``_base.chi_square``) — the
+    drift/balance check a data pipeline runs when a new crawl snapshot
+    lands (KL divergence needs logs; chi-square ranks the same shifts
+    with pure rational arithmetic).  Nothing heavier than the grouped
+    counts ever shuffles."""
     docs = load_table(spark, sf_dir, "documents")
-    obs = docs.groupBy("source", "lang").agg(F.count("*").alias("o"))
-    row_tot = F.sum("o").over(Window.partitionBy("source")).cast("double")
-    col_tot = F.sum("o").over(Window.partitionBy("lang")).cast("double")
-    # grand total via a broadcast 1-row aggregate, not an unpartitioned
-    # window (which would warn and single-task even on the tiny table)
-    grand = obs.agg(F.sum("o").cast("double").alias("n"))
-    e = row_tot * col_tot / F.col("n")
-    cells = (obs.crossJoin(F.broadcast(grand))
-             .select("source", "lang",
-                     ((F.col("o").cast("double") - e)
-                      * (F.col("o").cast("double") - e) / e).alias("cell")))
-    folded = fold_sum_exact(["source", "lang"], "cell")
     dims = docs.agg(
         ((F.countDistinct("source") - F.lit(1))
          * (F.countDistinct("lang") - F.lit(1))).alias("dof"))
-    return (cells.agg(folded.cast("double").alias("chi2"),
-                      F.count("*").alias("n_cells"))
+    return (chi_square(docs, "source", "lang")
             .crossJoin(dims)
             .select("chi2", F.col("dof").cast("bigint").alias("dof"),
                     "n_cells"))
@@ -906,7 +875,7 @@ def price_path_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact all-pairs, the LSH/IVF ANN operators in datapipe/similarity.py
     are the escape hatch; this exact kernel doubles as their recall
     oracle."""
-    # r15 (guide §2.4 — don't recompute shared subtrees): the static
+    # r15 (don't recompute shared subtrees): the static
     # plan referenced the panel/z/vec subtrees from 2+ consumers each
     # (dates + z off panel; sids + zfull off z; both block-join sides
     # off vec), compounding to 12 parquet scans, 32 Exchanges and 14
@@ -2253,9 +2222,9 @@ def cointegration_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hardcoded 32 — ADVICE r11) -> lag window -> groupBy on the same
     key (exchange reused, zero extra shuffle) -> per-pair column math.
     No checkpoint, no second pass, no collect, no UDF."""
-    # r15 (guide §2.4): the panel rollup fed BOTH the price-level
-    # blocking aggregate (lvl) and the pair frame (pa) as separate
-    # subtrees — two full events scans + two panel aggregations per
+    # r15 (don't recompute shared subtrees): the panel rollup fed BOTH
+    # the price-level blocking aggregate (lvl) and the pair frame (pa) as
+    # separate subtrees — two full events scans + two panel aggregations per
     # execution.  A within-plan persist of the kilobyte-scale daily
     # panel computes it once; values unchanged (oracle green both SFs).
     # Measured effect at sf0.1 is within box noise (the pair join +
@@ -2405,24 +2374,58 @@ def embedding_pc1_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .alias("is_outlier"))
 
 
-@register("mean_variance_weights", f"""
-WITH panel AS ({PANEL_SQL}),
+def _sleeve_returns(spark: SparkSession, sf_dir: str, k: int,
+                    by_book: bool = False) -> DataFrame:
+    """(date, r1..rk[, book]): the mean-variance sleeves' joint return
+    frame.  One column per sid 1..k of its close-to-close return
+    (pivoted by date), complete cases only; ``by_book`` adds the
+    day-of-month hash ``book`` (0..2) that splits the dates into three
+    sleeves.  ``_sleeve_returns_sql`` is its oracle twin."""
+    panel = events_to_panel(spark, sf_dir).select("sid", "date", "close")
+    sids = [str(i) for i in range(1, k + 1)]
+    w_sid = Window.partitionBy("sid").orderBy("date")
+    r = (panel.where(F.col("sid").isin(sids))
+         .select("sid", "date",
+                 (F.col("close") / F.lag("close").over(w_sid)
+                  - 1).alias("r")))
+    piv = (r.groupBy("date")
+           .agg(*[F.max(F.when(F.col("sid") == s, F.col("r")))
+                  .alias(f"r{s}") for s in sids]))
+    if by_book:
+        piv = piv.withColumn("book", (F.dayofmonth("date") % 3).cast("int"))
+    return piv.where(reduce(operator.and_,
+                            [F.col(f"r{s}").isNotNull() for s in sids]))
+
+
+def _sleeve_returns_sql(k: int, by_book: bool = False) -> str:
+    """The ``panel``, ``r``, ``piv`` and ``cl`` CTEs: ``cl`` holds
+    ([book,] r1..rk), the complete-case rows of ``_sleeve_returns``."""
+    ks = range(1, k + 1)
+    sids = ", ".join(f"'{i}'" for i in ks)
+    piv = ",\n           ".join(
+        f"max(CASE WHEN sid = '{i}' THEN r END) AS r{i}" for i in ks)
+    rs = ", ".join(f"r{i}" for i in ks)
+    nn = " AND ".join(f"r{i} IS NOT NULL" for i in ks)
+    book, book_col = (("CAST(day(date) % 3 AS INT) AS book,", "book, ")
+                      if by_book else ("", ""))
+    return f"""panel AS ({PANEL_SQL}),
 r AS (
     SELECT sid, date,
            (close / lag(close) OVER (PARTITION BY sid ORDER BY date) - 1) AS r
-    FROM panel WHERE sid IN ('1', '2', '3')
+    FROM panel WHERE sid IN ({sids})
 ),
 piv AS (
-    SELECT date,
-           max(CASE WHEN sid = '1' THEN r END) AS r1,
-           max(CASE WHEN sid = '2' THEN r END) AS r2,
-           max(CASE WHEN sid = '3' THEN r END) AS r3
+    SELECT date, {book}
+           {piv}
     FROM r GROUP BY date
 ),
 cl AS (
-    SELECT r1, r2, r3 FROM piv
-    WHERE r1 IS NOT NULL AND r2 IS NOT NULL AND r3 IS NOT NULL
-),
+    SELECT {book_col}{rs} FROM piv WHERE {nn}
+)"""
+
+
+@register("mean_variance_weights", f"""
+WITH {_sleeve_returns_sql(3)},
 q AS (
     SELECT count(*) AS n,
            sum(CAST(floor(r1 * 1000000000.0) AS BIGINT)) AS q1,
@@ -2501,18 +2504,7 @@ def mean_variance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape runs per group (per book / per sector sleeve) as one
     shuffle keyed on the group column.  Bit-exact vs the oracle's CTE
     replay; |det| guard drops singular covariance."""
-    panel = events_to_panel(spark, sf_dir).select("sid", "date", "close")
-    w_sid = Window.partitionBy("sid").orderBy("date")
-    r = (panel.where(F.col("sid").isin("1", "2", "3"))
-         .select("sid", "date",
-                 (F.col("close") / F.lag("close").over(w_sid)
-                  - 1).alias("r")))
-    piv = (r.groupBy("date")
-           .agg(F.max(F.when(F.col("sid") == "1", F.col("r"))).alias("r1"),
-                F.max(F.when(F.col("sid") == "2", F.col("r"))).alias("r2"),
-                F.max(F.when(F.col("sid") == "3", F.col("r"))).alias("r3"))
-           .where(F.col("r1").isNotNull() & F.col("r2").isNotNull()
-                  & F.col("r3").isNotNull()))
+    piv = _sleeve_returns(spark, sf_dir, 3)
     Q = F.lit(1_000_000_000.0)
 
     def qsum(expr, name):
@@ -2576,55 +2568,8 @@ def mean_variance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _mvw_k5_oracle() -> str:
-    from moonshot_spark.operators.markowitz import markowitz_cte_sql
-    sids = ", ".join(f"'{i}'" for i in range(1, 6))
-    piv = ",\n           ".join(
-        f"max(CASE WHEN sid = '{i}' THEN r END) AS r{i}"
-        for i in range(1, 6))
-    nn = " AND ".join(f"r{i} IS NOT NULL" for i in range(1, 6))
-    base = f"""panel AS ({PANEL_SQL}),
-r AS (
-    SELECT sid, date,
-           (close / lag(close) OVER (PARTITION BY sid ORDER BY date) - 1) AS r
-    FROM panel WHERE sid IN ({sids})
-),
-piv AS (
-    SELECT date,
-           {piv}
-    FROM r GROUP BY date
-),
-cl AS (
-    SELECT r1, r2, r3, r4, r5 FROM piv WHERE {nn}
-)"""
-    return markowitz_cte_sql(5, base, "cl")
-
-
-def _mvw_by_book_oracle() -> str:
-    from moonshot_spark.operators.markowitz import markowitz_cte_sql
-    sids = ", ".join(f"'{i}'" for i in range(1, 4))
-    piv = ",\n           ".join(
-        f"max(CASE WHEN sid = '{i}' THEN r END) AS r{i}"
-        for i in range(1, 4))
-    nn = " AND ".join(f"r{i} IS NOT NULL" for i in range(1, 4))
-    base = f"""panel AS ({PANEL_SQL}),
-r AS (
-    SELECT sid, date,
-           (close / lag(close) OVER (PARTITION BY sid ORDER BY date) - 1) AS r
-    FROM panel WHERE sid IN ({sids})
-),
-piv AS (
-    SELECT date, CAST(day(date) % 3 AS INT) AS book,
-           {piv}
-    FROM r GROUP BY date
-),
-cl AS (
-    SELECT book, r1, r2, r3 FROM piv WHERE {nn}
-)"""
-    return markowitz_cte_sql(3, base, "cl", group_cols=["book"])
-
-
-@register("mean_variance_weights_by_book", _mvw_by_book_oracle())
+@register("mean_variance_weights_by_book", markowitz_cte_sql(
+    3, _sleeve_returns_sql(3, by_book=True), "cl", group_cols=["book"]))
 def mean_variance_weights_by_book(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """GROUPED Markowitz sleeves (VERDICT r8 #4): the same k=3
@@ -2637,28 +2582,13 @@ def mean_variance_weights_by_book(spark: SparkSession,
     oracle replays the identical generated step text per group via a
     GROUP BY on the stats CTE — weights hash-match bit-exactly per
     sleeve."""
-    from moonshot_spark.operators.markowitz import markowitz_weights
-
-    panel = events_to_panel(spark, sf_dir).select("sid", "date", "close")
-    sids = [str(i) for i in range(1, 4)]
-    w_sid = Window.partitionBy("sid").orderBy("date")
-    r = (panel.where(F.col("sid").isin(sids))
-         .select("sid", "date",
-                 (F.col("close") / F.lag("close").over(w_sid)
-                  - 1).alias("r")))
-    piv = (r.groupBy("date")
-           .agg(*[F.max(F.when(F.col("sid") == s, F.col("r")))
-                  .alias(f"r{s}") for s in sids])
-           .withColumn("book", (F.dayofmonth("date") % 3).cast("int")))
-    cond = F.lit(True)
-    for s in sids:
-        cond = cond & F.col(f"r{s}").isNotNull()
-    return markowitz_weights(
-        piv.where(cond).select("book", *[f"r{s}" for s in sids]), 3,
-        group_cols=["book"])
+    sleeve = _sleeve_returns(spark, sf_dir, 3, by_book=True)
+    return markowitz_weights(sleeve.select("book", "r1", "r2", "r3"), 3,
+                             group_cols=["book"])
 
 
-@register("mean_variance_weights_k5", _mvw_k5_oracle())
+@register("mean_variance_weights_k5",
+          markowitz_cte_sql(5, _sleeve_returns_sql(5), "cl"))
 def mean_variance_weights_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-ASSET Markowitz sleeve (k=5) — the generalization of
     mean_variance_weights beyond the hand-expanded 3x3 Cramer (r7 judge
@@ -2669,19 +2599,5 @@ def mean_variance_weights_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
     text as chained CTEs, so weights hash-match bit-exactly.  Scale:
     one map-side-combinable aggregate is the only data-sized stage;
     with group_cols the same plan fits millions of sleeves at once."""
-    from moonshot_spark.operators.markowitz import markowitz_weights
-
-    panel = events_to_panel(spark, sf_dir).select("sid", "date", "close")
-    sids = [str(i) for i in range(1, 6)]
-    w_sid = Window.partitionBy("sid").orderBy("date")
-    r = (panel.where(F.col("sid").isin(sids))
-         .select("sid", "date",
-                 (F.col("close") / F.lag("close").over(w_sid)
-                  - 1).alias("r")))
-    piv = (r.groupBy("date")
-           .agg(*[F.max(F.when(F.col("sid") == s, F.col("r")))
-                  .alias(f"r{s}") for s in sids]))
-    cond = F.lit(True)
-    for s in sids:
-        cond = cond & F.col(f"r{s}").isNotNull()
-    return markowitz_weights(piv.where(cond).drop("date"), 5)
+    return markowitz_weights(
+        _sleeve_returns(spark, sf_dir, 5).drop("date"), 5)

@@ -1419,17 +1419,17 @@ def vol_target_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = panel.select("sid", "date", pct_change("close", 1, w).alias("r"))
     w10 = w.rowsBetween(-9, 0)
 
-    # the moment sums are columns before vol reads them: each reference
-    # to an un-selected window expression plans its own collect_list
-    enough = F.count("r").over(w10) >= 10
+    # the count and the moment sums are columns before the 10-row guard
+    # and vol read them: Spark plans one window function per reference
+    # to an un-selected window expression (identical ones are not merged)
     moments = rets.select(
         "sid", "date",
         F.count("r").over(w10).cast("double").alias("n"),
-        F.when(enough, fold_sum(ordered_values(
-            "date", "r", over=w10))).alias("sx"),
-        F.when(enough, fold_sum(ordered_values(
-            "date", F.col("r") * F.col("r"), over=w10))).alias("sxx"))
-    n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
+        fold_sum(ordered_values("date", "r", over=w10)).alias("sx"),
+        fold_sum(ordered_values(
+            "date", F.col("r") * F.col("r"), over=w10)).alias("sxx"))
+    n = F.col("n")
+    sx, sxx = (F.when(n >= 10, F.col(c)) for c in ("sx", "sxx"))
     vol = F.sqrt((sxx - sx * sx / n) / (n - F.lit(1)))
     mom = moments.select("sid", "date",
                          F.when(vol > 0, F.lit(1.0) / vol).alias("ivol"))
@@ -1776,11 +1776,11 @@ def portfolio_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = (results.where(F.col("field") == "Return")
             .select("sid", "date", F.col("value").alias("r")))
     folded_sid = fold_sum_exact("sid", F.coalesce(F.col("r"), F.lit(0.0)))
-    # r15 (guide §2.4): var5/tail/n_days each referenced `port` as a
-    # separate subtree, re-running the whole DMA backtest (40 Windows,
-    # 54 Exchanges in the static plan) three times per execution;
-    # persisting the one-row-per-date portfolio series computes the
-    # backtest once.  Values unchanged.
+    # r15 (don't recompute shared subtrees): var5/tail/n_days each
+    # referenced `port` as a separate subtree, re-running the whole DMA
+    # backtest (40 Windows, 54 Exchanges in the static plan) three times
+    # per execution; persisting the one-row-per-date portfolio series
+    # computes the backtest once.  Values unchanged.
     port = materialize.persist(
         rets.groupBy("date").agg(folded_sid.alias("pr")))
     var5 = port.agg(

@@ -17,7 +17,7 @@ from moonshot_spark.functions.folds import (
     fold_sum, fold_sum_exact, ordered_values,
 )
 from moonshot_spark.queries._base import (
-    COPURCHASE_GRAPH_SQL, ORACLES, register,
+    COPURCHASE_GRAPH_SQL, ORACLES, chi_square, chi_square_sql, register,
 )
 from moonshot_spark.sources.parquet import load_table
 from moonshot_spark.queries.warehouse import _copurchase_edges
@@ -2325,22 +2325,22 @@ def part_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle key and no executor ever sees a cross-block pair).
     Levenshtein is integer-valued — no float drift.
 
-    The distance runs THRESHOLDED (r15, guide §1.2 cheaper per-row
-    work): ``levenshtein(a, b, 3)`` computes the banded O(len*k) DP
+    The distance runs THRESHOLDED (r15: cheaper per-row work):
+    ``levenshtein(a, b, 3)`` computes the banded O(len*k) DP
     with early exit and returns -1 past the threshold, vs the full
     O(len^2) matrix per pair — same exact distance for every emitted
     row (``>= 0`` ≡ ``<= 3``; the DuckDB oracle keeps the plain
     two-arg form, results bit-identical).
 
     The frame is hash-repartitioned BY THE BLOCK KEY before the
-    self-join (r15, guide §2.2/§2.5 stragglers): the pair comparison's
-    CPU cost scales with Σ block², not input bytes, so byte-based
-    adaptivity under-parallelizes it — at bench SF the one-file scan +
-    broadcast join ran the whole comparison in ONE task (the r14
-    8c/32c scaling ratio of 0.33 was real serialism, not box noise).
-    defaultParallelism spreads blocks across every core; block sizes
-    bound the per-task work (no block straddles tasks, no cross-block
-    pairs)."""
+    self-join (r15: spread CPU-bound work by its cost, not its bytes):
+    the pair comparison's CPU cost scales with Σ block², not input
+    bytes, so byte-based adaptivity under-parallelizes it — at bench SF
+    the one-file scan + broadcast join ran the whole comparison in ONE
+    task (the r14 8c/32c scaling ratio of 0.33 was real serialism, not
+    box noise).  defaultParallelism spreads blocks across every core;
+    block sizes bound the per-task work (no block straddles tasks, no
+    cross-block pairs)."""
     part = load_table(spark, sf_dir, "part")
     p = part.select(
         "p_partkey", "p_brand", "p_name",
@@ -2514,58 +2514,26 @@ WITH s AS (
                 THEN 'train' ELSE 'heldout' END AS split
     FROM documents
 ),
-obs AS (
-    SELECT lang, split, CAST(count(*) AS BIGINT) AS o
-    FROM s GROUP BY lang, split
-),
-tot AS (
-    SELECT lang, split, o,
-           CAST(sum(o) OVER (PARTITION BY lang) AS DOUBLE) AS row_tot,
-           CAST(sum(o) OVER (PARTITION BY split) AS DOUBLE) AS col_tot,
-           CAST(sum(o) OVER () AS DOUBLE) AS n
-    FROM obs
-),
-cells AS (
-    SELECT lang, split,
-           (CAST(o AS DOUBLE) - row_tot * col_tot / n)
-           * (CAST(o AS DOUBLE) - row_tot * col_tot / n)
-           / (row_tot * col_tot / n) AS cell
-    FROM tot
-)
-SELECT CAST(list_reduce(list(cell ORDER BY lang, split),
-            (a, b) -> a + b) AS DOUBLE) AS chi2,
-       CAST((SELECT count(DISTINCT lang) - 1 FROM documents) AS BIGINT)
-           AS dof,
-       CAST(count(*) AS BIGINT) AS n_cells
-FROM cells
-""")
+""" + chi_square_sql(
+    "s", "lang", "split",
+    "CAST((SELECT count(DISTINCT lang) - 1 FROM documents) AS BIGINT)"))
 def split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-quality audit: chi-square independence between the md5
     train/heldout assignment and language — the check that certifies the
     hash split did not systematically starve a language (a biased split
     silently skews eval).  Composes the deterministic hash split with
-    the log-free chi-square machinery (source_lang_chisq); a chi2 far
-    above dof pages the pipeline owner.  All counts map-side; the cell
-    fold is pinned (lang, split) order."""
+    the log-free chi-square test (``_base.chi_square``, as
+    source_lang_chisq); a chi2 far above dof pages the pipeline owner.
+    All counts map-side; the cell fold is pinned (lang, split) order."""
     docs = load_table(spark, sf_dir, "documents")
     bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
                                  1, 8), 16, 10).cast("bigint") % 100)
     s = docs.select(
         "lang", F.when(bucket < 80, "train").otherwise("heldout")
         .alias("split"))
-    obs = s.groupBy("lang", "split").agg(F.count("*").alias("o"))
-    row_tot = F.sum("o").over(Window.partitionBy("lang")).cast("double")
-    col_tot = F.sum("o").over(Window.partitionBy("split")).cast("double")
-    grand = obs.agg(F.sum("o").cast("double").alias("n"))
-    e = row_tot * col_tot / F.col("n")
-    cells = (obs.crossJoin(F.broadcast(grand))
-             .select("lang", "split",
-                     ((F.col("o").cast("double") - e)
-                      * (F.col("o").cast("double") - e) / e).alias("cell")))
     dof = docs.agg((F.countDistinct("lang") - F.lit(1)).cast("bigint")
                    .alias("dof"))
-    return (cells.agg(fold_sum_exact(["lang", "split"], "cell").alias("chi2"),
-                      F.count("*").alias("n_cells"))
+    return (chi_square(s, "lang", "split")
             .crossJoin(F.broadcast(dof))
             .select("chi2", "dof", "n_cells"))
 
@@ -2845,7 +2813,7 @@ def dedup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE window spec for the election and the size (r15): count(*)
     # over the full ordered frame equals the partition count, so the
     # unordered second WindowExec pass is gone — one exchange, one
-    # sort, one window pass (guide §2.4).
+    # sort, one window pass (one window spec per partitioning).
     wo = (Window.partitionBy("cluster_id")
           .orderBy(F.col("n_chars").desc(), "doc_id")
           .rowsBetween(Window.unboundedPreceding,
@@ -3319,6 +3287,18 @@ def _span_oracle_prefix(k: int = 8, carry_lang: bool = False) -> str:
 )"""
 
 
+def _half_clones(docs: DataFrame, *carry: str) -> DataFrame:
+    """The span queries' clone seed (``all_docs`` in
+    ``_span_oracle_prefix``): the first half of each of the first 25
+    docs' tokens as doc ``doc_id + 1000000``, with the ``carry``
+    columns."""
+    toks = F.split(F.col("text"), " ")
+    half = F.slice(toks, 1, F.floor(F.size(toks) / 2).cast("int"))
+    return docs.where(F.col("doc_id") < 25).select(
+        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
+        F.array_join(half, " ").alias("text"), *carry)
+
+
 @register("duplicate_text_spans", _span_oracle_prefix(k=8) + """
 SELECT doc_id,
        CAST(min(pos) AS BIGINT) AS span_start,
@@ -3340,12 +3320,7 @@ def duplicate_text_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from moonshot_spark.datapipe.spans import duplicate_spans
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    half = F.slice(toks, 1, F.floor(F.size(toks) / 2).cast("int"))
-    clones = docs.where(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        F.array_join(half, " ").alias("text"))
-    return duplicate_spans(docs.unionByName(clones), k=8)
+    return duplicate_spans(docs.unionByName(_half_clones(docs)), k=8)
 
 
 @register("exact_substr_incremental", _span_oracle_prefix(k=8) + """
@@ -3374,13 +3349,8 @@ def exact_substr_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_duplicate_spans, window_hash_index)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    half = F.slice(toks, 1, F.floor(F.size(toks) / 2).cast("int"))
-    batch = docs.where(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        F.array_join(half, " ").alias("text"))
     index = window_hash_index(docs, k=8)
-    return incremental_duplicate_spans(batch, index, k=8)
+    return incremental_duplicate_spans(_half_clones(docs), index, k=8)
 
 
 @register("hard_negative_mining", """
@@ -3770,13 +3740,7 @@ def exact_substr_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents") \
         .select("doc_id", "text", "lang")
-    toks = F.split(F.col("text"), " ")
-    half = F.slice(toks, 1, F.floor(F.size(toks) / 2).cast("int"))
-    clones = docs.where(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        F.array_join(half, " ").alias("text"),
-        F.col("lang"))
-    corpus = docs.unionByName(clones)
+    corpus = docs.unionByName(_half_clones(docs, "lang"))
     spans = duplicate_spans(corpus, k=8)
     scrubbed = scrub_spans(corpus, spans)
     return (scrubbed.groupBy("lang")

@@ -473,7 +473,7 @@ def window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle by sid; the frame list is materialized per row (bounded
     at 10 elements) and reduced JVM-side, no Python."""
     panel = events_to_panel(spark, sf_dir)
-    # r15 (guide §1.2 per-task work): the frame element at distance d
+    # r15 (cheaper per-row work): the frame element at distance d
     # from the current row always carries weight 2^-d (the old form's
     # m-1-i IS that distance), so the collect_list(struct)/array_sort/
     # transform x2/aggregate x2 per-row array machinery — all

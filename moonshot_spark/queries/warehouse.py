@@ -1355,7 +1355,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str,
     query; the deg aggregate over the materialized edges is ~0.05 s)."""
     li = load_table(spark, sf_dir, "lineitem")
     # ONE exchange keyed on `basket` serves the dedup, the basket-size
-    # window AND the self-join (r15, guide §2.4): hash partitioning on
+    # window AND the self-join (r15; one shuffle per key, not per
+    # consumer): hash partitioning on
     # `basket` satisfies the dedup aggregate's ClusteredDistribution(
     # [basket, item]) (subset key) and IS the pair-join key.  The item-
     # frequency window (`cnt >= 2`, the graph definition's support

@@ -30,18 +30,8 @@ def _with_corrupt_field(schema: StructType) -> StructType:
                       + [StructField(CORRUPT_COL, StringType(), True)])
 
 
-def read_json_with_quarantine(spark: SparkSession, path: str,
-                              schema: StructType
-                              ) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantine) from line-delimited JSON: clean rows parse the
-    full schema; quarantine rows carry the raw malformed line.  Spark
-    requires the corrupt column to be cached/materialized-safe, so the
-    capture column is part of the read schema, not a post-hoc filter."""
-    full = _with_corrupt_field(schema)
-    raw = (spark.read.schema(full)
-           .option("mode", "PERMISSIVE")
-           .option("columnNameOfCorruptRecord", CORRUPT_COL)
-           .json(path))
+def _split_quarantine(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(clean rows without the capture column, raw text of the rest)."""
     # Spark disallows referencing ONLY the corrupt column over a raw file
     # scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN): the parsed frame must be
     # materialized first.  Persisted here; at 100 TB persist(DISK_ONLY)
@@ -53,6 +43,21 @@ def read_json_with_quarantine(spark: SparkSession, path: str,
     return clean, quarantine
 
 
+def read_json_with_quarantine(spark: SparkSession, path: str,
+                              schema: StructType
+                              ) -> tuple[DataFrame, DataFrame]:
+    """(clean, quarantine) from line-delimited JSON: clean rows parse the
+    full schema; quarantine rows carry the raw malformed line.  Spark
+    requires the corrupt column to be cached/materialized-safe, so the
+    capture column is part of the read schema, not a post-hoc filter."""
+    full = _with_corrupt_field(schema)
+    return _split_quarantine(
+        spark.read.schema(full)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .json(path))
+
+
 def read_csv_with_quarantine(spark: SparkSession, path: str,
                              schema: StructType, header: bool = True
                              ) -> tuple[DataFrame, DataFrame]:
@@ -60,13 +65,9 @@ def read_csv_with_quarantine(spark: SparkSession, path: str,
     reader: type-mismatched or column-count-mismatched lines land in the
     quarantine with their raw text."""
     full = _with_corrupt_field(schema)
-    raw = (spark.read.schema(full)
-           .option("header", str(header).lower())
-           .option("mode", "PERMISSIVE")
-           .option("columnNameOfCorruptRecord", CORRUPT_COL)
-           .csv(path))
-    raw = materialize.persist(raw)   # see read_json_with_quarantine
-    clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    quarantine = (raw.where(F.col(CORRUPT_COL).isNotNull())
-                  .select(F.col(CORRUPT_COL).alias("raw_record")))
-    return clean, quarantine
+    return _split_quarantine(
+        spark.read.schema(full)
+        .option("header", str(header).lower())
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .csv(path))

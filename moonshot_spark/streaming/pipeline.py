@@ -238,27 +238,56 @@ def stream_enrich(events: DataFrame, dim: DataFrame,
     return events.join(F.broadcast(dim), on, "left")
 
 
+def _versioned_index_stream(doc_stream: DataFrame, index_root: str,
+                            out_path: str, checkpoint_dir: str,
+                            index_ddl: str, step, text_col: str,
+                            id_col: str):
+    """foreachBatch writer of the versioned-index streams below.
+
+    Each micro-batch of NEW documents (``id_col``, ``text_col``) meets
+    the persisted index through ``step(docs, index) -> (rows,
+    new_index)``.  The batch's ``rows`` land in ``out_path/batch_id=N``
+    and ``new_index`` in ``index_root/v=N``, both with overwrite; the
+    index a batch reads is the newest ``v=M`` with M STRICTLY BELOW its
+    own batch id (an empty ``index_ddl`` frame before the first).  So a
+    crash between the index write and the checkpoint commit replays the
+    batch against the same pre-batch index it saw the first time, never
+    against its own half-committed update, and rewrites the same two
+    directories: exactly-once output, the same recipe as
+    ``stream_trade_orders``.  Old versions can be vacuumed by retention;
+    at production scale the index would live in a transactional table
+    format, but the read-below-own-version protocol is the same."""
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        docs = batch_df.select(F.col(id_col), F.col(text_col))
+        version = _latest_index_version(spark, index_root, batch_id)
+        index = (spark.read.parquet(f"{index_root}/v={version}")
+                 if version is not None
+                 else spark.createDataFrame([], index_ddl))
+        rows, new_index = step(docs, index)
+        rows.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        new_index.write.mode("overwrite").parquet(
+            f"{index_root}/v={batch_id}")
+
+    return (doc_stream.writeStream
+            .foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append"))
+
+
 def stream_incremental_exact_dedup(doc_stream: DataFrame, index_root: str,
                                    dups_path: str, checkpoint_dir: str,
                                    text_col: str = "text",
                                    id_col: str = "doc_id"):
     """Streaming corpus-index dedup: each micro-batch of NEW documents is
     deduped against the persisted fingerprint index
-    (datapipe/incremental_dedup.py) and the index is advanced — the
-    streaming face of the batch-incremental operators (judge r7 item 8).
-
-    Exactly-once discipline (same recipe as stream_trade_orders):
-    - duplicate rows land in ``dups_path/batch_id=N`` with overwrite, so
-      a replayed batch rewrites its own output idempotently;
-    - the index is VERSIONED, ``index_root/v=N`` written per batch, and
-      each batch reads the newest version STRICTLY BELOW its own
-      batch_id — a crash between index write and checkpoint commit
-      replays the batch against the same pre-batch index it saw the
-      first time, never against its own half-committed update.
-    Old versions are tiny (one row per distinct fingerprint) and can be
-    vacuumed by retention; at production scale the index would live in a
-    transactional table format, but the read-below-own-version protocol
-    is the same.
+    (datapipe/incremental_dedup.py), its duplicate rows land in
+    ``dups_path/batch_id=N`` and the index advances to ``index_root/v=N``
+    under the versioned-index protocol of ``_versioned_index_stream`` —
+    the streaming face of the batch-incremental operators.  The index is
+    tiny (one row per distinct fingerprint).
 
     Emitted rows carry the duplicate stats AS OF the batch (n_docs =
     union count at arrival time); (keep_id, dup_id) pairs over the whole
@@ -268,29 +297,14 @@ def stream_incremental_exact_dedup(doc_stream: DataFrame, index_root: str,
     from moonshot_spark.datapipe.incremental_dedup import (
         incremental_exact_dups, merge_exact_index)
 
-    def _load_index(spark, below: int):
-        version = _latest_index_version(spark, index_root, below)
-        if version is not None:
-            return spark.read.parquet(f"{index_root}/v={version}")
-        return spark.createDataFrame(
-            [], "fingerprint string, n_docs bigint, keep_id bigint")
+    def step(docs: DataFrame, index: DataFrame):
+        return (incremental_exact_dups(docs, index, text_col, id_col),
+                merge_exact_index(index, docs, text_col, id_col))
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        docs = batch_df.select(F.col(id_col), F.col(text_col))
-        index = _load_index(spark, batch_id)
-        dups = incremental_exact_dups(docs, index, text_col, id_col)
-        dups.write.mode("overwrite").parquet(
-            f"{dups_path}/batch_id={batch_id}")
-        merge_exact_index(index, docs, text_col, id_col) \
-            .write.mode("overwrite").parquet(f"{index_root}/v={batch_id}")
-
-    return (doc_stream.writeStream
-            .foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append"))
+    return _versioned_index_stream(
+        doc_stream, index_root, dups_path, checkpoint_dir,
+        "fingerprint string, n_docs bigint, keep_id bigint", step,
+        text_col, id_col)
 
 
 def stream_incremental_minhash_pairs(doc_stream: DataFrame,
@@ -304,45 +318,29 @@ def stream_incremental_minhash_pairs(doc_stream: DataFrame,
     signatures probe the persisted signature index, candidate pairs
     involving the batch land in ``pairs_path/batch_id=N``, and the index
     gains the batch's signatures — the MinHash sibling of
-    ``stream_incremental_exact_dedup`` with the same versioned-index /
-    read-below-own-batch replay protocol.  Signatures are pure md5
+    ``stream_incremental_exact_dedup`` under the same
+    ``_versioned_index_stream`` protocol.  Signatures are pure md5
     functions of the text, so the union of all emitted batches equals
     the full-recompute ``lsh_candidate_pairs`` over everything ingested
     (each pair surfaces exactly once, in the batch its LATER member
-    arrives — ids assumed unique across batches)."""
+    arrives — ids assumed unique across batches, so earlier batches'
+    pairs never involve this batch's ids)."""
     from moonshot_spark.datapipe.dedup import minhash_signatures
     from moonshot_spark.datapipe.incremental_dedup import (
         incremental_minhash_pairs)
 
-    def _load_sigs(spark, below: int):
-        version = _latest_index_version(spark, sig_index_root, below)
-        if version is not None:
-            return spark.read.parquet(f"{sig_index_root}/v={version}")
-        return spark.createDataFrame(
-            [], f"{id_col} bigint, minhash_sig array<string>")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        docs = batch_df.select(F.col(id_col), F.col(text_col))
-        index_sigs = _load_sigs(spark, batch_id)
+    def step(docs: DataFrame, index_sigs: DataFrame):
         pairs = incremental_minhash_pairs(
             docs, index_sigs, text_col, id_col,
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n)
-        # drop new-new pairs' duplicates vs prior batches is unnecessary:
-        # prior pairs never involve this batch's ids (unique-id contract)
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_path}/batch_id={batch_id}")
         new_sigs = minhash_signatures(docs, text_col, id_col,
                                       num_hashes, shingle_n)
-        index_sigs.unionByName(new_sigs).write.mode("overwrite").parquet(
-            f"{sig_index_root}/v={batch_id}")
+        return pairs, index_sigs.unionByName(new_sigs)
 
-    return (doc_stream.writeStream
-            .foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append"))
+    return _versioned_index_stream(
+        doc_stream, sig_index_root, pairs_path, checkpoint_dir,
+        f"{id_col} bigint, minhash_sig array<string>", step,
+        text_col, id_col)
 
 
 def stream_incremental_exactsubstr(doc_stream: DataFrame, index_root: str,
@@ -354,8 +352,8 @@ def stream_incremental_exactsubstr(doc_stream: DataFrame, index_root: str,
     (``datapipe/spans.py::window_hash_index``), the batch's duplicated
     spans land in ``spans_path/batch_id=N``, and the index absorbs the
     batch's window counts — the span-grain sibling of
-    ``stream_incremental_exact_dedup`` with the same versioned-index /
-    read-below-own-batch crash-replay protocol.
+    ``stream_incremental_exact_dedup`` under the same
+    ``_versioned_index_stream`` protocol.
 
     Window hashes are pure md5 functions of the text, so each emitted
     batch equals ``duplicate_spans(everything ingested so far)``
@@ -364,32 +362,16 @@ def stream_incremental_exactsubstr(doc_stream: DataFrame, index_root: str,
     from moonshot_spark.datapipe.spans import (
         incremental_duplicate_spans, merge_window_index)
 
-    def _load_index(spark, below: int):
-        version = _latest_index_version(spark, index_root, below)
-        if version is not None:
-            return spark.read.parquet(f"{index_root}/v={version}")
-        return spark.createDataFrame(
-            [], "window_md5 string, n_occ bigint")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        docs = batch_df.select(F.col(id_col), F.col(text_col))
-        index = _load_index(spark, batch_id)
-        spans = incremental_duplicate_spans(docs, index, k=k,
+    def step(docs: DataFrame, index: DataFrame):
+        return (incremental_duplicate_spans(docs, index, k=k,
                                             text_col=text_col,
-                                            id_col=id_col)
-        spans.write.mode("overwrite").parquet(
-            f"{spans_path}/batch_id={batch_id}")
-        merge_window_index(index, docs, k=k, text_col=text_col,
-                           id_col=id_col).write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id}")
+                                            id_col=id_col),
+                merge_window_index(index, docs, k=k, text_col=text_col,
+                                   id_col=id_col))
 
-    return (doc_stream.writeStream
-            .foreachBatch(process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append"))
+    return _versioned_index_stream(
+        doc_stream, index_root, spans_path, checkpoint_dir,
+        "window_md5 string, n_occ bigint", step, text_col, id_col)
 
 
 def stream_ivf_ingest(vec_stream: DataFrame, index_root: str,

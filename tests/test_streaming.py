@@ -541,6 +541,62 @@ def test_stream_incremental_exact_dedup(spark, tmp_path):
     assert final_idx == rebuilt
 
 
+def test_versioned_index_stream_replays_a_batch_idempotently(
+        spark, tmp_path, monkeypatch):
+    """Crash replay: a batch that wrote its rows and its index version
+    but crashed before the checkpoint commit runs again with the same
+    batch id.  The rerun reads the same pre-batch index version (not
+    its own half-committed ``v=N``) and rewrites the same rows and
+    index."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+    from pyspark.sql.types import (LongType, StringType, StructField,
+                                   StructType)
+
+    from moonshot_spark.streaming import pipeline
+
+    batch_fns = []
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch",
+                        lambda self, fn: batch_fns.append(fn) or self)
+    versions_read = []
+    latest = pipeline._latest_index_version
+
+    def recording_latest(spark_, root, below):
+        versions_read.append(latest(spark_, root, below))
+        return versions_read[-1]
+
+    monkeypatch.setattr(pipeline, "_latest_index_version", recording_latest)
+
+    schema = StructType([StructField("doc_id", LongType()),
+                         StructField("text", StringType())])
+    src = str(tmp_path / "docs")
+    os.makedirs(src)
+    index_root = str(tmp_path / "index")
+    dups_path = str(tmp_path / "dups")
+    pipeline.stream_incremental_exact_dedup(
+        spark.readStream.schema(schema).parquet(src), index_root,
+        dups_path, str(tmp_path / "ckpt"))
+    (process_batch,) = batch_fns
+
+    b0 = spark.createDataFrame([(i, f"text {i % 4}") for i in range(10)],
+                               schema)
+    b1 = spark.createDataFrame(
+        [(i, f"text {i % 4}") for i in range(10, 18)], schema)
+
+    def written():
+        return (sorted(map(tuple, spark.read.parquet(
+                    f"{dups_path}/batch_id=1").collect())),
+                sorted(map(tuple, spark.read.parquet(
+                    f"{index_root}/v=1").collect())))
+
+    process_batch(b0, 0)
+    process_batch(b1, 1)
+    first = written()
+    process_batch(b1, 1)
+    assert versions_read == [None, 0, 0]
+    assert written() == first
+    assert len(first[0]) == 8
+
+
 def test_stream_incremental_minhash_pairs(spark, tmp_path):
     """Union of per-batch LSH pair outputs equals the batch
     full-recompute lsh_candidate_pairs over everything ingested."""

@@ -9,7 +9,11 @@ physical plan of the frame the query returns, from
 builder ``collect()``s while it builds (``trade()``'s order stubs, say).
 Expression ids (``#123``) and ``plan_id=123`` are normalized, so two
 dumps of the same code ``diff`` clean; dump the parent and the change of
-a refactor into two directories and ``diff -r`` them.  The tables are
+a refactor into two directories and ``diff -r`` them.  FileScan metadata
+(``DataFilters``, ``PushedFilters``) is printed uncut: Spark abbreviates
+it to ``spark.sql.maxMetadataStringLength`` characters before the ids
+are masked, so a cut string would end at a different character whenever
+its ids have more or fewer digits.  The tables are
 read from ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 tables, as for
 ``bench.py``).
 """
@@ -23,23 +27,21 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 
+_METADATA_LENGTH = "spark.sql.maxMetadataStringLength"
+
+
 def normalize(plan: str) -> str:
     """Strip the per-session counters from a plan string."""
     return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
 
 
-def main(argv):
-    if len(argv) < 2:
-        sys.exit(__doc__)
-    out_dir, names = argv[0], argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def dump(spark, out_dir: str, names, sf_dir: str) -> None:
+    """Write ``out_dir/<name>.txt`` for each query in ``names``."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from moonshot_spark.plans.audit import executed_plan
     from moonshot_spark.queries import QUERIES
-    from moonshot_spark.session import get_spark
 
-    spark = get_spark("dump_plans")
     os.makedirs(out_dir, exist_ok=True)
     collected = []
     collect = DataFrame.collect
@@ -48,6 +50,8 @@ def main(argv):
         collected.append(executed_plan(df))
         return collect(df)
 
+    cut = spark.conf.get(_METADATA_LENGTH)
+    spark.conf.set(_METADATA_LENGTH, str(2**31 - 1))
     DataFrame.collect = recording_collect
     try:
         for name in names:
@@ -59,6 +63,16 @@ def main(argv):
             print("wrote", path, flush=True)
     finally:
         DataFrame.collect = collect
+        spark.conf.set(_METADATA_LENGTH, cut)
+
+
+def main(argv):
+    if len(argv) < 2:
+        sys.exit(__doc__)
+    from moonshot_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    dump(get_spark("dump_plans"), argv[0], argv[1:], sf_dir)
 
 
 if __name__ == "__main__":
