@@ -15,7 +15,7 @@ assigned against the SAME persisted centroids and appended to its cell
 directories (``mode("append")``); results equal a full rebuild because
 cell assignment is a pure function of (vector, centroids).
 
-**Cell-skew maintenance** (VERDICT r9 item 4): a drifted corpus
+**Cell-skew maintenance**: a drifted corpus
 concentrates appends into a few hot cells, silently degrading a probe
 of the hot cell toward a full scan.  The layout is therefore TWO-LEVEL
 — ``__cell=<c>/__subcell=<s>`` with ``__subcell=0`` meaning "unsplit" —
@@ -39,9 +39,9 @@ and three maintenance surfaces exist:
   seeds) and only that cell directory is rewritten;
 - ``retrain_cell``: explicit per-cell retrain at ANY arity — the
   deepening move when a cell has drifted past what its current
-  ``n_sub`` sub-centroids can separate (VERDICT r10 missing #1).
+  ``n_sub`` sub-centroids can separate.
 
-**Retrain numbering / crash safety** (ADVICE r10): each cell's meta
+**Retrain numbering / crash safety**: each cell's meta
 entry carries a sub-cell ``base`` — its sub-cells occupy
 ``__subcell = base .. base + n_sub - 1``.  A retrain assigns the new
 generation at ``base' = base + n_sub`` (a fresh, non-colliding range),
@@ -62,14 +62,13 @@ concurrent ``append_to_ivf_index`` that read the meta before a
 retrain's flip can land rows in the OLD ``__subcell`` range after the
 retrain's delete pass runs — those rows would then be permanently
 invisible to ``nprobe_sub`` probes (the new meta prunes to the new
-base), a lasting loss rather than the transient double-count (ADVICE
-r11).  **Enforced since r13**: every public writer takes a per-index
-``flock`` lease (``_writer_lease`` — a sibling lock file of the index
-root) so a concurrent writer blocks or times out instead of
-interleaving; on remote object-store roots where ``flock`` cannot
-reach, the lease is a no-op and production serializes via the table
-format's commit (Iceberg/Delta) or an index version swap
-(streaming/pipeline.py's versioned-index pattern) — there, run
+base), a lasting loss rather than the transient double-count.  Every
+public writer therefore holds the index's writer lock (``_lock_path``,
+taken through ``moonshot_spark/locks.py::writer_lock``), so a concurrent
+writer waits or times out instead of interleaving.  On object stores
+without atomic create-if-absent that lock is best-effort; there,
+serialize through the table format's commit (Iceberg/Delta) or an index
+version swap (streaming/pipeline.py's versioned-index pattern), and run
 ``repair_retrains`` + a ``compact_ivf_ingest`` after any suspected
 overlap to re-home stray rows.
 
@@ -81,13 +80,12 @@ quantizer half).
 
 from __future__ import annotations
 
-import contextlib
 import json
-import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from moonshot_spark.locks import writer_lock
 
 __all__ = ["write_ivf_index", "append_to_ivf_index", "probe_ivf_index",
            "ivf_cell_stats", "split_hot_cells", "compact_ivf_ingest",
@@ -103,299 +101,18 @@ _MARKER = "_ivf_retrain_{cell}.json"
 # tighten it without threading a kwarg through every writer signature.
 WRITER_LEASE_TIMEOUT = 600.0
 
-# A remote marker lease whose mtime is older than FACTOR x timeout is
-# presumed to belong to a crashed writer and is taken over (flock needs
-# no such heuristic — the kernel drops it on process death; a marker
-# file on an object store survives its owner).
-MARKER_LEASE_STALE_FACTOR = 2.0
 
-
-class _MarkerLease:
-    """Create-if-absent marker-file writer lease for index roots where
-    ``flock`` cannot reach (object stores; VERDICT r13 item 6).
-
-    Protocol: atomically create ``<root>.__ivf_writer.lock.json``
-    containing ``{owner, acquired_utc}``; a second writer polls until
-    the marker disappears or ``timeout`` elapses (TimeoutError).  A
-    marker older than ``MARKER_LEASE_STALE_FACTOR x timeout`` is
-    presumed crashed and deleted (ONE documented race: two writers can
-    both observe staleness and both "win" takeover — acceptable because
-    takeover only happens after a crash window, and the post-incident
-    runbook is ``repair_retrains`` + ``compact_ivf_ingest``, same as
-    the module docstring's overlap recovery).  Release deletes the
-    marker.
-
-    The filesystem is reached through three injected callables so the
-    same protocol runs against the Hadoop FileSystem API in production
-    and a plain local directory in tests (local fs simulating
-    object-store semantics):
-
-    - ``create_atomic(content: bytes) -> bool`` — create-if-absent,
-      False when the marker already exists;
-    - ``mtime() -> float | None`` — marker modification time (epoch
-      seconds), None when absent;
-    - ``delete() -> None`` — remove the marker (idempotent);
-    - ``read() -> bytes | None`` (optional) — marker content, None when
-      absent.  When provided, ``release()`` verifies ownership before
-      deleting (ADVICE r14: an unconditional delete after a stale
-      takeover would remove the USURPER's marker and admit a third
-      writer — the victim of a takeover must not cascade it);
-    - ``touch() -> None`` (optional) — bump the marker mtime.  When
-      provided, ``heartbeat()`` keeps a slow-but-alive writer's marker
-      fresh so the stale-takeover horizon measures crash age, not hold
-      time (ADVICE r14: the horizon is FACTOR x the *acquire* timeout,
-      which must not double as a max-hold bound).
-
-    HONESTY NOTE: on HDFS ``create(overwrite=false)`` is atomic and
-    this lease is sound; on S3-like stores without atomic
-    create-if-absent it is BEST-EFFORT (two near-simultaneous creates
-    can both succeed) — strictly better than the silent no-op it
-    replaces, and the acquire emits a RuntimeWarning saying so.
-    """
-
-    POLL_SEC = 1.0
-
-    def __init__(self, create_atomic, mtime, delete,
-                 read=None, touch=None,
-                 owner: str | None = None,
-                 timeout: float | None = None):
-        import socket
-        self._create = create_atomic
-        self._mtime = mtime
-        self._delete = delete
-        self._read = read
-        self._touch = touch
-        self.owner = owner or f"{socket.gethostname()}:{os.getpid()}"
-        self.timeout = WRITER_LEASE_TIMEOUT if timeout is None else timeout
-
-    def _held_by_other(self) -> str | None:
-        """Owner recorded in the marker when it is NOT us (None when the
-        marker is absent, unreadable, or ours).  Unreadable/unparseable
-        content is treated as ours-by-default only for pre-``read``
-        markers; a parseable foreign owner always wins."""
-        if self._read is None:
-            return None
-        try:
-            raw = self._read()
-        except Exception:
-            return None
-        if raw is None:
-            return None
-        try:
-            owner = json.loads(raw.decode("utf-8")).get("owner")
-        except Exception:
-            return None
-        return owner if (owner and owner != self.owner) else None
-
-    def acquire(self) -> None:
-        import time as _time
-        payload = json.dumps(
-            {"owner": self.owner,
-             "acquired_utc": _time.time()}).encode("utf-8")
-        deadline = _time.monotonic() + self.timeout
-        stale_after = MARKER_LEASE_STALE_FACTOR * self.timeout
-        while True:
-            if self._create(payload):
-                return
-            ts = self._mtime()
-            if ts is not None and (_time.time() - ts) > stale_after:
-                # presumed-crashed owner: take the marker over
-                self._delete()
-                continue
-            if _time.monotonic() >= deadline:
-                raise TimeoutError(
-                    "IVF writer marker lease not acquired within "
-                    f"{self.timeout}s (held marker age: "
-                    f"{None if ts is None else _time.time() - ts})")
-            _time.sleep(min(self.POLL_SEC, self.timeout / 10 or 0.01))
-
-    def heartbeat(self) -> None:
-        """Refresh the held marker's mtime so a long build never looks
-        stale to rival writers.  No-op without a ``touch`` callable or
-        when the marker is no longer ours (stolen after a takeover —
-        touching it would keep the usurper's marker alive)."""
-        if self._touch is None or self._held_by_other() is not None:
-            return
-        try:
-            self._touch()
-        except Exception:
-            pass  # best-effort: a missed beat only risks early takeover
-
-    def release(self) -> None:
-        other = self._held_by_other()
-        if other is not None:
-            import warnings
-            warnings.warn(
-                f"IVF writer marker lease released by {self.owner!r} but "
-                f"currently held by {other!r} (stale takeover occurred "
-                "mid-build) — leaving the marker in place; run "
-                "repair_retrains/compact_ivf_ingest to reconcile "
-                "overlapping writes", RuntimeWarning, stacklevel=2)
-            return
-        self._delete()
-
-
-def _hadoop_marker_lease(path: str, spark: SparkSession) -> _MarkerLease:
-    """A ``_MarkerLease`` over the Hadoop FileSystem API for remote
-    index roots (hdfs/s3a/gs/abfs...)."""
-    jvm = spark._jvm
-    marker = path.rstrip("/") + ".__ivf_writer.lock.json"
-    hpath = jvm.org.apache.hadoop.fs.Path(marker)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def create_atomic(content: bytes) -> bool:
-        try:
-            out = fs.create(hpath, False)   # overwrite=False
-        except Exception:
-            return False                    # already exists (or race)
-        try:
-            out.write(bytearray(content))
-        finally:
-            out.close()
-        return True
-
-    def mtime() -> float | None:
-        try:
-            return fs.getFileStatus(hpath).getModificationTime() / 1000.0
-        except Exception:
-            return None
-
-    def delete() -> None:
-        try:
-            fs.delete(hpath, False)
-        except Exception:
-            pass
-
-    def read() -> bytes | None:
-        try:
-            stream = fs.open(hpath)
-        except Exception:
-            return None
-        try:
-            out = bytearray()
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                out.append(b)
-            return bytes(out)
-        finally:
-            stream.close()
-
-    def touch() -> None:
-        import time as _time
-        # mtime-only update; -1 leaves atime untouched
-        fs.setTimes(hpath, int(_time.time() * 1000), -1)
-
-    return _MarkerLease(create_atomic, mtime, delete, read=read,
-                        touch=touch)
-
-
-@contextlib.contextmanager
-def _writer_lease(path: str):
-    """Per-index-root EXCLUSIVE writer lease (VERDICT r12 item 4).
-
-    The retrain protocol's one unenforced invariant was single-writer:
-    an ``append_to_ivf_index`` that read the meta before a concurrent
-    retrain's flip can land rows in the OLD ``__subcell`` range after
-    the retrain's delete pass — a permanent loss (rows invisible to
-    ``nprobe_sub`` probes), not the documented transient double-count.
-    Every public writer now takes this lease, so the second writer
-    BLOCKS until the first finishes (or raises ``TimeoutError`` after
-    ``WRITER_LEASE_TIMEOUT``) instead of interleaving.
-
-    Mechanics: an ``flock`` on a SIBLING file of the index root
-    (``<root>.__ivf_writer.lock`` — a sibling, not a child, so
-    ``write_ivf_index``'s ``mode("overwrite")`` directory wipe cannot
-    unlink the held inode and let two writers in).  Reuses the
-    crash-safe kernel-owned lock from ``sources/cache.py`` (released on
-    fd close, including process crash; no stale-lock takeover races).
-
-    Local / NFSv4 paths use the kernel ``flock`` (crash-safe, no stale
-    state).  Remote object-store roots (``s3://``/``hdfs://``...) use
-    the create-if-absent ``_MarkerLease`` through the Hadoop FileSystem
-    API (VERDICT r13 item 6 — previously a silent no-op exactly where a
-    100-TB deployment runs): atomic and sound on HDFS, best-effort on
-    stores without atomic create (a RuntimeWarning says so), with a
-    stale-marker takeover for crashed owners.  If no active
-    SparkSession exists to reach the Hadoop FS, the lease degrades to
-    the old no-op but now WARNS loudly instead of staying silent.
-    READERS are never blocked: probes take no lock (same visibility
-    windows as before).
-    """
-    parsed = urlparse(path)
-    if parsed.scheme not in ("", "file"):
-        import warnings
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            warnings.warn(
-                f"IVF writer lease UNENFORCED for {path!r}: remote "
-                "scheme with no active SparkSession to reach the "
-                "Hadoop FileSystem — coordinate writers externally "
-                "(table-format commit or index-version swap)",
-                RuntimeWarning, stacklevel=3)
-            yield None
-            return
-        warnings.warn(
-            f"IVF writer lease for {path!r} uses a create-if-absent "
-            "marker file: atomic on HDFS, BEST-EFFORT on object stores "
-            "without atomic create (two simultaneous writers can both "
-            "acquire); prefer table-format commits for hard "
-            "serialization", RuntimeWarning, stacklevel=3)
-        lease = _hadoop_marker_lease(path, spark)
-        lease.acquire()
-        # Heartbeat while held: a build longer than the stale horizon
-        # (FACTOR x timeout) must not look crashed to rival writers
-        # (ADVICE r14).  Daemon thread, interval well inside the horizon.
-        import threading
-        stop_beat = threading.Event()
-        interval = max(MARKER_LEASE_STALE_FACTOR * lease.timeout / 4.0, 1.0)
-
-        def _beat():
-            while not stop_beat.wait(interval):
-                lease.heartbeat()
-
-        beater = threading.Thread(target=_beat, daemon=True,
-                                  name="ivf-lease-heartbeat")
-        beater.start()
-        try:
-            yield path.rstrip("/") + ".__ivf_writer.lock.json"
-        finally:
-            stop_beat.set()
-            beater.join(timeout=1.0)
-            lease.release()
-        return
-    from moonshot_spark.sources.cache import _FileLock
-
-    local = parsed.path if parsed.scheme == "file" else path
-    lock_path = local.rstrip("/") + ".__ivf_writer.lock"
-    parent = os.path.dirname(lock_path)
-    if parent:
-        os.makedirs(parent, exist_ok=True)
-    with _FileLock(lock_path, timeout=WRITER_LEASE_TIMEOUT):
-        yield lock_path
-
-
-def _leased(path_param: str):
-    """Decorator: run the whole writer under ``_writer_lease`` of the
-    named path parameter.  Private helpers (``_retrain_one``) stay
-    unlocked — the lease is NOT re-entrant (flock conflicts across fds
-    even within one process), so public writers must never call each
-    other."""
-    import functools
-    import inspect
-
-    def deco(fn):
-        sig = inspect.signature(fn)
-
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            bound = sig.bind(*args, **kwargs)
-            with _writer_lease(bound.arguments[path_param]):
-                return fn(*args, **kwargs)
-        return wrapper
-    return deco
+def _lock_path(path: str) -> str:
+    """The writer lock of the index at ``path``.  Every public writer
+    holds it, so a second writer waits (or times out) instead of
+    interleaving: an append that read the meta before a concurrent
+    retrain's flip would land rows in the old ``__subcell`` range after
+    the retrain deletes it, where ``nprobe_sub`` probes never look.  The
+    lock file is a sibling of the root, not a child, so
+    ``write_ivf_index``'s overwrite cannot delete it while it is held.
+    Private helpers (``_retrain_one``) take no lock, and public writers
+    never call each other: the lock is not re-entrant."""
+    return path.rstrip("/") + ".__ivf_writer.lock"
 
 
 def _norm_subs(subs: dict | None) -> dict[int, dict]:
@@ -445,23 +162,29 @@ def _read_meta(spark: SparkSession, path: str) -> dict[int, dict]:
 
 
 def _read_json(spark: SparkSession, path: str, name: str):
-    """The JSON object in ``path/name``, or None if there is none.  The
-    bytes are copied JVM-side: a Python bytearray handed to Java
-    ``readFully`` is passed BY VALUE (py4j) and never filled.  Underscore
-    names such as ``_META`` stay out of parquet discovery, which skips
-    them."""
-    fs, root = _fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(root, name)
+    """The JSON object in ``path/name``, or None if there is none.
+    Underscore names such as ``_META`` stay out of parquet discovery,
+    which skips them."""
+    text = _read_text(spark, f"{path.rstrip('/')}/{name}")
+    return None if text is None else json.loads(text)
+
+
+def _read_text(spark: SparkSession, path: str) -> str | None:
+    """The UTF-8 text of the file at ``path``, or None if there is none.
+    The bytes are copied JVM-side in one call: a Python bytearray handed
+    to Java ``readFully`` is passed BY VALUE (py4j) and never filled, and
+    ``stream.read()`` costs one py4j call per byte."""
+    fs, jpath = _fs(spark, path)
     if not fs.exists(jpath):
         return None
+    jvm = spark.sparkContext._jvm
     stream = fs.open(jpath)
     baos = jvm.java.io.ByteArrayOutputStream()
     try:
         jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, False)
     finally:
         stream.close()
-    return json.loads(baos.toString("UTF-8"))
+    return baos.toString("UTF-8")
 
 
 def _assign(df: DataFrame, centroids: list[list[float]], vec_col: str,
@@ -493,7 +216,7 @@ def write_ivf_index(corpus: DataFrame, centroids: list[list[float]],
     write's own file layout.  ``sub_codebooks`` pre-splits the given
     cells at write time (identical layout to ``split_hot_cells`` after
     the fact — the rebuild-equivalence contract)."""
-    with _writer_lease(path):
+    with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
         (_assign(corpus, centroids, vec_col, sub_codebooks)
          .write.mode("overwrite").partitionBy(_CELL, _SUBCELL).parquet(path))
         spark = corpus.sparkSession
@@ -512,7 +235,7 @@ def append_to_ivf_index(new_vecs: DataFrame, centroids: list[list[float]],
     racing a retrain's flip is exactly the row-stranding interleave the
     lease exists to exclude."""
     spark = new_vecs.sparkSession
-    with _writer_lease(path):
+    with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
         subs = _read_meta(spark, path)
         (_assign(new_vecs, centroids, vec_col, subs or None)
          .write.mode("append").partitionBy(_CELL, _SUBCELL).parquet(path))
@@ -556,7 +279,6 @@ def ivf_cell_stats(spark: SparkSession, path: str) -> DataFrame:
                       "max_subcell_rows")
 
 
-@_leased("path")
 def split_hot_cells(spark: SparkSession, path: str,
                     centroids: list[list[float]],
                     max_share: float = 0.2,
@@ -580,44 +302,45 @@ def split_hot_cells(spark: SparkSession, path: str,
 
     Returns the NEW sub-codebooks (merged meta is persisted next to the
     index for ``append_to_ivf_index``/``probe_ivf_index``)."""
-    existing = _read_meta(spark, path)
-    stats = {r["cell"]: r for r in ivf_cell_stats(spark, path).collect()}
-    hot = [c for c, r in sorted(stats.items())
-           if c not in existing
-           and (r["row_share"] > max_share
-                or (max_rows is not None and r["n_rows"] > max_rows))]
-    new_subs: dict[int, list[list[float]]] = {}
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs, root = _fs(spark, path)
-    from moonshot_spark.datapipe.similarity import ivf_assign_col
+    with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
+        existing = _read_meta(spark, path)
+        stats = {r["cell"]: r for r in ivf_cell_stats(spark, path).collect()}
+        hot = [c for c, r in sorted(stats.items())
+               if c not in existing
+               and (r["row_share"] > max_share
+                    or (max_rows is not None and r["n_rows"] > max_rows))]
+        new_subs: dict[int, list[list[float]]] = {}
+        jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        fs, root = _fs(spark, path)
+        from moonshot_spark.datapipe.similarity import ivf_assign_col
 
-    for c in hot:
-        cell_rows = (spark.read.parquet(path)
-                     .where((F.col(_CELL) == c) & (F.col(_SUBCELL) == 0))
-                     .drop(_CELL, _SUBCELL))
-        seeds = (cell_rows.orderBy(id_col).limit(n_sub)
-                 .select(vec_col).collect())
-        sub_cb = [[float(x) for x in r[0]] for r in seeds]
-        if len(sub_cb) < 2:
-            continue                      # nothing to split
-        new_subs[c] = sub_cb
-        # append the re-assigned rows under __subcell=1..n_sub, then
-        # drop the stale __subcell=0 directory (see module docstring on
-        # the non-atomicity window)
-        (cell_rows
-         .withColumn(_CELL, F.lit(c))
-         .withColumn(_SUBCELL,
-                     (ivf_assign_col(vec_col, sub_cb) + F.lit(1))
-                     .cast("int"))
-         .write.mode("append").partitionBy(_CELL, _SUBCELL).parquet(path))
-        stale = jvm_path(root, f"{_CELL}={c}/{_SUBCELL}=0")
-        if fs.exists(stale):
-            fs.delete(stale, True)
-    if new_subs:
-        merged = dict(existing)
-        merged.update(new_subs)
-        _write_meta(spark, path, merged)
-    return new_subs
+        for c in hot:
+            cell_rows = (spark.read.parquet(path)
+                         .where((F.col(_CELL) == c) & (F.col(_SUBCELL) == 0))
+                         .drop(_CELL, _SUBCELL))
+            seeds = (cell_rows.orderBy(id_col).limit(n_sub)
+                     .select(vec_col).collect())
+            sub_cb = [[float(x) for x in r[0]] for r in seeds]
+            if len(sub_cb) < 2:
+                continue                      # nothing to split
+            new_subs[c] = sub_cb
+            # append the re-assigned rows under __subcell=1..n_sub, then
+            # drop the stale __subcell=0 directory (see module docstring on
+            # the non-atomicity window)
+            (cell_rows
+             .withColumn(_CELL, F.lit(c))
+             .withColumn(_SUBCELL,
+                         (ivf_assign_col(vec_col, sub_cb) + F.lit(1))
+                         .cast("int"))
+             .write.mode("append").partitionBy(_CELL, _SUBCELL).parquet(path))
+            stale = jvm_path(root, f"{_CELL}={c}/{_SUBCELL}=0")
+            if fs.exists(stale):
+                fs.delete(stale, True)
+        if new_subs:
+            merged = dict(existing)
+            merged.update(new_subs)
+            _write_meta(spark, path, merged)
+        return new_subs
 
 
 def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
@@ -703,7 +426,6 @@ def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
                     F.col("rank").cast("int")))
 
 
-@_leased("batch_root")
 def compact_ivf_ingest(spark: SparkSession, stream_root: str,
                        batch_root: str) -> None:
     """Compact a streaming-ingest root (``ingest=<batch>/__cell=.../
@@ -717,10 +439,11 @@ def compact_ivf_ingest(spark: SparkSession, stream_root: str,
     over.  Writes are one partitioned write of the unioned generations;
     run it between stream restarts or against a snapshot — the same
     compaction window any file-format maintenance has."""
-    df = spark.read.parquet(stream_root).drop("ingest")
-    (df.write.mode("overwrite").partitionBy(_CELL, _SUBCELL)
-     .parquet(batch_root))
-    _write_meta(spark, batch_root, _read_meta(spark, stream_root))
+    with writer_lock(_lock_path(batch_root), WRITER_LEASE_TIMEOUT):
+        df = spark.read.parquet(stream_root).drop("ingest")
+        (df.write.mode("overwrite").partitionBy(_CELL, _SUBCELL)
+         .parquet(batch_root))
+        _write_meta(spark, batch_root, _read_meta(spark, stream_root))
 
 
 def _delete_subcell_range(spark: SparkSession, path: str, cell: int,
@@ -779,7 +502,8 @@ def _retrain_one(spark: SparkSession, path: str, cell: int, n_sub: int,
                  (ivf_assign_col(vec_col, sub_cb) + F.lit(new_base))
                  .cast("int"))
      .write.mode("append").partitionBy(_CELL, _SUBCELL).parquet(path))
-    # flip the meta for THIS cell immediately (ADVICE r10): from here on
+    # flip the meta for THIS cell now, not after the caller's loop, so a
+    # crash mid-loop leaves no retrained cell unrecorded; from here on
     # sub-probes prune to the new, complete generation
     meta[cell] = entry
     _write_meta(spark, path, meta)
@@ -790,12 +514,11 @@ def _retrain_one(spark: SparkSession, path: str, cell: int, n_sub: int,
     return entry
 
 
-@_leased("path")
 def retrain_cell(spark: SparkSession, path: str, cell: int, n_sub: int,
                  id_col: str = "vec_id", vec_col: str = "embedding"
                  ) -> dict | None:
     """Retrain ONE cell's sub-codebook at an explicit arity — the
-    DEEPENING move (VERDICT r10 missing #1): when a split cell's hot
+    DEEPENING move: when a split cell's hot
     sub-cell keeps absorbing drifted appends past what its current
     ``n_sub`` sub-centroids can separate (``ivf_cell_stats.
     max_subcell_rows`` keeps growing), re-split the whole cell with a
@@ -807,11 +530,11 @@ def retrain_cell(spark: SparkSession, path: str, cell: int, n_sub: int,
     <returned entry>})`` (pinned by test).  Returns the new meta entry
     ``{"codebook": ..., "base": ...}`` or None if the cell has <2
     distinct seed members."""
-    meta = _read_meta(spark, path)
-    return _retrain_one(spark, path, cell, n_sub, meta, id_col, vec_col)
+    with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
+        meta = _read_meta(spark, path)
+        return _retrain_one(spark, path, cell, n_sub, meta, id_col, vec_col)
 
 
-@_leased("path")
 def repair_retrains(spark: SparkSession, path: str) -> dict[int, str]:
     """Finish or roll back retrains interrupted mid-flight (crash
     between marker creation and marker removal).  For each
@@ -822,28 +545,31 @@ def repair_retrains(spark: SparkSession, path: str) -> dict[int, str]:
     BACK by deleting the new-range directories.  Either way the index
     returns to a state where meta and directories agree and the retrain
     can be re-run.  Returns {cell: "finished" | "rolled_back"}."""
-    fs, root = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    out: dict[int, str] = {}
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (name.startswith("_ivf_retrain_") and name.endswith(".json")):
-            continue
-        m = _read_json(spark, path, name)
-        meta = _read_meta(spark, path)
-        c = int(m["cell"])
-        cur = meta.get(c)
-        if cur is not None and cur["base"] == m["new_base"]:
-            _delete_subcell_range(spark, path, c, m["old_base"], m["old_n"])
-            out[c] = "finished"
-        else:
-            _delete_subcell_range(spark, path, c, m["new_base"], m["n_sub"])
-            out[c] = "rolled_back"
-        fs.delete(jvm_path(root, name), False)
-    return out
+    with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
+        fs, root = _fs(spark, path)
+        jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        out: dict[int, str] = {}
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if not (name.startswith("_ivf_retrain_")
+                    and name.endswith(".json")):
+                continue
+            m = _read_json(spark, path, name)
+            meta = _read_meta(spark, path)
+            c = int(m["cell"])
+            cur = meta.get(c)
+            if cur is not None and cur["base"] == m["new_base"]:
+                _delete_subcell_range(spark, path, c, m["old_base"],
+                                      m["old_n"])
+                out[c] = "finished"
+            else:
+                _delete_subcell_range(spark, path, c, m["new_base"],
+                                      m["n_sub"])
+                out[c] = "rolled_back"
+            fs.delete(jvm_path(root, name), False)
+        return out
 
 
-@_leased("path")
 def rebalance_split_cells(spark: SparkSession, path: str,
                           centroids: list[list[float]],
                           max_subcell_share: float = 0.5,
@@ -867,26 +593,27 @@ def rebalance_split_cells(spark: SparkSession, path: str,
     (``_retrain_one``): append-then-delete under a fresh ``__subcell``
     base, per-cell meta persistence, and a marker that
     ``repair_retrains`` can replay — a crash mid-loop never loses a
-    cell or leaves the meta disagreeing with the directories (ADVICE
-    r10).  ``centroids`` is accepted for signature stability but the
+    cell or leaves the meta disagreeing with the directories.
+    ``centroids`` is accepted for signature stability but the
     rewrite needs only the cell's own rows.  ``stats`` lets a
     maintenance loop that just ran ``ivf_cell_stats`` pass the frame in
-    instead of paying a second full index scan (VERDICT r11); when
+    instead of paying a second full index scan; when
     omitted, fresh stats are computed.  Returns {cell: new meta
     entry}."""
-    meta = _read_meta(spark, path)
-    if not meta:
-        return {}
-    if stats is None:
-        stats = ivf_cell_stats(spark, path)
-    stats = {r["cell"]: r for r in stats.collect()}
-    drifted = [c for c in sorted(meta)
-               if c in stats and stats[c]["n_rows"] > 0
-               and stats[c]["max_subcell_rows"]
-               > max_subcell_share * stats[c]["n_rows"]]
-    new_subs: dict[int, dict] = {}
-    for c in drifted:
-        entry = _retrain_one(spark, path, c, n_sub, meta, id_col, vec_col)
-        if entry is not None:
-            new_subs[c] = entry
-    return new_subs
+    with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
+        meta = _read_meta(spark, path)
+        if not meta:
+            return {}
+        if stats is None:
+            stats = ivf_cell_stats(spark, path)
+        stats = {r["cell"]: r for r in stats.collect()}
+        drifted = [c for c in sorted(meta)
+                   if c in stats and stats[c]["n_rows"] > 0
+                   and stats[c]["max_subcell_rows"]
+                   > max_subcell_share * stats[c]["n_rows"]]
+        new_subs: dict[int, dict] = {}
+        for c in drifted:
+            entry = _retrain_one(spark, path, c, n_sub, meta, id_col, vec_col)
+            if entry is not None:
+                new_subs[c] = entry
+        return new_subs

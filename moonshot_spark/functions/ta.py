@@ -32,14 +32,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
-
-def sid_window(order: str = "date") -> WindowSpec:
-    return Window.partitionBy("sid").orderBy(order)
+from moonshot_spark.functions.window import sid_window
 
 
-def trailing(n: int, order: str = "date") -> WindowSpec:
+def trailing(n: int) -> WindowSpec:
     """Bounded trailing frame of n rows (current inclusive)."""
-    return sid_window(order).rowsBetween(-(n - 1), 0)
+    return sid_window().rowsBetween(-(n - 1), 0)
 
 
 def sma(col: Column | str, n: int) -> Column:

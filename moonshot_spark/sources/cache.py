@@ -20,6 +20,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from moonshot_spark.locks import writer_lock
+
 DEFAULT_CACHE_DIR = os.environ.get("MOONSHOT_CACHE_DIR", "/tmp/moonshot_spark_cache")
 
 
@@ -32,149 +34,8 @@ def _fingerprint(prefix: str, kwargs: dict) -> str:
     return f"{prefix}_{digest}"
 
 
-try:
-    import fcntl
-except ImportError:          # non-POSIX: fall back to the O_EXCL protocol
-    fcntl = None
-
-
-class _FlockLock:
-    """``flock``-based serialization of concurrent cache writers
-    (reference _cache.py:147-151,181-184 uses the ``FileLock`` package).
-
-    The kernel owns the lock state: it is released when the holder's fd
-    closes — including on process crash — so there is no stale-lock
-    condition and no takeover protocol to race on.  The lock file itself
-    is never unlinked (unlinking while waiters block on the old inode
-    would let a new acquirer open a fresh inode and two holders enter);
-    a leftover ``.lock`` file in the cache dir is inert.  Works on local
-    filesystems and NFSv4; platforms without ``fcntl`` use the
-    ``_ExclLock`` fallback below."""
-
-    def __init__(self, path: str, timeout: float = 60.0,
-                 stale_after: float = 300.0):
-        self.path = path
-        self.timeout = timeout
-        self._fd: int | None = None
-
-    def __enter__(self):
-        deadline = time.time() + self.timeout
-        fd = os.open(self.path, os.O_CREAT | os.O_WRONLY, 0o644)
-        while True:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                # pid breadcrumb for humans inspecting a busy cache dir
-                try:
-                    os.truncate(fd, 0)
-                    os.pwrite(fd, str(os.getpid()).encode(), 0)
-                except OSError:
-                    pass
-                self._fd = fd
-                return self
-            except OSError:
-                if time.time() > deadline:
-                    os.close(fd)
-                    raise TimeoutError(
-                        f"cache lock {self.path} not acquired within "
-                        f"{self.timeout:.0f}s")
-                time.sleep(0.05)
-
-    def __exit__(self, *exc):
-        if self._fd is not None:
-            os.close(self._fd)           # kernel releases the flock
-            self._fd = None
-
-
-class _ExclLock:
-    """O_EXCL lock-file fallback for platforms without ``fcntl``.
-    Spin-waits for a held lock; a lock older
-    than ``stale_after`` seconds is treated as abandoned (crashed
-    writer) and taken over.
-
-    Takeover is identity-guarded: each acquisition writes a unique token
-    into the lock file, and a waiter claims a stale lock by atomically
-    renaming it aside and checking the renamed file still carries the
-    token it observed as stale.  If the holder released-and-reacquired
-    in between (fresh token), the file is linked back into place, so a
-    live lock is never destroyed by a racing takeover.  ``__exit__``
-    likewise only removes a lock that still carries our own token.
-
-    Known residual race (why ``_FlockLock`` is preferred wherever
-    ``fcntl`` exists): if a fresh holder's ``__exit__`` runs in the
-    instant its lock sits renamed-aside, the restore re-links a token
-    whose holder already exited, and the lock stays orphaned until
-    ``stale_after`` passes.  No POSIX compare-and-delete exists to close
-    this atomically with lock files alone."""
-
-    def __init__(self, path: str, timeout: float = 60.0,
-                 stale_after: float = 300.0):
-        self.path = path
-        self.timeout = timeout
-        self.stale_after = stale_after
-        self.token: str | None = None
-
-    @staticmethod
-    def _read_token(path: str) -> str | None:
-        try:
-            with open(path) as f:
-                return f.read()
-        except OSError:
-            return None
-
-    def __enter__(self):
-        deadline = time.time() + self.timeout
-        n_takeovers = 0
-        while True:
-            token = f"{os.getpid()}:{os.urandom(8).hex()}"
-            try:
-                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, token.encode())
-                os.close(fd)
-                self.token = token
-                return self
-            except FileExistsError:
-                stale_token = self._read_token(self.path)
-                try:
-                    held_for = time.time() - os.path.getmtime(self.path)
-                except OSError:      # holder released between checks
-                    continue
-                if held_for > self.stale_after and stale_token is not None:
-                    n_takeovers += 1
-                    aside = f"{self.path}.stale-{os.getpid()}-{n_takeovers}"
-                    try:
-                        os.rename(self.path, aside)
-                    except OSError:  # another waiter claimed it first
-                        continue
-                    if self._read_token(aside) == stale_token:
-                        os.remove(aside)     # confirmed abandoned
-                    else:
-                        # released-and-reacquired in the window: restore
-                        # the fresh holder's lock (link fails silently if
-                        # yet another acquirer already recreated the path,
-                        # in which case the fresh claim stands on its own)
-                        try:
-                            os.link(aside, self.path)
-                        except OSError:
-                            pass
-                        os.remove(aside)
-                    continue
-                if time.time() > deadline:
-                    raise TimeoutError(
-                        f"cache lock {self.path} held for {held_for:.0f}s")
-                time.sleep(0.05)
-
-    def __exit__(self, *exc):
-        # only remove a lock that is still OURS — if a waiter (wrongly or
-        # rightly) took our lock over while we ran long, the path now
-        # belongs to them and removing it would unlock a third party
-        if self._read_token(self.path) == self.token:
-            try:
-                os.remove(self.path)
-            except OSError:
-                pass
-
-
-_FileLock = _FlockLock if fcntl is not None else _ExclLock
+# How long a cache writer waits for a key's writer lock.
+_LOCK_TIMEOUT = 60.0
 
 
 def _source_mtime(paths: list[str]) -> float:
@@ -250,7 +111,7 @@ class Cache:
             # entries are recomputable by definition.
             if os.path.exists(data_path):
                 try:
-                    with _FileLock(data_path + ".lock"):
+                    with writer_lock(data_path + ".lock", _LOCK_TIMEOUT):
                         try:
                             return spark.read.parquet(data_path)
                         except Exception:
@@ -274,7 +135,7 @@ class Cache:
         """Write-through, serialized against concurrent writers of the
         same key (reference _cache.py:147-151): the Parquet lands in a
         writer-private temp dir, then the swap (+ atomic meta replace)
-        happens under an O_EXCL lock file, so a concurrent set of the
+        happens under the key's writer lock, so a concurrent set of the
         same key can never interleave into a half-written entry.
         Readers don't lock: meta is replaced atomically LAST, so a read
         sees either the complete old entry or the complete new one.  A
@@ -288,7 +149,7 @@ class Cache:
         tmp_path = f"{data_path}.tmp-{os.getpid()}-{int(time.time()*1e6)}"
         df.write.mode("overwrite").parquet(tmp_path)
         try:
-            with _FileLock(data_path + ".lock"):
+            with writer_lock(data_path + ".lock", _LOCK_TIMEOUT):
                 shutil.rmtree(data_path, ignore_errors=True)
                 os.rename(tmp_path, data_path)
                 meta_tmp = f"{meta_path}.tmp-{os.getpid()}"
@@ -311,7 +172,8 @@ class Cache:
 
     def clear(self, prefix: str | None = None) -> None:
         """Delete cached entries (all, or one prefix's).  Lock files stay:
-        see ``_FlockLock`` for why one must never be unlinked."""
+        see ``moonshot_spark/locks.py`` for why one must never be
+        unlinked."""
         for name in os.listdir(self.cache_dir):
             if name.endswith(".lock"):
                 continue

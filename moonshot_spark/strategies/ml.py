@@ -49,8 +49,8 @@ class KerasModelHandle:
             except ImportError:
                 raise MoonshotParameterError(
                     "loading {0!r} requires keras (or tensorflow); install "
-                    "it or register a custom loader via "
-                    "register_model_loader".format(path))
+                    "it or pass the loaded model object as "
+                    "model=".format(path))
         return load_model(path)
 
     def _ensure(self):
@@ -70,42 +70,20 @@ class KerasModelHandle:
         return {"_path": self._path, "_model": model}
 
 
-def _load_joblib(path):
-    import joblib
-    return joblib.load(path)
-
-
-def _load_keras(path):
-    handle = KerasModelHandle(path)
-    handle._ensure()    # fail fast on the driver (missing backend / bad file)
-    return handle
-
-
-def _load_pickle(path):
+def _load_model_file(path: str):
+    """The model stored at ``path``, by the reference's dispatch (ml.py:
+    211-225): "joblib" in the path → joblib, a keras ``.h5``/``.keras``
+    file → a ``KerasModelHandle``, anything else → pickle.  Other
+    frameworks pass their model object as ``model=`` instead."""
+    if "joblib" in path:
+        import joblib
+        return joblib.load(path)
+    if "keras.h5" in path or path.endswith((".h5", ".keras")):
+        handle = KerasModelHandle(path)
+        handle._ensure()    # fail fast on the driver (missing backend / bad file)
+        return handle
     with open(path, "rb") as f:
         return pickle.load(f)
-
-
-#: ordered (name, matcher, loader) registry — reference ml.py:211-225
-#: dispatch: "joblib" in path → joblib, "keras.h5" in path → keras,
-#: else pickle.  Extensible for other frameworks via register_model_loader.
-MODEL_LOADERS: list[tuple] = [
-    ("joblib", lambda p: "joblib" in p, _load_joblib),
-    ("keras", lambda p: "keras.h5" in p or p.endswith((".h5", ".keras")),
-     _load_keras),
-    ("pickle", lambda p: True, _load_pickle),
-]
-
-
-def register_model_loader(name: str, matches, load, prepend: bool = True):
-    """Register a custom model loader: ``matches(path) -> bool``,
-    ``load(path) -> model``.  Prepended by default so custom loaders win
-    over the built-in dispatch."""
-    entry = (name, matches, load)
-    if prepend:
-        MODEL_LOADERS.insert(0, entry)
-    else:
-        MODEL_LOADERS.append(entry)
 
 
 class MoonshotML(Moonshot):
@@ -116,7 +94,7 @@ class MoonshotML(Moonshot):
     ``predictions_to_signals``.
     """
 
-    #: model file path; dispatched through MODEL_LOADERS (reference
+    #: model file path; loaded by ``_load_model_file`` (reference
     #: ml.py:211-225: joblib / keras .h5 / pickle)
     MODEL: str | None = None
 
@@ -142,13 +120,7 @@ class MoonshotML(Moonshot):
             return
         if not self.MODEL:
             raise MoonshotParameterError("please specify a model file or object")
-        path = self.MODEL
-        for _name, matches, load in MODEL_LOADERS:
-            if matches(path):
-                self.model = load(path)
-                return
-        raise MoonshotParameterError(
-            f"no model loader matches {path!r}")   # unreachable: pickle is a catch-all
+        self.model = _load_model_file(self.MODEL)
 
     # -- scoring (reference ml.py:444-517) ----------------------------- #
 

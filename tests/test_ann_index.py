@@ -595,237 +595,62 @@ def test_writer_lease_serializes_concurrent_writers(spark, emb, cents,
 
 def test_writer_lease_remote_noop_warns_without_session(monkeypatch):
     """Remote roots with NO active SparkSession (no Hadoop FS reachable)
-    degrade to the old no-op — but now WARN loudly instead of staying
-    silent (VERDICT r13 item 6), and never error."""
+    take no lock, WARN that it is unenforced, and never error."""
     from pyspark.sql import SparkSession
 
-    from moonshot_spark.datapipe.ann_index import _writer_lease
+    from moonshot_spark.datapipe.ann_index import WRITER_LEASE_TIMEOUT
+    from moonshot_spark.datapipe.ann_index import _lock_path
+    from moonshot_spark.locks import writer_lock
 
     monkeypatch.setattr(SparkSession, "getActiveSession",
                         classmethod(lambda cls: None))
-    with pytest.warns(RuntimeWarning, match="UNENFORCED"):
-        with _writer_lease("s3a://bucket/ivf") as lease:
-            assert lease is None
-    with pytest.warns(RuntimeWarning, match="UNENFORCED"):
-        with _writer_lease("hdfs://nn/ivf") as lease:
-            assert lease is None
-
-
-def _local_marker_callables(marker_path, with_read=False):
-    """create/mtime/delete over a local file with create-if-absent
-    semantics (O_EXCL) — a local fs simulating the object-store marker
-    protocol, mirroring the Hadoop ``create(path, overwrite=false)``
-    contract.  ``with_read=True`` adds the read/touch callables the
-    ownership-checked release and heartbeat use (ADVICE r14)."""
-    import os
-    import time
-
-    def create_atomic(content: bytes) -> bool:
-        try:
-            fd = os.open(marker_path,
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        try:
-            os.write(fd, content)
-        finally:
-            os.close(fd)
-        return True
-
-    def mtime():
-        try:
-            return os.stat(marker_path).st_mtime
-        except FileNotFoundError:
-            return None
-
-    def delete():
-        try:
-            os.remove(marker_path)
-        except FileNotFoundError:
-            pass
-
-    if not with_read:
-        return create_atomic, mtime, delete
-
-    def read():
-        try:
-            with open(marker_path, "rb") as f:
-                return f.read()
-        except FileNotFoundError:
-            return None
-
-    def touch():
-        now = time.time()
-        os.utime(marker_path, (now, now))
-
-    return create_atomic, mtime, delete, read, touch
-
-
-def test_marker_lease_release_respects_takeover(tmp_path):
-    """ADVICE r14 (medium): after a stale takeover, the ORIGINAL
-    (slow-but-alive) writer's release must NOT delete the usurper's
-    marker — an unconditional delete would admit a third writer and
-    cascade the mutual-exclusion violation."""
-    import json
-    import os
-    import time
-
-    import moonshot_spark.datapipe.ann_index as ann
-    from moonshot_spark.datapipe.ann_index import _MarkerLease
-
-    marker = str(tmp_path / "ivf.__ivf_writer.lock.json")
-    c, m, d, r, t = _local_marker_callables(marker, with_read=True)
-    victim = _MarkerLease(c, m, d, read=r, touch=t,
-                          owner="victim", timeout=0.5)
-    victim.acquire()
-    # stale takeover by a rival
-    old = time.time() - ann.MARKER_LEASE_STALE_FACTOR * 0.5 - 1.0
-    os.utime(marker, (old, old))
-    usurper = _MarkerLease(c, m, d, read=r, touch=t,
-                           owner="usurper", timeout=0.5)
-    usurper.POLL_SEC = 0.05
-    usurper.acquire()
-    # the victim's release must leave the usurper's marker intact
-    with pytest.warns(RuntimeWarning, match="stale takeover"):
-        victim.release()
-    assert json.load(open(marker))["owner"] == "usurper"
-    # and the victim's heartbeat must not refresh a stolen marker
-    stamp = os.stat(marker).st_mtime
-    os.utime(marker, (stamp - 5, stamp - 5))
-    victim.heartbeat()
-    assert os.stat(marker).st_mtime == pytest.approx(stamp - 5, abs=0.01)
-    usurper.release()
-    assert not os.path.exists(marker)
-
-
-def test_marker_lease_heartbeat_keeps_marker_fresh(tmp_path):
-    """ADVICE r14: a long-held lease heartbeats (mtime refresh) so the
-    stale horizon measures crash age, not hold time — a slow build is
-    never mistaken for a crashed writer."""
-    import os
-    import time
-
-    from moonshot_spark.datapipe.ann_index import _MarkerLease
-
-    marker = str(tmp_path / "ivf.__ivf_writer.lock.json")
-    c, m, d, r, t = _local_marker_callables(marker, with_read=True)
-    holder = _MarkerLease(c, m, d, read=r, touch=t,
-                          owner="holder", timeout=0.5)
-    holder.acquire()
-    old = time.time() - 100.0
-    os.utime(marker, (old, old))
-    holder.heartbeat()
-    assert time.time() - os.stat(marker).st_mtime < 5.0
-    holder.release()
-
-
-def test_marker_lease_lifecycle(tmp_path):
-    """Marker lease over create-if-absent storage: acquire creates the
-    marker with the owner recorded, a second writer times out while it
-    is held, release deletes it, and the second writer then proceeds."""
-    import json
-    import os
-
-    from moonshot_spark.datapipe.ann_index import _MarkerLease
-
-    marker = str(tmp_path / "ivf.__ivf_writer.lock.json")
-    c, m, d = _local_marker_callables(marker)
-    first = _MarkerLease(c, m, d, owner="writer-1", timeout=5.0)
-    first.acquire()
-    assert json.load(open(marker))["owner"] == "writer-1"
-
-    second = _MarkerLease(c, m, d, owner="writer-2", timeout=0.3)
-    second.POLL_SEC = 0.05
-    with pytest.raises(TimeoutError):
-        second.acquire()
-    assert json.load(open(marker))["owner"] == "writer-1"  # still held
-
-    first.release()
-    assert not os.path.exists(marker)
-    second.acquire()                       # now succeeds
-    assert json.load(open(marker))["owner"] == "writer-2"
-    second.release()
-    second.release()                       # idempotent
-
-
-def test_marker_lease_stale_takeover(tmp_path):
-    """A marker whose mtime is older than STALE_FACTOR x timeout belongs
-    to a presumed-crashed writer (object-store markers survive their
-    owner, unlike flock) and is taken over; a FRESH marker is not."""
-    import json
-    import os
-    import time
-
-    import moonshot_spark.datapipe.ann_index as ann
-    from moonshot_spark.datapipe.ann_index import _MarkerLease
-
-    marker = str(tmp_path / "ivf.__ivf_writer.lock.json")
-    c, m, d = _local_marker_callables(marker)
-    crashed = _MarkerLease(c, m, d, owner="crashed", timeout=0.5)
-    crashed.acquire()
-    # backdate past the stale horizon: the next writer takes over
-    old = time.time() - ann.MARKER_LEASE_STALE_FACTOR * 0.5 - 1.0
-    os.utime(marker, (old, old))
-    taker = _MarkerLease(c, m, d, owner="taker", timeout=0.5)
-    taker.POLL_SEC = 0.05
-    taker.acquire()
-    assert json.load(open(marker))["owner"] == "taker"
-    taker.release()
-
-
-def test_writer_lease_remote_uses_hadoop_marker(spark, tmp_path):
-    """With an active session, the remote branch goes through the real
-    Hadoop FileSystem callables.  Drive ``_hadoop_marker_lease`` against
-    the Hadoop *local* FS (same ``create(path, overwrite=false)`` API an
-    hdfs:// root would hit): held marker blocks a second writer, release
-    frees it."""
-    import os
-
-    import moonshot_spark.datapipe.ann_index as ann
-    from moonshot_spark.datapipe.ann_index import _hadoop_marker_lease
-
-    root = str(tmp_path / "ivf")
-    marker = root + ".__ivf_writer.lock.json"
-    lease = _hadoop_marker_lease(root, spark)
-    lease.acquire()
-    assert os.path.exists(marker)
-
-    rival = _hadoop_marker_lease(root, spark)
-    rival.timeout = 0.3
-    rival.POLL_SEC = 0.05
-    with pytest.raises(TimeoutError):
-        rival.acquire()
-    lease.release()
-    assert not os.path.exists(marker)
-    rival.acquire()
-    rival.release()
+    for root in ("s3a://bucket/ivf", "hdfs://nn/ivf"):
+        with pytest.warns(RuntimeWarning, match="UNENFORCED"):
+            with writer_lock(_lock_path(root),
+                             WRITER_LEASE_TIMEOUT) as lease:
+                assert lease is None
 
 
 def test_writer_lease_remote_scheme_warns_best_effort(spark, monkeypatch):
     """A remote-scheme root with an active session WARNS (best-effort on
-    stores without atomic create) and acquires/releases the marker
-    through the Hadoop FS — verified by stubbing the FS factory with the
-    local-file callables so no object-store connector is needed."""
-    import moonshot_spark.datapipe.ann_index as ann
+    stores without atomic create) and holds a marker lease through the
+    Hadoop store, here replaced by an in-memory one so no object-store
+    connector is needed."""
+    import time
 
-    calls = {"acquired": 0, "released": 0}
+    import moonshot_spark.locks as locks
+    from moonshot_spark.datapipe.ann_index import _lock_path
 
-    class FakeLease:
-        timeout = 0.5   # the heartbeat wiring reads lease.timeout
+    files = {}
 
-        def acquire(self):
-            calls["acquired"] += 1
-
-        def heartbeat(self):
+    class MemoryStore:
+        def __init__(self, spark, root):
             pass
 
-        def release(self):
-            calls["released"] += 1
+        def create(self, path, text):
+            if path in files:
+                return False
+            files[path] = text
+            return True
 
-    monkeypatch.setattr(ann, "_hadoop_marker_lease",
-                        lambda path, spark: FakeLease())
+        def read(self, path):
+            return files.get(path)
+
+        def mtime(self, path):
+            return time.time() if path in files else None
+
+        def rename(self, src, dst):
+            return False
+
+        def delete(self, path):
+            files.pop(path, None)
+
+        def touch(self, path):
+            pass
+
+    monkeypatch.setattr(locks, "_HadoopStore", MemoryStore)
+    marker = "s3a://bucket/ivf.__ivf_writer.lock"
     with pytest.warns(RuntimeWarning, match="BEST-EFFORT"):
-        with ann._writer_lease("s3a://bucket/ivf") as lease:
-            assert lease == "s3a://bucket/ivf.__ivf_writer.lock.json"
-            assert calls == {"acquired": 1, "released": 0}
-    assert calls == {"acquired": 1, "released": 1}
+        with locks.writer_lock(_lock_path("s3a://bucket/ivf"), 0.5) as lease:
+            assert lease == marker and marker in files
+    assert files == {}

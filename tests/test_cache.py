@@ -59,13 +59,14 @@ def test_clear_keeps_a_held_lock_file(cache):
     lock a fresh inode while the first still holds the old one."""
     import threading
 
-    from moonshot_spark.sources.cache import _FileLock, _fingerprint
+    from moonshot_spark.locks import writer_lock
+    from moonshot_spark.sources.cache import _fingerprint
 
     data_path, _ = cache._paths(_fingerprint("prices", {"a": 1}))
     held, done = threading.Event(), threading.Event()
 
     def hold():
-        with _FileLock(data_path + ".lock"):
+        with writer_lock(data_path + ".lock", 60.0):
             held.set()
             done.wait(10)
 
@@ -76,7 +77,7 @@ def test_clear_keeps_a_held_lock_file(cache):
         cache.clear()
         cache.clear("prices")
         with pytest.raises(TimeoutError):
-            with _FileLock(data_path + ".lock", timeout=0.2):
+            with writer_lock(data_path + ".lock", timeout=0.2):
                 pass
     finally:
         done.set()
@@ -117,12 +118,13 @@ def test_concurrent_writers_serialize(spark, tmp_path):
     # a complete write from exactly one writer, not an interleaving
     assert len({r["writer"] for r in rows}) == 1
     # no temp debris; the flock file may persist (never unlinked — see
-    # _FlockLock) but must be released, i.e. immediately acquirable
+    # moonshot_spark/locks.py) but must be released, i.e. immediately
+    # acquirable
     assert [n for n in os.listdir(tmp_path / "cc") if ".tmp-" in n] == []
-    from moonshot_spark.sources.cache import _FileLock
+    from moonshot_spark.locks import writer_lock
     locks = [n for n in os.listdir(tmp_path / "cc") if n.endswith(".lock")]
     for n in locks:
-        with _FileLock(str(tmp_path / "cc" / n), timeout=1.0):
+        with writer_lock(str(tmp_path / "cc" / n), timeout=1.0):
             pass
 
 
@@ -221,134 +223,6 @@ def test_dont_use_cache_if_different_params(spark, price_source, tmp_path):
     # two distinct cache entries (parquet dirs), not one reused
     entries = [n for n in os.listdir(cache_dir) if n.endswith(".parquet")]
     assert len(entries) == 2
-
-
-def test_lock_stale_takeover(tmp_path):
-    """An abandoned lock (crashed writer) is taken over after
-    stale_after; a live one within timeout raises TimeoutError."""
-    from moonshot_spark.sources.cache import _ExclLock
-
-    lock_path = str(tmp_path / "x.lock")
-    # abandoned: pretend it was created long ago
-    open(lock_path, "w").write("999")
-    old = time.time() - 1000
-    os.utime(lock_path, (old, old))
-    with _ExclLock(lock_path, timeout=1.0, stale_after=300.0):
-        pass  # took over the stale lock
-    assert not os.path.exists(lock_path)
-
-    # live lock: held now, short timeout -> TimeoutError
-    open(lock_path, "w").write("1")
-    import pytest as _pt
-    with _pt.raises(TimeoutError):
-        with _ExclLock(lock_path, timeout=0.3, stale_after=300.0):
-            pass
-
-
-def test_lock_release_is_identity_guarded(tmp_path):
-    """If a waiter took our lock over (we ran past stale_after), the path
-    now carries THEIR token — our release must not remove it, or a third
-    party gets unlocked."""
-    from moonshot_spark.sources.cache import _ExclLock
-
-    lock_path = str(tmp_path / "x.lock")
-    lock = _ExclLock(lock_path, timeout=1.0)
-    lock.__enter__()
-    # a takeover replaces the lock file with a fresh token
-    os.remove(lock_path)
-    open(lock_path, "w").write("someone-else:deadbeef")
-    lock.__exit__(None, None, None)
-    assert os.path.exists(lock_path)              # not ours → left alone
-    assert open(lock_path).read() == "someone-else:deadbeef"
-    os.remove(lock_path)
-
-
-def test_stale_takeover_spares_reacquired_lock(tmp_path, monkeypatch):
-    """The takeover claim must restore a lock whose token changed between
-    the staleness observation and the rename-aside (the crashed-looking
-    holder's lock was released and a NEW holder acquired in the window) —
-    the fresh lock survives and the waiter keeps waiting (here: times
-    out).  The race is injected at the exact boundary: os.rename."""
-    from moonshot_spark.sources.cache import _ExclLock
-
-    lock_path = str(tmp_path / "x.lock")
-    open(lock_path, "w").write("crashed:deadbeef")
-    old = time.time() - 1000
-    os.utime(lock_path, (old, old))
-
-    real_rename = os.rename
-    state = {"swapped": False}
-
-    def racy_rename(src, dst):
-        if src == lock_path and not state["swapped"]:
-            state["swapped"] = True
-            # holder releases and a new holder acquires JUST before the
-            # waiter's claim lands
-            os.remove(lock_path)
-            with open(lock_path, "w") as f:
-                f.write("fresh:cafebabe")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", racy_rename)
-    lock = _ExclLock(lock_path, timeout=0.3, stale_after=300.0)
-    import pytest as _pt
-    with _pt.raises(TimeoutError):
-        lock.__enter__()
-    # the fresh holder's lock was restored (token intact), not destroyed
-    assert open(lock_path).read() == "fresh:cafebabe"
-    assert not [n for n in os.listdir(tmp_path) if ".stale-" in n]
-
-
-def test_flock_is_default_and_serializes(tmp_path):
-    """On POSIX the primary lock is flock-based: contention blocks until
-    release, a dead holder's lock auto-releases when its fd closes (the
-    kernel owns the state — no stale/takeover protocol to race on)."""
-    import moonshot_spark.sources.cache as mod
-
-    assert mod.fcntl is not None and mod._FileLock is mod._FlockLock
-
-    lock_path = str(tmp_path / "f.lock")
-    holder = mod._FlockLock(lock_path, timeout=5.0)
-    holder.__enter__()
-    # held → a short-timeout waiter times out
-    with pytest.raises(TimeoutError):
-        with mod._FlockLock(lock_path, timeout=0.3):
-            pass
-    # simulate holder crash: close the fd without any cleanup protocol
-    os.close(holder._fd)
-    holder._fd = None
-    # immediately acquirable — no stale_after wait, no takeover
-    t0 = time.time()
-    with mod._FlockLock(lock_path, timeout=5.0):
-        pass
-    assert time.time() - t0 < 1.0
-    # the lock file is never unlinked (unlink would split waiters across
-    # inodes); a leftover .lock file is inert
-    assert os.path.exists(lock_path)
-
-
-def test_flock_serializes_threads(tmp_path):
-    """Two threads contending on the same lock path never overlap in the
-    critical section (flock is per-open-file-description)."""
-    import threading
-    from moonshot_spark.sources.cache import _FlockLock
-
-    lock_path = str(tmp_path / "t.lock")
-    active = []
-    overlaps = []
-
-    def worker():
-        with _FlockLock(lock_path, timeout=10.0):
-            active.append(1)
-            if len(active) > 1:
-                overlaps.append(1)
-            time.sleep(0.05)
-            active.pop()
-
-    ts = [threading.Thread(target=worker) for _ in range(4)]
-    [t.start() for t in ts]
-    [t.join() for t in ts]
-    assert not overlaps
 
 
 def test_get_warns_on_persistent_unreadable_entry(spark, cache, df):

@@ -335,7 +335,7 @@ def test_keras_handle_path_reload_when_unpicklable(tmp_path):
 
 def test_missing_keras_backend_errors(tmp_path):
     """Without any keras/tensorflow the loader fails fast on the driver
-    with an actionable message (register_model_loader escape hatch)."""
+    with an actionable message (pass the loaded model as ``model=``)."""
     from moonshot_spark.strategies.base import MoonshotParameterError
 
     class KerasStrategy(TwoFeatureStrategy):
@@ -343,25 +343,6 @@ def test_missing_keras_backend_errors(tmp_path):
 
     with pytest.raises(MoonshotParameterError, match="requires keras"):
         KerasStrategy()._load_model()
-
-
-def test_register_model_loader_wins(tmp_path):
-    """Custom loaders are consulted before the built-in dispatch."""
-    from moonshot_spark.strategies.ml import MODEL_LOADERS, register_model_loader
-
-    n_before = len(MODEL_LOADERS)
-    register_model_loader("custom-npz", lambda p: p.endswith(".npz"),
-                          lambda p: FakeKerasModel([9.9]))
-    try:
-        class NpzStrategy(TwoFeatureStrategy):
-            MODEL = str(tmp_path / "weights.npz")
-
-        s = NpzStrategy()
-        s._load_model()
-        assert s.model.coefs == [9.9]
-    finally:
-        del MODEL_LOADERS[0]
-        assert len(MODEL_LOADERS) == n_before
 
 
 def test_ml_model_file_joblib_roundtrip(tmp_path, prices):
