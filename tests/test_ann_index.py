@@ -654,3 +654,76 @@ def test_writer_lease_remote_scheme_warns_best_effort(spark, monkeypatch):
         with locks.writer_lock(_lock_path("s3a://bucket/ivf"), 0.5) as lease:
             assert lease == marker and marker in files
     assert files == {}
+
+
+def test_marker_lease_stale_takeover(spark, emb, cents, tmp_path,
+                                     monkeypatch):
+    """Where the index's writer lock is a marker lease (no fcntl here;
+    remote roots likewise), a marker left by a crashed writer is taken
+    over once older than STALE_FACTOR x WRITER_LEASE_TIMEOUT and the
+    append proceeds; a FRESH marker is not taken over."""
+    import os
+    import threading
+    import time
+
+    import moonshot_spark.datapipe.ann_index as ann
+    from moonshot_spark import locks
+
+    monkeypatch.setattr(locks, "fcntl", None)
+    path = str(tmp_path / "stale")
+    write_ivf_index(emb, cents, path)
+    batch = emb.where(F.col("vec_id") < 4)
+    marker = ann._lock_path(path)
+
+    # a live holder heartbeats its marker: never taken over
+    with open(marker, "w") as f:
+        f.write("live:cafebabe")
+    monkeypatch.setattr(ann, "WRITER_LEASE_TIMEOUT", 0.3)
+    stop = threading.Event()
+
+    def beat():
+        while not stop.wait(0.05):
+            os.utime(marker)
+
+    beater = threading.Thread(target=beat, daemon=True)
+    beater.start()
+    try:
+        with pytest.raises(TimeoutError):
+            append_to_ivf_index(batch, cents, path)
+    finally:
+        stop.set()
+        beater.join()
+    with open(marker) as f:
+        assert f.read() == "live:cafebabe"
+
+    # backdate past the stale horizon: the next writer takes over
+    old = (time.time() - locks.MARKER_LEASE_STALE_FACTOR
+           * ann.WRITER_LEASE_TIMEOUT - 1.0)
+    os.utime(marker, (old, old))
+    append_to_ivf_index(batch, cents, path)
+    assert not os.path.exists(marker)
+    full = str(tmp_path / "full")
+    write_ivf_index(emb.unionByName(batch), cents, full)
+    assert rows(spark.read.parquet(path)) == rows(spark.read.parquet(full))
+
+
+def test_marker_lease_release_respects_takeover(tmp_path, monkeypatch):
+    """After a stale takeover of the index's marker lease, the original
+    (slow but alive) writer's release must NOT delete the new holder's
+    marker: an unconditional delete would admit a third writer."""
+    import os
+
+    import moonshot_spark.datapipe.ann_index as ann
+    from moonshot_spark import locks
+    from moonshot_spark.locks import writer_lock
+
+    monkeypatch.setattr(locks, "fcntl", None)
+    marker = ann._lock_path(str(tmp_path / "ivf"))
+    with pytest.warns(RuntimeWarning, match="stale takeover"):
+        with writer_lock(marker, ann.WRITER_LEASE_TIMEOUT):
+            # a rival's takeover replaces the marker with its own token
+            os.remove(marker)
+            with open(marker, "w") as f:
+                f.write("usurper:deadbeef")
+    with open(marker) as f:
+        assert f.read() == "usurper:deadbeef"

@@ -1,7 +1,9 @@
 """Cache tests (reference _tests/test_cache.py patterns: hit, miss,
 kwargs-key sensitivity, staleness invalidation)."""
 
+import contextlib
 import os
+import threading
 import time
 
 import pytest
@@ -253,3 +255,78 @@ def test_get_warns_on_persistent_unreadable_entry(spark, cache, df):
     assert not any("unreadable" in str(x.message) for x in w2)
     cache.set("p", {"k": 1}, df)
     assert cache.get(spark, "p", {"k": 1}) is not None
+
+
+def test_lock_stale_takeover(spark, cache, df, monkeypatch):
+    """Where the cache's writer lock is a marker lease (no fcntl), a
+    marker left by a crashed writer is taken over once it is older than
+    the stale horizon, and set() proceeds; a live marker makes set()
+    time out instead."""
+    from moonshot_spark import locks
+    from moonshot_spark.sources import cache as cache_mod
+    from moonshot_spark.sources.cache import _fingerprint
+
+    monkeypatch.setattr(locks, "fcntl", None)
+    data_path, _ = cache._paths(_fingerprint("prices", {"a": 1}))
+    lock_path = data_path + ".lock"
+    # abandoned: a crashed writer's marker, older than the stale horizon
+    with open(lock_path, "w") as f:
+        f.write("crashed:deadbeef")
+    old = (time.time() - locks.MARKER_LEASE_STALE_FACTOR
+           * cache_mod._LOCK_TIMEOUT - 1.0)
+    os.utime(lock_path, (old, old))
+    cache.set("prices", {"a": 1}, df)
+    assert cache.get(spark, "prices", {"a": 1}) is not None
+    assert not os.path.exists(lock_path)
+
+    # live: a holder that keeps its marker fresh, short timeout ->
+    # TimeoutError
+    with open(lock_path, "w") as f:
+        f.write("live:cafebabe")
+    monkeypatch.setattr(cache_mod, "_LOCK_TIMEOUT", 0.3)
+    with _heartbeating(lock_path):
+        with pytest.raises(TimeoutError):
+            cache.set("prices", {"a": 1}, df)
+    with open(lock_path) as f:
+        assert f.read() == "live:cafebabe"
+
+
+def test_lock_release_is_identity_guarded(cache, monkeypatch):
+    """If a waiter took the cache's marker lock over while we held it,
+    the marker now carries THEIR token: our release must leave it in
+    place (and warn), or a third writer gets in."""
+    from moonshot_spark import locks
+    from moonshot_spark.locks import writer_lock
+    from moonshot_spark.sources.cache import _fingerprint
+
+    monkeypatch.setattr(locks, "fcntl", None)
+    data_path, _ = cache._paths(_fingerprint("prices", {"a": 1}))
+    lock_path = data_path + ".lock"
+    with pytest.warns(RuntimeWarning, match="stale takeover"):
+        with writer_lock(lock_path, 1.0):
+            # a takeover replaces the marker with a fresh token
+            os.remove(lock_path)
+            with open(lock_path, "w") as f:
+                f.write("someone-else:deadbeef")
+    assert os.path.exists(lock_path)              # not ours: left alone
+    with open(lock_path) as f:
+        assert f.read() == "someone-else:deadbeef"
+
+
+@contextlib.contextmanager
+def _heartbeating(path):
+    """A live marker holder: refresh ``path``'s mtime until the block
+    exits, as a holding writer's heartbeat does."""
+    stop = threading.Event()
+
+    def beat():
+        while not stop.wait(0.05):
+            os.utime(path)
+
+    beater = threading.Thread(target=beat, daemon=True)
+    beater.start()
+    try:
+        yield
+    finally:
+        stop.set()
+        beater.join()
