@@ -25,8 +25,8 @@ and three maintenance surfaces exist:
   from a partition-column groupBy, bytes from the Hadoop FileSystem
   API, so it works on hdfs/s3a like the streaming index listing);
 - ``split_hot_cells``: cells above a row-share/row-count threshold are
-  re-split under deterministic sub-centroids (the n_sub lowest-id
-  members) and ONLY those cell directories are rewritten; the result
+  re-split under deterministic md5-spread sub-centroids and ONLY those
+  cell directories are rewritten; the result
   row-equals a from-scratch ``write_ivf_index`` with the same
   ``sub_codebooks`` (assignment is a pure function — pinned by test);
 - ``probe_ivf_index(..., nprobe_sub=...)``: probing a split cell can
@@ -44,9 +44,9 @@ and three maintenance surfaces exist:
 **Retrain numbering / crash safety**: each cell's meta
 entry carries a sub-cell ``base`` — its sub-cells occupy
 ``__subcell = base .. base + n_sub - 1``.  A retrain assigns the new
-generation at ``base' = base + n_sub`` (a fresh, non-colliding range),
-so the rewrite is append-then-delete like ``split_hot_cells``: new
-directories land first, the cell's meta entry is persisted immediately
+generation at ``base' = base + n_sub`` (a fresh, non-colliding range;
+an unsplit cell has base 0 and one sub-cell, so its first split lands at
+base 1), so the rewrite is append-then-delete: new directories land first, the cell's meta entry is persisted immediately
 (per cell, not after the whole loop), and only then are the old-range
 directories removed.  A ``_ivf_retrain_<cell>.json`` marker brackets
 the three steps; ``repair_retrains`` replays or rolls back any marker
@@ -55,9 +55,10 @@ old → drop the new-range directories).  At no point is the cell absent,
 and the meta NEVER disagrees with the directories it prunes against:
 before the meta flip, probes prune to the old range (complete, old
 codebook); after, to the new range (complete, new codebook).  The only
-READER window is the same one ``split_hot_cells`` documents — a
-``nprobe_sub=None`` reader between append and delete double-counts the
-cell.  WRITERS must be single-writer per index during maintenance: a
+READER window is between append and delete, where a ``nprobe_sub=None``
+reader double-counts the cell.  ``split_hot_cells``,
+``rebalance_split_cells`` and ``retrain_cell`` all rewrite a cell
+through this one protocol (``_retrain_one``).  WRITERS must be single-writer per index during maintenance: a
 concurrent ``append_to_ivf_index`` that read the meta before a
 retrain's flip can land rows in the OLD ``__subcell`` range after the
 retrain's delete pass runs — those rows would then be permanently
@@ -116,9 +117,10 @@ def _lock_path(path: str) -> str:
 
 
 def _norm_subs(subs: dict | None) -> dict[int, dict]:
-    """Normalize a sub-codebook mapping to {cell: {"codebook", "base"}}.
-    Accepts the public list form (base=1 — the split_hot_cells layout)
-    and the normalized dict form interchangeably."""
+    """Normalize a sub-codebook mapping to {cell: {"codebook", "base"}},
+    the one form ``_write_meta`` writes.  Also accepts the list form
+    (base=1, a first split): the public ``sub_codebooks`` argument and
+    metas written before the normalized form."""
     out: dict[int, dict] = {}
     for c, v in (subs or {}).items():
         if isinstance(v, dict):
@@ -149,12 +151,8 @@ def _write_json(spark: SparkSession, path: str, name: str, obj) -> None:
 
 def _write_meta(spark: SparkSession, path: str,
                 sub_codebooks: dict | None) -> None:
-    # serialize base=1 entries in the legacy plain-list form so indexes
-    # that never retrained keep a stable, minimal meta on disk
-    payload = {}
-    for c, v in _norm_subs(sub_codebooks).items():
-        payload[str(c)] = (v["codebook"] if v["base"] == 1 else v)
-    _write_json(spark, path, _META, payload)
+    _write_json(spark, path, _META, {str(c): v for c, v in
+                                     _norm_subs(sub_codebooks).items()})
 
 
 def _read_meta(spark: SparkSession, path: str) -> dict[int, dict]:
@@ -291,55 +289,28 @@ def split_hot_cells(spark: SparkSession, path: str,
     (or row count exceeds ``max_rows``) into ``n_sub`` sub-cells, and
     rewrite ONLY those cell directories.
 
-    Sub-centroids are the cell's ``n_sub`` lowest-``id_col`` members —
-    deterministic, so the re-split index row-equals a from-scratch
+    Each cell goes through ``_retrain_one``: md5-spread seeds, the
+    marker protocol ``repair_retrains`` replays, and a per-cell meta
+    flip.  The re-split index row-equals a from-scratch
     ``write_ivf_index(corpus, centroids, sub_codebooks=<returned>)``
-    (pinned by test).  A smarter trainer (per-cell Lloyd iterations)
-    slots in here without changing the layout contract.  Already-split
-    cells are left alone (re-splitting a split cell would need a
-    sub-codebook merge — out of scope, the stats report shows
-    ``max_subcell`` so the operator can see residual skew).
+    (pinned by test).  Already-split cells are left alone
+    (``rebalance_split_cells`` and ``retrain_cell`` re-split those; the
+    stats report shows ``max_subcell`` so the operator can see residual
+    skew).  ``centroids`` is accepted for signature stability.
 
-    Returns the NEW sub-codebooks (merged meta is persisted next to the
-    index for ``append_to_ivf_index``/``probe_ivf_index``)."""
+    Returns the NEW sub-codebooks {cell: codebook}."""
     with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
-        existing = _read_meta(spark, path)
+        meta = _read_meta(spark, path)
         stats = {r["cell"]: r for r in ivf_cell_stats(spark, path).collect()}
         hot = [c for c, r in sorted(stats.items())
-               if c not in existing
+               if c not in meta
                and (r["row_share"] > max_share
                     or (max_rows is not None and r["n_rows"] > max_rows))]
         new_subs: dict[int, list[list[float]]] = {}
-        jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        fs, root = _fs(spark, path)
-        from moonshot_spark.datapipe.similarity import ivf_assign_col
-
         for c in hot:
-            cell_rows = (spark.read.parquet(path)
-                         .where((F.col(_CELL) == c) & (F.col(_SUBCELL) == 0))
-                         .drop(_CELL, _SUBCELL))
-            seeds = (cell_rows.orderBy(id_col).limit(n_sub)
-                     .select(vec_col).collect())
-            sub_cb = [[float(x) for x in r[0]] for r in seeds]
-            if len(sub_cb) < 2:
-                continue                      # nothing to split
-            new_subs[c] = sub_cb
-            # append the re-assigned rows under __subcell=1..n_sub, then
-            # drop the stale __subcell=0 directory (see module docstring on
-            # the non-atomicity window)
-            (cell_rows
-             .withColumn(_CELL, F.lit(c))
-             .withColumn(_SUBCELL,
-                         (ivf_assign_col(vec_col, sub_cb) + F.lit(1))
-                         .cast("int"))
-             .write.mode("append").partitionBy(_CELL, _SUBCELL).parquet(path))
-            stale = jvm_path(root, f"{_CELL}={c}/{_SUBCELL}=0")
-            if fs.exists(stale):
-                fs.delete(stale, True)
-        if new_subs:
-            merged = dict(existing)
-            merged.update(new_subs)
-            _write_meta(spark, path, merged)
+            entry = _retrain_one(spark, path, c, n_sub, meta, id_col, vec_col)
+            if entry is not None:
+                new_subs[c] = entry["codebook"]
         return new_subs
 
 
@@ -459,8 +430,9 @@ def _delete_subcell_range(spark: SparkSession, path: str, cell: int,
 def _retrain_one(spark: SparkSession, path: str, cell: int, n_sub: int,
                  meta: dict[int, dict], id_col: str, vec_col: str
                  ) -> dict | None:
-    """Crash-safe single-cell retrain at arity ``n_sub``; the shared
-    engine under ``rebalance_split_cells`` and ``retrain_cell``.
+    """Crash-safe single-cell retrain at arity ``n_sub``; the one
+    engine under ``split_hot_cells``, ``rebalance_split_cells`` and
+    ``retrain_cell``.
 
     Seeding is an md5-spread pick — the ``n_sub`` members with the
     lowest ``md5(id)`` — deterministic but decorrelated from insertion
@@ -482,7 +454,7 @@ def _retrain_one(spark: SparkSession, path: str, cell: int, n_sub: int,
     new_base = old_base + old_n
     # file listing is fixed when the DataFrame is created, BEFORE the
     # append below lands new files — the rewrite reads only the old
-    # generation (same property split_hot_cells relies on)
+    # generation
     cell_rows = (spark.read.parquet(path)
                  .where(F.col(_CELL) == cell).drop(_CELL, _SUBCELL))
     seeds = (cell_rows
@@ -575,8 +547,7 @@ def rebalance_split_cells(spark: SparkSession, path: str,
                           max_subcell_share: float = 0.5,
                           n_sub: int = 4,
                           id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          stats: DataFrame | None = None
+                          vec_col: str = "embedding"
                           ) -> dict[int, dict]:
     """Re-split every SPLIT cell whose sub-codebook has drifted: when
     one sub-cell holds more than ``max_subcell_share`` of its cell's
@@ -595,18 +566,13 @@ def rebalance_split_cells(spark: SparkSession, path: str,
     ``repair_retrains`` can replay — a crash mid-loop never loses a
     cell or leaves the meta disagreeing with the directories.
     ``centroids`` is accepted for signature stability but the
-    rewrite needs only the cell's own rows.  ``stats`` lets a
-    maintenance loop that just ran ``ivf_cell_stats`` pass the frame in
-    instead of paying a second full index scan; when
-    omitted, fresh stats are computed.  Returns {cell: new meta
+    rewrite needs only the cell's own rows.  Returns {cell: new meta
     entry}."""
     with writer_lock(_lock_path(path), WRITER_LEASE_TIMEOUT):
         meta = _read_meta(spark, path)
         if not meta:
             return {}
-        if stats is None:
-            stats = ivf_cell_stats(spark, path)
-        stats = {r["cell"]: r for r in stats.collect()}
+        stats = {r["cell"]: r for r in ivf_cell_stats(spark, path).collect()}
         drifted = [c for c in sorted(meta)
                    if c in stats and stats[c]["n_rows"] > 0
                    and stats[c]["max_subcell_rows"]

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from moonshot_spark import materialize
+from moonshot_spark.sources.local import local_df
 
 __all__ = ["bpe_state", "bpe_train", "bpe_apply",
            "bpe_save_rules", "bpe_load_rules"]
@@ -181,8 +182,8 @@ def bpe_save_rules(spark, rules: list, path: str) -> None:
     cnt) so the encode half can run in a different session/cluster —
     the tokenizer-artifact round-trip every production pipeline needs.
     Tiny (one row per merge), written as a single file."""
-    df = spark.createDataFrame(
-        [(int(rnd), l, r, int(cnt)) for rnd, l, r, cnt in rules],
+    df = local_df(
+        spark, [(int(rnd), l, r, int(cnt)) for rnd, l, r, cnt in rules],
         "round int, left string, right string, cnt bigint")
     df.coalesce(1).write.mode("overwrite").parquet(path)
 

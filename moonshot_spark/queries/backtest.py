@@ -1220,8 +1220,7 @@ def backtest_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.col("value"))).alias("r"),
                  F.max(F.when(F.col("field") == "Turnover",
                               F.col("value"))).alias("tv")))
-    params = spark.createDataFrame([(0,), (10,), (25,), (50,)],
-                                   "cost_bps int")
+    params = local_df(spark, [(0,), (10,), (25,), (50,)], "cost_bps int")
     net = (base.crossJoin(F.broadcast(params))
            .withColumn("net_r",
                        F.col("r") - F.coalesce(F.col("tv"), F.lit(0.0))

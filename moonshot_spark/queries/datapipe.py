@@ -19,6 +19,7 @@ from moonshot_spark.functions.folds import (
 from moonshot_spark.queries._base import (
     COPURCHASE_GRAPH_SQL, ORACLES, chi_square, chi_square_sql, register,
 )
+from moonshot_spark.sources.local import local_df
 from moonshot_spark.sources.parquet import load_table
 from moonshot_spark.queries.warehouse import _copurchase_edges
 
@@ -2486,8 +2487,7 @@ def packing_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
          .rowsBetween(Window.unboundedPreceding, -1))
     cum = toks.withColumn("cum_before",
                           F.coalesce(F.sum("n").over(w), F.lit(0)))
-    sizes = spark.createDataFrame([(128,), (256,), (512,), (1024,)],
-                                  "ctx int")
+    sizes = local_df(spark, [(128,), (256,), (512,), (1024,)], "ctx int")
     binned = (cum.crossJoin(F.broadcast(sizes))
               .withColumn("bin_id",
                           F.floor(F.col("cum_before") / F.col("ctx"))
@@ -3705,7 +3705,7 @@ def logreg_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(it, f"b{j}", b)
             for it, betas in fit.history for j, b in enumerate(betas)]
     rows.append((3, "accuracy", fit.accuracy))
-    return spark.createDataFrame(rows, "iter int, coef string, beta double")
+    return local_df(spark, rows, "iter int, coef string, beta double")
 
 
 @register("exact_substr_scrub", _span_oracle_prefix(k=8, carry_lang=True)
@@ -3811,8 +3811,8 @@ def bpe_phrase_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     rules = bpe_train(docs, n_merges=4)
-    return spark.createDataFrame(
-        [(rnd, l, r, cnt) for rnd, l, r, cnt in rules],
+    return local_df(
+        spark, [(rnd, l, r, cnt) for rnd, l, r, cnt in rules],
         "rnd int, merge_left string, merge_right string, pair_count bigint")
 
 
@@ -4076,8 +4076,8 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     fit = power_iteration_top_component(emb, dim=64, iters=3)
     rows = [(j, fit.mean[j], fit.component[j]) for j in range(64)]
-    return (spark.createDataFrame(
-                rows, "dim int, mean_val double, loading double")
+    return (local_df(spark, rows,
+                     "dim int, mean_val double, loading double")
             .select("dim", "mean_val", "loading",
                     F.lit(fit.eigval).alias("eigval"),
                     F.lit(fit.explained_variance_ratio).alias("evr")))

@@ -16,6 +16,7 @@ from moonshot_spark.functions.window import (
 from moonshot_spark.queries._base import (
     BUY_BELOW_100_SQL, EQUAL_WEIGHTS_SQL, PANEL_SQL, register, six_hour_bar,
 )
+from moonshot_spark.sources.local import local_df
 from moonshot_spark.sources.parquet import events_to_panel, load_table
 
 
@@ -734,9 +735,9 @@ def market_session_tagging(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift is the only cross-engine risk in calendar code — pin dates
     away from transitions in oracles)."""
     events = load_table(spark, sf_dir, "events")
-    exchanges = spark.createDataFrame(
-        [("NYSE", "America/New_York"), ("LSE", "Europe/London"),
-         ("TSE", "Asia/Tokyo")], "exchange string, tz string")
+    exchanges = local_df(
+        spark, [("NYSE", "America/New_York"), ("LSE", "Europe/London"),
+                ("TSE", "Asia/Tokyo")], "exchange string, tz string")
     tagged = (events.crossJoin(F.broadcast(exchanges))
               .withColumn("local_ts",
                           F.from_utc_timestamp(F.col("ts"), F.col("tz"))))

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from moonshot_spark import materialize
 from moonshot_spark.queries._base import PANEL_SQL, register
 from moonshot_spark.sources.parquet import ohlcv_aggs, parquet_schema
 
@@ -222,4 +223,8 @@ def streaming_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("s.high").alias("high"),
                      F.col("s.low").alias("low"),
                      F.col("s.last").alias("last")))
+    # the emissions are read once, into the checkpoint; then their dir
+    # goes like the stage and checkpoint dirs above
+    final = materialize.checkpoint(final)
+    shutil.rmtree(out_dir, ignore_errors=True)
     return final

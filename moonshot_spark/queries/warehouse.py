@@ -15,6 +15,7 @@ from moonshot_spark.functions.folds import ordered_values
 from moonshot_spark.queries._base import (
     COPURCHASE_GRAPH_SQL, PANEL_SQL, register,
 )
+from moonshot_spark.sources.local import local_df
 from moonshot_spark.sources.parquet import events_to_panel, load_table
 from moonshot_spark.session import shuffle_partitions
 
@@ -2704,7 +2705,7 @@ def benford_digit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                (5, 0.07918124604762482), (6, 0.06694678963061322),
                (7, 0.05799194697768673), (8, 0.05115252244738129),
                (9, 0.04575749056067514)]
-    exp = o.sparkSession.createDataFrame(benford, "digit int, p double")
+    exp = local_df(o.sparkSession, benford, "digit int, p double")
     n_obs = F.coalesce(F.col("n"), F.lit(0))
     dev = n_obs.cast("double") - F.col("total") * F.col("p")
     return (exp.join(obs, "digit", "left")

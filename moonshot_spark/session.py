@@ -140,7 +140,9 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
     AQE is on: at 100 TB the static shuffle-partition count is always wrong
     for some stage, and AQE's runtime coalescing + skew-join splitting fix
     that without per-query tuning.  Arrow is on for the pandas_udf hot paths
-    (ML scoring, minhash) and for createDataFrame from pandas in tests.
+    (ML scoring, IVF cell assignment and cosine, k-means assignment) and
+    for ``sources/local.py::local_df``, which builds every driver-made
+    frame from an Arrow table.
     """
     cpus = spark_cores()
     master = master or f"local[{cpus}]"
@@ -176,11 +178,6 @@ def get_spark(app_name: str = "moonshot_spark", master: str | None = None,
                 "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory())
-        # default = Spark's own 1g; the 10x-replicated correctness sweep
-        # raises it (pair-output queries legitimately return ~100x the
-        # rows, and the dual-engine compare pulls the FULL result)
-        .config("spark.driver.maxResultSize",
-                os.environ.get("SPARK_GRAFT_MAX_RESULT_SIZE", "1g"))
         # Heap pin + optional pre-touch; user-supplied options preserved
         # (see driver_java_options for the full rationale)
         .config("spark.driver.extraJavaOptions", driver_java_options())

@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from moonshot_spark.strategies.base import MoonshotParameterError
+from moonshot_spark.sources.local import local_df
+from moonshot_spark.strategies.base import (MoonshotParameterError,
+                                           single_timezone)
 
 
 def get_prices(spark: SparkSession, path: str,
@@ -157,10 +159,10 @@ def get_prices(spark: SparkSession, path: str,
         members = (universes.where(F.col("universe").isin(incl_universes))
                    .select("sid").distinct())
         if sids:
-            lits = spark.createDataFrame([(s,) for s in sids], "sid string")
+            lits = local_df(spark, [(s,) for s in sids], "sid string")
             members = members.union(lits).distinct()
         if benchmark_sid:
-            lits = spark.createDataFrame([(benchmark_sid,)], "sid string")
+            lits = local_df(spark, [(benchmark_sid,)], "sid string")
             members = members.union(lits).distinct()
         df = df.join(F.broadcast(members), "sid", "semi")
     elif sids:
@@ -237,11 +239,4 @@ def get_prices(spark: SparkSession, path: str,
 def validate_timezones(master: DataFrame) -> str:
     """All securities must share one timezone (reference base.py:1116-1125:
     mixed-timezone panels are ambiguous for signal dates)."""
-    tzs = [r["timezone"] for r in
-           master.select("timezone").distinct().collect() if r["timezone"]]
-    if len(tzs) > 1:
-        raise MoonshotParameterError(
-            "cannot infer timezone because multiple timezones are present "
-            "in data, please specify TIMEZONE explicitly (timezones: {0})"
-            .format(", ".join(sorted(tzs))))
-    return tzs[0] if tzs else "UTC"
+    return single_timezone(master) or "UTC"

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from moonshot_spark.functions.window import pct_change, shift
 from moonshot_spark.operators.weights import allocate_equal_weights
+from moonshot_spark.sources.local import local_df
 
 
 class MoonshotError(Exception):
@@ -60,6 +61,39 @@ MASTER_COLUMNS = ["sid", "symbol", "sec_type", "currency", "exchange",
 RESULT_FIELDS = ["AbsExposure", "AbsWeight", "Commission", "NetExposure",
                  "Return", "Signal", "Slippage", "TotalHoldings", "Turnover",
                  "Weight"]
+
+
+def _latest_per_sid(df: DataFrame) -> DataFrame:
+    """Each sid's latest-``time`` row: the batch as-of slice of an
+    intraday frame when no signal time is set."""
+    w = Window.partitionBy("sid").orderBy(F.desc("time"))
+    return (df.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1).drop("__rn"))
+
+
+def _quote_currency(columns: list[str]) -> Column:
+    """A security's currency, except that a CASH pair's is the quote
+    currency taken from its symbol: 100 EUR.USD is 100 EUR, not 100 USD
+    (reference base.py:1129-1134, 1640-1644)."""
+    ccy = F.col("currency")
+    if "sec_type" in columns and "symbol" in columns:
+        ccy = F.when(F.col("sec_type") == "CASH",
+                     F.split(F.col("symbol"), r"\.")[0]).otherwise(ccy)
+    return ccy
+
+
+def single_timezone(master: DataFrame) -> str | None:
+    """The one timezone of the securities in ``master``, or None if none
+    names one.  Mixed timezones make signal dates ambiguous, so they
+    raise (reference base.py:1116-1125)."""
+    tzs = [r[0] for r in
+           master.select("timezone").distinct().collect() if r[0]]
+    if len(tzs) > 1:
+        raise MoonshotParameterError(
+            "cannot infer timezone because multiple timezones are present "
+            "in data, please specify TIMEZONE explicitly (timezones: {0})"
+            .format(", ".join(sorted(tzs))))
+    return tzs[0] if tzs else None
 
 
 def _size_quantities(df: DataFrame, name: str, value: Column, cv: Column,
@@ -614,18 +648,8 @@ class Moonshot:
         nlv = nlv or self.NLV
         if nlv is not None and "currency" in prices.columns:
             spark = prices.sparkSession
-            # FX: NLV keys on the QUOTE currency extracted from the CASH
-            # pair's symbol, not the settlement currency — 100 EUR.USD is
-            # 100 EUR, not 100 USD (reference base.py:1129-1134)
-            has_cash_split = ("sec_type" in master.columns
-                              and "symbol" in master.columns)
-            if has_cash_split:
-                nlv_ccy = F.when(
-                    F.col("sec_type") == "CASH",
-                    F.split(F.col("symbol"), "\\.")[0]
-                ).otherwise(F.col("currency"))
-            else:
-                nlv_ccy = F.col("currency")
+            # FX: NLV keys on the quote currency, not the settlement one
+            nlv_ccy = _quote_currency(master.columns)
             # missing-currency validation on the broadcast-sized master,
             # never the panel (reference base.py:1136-1140)
             if "currency" in master.columns:
@@ -636,7 +660,6 @@ class Moonshot:
                     raise MoonshotParameterError(
                         "NLV dict is missing values for required "
                         "currencies: {0}".format(", ".join(sorted(missing))))
-            from moonshot_spark.sources.local import local_df
             nlv_df = local_df(
                 spark, [(k, float(v)) for k, v in nlv.items()],
                 "__nlv_ccy string, nlv double")
@@ -755,16 +778,8 @@ class Moonshot:
             return self._now(status["timezone"])
         tz = self.TIMEZONE
         if tz is None and master is not None and "timezone" in master.columns:
-            # inferred timezone (reference base.py:1116-1125): must be
-            # unambiguous across the (broadcast-sized) master
-            tzs = [r[0] for r in
-                   master.select("timezone").distinct().collect() if r[0]]
-            if len(tzs) > 1:
-                raise MoonshotParameterError(
-                    "cannot infer timezone because multiple timezones are "
-                    "present in data, please specify TIMEZONE explicitly "
-                    "(timezones: {0})".format(", ".join(sorted(tzs))))
-            tz = tzs[0] if tzs else None
+            # inferred from the (broadcast-sized) master
+            tz = single_timezone(master)
         if tz is not None:
             return self._now(tz)
         return None
@@ -896,9 +911,7 @@ class Moonshot:
                 today = today.where(F.col("time") == signal_time)
             else:
                 # batch fallback: latest time per sid (J7 as-of analog)
-                w = Window.partitionBy("sid").orderBy(F.desc("time"))
-                today = (today.withColumn("__rn", F.row_number().over(w))
-                         .where(F.col("__rn") == 1).drop("__rn"))
+                today = _latest_per_sid(today)
 
         # contract values from the PRICES panel (not the weights frame —
         # a once-a-day strategy's daily weights carry only the sliced
@@ -947,7 +960,6 @@ class Moonshot:
         # cast-free and the orders carry the caller's account identity.
         acct_type = ("bigint" if all(isinstance(a, int)
                                      for a in allocations) else "string")
-        from moonshot_spark.sources.local import local_df
         alloc_df = local_df(
             spark,
             [(a if acct_type == "bigint" else str(a), float(v))
@@ -970,11 +982,8 @@ class Moonshot:
         # trade currency: master Currency; CASH → quote currency from symbol
         # (F2, base.py:1640-1644)
         if "currency" in today.columns:
-            quote = F.col("currency")
-            if "sec_type" in today.columns and "symbol" in today.columns:
-                quote = F.when(F.col("sec_type") == "CASH",
-                               F.split(F.col("symbol"), r"\.")[0]).otherwise(quote)
-            today = today.withColumn("quote_currency", quote)
+            today = today.withColumn("quote_currency",
+                                     _quote_currency(today.columns))
         else:
             today = today.withColumn("quote_currency", F.col("base_currency"))
 
@@ -1009,9 +1018,7 @@ class Moonshot:
                 if self._signal_time is not None:
                     caps = caps.where(F.col("time") == self._signal_time)
                 else:
-                    wt = Window.partitionBy("sid").orderBy(F.desc("time"))
-                    caps = (caps.withColumn("__rn", F.row_number().over(wt))
-                            .where(F.col("__rn") == 1).drop("__rn"))
+                    caps = _latest_per_sid(caps)
             return caps
 
         max_longs, max_shorts = self.limit_position_sizes(prices)
@@ -1083,7 +1090,6 @@ class Moonshot:
         # pd.DataFrame — keeps nullable int64 columns integral (ADVICE
         # r10: pandas would coerce None-bearing ints to float64, losing
         # precision above 2^53)
-        from moonshot_spark.sources.local import local_df
         order_stubs = local_df(spark, stub_rows, order_stubs.schema)
         return self.order_stubs_to_orders(order_stubs, prices)
 

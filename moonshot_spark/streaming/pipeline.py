@@ -27,6 +27,7 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
+from moonshot_spark.sources.local import local_df
 from moonshot_spark.sources.parquet import ohlcv_aggs
 
 EVENT_SCHEMA = StructType([
@@ -265,7 +266,7 @@ def _versioned_index_stream(doc_stream: DataFrame, index_root: str,
         version = _latest_index_version(spark, index_root, batch_id)
         index = (spark.read.parquet(f"{index_root}/v={version}")
                  if version is not None
-                 else spark.createDataFrame([], index_ddl))
+                 else local_df(spark, [], index_ddl))
         rows, new_index = step(docs, index)
         rows.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
         new_index.write.mode("overwrite").parquet(

@@ -252,8 +252,8 @@ def test_split_hot_cells_max_rows_threshold_and_split_skip(spark, emb,
 
 
 def test_rebalance_split_cells_retrains_drifted_subcodebook(spark, tmp_path):
-    """rebalance_split_cells: a split cell whose low-id seeds were all
-    in one clump (degenerate sub-codebook → one dominant sub-cell) gets
+    """rebalance_split_cells: a split cell whose seeds were all in one
+    clump (degenerate sub-codebook → one dominant sub-cell) gets
     retrained from md5-spread seeds; only that cell is rewritten, the
     nprobe_sub=None probe results are unchanged (same rows, same cell),
     the sub-cell skew strictly improves, and appends honor the new
@@ -265,7 +265,7 @@ def test_rebalance_split_cells_retrains_drifted_subcodebook(spark, tmp_path):
     dim = 8
     ids = list(range(100, 140))
     # clump split by id: A = 100-119, B = 120-139.  The initial split
-    # seeds (lowest ids 100, 101) are both in A — degenerate; the
+    # seeds (ids 100, 101) are both in A — degenerate; the
     # rebalance's md5-spread seeds span BOTH clumps (verified below),
     # which is the property the md5 ordering exists to provide.
     b_ids = set(ids[20:])
@@ -289,9 +289,8 @@ def test_rebalance_split_cells_retrains_drifted_subcodebook(spark, tmp_path):
     far = [[0.0] * (dim - 1) + [100.0]]
     cents = [[1.0, 1.0] + [0.0] * (dim - 2)] + far   # all rows in cell 0
     path = str(tmp_path / "ivf")
-    write_ivf_index(corpus, cents, path)
-    subs = split_hot_cells(spark, path, cents, max_share=0.5, n_sub=2)
-    assert 0 in subs                      # cell 0 split on low-id seeds
+    write_ivf_index(corpus, cents, path,
+                    sub_codebooks={0: [vec(100), vec(101)]})
     stats0 = ivf_cell_stats(spark, path).where(F.col("cell") == 0).first()
     assert stats0["max_subcell_rows"] / stats0["n_rows"] > 0.5  # degenerate
 
@@ -452,6 +451,39 @@ def test_retrain_crash_repair_finish_and_rollback(spark, tmp_path,
     entry = ai.retrain_cell(spark, path, 0, n_sub=3)
     assert entry is not None and entry["base"] == 7  # base 3 + arity 4
     assert ai._read_meta(spark, path)[0] == entry
+
+
+def test_split_crash_repair_leaves_each_vector_once(spark, tmp_path,
+                                                     monkeypatch):
+    """A split_hot_cells crash after the new sub-cells land (here the
+    meta write fails) leaves a marker that repair_retrains replays: every
+    vector is then on disk exactly once, and the cell's __subcell
+    directories are exactly the ones its meta names."""
+    import os
+
+    import moonshot_spark.datapipe.ann_index as ai
+
+    corpus, cents, ids = clumped_corpus(spark)
+    path = str(tmp_path / "ivf")
+    write_ivf_index(corpus, cents, path)
+    monkeypatch.setattr(ai, "_write_meta",
+                        lambda *a, **k: (_ for _ in ()).throw(
+                            RuntimeError("crash")))
+    with pytest.raises(RuntimeError):
+        split_hot_cells(spark, path, cents, max_share=0.5, n_sub=2)
+    monkeypatch.undo()
+    ai.repair_retrains(spark, path)
+
+    got = [r["vec_id"] for r in spark.read.parquet(path)
+           .select("vec_id").collect()]
+    assert sorted(got) == ids
+    entry = ai._read_meta(spark, path).get(0)
+    named = ({f"__subcell={s}" for s in range(
+        entry["base"], entry["base"] + len(entry["codebook"]))}
+        if entry else {"__subcell=0"})
+    on_disk = {d for d in os.listdir(os.path.join(path, "__cell=0"))
+               if d.startswith("__subcell=")}
+    assert on_disk == named
 
 
 def test_ivf_maintenance_lifecycle(spark, emb, cents, tmp_path):

@@ -1359,6 +1359,26 @@ def test_local_df_nullable_bigint_keeps_precision(spark):
     assert got[0]["d"] == datetime.date(2024, 1, 2)
 
 
+def test_only_local_df_calls_create_dataframe():
+    """Every frame the library builds from driver rows goes through
+    local_df: a createDataFrame(<list>) call elsewhere parallelizes
+    pickled slices, and each stage that reads them starts Python
+    workers."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "moonshot_spark"
+    offenders = [
+        f"{path.relative_to(pkg.parent)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "sources" / "local.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"]
+    assert not offenders, offenders
+
+
 def test_schema_memo_invalidates_without_root_mtime(spark, tmp_path):
     """ADVICE r10: mutations that don't bump the ROOT mtime (overwrites
     aliasing within mtime granularity, appends that only touch nested

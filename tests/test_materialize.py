@@ -26,7 +26,7 @@ MATERIALIZING = [
     "lsh_recall_report_sampled", "minhash_estimate_accuracy",
     "minhash_lsh_pairs", "pagerank_copurchase", "portfolio_var_es",
     "ppjoin_incremental_pairs", "ppjoin_jaccard_pairs",
-    "price_path_similarity", "triangle_count",
+    "price_path_similarity", "streaming_dollar_bars", "triangle_count",
 ]
 # these train inside their own scope, so nothing is left for the
 # caller's scope to release

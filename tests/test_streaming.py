@@ -806,3 +806,19 @@ def test_stream_ivf_ingest_probe_equals_batch(spark, tmp_path):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert any("PartitionFilters" in line and "__cell" in line
                for line in plan.split("\n")), plan[:3000]
+
+
+def test_streaming_dollar_bars_leaves_no_temp_dir(spark, tmp_path,
+                                                  monkeypatch):
+    """The query removes every temp dir it makes (staged source,
+    checkpoint, emitted updates), so repeated runs leave nothing in the
+    temp root."""
+    import tempfile
+
+    from moonshot_spark import materialize
+    from moonshot_spark.queries import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with materialize.scope():
+        assert QUERIES["streaming_dollar_bars"](spark, SF_DIR).count() > 0
+    assert os.listdir(tmp_path) == []
