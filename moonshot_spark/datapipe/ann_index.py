@@ -342,8 +342,8 @@ def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
     query's ``nprobe_sub`` nearest sub-cells, the same approximation
     step the top level already makes.
     """
-    from moonshot_spark.datapipe.similarity import _cosine_udf, ivf_probe_col
-    from moonshot_spark.operators.ranking import grouped_topk
+    from moonshot_spark.datapipe.similarity import (
+        _cosine_udf, _topk, ivf_probe_col)
 
     q = (queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
          .withColumn(_CELL, F.explode(
@@ -390,11 +390,7 @@ def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
                   else cold_join.unionByName(hot_join))
 
     sim = _cosine_udf(F.col(vec_col), F.col("__qvec"))
-    scored = joined.select(query_id_col, id_col, sim.alias("cosine"))
-    return (grouped_topk(scored, [query_id_col],
-                         [F.desc("cosine"), F.asc(id_col)], k)
-            .select(query_id_col, id_col, "cosine",
-                    F.col("rank").cast("int")))
+    return _topk(joined, sim, "cosine", k, id_col, query_id_col)
 
 
 def compact_ivf_ingest(spark: SparkSession, stream_root: str,

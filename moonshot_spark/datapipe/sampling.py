@@ -169,7 +169,7 @@ def cap_per_group(df: DataFrame, group_col: str, cap: int,
 
 def corpus_shuffle(df: DataFrame, id_col: str = "doc_id", seed: int = 0,
                    epoch: int = 0, num_shards: int | None = None,
-                   n_partitions: int = 8) -> DataFrame:
+                   n_partitions: int | None = None) -> DataFrame:
     """Deterministic global shuffle of the corpus into a training order:
     every row gets a 1-based ``position`` in the order of
     ``md5(seed:epoch:id)`` (a different permutation per epoch, the

@@ -46,6 +46,19 @@ def cosine_expr(a, b):
     return dot / (norm_a * norm_b)
 
 
+def _topk(joined: DataFrame, score, score_col: str, k: int, id_col: str,
+          query_id_col: str, ascending: bool = False) -> DataFrame:
+    """Every vector top-k's tail: each query's k best rows of ``joined``
+    by (``score``, ``id_col``) via the two-phase ``grouped_topk`` (a
+    per-query window funnels a query's candidates into one task), as
+    (query_id, id, ``score_col``, int rank)."""
+    scored = joined.select(query_id_col, id_col, score.alias(score_col))
+    order = F.asc(score_col) if ascending else F.desc(score_col)
+    return (grouped_topk(scored, [query_id_col], [order, F.asc(id_col)], k)
+            .select(query_id_col, id_col, score_col,
+                    F.col("rank").cast("int")))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id") -> DataFrame:
@@ -55,17 +68,14 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     rank) with rank 1..k, ties broken by vec_id for determinism.
     Scoring stays the codegen'd fold expression: measured at 1M pairs it
     matches the Arrow-UDF path (0.05 s vs 0.04 s), so the simpler
-    no-Python plan wins.
+    no-Python plan wins here.  The IVF paths keep ``_cosine_udf``: on a
+    100k-vector index probe it is 1.6× the fold (PERF.md "Unrolled and
+    UDF dot products for small pair sets").
     """
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
     joined = corpus.crossJoin(F.broadcast(q))
     sim = cosine_expr(F.col(vec_col), F.col("__qvec"))
-    scored = joined.select(query_id_col, id_col, sim.alias("cosine"))
-    # two-phase reduce: a plain per-query window would funnel |corpus|
-    # rows per query into one task; grouped_topk bounds every partition.
-    return (grouped_topk(scored, [query_id_col],
-                         [F.desc("cosine"), F.asc(id_col)], k)
-            .select(query_id_col, id_col, "cosine", F.col("rank").cast("int")))
+    return _topk(joined, sim, "cosine", k, id_col, query_id_col)
 
 
 def brute_force_l2_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -81,10 +91,8 @@ def brute_force_l2_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     a = _as_double(F.col(vec_col))
     b = _as_double(F.col("__qvec"))
     ssd = fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
-    scored = joined.select(query_id_col, id_col, ssd.alias("ssd"))
-    return (grouped_topk(scored, [query_id_col],
-                         [F.asc("ssd"), F.asc(id_col)], k)
-            .select(query_id_col, id_col, "ssd", F.col("rank").cast("int")))
+    return _topk(joined, ssd, "ssd", k, id_col, query_id_col,
+                 ascending=True)
 
 
 def hyperplane_signature_expr(vec_col, planes: list[list[float]]):
@@ -116,12 +124,7 @@ def lsh_bucketed_topk(corpus: DataFrame, queries: DataFrame, planes: list[list[f
          .withColumn("__bucket", hyperplane_signature_expr(F.col("__qvec"), planes)))
     joined = c.join(F.broadcast(q), "__bucket")
     sim = cosine_expr(F.col(vec_col), F.col("__qvec"))
-    scored = joined.select(query_id_col, id_col, sim.alias("cosine"))
-    # bucket-sized candidate sets still funnel through one task per query
-    # under a plain window; two-phase keeps partitions bounded.
-    return (grouped_topk(scored, [query_id_col],
-                         [F.desc("cosine"), F.asc(id_col)], k)
-            .select(query_id_col, id_col, "cosine", F.col("rank").cast("int")))
+    return _topk(joined, sim, "cosine", k, id_col, query_id_col)
 
 
 def train_ivf_centroids(corpus: DataFrame, n_cells: int = 16,
@@ -196,11 +199,13 @@ def ivf_assign_col(vec_col, centroids: list[list[float]]):
 
 
 def _cosine_udf(a_col, b_col):
-    """Vectorized pair cosine for the ANN candidate-scoring hot path (same
-    numpy-heavy-similarity exception as ivf_probe_col; ~10× the interpreted
-    array-fold).  brute_force_topk keeps the fold version — its order of
-    operations is pinned by the DuckDB oracle.  Constructed lazily: a
-    module-level pandas_udf would require a live SparkSession at import.
+    """Vectorized pair cosine for the IVF candidate-scoring paths (same
+    numpy-heavy-similarity exception as ivf_probe_col): 1.6× the fold on
+    a 100k-vector ``probe_ivf_index``, level at sf0.1 (PERF.md "Unrolled
+    and UDF dot products for small pair sets").  brute_force_topk keeps
+    the fold — its order of operations is pinned by the DuckDB oracle.
+    Constructed lazily: a module-level pandas_udf would require a live
+    SparkSession at import.
     """
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -301,10 +306,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame,
              ivf_probe_col("__qvec", centroids, nprobe))))
     joined = c.join(F.broadcast(q), "__cell")
     sim = _cosine_udf(F.col(vec_col), F.col("__qvec"))
-    scored = joined.select(query_id_col, id_col, sim.alias("cosine"))
-    return (grouped_topk(scored, [query_id_col],
-                         [F.desc("cosine"), F.asc(id_col)], k)
-            .select(query_id_col, id_col, "cosine", F.col("rank").cast("int")))
+    return _topk(joined, sim, "cosine", k, id_col, query_id_col)
 
 
 def centroid_outliers(emb: DataFrame, vec_col: str = "embedding",

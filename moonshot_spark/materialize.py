@@ -62,6 +62,6 @@ def scope():
             if isinstance(h, DataFrame):
                 h.unpersist()
             else:
-                jrdd = h[0].getPersistentRDDs().get(h[1])
-                if jrdd is not None:
-                    jrdd.unpersist(False)
+                # RDD.unpersist's release without its "locally
+                # checkpointed ... cannot be recomputed" WARN
+                h[0].sc().unpersistRDD(h[1], False)

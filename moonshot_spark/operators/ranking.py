@@ -1,26 +1,29 @@
-"""Scale-safe global ranking: exact ntile over a total order WITHOUT an
-unpartitioned window.
+"""Scale-safe global ranking: exact rank and ntile over a total order
+WITHOUT an unpartitioned window.
 
 ``Window.orderBy(...)`` (no partitionBy) funnels every row through one
-task — fine on a dim table at small SF, fatal at 100 TB.  The two-phase
-TeraSort rank (same design as plans/zorder.py's bucket layout, factored
-here for reuse):
+task — fine on a dim table at small SF, fatal at 100 TB.  Every global
+rank in the library is one two-phase TeraSort rank, ``_cell_rank``,
+called by ``exact_rank``, ``exact_ntile`` and plans/zorder.py:
 
-1. ``repartitionByRange(k, *order_cols)`` — the only total-order shuffle,
-   sample-based range cuts, fully parallel.
-2. ``localCheckpoint`` pins the partitioning (the range partitioner's
-   reservoir sample is per-instance; the offsets job and the ranking job
-   must see identical partitions).
-3. A per-partition count job returns k rows to the driver → cumulative
-   offsets; global rank = offset[pid] + per-partition ``row_number`` (a
-   PARTITIONED window — each task ranks only its own sorted range).
-4. ntile arithmetic on the exact rank reproduces SQL ``ntile(n) OVER
-   (ORDER BY ...)`` bit-for-bit: first ``N % n`` tiles get
-   ``ceil(N/n)`` rows, the rest ``floor(N/n)``.
+1. The caller cuts rows into ORDER-DISJOINT cells.  ``exact_rank`` and
+   ``exact_ntile`` range-partition (sampled cuts, the only total-order
+   shuffle) and ``localCheckpoint``: the partitioner's sample is
+   per-instance, and the count and rank jobs must see the same cells.
+   Z-order's fixed z bins are a pure function of the row instead.
+2. One per-cell count job (a row per cell to the driver) gives
+   cumulative offsets, shipped as one ``element_at(map(...))`` literal;
+   rank = offset[cell] + per-cell ``row_number`` (a PARTITIONED window).
+   A global offset cannot stay in the plan: a window over the whole
+   cell table plans as ``Exchange SinglePartition``.  Per-group offsets
+   can, which is why ``grouped_exact_rank`` joins its cell table.
+3. ``_ntile`` on the exact rank reproduces SQL ``ntile(n) OVER (ORDER
+   BY ...)`` bit-for-bit: the first ``N % n`` tiles get ``ceil(N/n)``
+   rows, the rest ``floor(N/n)``.
 
 The (order_cols) tuple must be a total order (add a unique tiebreak
 column); otherwise ranks — and therefore tile assignment — would be
-partition-dependent."""
+cell-dependent."""
 
 from __future__ import annotations
 
@@ -101,10 +104,7 @@ def grouped_exact_rank(df: DataFrame, group_cols: list[str],
     """
     gcols = [F.col(c) for c in group_cols]
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    part = (materialize.checkpoint(
-                df.repartitionByRange(n_part, *gcols, *ocols))
-            .withColumn("__gr_pid", F.spark_partition_id()))
+    part = _range_cells(df, [*gcols, *ocols], None, "__gr_pid")
     local = F.row_number().over(
         Window.partitionBy(F.col("__gr_pid"), *gcols).orderBy(*ocols))
     ranked = part.withColumn("__gr_local", local)
@@ -127,41 +127,57 @@ def grouped_exact_rank(df: DataFrame, group_cols: list[str],
     return out.drop("__gr_pid", "__gr_local", "__gr_off", "__gr_tot")
 
 
-def _two_phase_rank(df: DataFrame, order_cols: list[str | Column],
-                    n_partitions: int):
-    """Shared kernel: returns (range-partitioned df with ``__pid``,
-    exact-global-rank Column, total row count).  One range shuffle, one
-    bounded per-partition-count job, partitioned windows only."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (materialize.checkpoint(
-                df.repartitionByRange(n_partitions, *cols))
-            .withColumn("__pid", F.spark_partition_id()))
-    counts = sorted((r["__pid"], r["cnt"]) for r in
-                    part.groupBy("__pid").agg(F.count("*").alias("cnt"))
+def _range_cells(df: DataFrame, cols: list[str | Column],
+                 n_partitions: int | None, cell_col: str) -> DataFrame:
+    """``df`` range-partitioned on ``cols`` into ``n_partitions`` cells
+    (None: ``defaultParallelism``), checkpointed, cell id in ``cell_col``."""
+    n_part = n_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return (materialize.checkpoint(df.repartitionByRange(n_part, *cols))
+            .withColumn(cell_col, F.spark_partition_id()))
+
+
+def _cell_rank(cells: DataFrame, cell_col: str,
+               order_cols: list[str | Column],
+               rank_col: str) -> tuple[DataFrame, int]:
+    """The one global-rank kernel: append ``rank_col`` = exact 1-based
+    bigint rank over ``order_cols`` to ``cells``, whose ``cell_col``
+    cuts it into order-disjoint cells; return (ranked frame, row total)."""
+    counts = sorted((r[cell_col], r["cnt"]) for r in
+                    cells.groupBy(cell_col).agg(F.count("*").alias("cnt"))
                     .collect())
-    total = sum(c for _, c in counts)
-    offsets, acc = {}, 0
-    for pid, c in counts:
-        offsets[pid] = acc
-        acc += c
-    off_col = F.coalesce(
-        *[F.when(F.col("__pid") == pid, F.lit(off))
-          for pid, off in offsets.items()], F.lit(0)) \
-        if offsets else F.lit(0)
-    rank = off_col + F.row_number().over(
-        Window.partitionBy("__pid").orderBy(*cols))
-    return part, rank, total
+    entries, total = [], 0
+    for cell, n in counts:
+        entries.append(f"{cell}L, {total}L")
+        total += n
+    # literal cell->offset map, parsed once in the JVM: a WHEN branch per
+    # cell through the Column API costs Py4J round trips per cell
+    off = (F.expr(f"element_at(map({', '.join(entries)}), {cell_col})")
+           if entries else F.lit(0))
+    rank = off + F.row_number().over(
+        Window.partitionBy(cell_col).orderBy(*order_cols))
+    return cells.withColumn(rank_col, rank.cast("bigint")), total
+
+
+def _ntile(rank: Column, total: int, n: int) -> Column:
+    """SQL ``ntile(n)`` of a 1-based ``rank`` among ``total`` rows."""
+    q, rem = divmod(total, n)
+    cut = rem * (q + 1)
+    tile = F.when(rank <= F.lit(cut), (rank - 1) / F.lit(q + 1) + 1) \
+        .otherwise(F.lit(rem) + (rank - 1 - F.lit(cut))
+                   / F.lit(max(q, 1)) + 1)
+    return F.floor(tile).cast("int")
 
 
 def exact_rank(df: DataFrame, order_cols: list[str | Column],
                out_col: str = "rank",
-               n_partitions: int = 8) -> DataFrame:
+               n_partitions: int | None = None) -> DataFrame:
     """Append ``out_col`` = exact 1-based global position over the total
     order given by ``order_cols`` (must include a unique tiebreak) —
     ``row_number() OVER (ORDER BY ...)`` semantics with no
-    unpartitioned window anywhere in the plan."""
-    part, rank, _ = _two_phase_rank(df, order_cols, n_partitions)
-    return part.withColumn(out_col, rank.cast("bigint")).drop("__pid")
+    unpartitioned window anywhere in the plan, over ``n_partitions``
+    range cells (None: ``defaultParallelism``)."""
+    cells = _range_cells(df, order_cols, n_partitions, "__pid")
+    return _cell_rank(cells, "__pid", order_cols, out_col)[0].drop("__pid")
 
 
 def exact_ntile(df: DataFrame, n: int, order_cols: list[str | Column],
@@ -169,14 +185,9 @@ def exact_ntile(df: DataFrame, n: int, order_cols: list[str | Column],
                 n_partitions: int | None = None) -> DataFrame:
     """Append ``out_col`` = exact ntile(n) over the global order given by
     ``order_cols`` (must include a unique tiebreak).  Two-phase rank —
-    no unpartitioned window anywhere in the plan."""
-    n_partitions = n_partitions or max(n, 8)
-    part, rank, total = _two_phase_rank(df, order_cols, n_partitions)
-    q, rem = divmod(total, n)
-    cut = rem * (q + 1)
-    tile = F.when(rank <= F.lit(cut),
-                  (rank - 1) / F.lit(max(q + 1, 1)) + 1) \
-        .otherwise(F.lit(rem) + (rank - 1 - F.lit(cut))
-                   / F.lit(max(q, 1)) + 1)
-    return (part.withColumn(out_col, F.floor(tile).cast("int"))
-            .drop("__pid"))
+    no unpartitioned window anywhere in the plan; ``n_partitions`` as in
+    ``exact_rank``."""
+    cells = _range_cells(df, order_cols, n_partitions, "__pid")
+    ranked, total = _cell_rank(cells, "__pid", order_cols, "__rank")
+    return (ranked.withColumn(out_col, _ntile(F.col("__rank"), total, n))
+            .drop("__pid", "__rank"))

@@ -17,8 +17,10 @@ form so layouts are verifiable against any SQL engine.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from moonshot_spark.operators.ranking import _cell_rank, _ntile
 
 
 def z_value_expr(col_a: Column | str, col_b: Column | str,
@@ -89,14 +91,17 @@ def zorder_bucket_stats(df: DataFrame, col_a: str, col_b: str,
        single-z-value distribution degrades parallelism, not
        correctness — the same row mass would land in one ntile sort
        task under any exact-rank scheme.)
-    2. A tiny per-bin count job (<= 64 rows to the driver, map-side
-       partial aggregation, no wide shuffle) gives cumulative offsets;
-       global rank = offset[bin] + local row_number (a PARTITIONED
-       window — each task ranks its own bin).  The (z, tiebreak) tuple
-       is unique and binning is monotone in z, so ranks are exact.
-    3. ``ntile`` arithmetic on the global rank: the first ``N % k``
-       buckets get ``ceil(N/k)`` rows, the rest ``floor(N/k)`` — bit-
-       identical to the SQL ``ntile(k) OVER (ORDER BY ...)`` oracle.
+    2. ``operators/ranking.py::_cell_rank``, the library's one global
+       rank, collects a tiny per-bin count (<= 64 rows to the driver,
+       map-side partial aggregation, no wide shuffle) into cumulative
+       offsets; global rank = offset[bin] + local row_number (a
+       PARTITIONED window — each task ranks its own bin).  The
+       (z, tiebreak) tuple is unique and binning is monotone in z, so
+       ranks are exact.
+    3. ``ranking._ntile`` turns the global rank into the bucket: the
+       first ``N % k`` buckets get ``ceil(N/k)`` rows, the rest
+       ``floor(N/k)`` — bit-identical to the SQL ``ntile(k) OVER
+       (ORDER BY ...)`` oracle.
 
     For a layout *write* (no exact-equal-files contract) use
     ``zorder_write`` / ``zorder_partition_stats`` — pure streaming,
@@ -113,34 +118,9 @@ def zorder_bucket_stats(df: DataFrame, col_a: str, col_b: str,
            .withColumn("__z", z_value_expr(a_in, b_in, bits))
            .select("__z", col_a, col_b, *(tiebreak or []))
            .withColumn("__bin", F.shiftright(F.col("__z"), shift)))
-    counts = sorted((r["__bin"], r["cnt"]) for r in
-                    zdf.groupBy("__bin").agg(F.count("*").alias("cnt"))
-                    .collect())
-    total = sum(c for _, c in counts)
-    offsets, acc = {}, 0
-    for b, c in counts:
-        offsets[b] = acc
-        acc += c
-    q, rem = divmod(total, n_buckets)
-    # literal bin->offset map, parsed once in the JVM (the pq/pca
-    # SQL-string discipline: 64 WHEN branches through the Column API
-    # would be ~200 Py4J round trips)
-    if offsets:
-        entries = ", ".join(f"{b}L, {off}L" for b, off in offsets.items())
-        off_col = F.expr(f"element_at(map({entries}), __bin)")
-    else:
-        off_col = F.lit(0)
-    rank = (off_col
-            + F.row_number().over(
-                Window.partitionBy("__bin").orderBy(*keys))).alias("__r")
-    cut = rem * (q + 1)
-    bucket = F.when(F.col("__r") <= F.lit(cut),
-                    (F.col("__r") - 1) / F.lit(max(q + 1, 1)) + 1) \
-        .otherwise(F.lit(rem) + (F.col("__r") - 1 - F.lit(cut))
-                   / F.lit(max(q, 1)) + 1)
-    return (zdf
-            .select("__bin", rank, col_a, col_b, *keys)
-            .withColumn("__bucket", F.floor(bucket).cast("int"))
+    ranked, total = _cell_rank(zdf, "__bin", keys, "__r")
+    return (ranked
+            .withColumn("__bucket", _ntile(F.col("__r"), total, n_buckets))
             .groupBy(F.col("__bucket").alias("bucket"))
             .agg(F.min(col_a).alias(f"min_{col_a}"),
                  F.max(col_a).alias(f"max_{col_a}"),

@@ -159,16 +159,21 @@ def test_dollar_bars_tile_ticks(spark):
             prev_end = row.bar_end
 
 
-@pytest.mark.parametrize("n,k", [(1, 3), (7, 7), (64, 10), (200, 3)])
-def test_exact_ntile_parametrized(spark, n, k):
+@pytest.mark.parametrize("n,k,n_partitions", [
+    pytest.param(n, k, p, id=f"{n}-{k}" if p is None else f"{n}-{k}-p{p}")
+    for n, k in [(1, 3), (7, 7), (64, 10), (200, 3)]
+    for p in (None, 1, 6)])
+def test_exact_ntile_parametrized(spark, n, k, n_partitions):
     """Two-phase rank equals window ntile across remainder shapes,
-    including n < k (empty tiles) and n == k."""
+    including n < k (empty tiles) and n == k, over one range cell, six,
+    and the host's default count."""
     from pyspark.sql import Window
     from moonshot_spark.operators.ranking import exact_ntile
 
     df = spark.range(n).select((F.col("id") * 17 % 101).alias("key"), "id")
     got = {r["id"]: r["t"] for r in
-           exact_ntile(df, k, ["key", "id"], "t").collect()}
+           exact_ntile(df, k, ["key", "id"], "t",
+                       n_partitions=n_partitions).collect()}
     want = {r["id"]: r["t"] for r in
             df.select("id", F.ntile(k).over(
                 Window.orderBy("key", "id")).alias("t")).collect()}

@@ -42,11 +42,31 @@ def test_zorder_matches_sql_ntile_uneven(spark):
     assert sorted(got) == list(range(1, 17))
 
 
+def test_zorder_one_bin_matches_sql_ntile(spark):
+    # every z-value is below 2^6, so all 50 rows land in bin 0 of the 64
+    # fixed bins: one cell, offset 0, and the id tiebreak makes the
+    # (z, id) order total
+    rows = [(i % 5, i % 3, i) for i in range(50)]
+    df = spark.createDataFrame(rows, "a long, b long, id long")
+    assert df.select(F.shiftright(z_value_expr("a", "b"), 26)) \
+        .distinct().count() == 1
+    df.createOrReplaceTempView("zone")
+    got = sorted(map(tuple, zorder_bucket_stats(
+        df, "a", "b", n_buckets=8, tiebreak=["id"]).collect()))
+    want = sorted(map(tuple, spark.sql(f"""
+        SELECT bucket, min(a), max(a), min(b), max(b), count(*)
+        FROM (SELECT a, b, ntile(8) OVER (
+                  ORDER BY {z_value_sql('a', 'b')}, id) AS bucket
+              FROM zone)
+        GROUP BY bucket""").collect()))
+    assert len(got) == 8 and got == want, (got, want)
+
+
 def test_zorder_check_bits_raises(spark):
     import pytest as _pt
     df = spark.createDataFrame([(40, 1, 0)], "a long, b long, id long")
-    # the eager checkpoint inside bucket_stats already executes the scan,
-    # so the guard fires at construction time
+    # the per-bin count collect inside bucket_stats already executes the
+    # scan, so the guard fires at construction time
     with _pt.raises(Exception, match="z-order key"):
         zorder_bucket_stats(df, "a", "b", n_buckets=2, bits=4,
                             tiebreak=["id"]).collect()

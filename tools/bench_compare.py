@@ -6,7 +6,8 @@ engines over the same parquet (``tools/measure.py``: warm + min-of-two
 timed, on both engines) and prints a markdown table sorted by Spark
 time, plus totals.  The Spark column splits into build (frame
 construction: a fixed driver cost that does not grow with data) and
-exec (``count()``).  Usage:
+exec (``count()``); jobs and tasks are the fastest Spark run's, so an
+A/B can name the layer that moved.  Usage:
 
     python tools/bench_compare.py [sf_dir]    # default /root/testdata/sf0.1
     python tools/bench_compare.py [sf_dir] --queries a,b   # a subset
@@ -66,19 +67,21 @@ def main():
             con.close()
             con = duckdb_views(sf_dir)
             d = duckdb_seconds(con, sql)
-        rows.append((name, m.total, m.build, m.exec, d))
+        rows.append((name, m.total, m.build, m.exec, d, m.jobs, m.tasks))
 
     rows.sort(key=lambda r: -r[1])
-    print("| query | spark s | build s | exec s | duckdb s | ratio |")
-    print("|---|---|---|---|---|---|")
-    for name, s, sb, sx, d in rows:
+    print("| query | spark s | build s | exec s | jobs | tasks | duckdb s "
+          "| ratio |")
+    print("|---|---|---|---|---|---|---|---|")
+    for name, s, sb, sx, d, jobs, tasks in rows:
         ratio = s / d if d else float("inf")
-        print(f"| {name} | {s:.3f} | {sb:.3f} | {sx:.3f} "
+        print(f"| {name} | {s:.3f} | {sb:.3f} | {sx:.3f} | {jobs} | {tasks} "
               f"| {d:.3f} | {ratio:.2f} |")
     ts, td = sum(r[1] for r in rows), sum(r[4] for r in rows)
     tb, tx = sum(r[2] for r in rows), sum(r[3] for r in rows)
+    tj, tt = sum(r[5] for r in rows), sum(r[6] for r in rows)
     print(f"| **total ({len(rows)} queries)** | **{ts:.1f}** "
-          f"| **{tb:.1f}** | **{tx:.1f}** "
+          f"| **{tb:.1f}** | **{tx:.1f}** | **{tj}** | **{tt}** "
           f"| **{td:.1f}** | **{ts / td:.2f}** |")
 
 
